@@ -14,6 +14,8 @@ closures are not picklable, the spec dict is).
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import re
 from itertools import islice
@@ -120,6 +122,16 @@ def build_recognizer(
 
 
 _RECOGNIZER_CACHE: Dict[str, Recognizer] = {}
+
+
+def spec_key(schema_specs: Sequence[Dict], options_spec: Optional[Dict]) -> str:
+    """``cached_recognizer`` key: the md5 of the canonical spec JSON. A
+    32-bit crc across different specs in one process could collide and
+    silently reuse the wrong compiled recognizer; 128 bits cannot in
+    practice."""
+    return hashlib.md5(
+        json.dumps([list(schema_specs), options_spec], sort_keys=True).encode()
+    ).hexdigest()
 
 
 def cached_recognizer(

@@ -364,7 +364,13 @@ class LikePhraseMatcher:
 
 class ListContainsMatcher:
     """Gazetteer operator: dictionary value x token substring containment
-    with per-token max-score throttling (ListContainsMatcher.cs:23-127)."""
+    with per-token max-score throttling (ListContainsMatcher.cs:23-127).
+
+    Emission is lazy: the throttle runs on plain ``(token, contains,
+    score)`` hits and a match object is built only for a hit that is
+    yielded, so a hot token that hits thousands of values costs tuples,
+    not matches. The emission order is the reference's (value-outer,
+    token-inner)."""
 
     first_pass_only = True
     recursive = False
@@ -379,20 +385,25 @@ class ListContainsMatcher:
         self.apply_stemmer: Optional[Callable[[str], str]] = None
         self.max_score_filter_threshold = 10
         self._values_lower = [v.lower() for v in self.values]
-        # token -> [(value_idx, idx, token_val_used)] across all values;
+        # (token value, is NUMBER) -> [(value_idx, contains, score)];
         # keyed by the exact token value (the stemmer is case-sensitive)
         self._token_memo = {}
 
-    def _lookup(self, token_val: str, token_lower: str):
-        """All (value_idx, substring_idx, effective_token) hits for a
-        token, across the whole gazetteer — memoized (tokens are Zipfian;
-        one O(V) scan per distinct token amortizes the V x T loop away)."""
+    def _lookup(self, token: Token):
+        """All (value_idx, contains, score) hits for a token across the
+        whole gazetteer, in value order — memoized (tokens are Zipfian;
+        one O(V) scan per distinct token amortizes the V x T loop away).
+        The score depends only on the token value and whether it is a
+        NUMBER, which together key the memo."""
+        token_val = token.value
+        is_number = token.type == NUMBER
         memo = self._token_memo
-        hits = memo.get(token_val)
+        hits = memo.get((token_val, is_number))
         if hits is None:
             if len(memo) > self.MEMO_MAX:
                 _evict_half(memo)
             hits = []
+            token_lower = token.value_lower
             stemmer = self.apply_stemmer
             token_stem = None
             if stemmer is not None:
@@ -400,6 +411,7 @@ class ListContainsMatcher:
                 if ts != token_val:
                     token_stem = ts
             stem_lower = token_stem.lower() if token_stem is not None else None
+            values = self.values
             for vi, val_lower in enumerate(self._values_lower):
                 idx = val_lower.find(token_lower)
                 used = token_val
@@ -407,10 +419,33 @@ class ListContainsMatcher:
                     idx = val_lower.find(stem_lower)
                     if idx >= 0:
                         used = token_stem
-                if idx >= 0:
-                    hits.append((vi, idx, used))
-            memo[token_val] = hits
+                if idx < 0:
+                    continue
+                val = values[vi]
+                if idx == 0:
+                    contains = EXACT if len(val) == len(used) else STARTS_WITH
+                else:
+                    contains = CONTAINS
+                score = float(len(used)) / len(val)
+                if is_number:
+                    next_char_idx = idx + len(used)
+                    if idx > 0 and val[idx - 1].isalnum():
+                        score /= 2  # not number start
+                    if next_char_idx < len(val) and val[next_char_idx].isalnum():
+                        score /= 2  # not number end
+                elif idx > 0 and val[idx - 1].isalnum():
+                    score /= 2  # not word start penalty
+                hits.append((vi, contains, score))
+            memo[(token_val, is_number)] = hits
         return hits
+
+    def _match(self, vi: int, t: Token, contains: int, score: float) -> Match:
+        m = self.get_match(contains, (vi, self.values[vi]))
+        m.score = score
+        m.matched_tokens_count = 1
+        m.start = t
+        m.end = t
+        return m
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         word_or_num = [
@@ -420,56 +455,28 @@ class ListContainsMatcher:
         token_matches_count = [0] * len(word_or_num)
         token_max_score = [0.0] * len(word_or_num)
 
-        # assemble hits grouped by value, preserving the reference's
-        # emission order (value-outer, token-inner)
+        # hits grouped by value, token order kept inside each value
         hits_by_value: dict = {}
         for t_idx, t in enumerate(word_or_num):
-            for vi, idx, used in self._lookup(t.value, t.value_lower):
-                hits_by_value.setdefault(vi, []).append((t_idx, t, idx, used))
+            for vi, contains, score in self._lookup(t):
+                hits_by_value.setdefault(vi, []).append((t_idx, t, contains, score))
 
-        for i in range(len(self.values)):
-            entries = hits_by_value.get(i)
-            if not entries:
-                continue
-            val = self.values[i]
-            skipped: List[Match] = []
-            val_matches_count = 0
-            for t_idx, t, idx, token_val in entries:
-                if idx == 0:
-                    contains = EXACT if len(val) == len(token_val) else STARTS_WITH
-                else:
-                    contains = CONTAINS
-                m = self.get_match(contains, (i, val))
-                m.score = float(len(token_val)) / len(val)
-                m.matched_tokens_count = 1
-
-                if t.type == NUMBER:
-                    next_char_idx = idx + len(token_val)
-                    is_number_start = idx == 0 or not val[idx - 1].isalnum()
-                    is_number_end = next_char_idx >= len(val) or not val[next_char_idx].isalnum()
-                    if not is_number_start:
-                        m.score /= 2
-                    if not is_number_end:
-                        m.score /= 2
-                else:
-                    if idx > 0 and val[idx - 1].isalnum():
-                        m.score /= 2  # not word start penalty
-
-                m.start = t
-                m.end = t
-
-                val_matches_count += 1
+        for vi in sorted(hits_by_value):
+            entries = hits_by_value[vi]
+            skipped = []
+            for t_idx, t, contains, score in entries:
                 token_matches_count[t_idx] += 1
-                is_new_max = m.score > token_max_score[t_idx]
+                is_new_max = score > token_max_score[t_idx]
                 if is_new_max:
-                    token_max_score[t_idx] = m.score
+                    token_max_score[t_idx] = score
                 if token_matches_count[t_idx] <= threshold or is_new_max:
-                    yield m
-                else:
-                    skipped.append(m)
-
-            if val_matches_count > 1 and skipped:
-                yield from skipped
+                    yield self._match(vi, t, contains, score)
+                elif len(entries) > 1:
+                    # the reference yields a value's skipped hits after its
+                    # other ones whenever the value has more than one hit
+                    skipped.append((t, contains, score))
+            for t, contains, score in skipped:
+                yield self._match(vi, t, contains, score)
 
 
 class NumberMatcher:
@@ -1088,51 +1095,65 @@ class HintMatcher:
 
 class MergePhraseMatcher:
     """Merges adjacent same-type matches into one
-    (MergePhraseMatcher.cs:22-85). ``match_type`` plays the C# generic T."""
+    (MergePhraseMatcher.cs:22-85). ``match_type`` plays the C# generic T.
+
+    ``merge_key(m)`` must be equal for any two matches that ``merge`` can
+    join: ``merge`` returns None for every pair whose keys differ. Each
+    call indexes the bag's ``match_type`` matches by start token, then by
+    key, in bag order (the build side of a hash join); a merge attempt
+    probes only the next token's group for ``merge_key(m)``. The first
+    match in that group that merges is the one the reference's scan of
+    all the next token's matches finds, because every match outside the
+    group returns None. The index is rebuilt from the bag on every call,
+    so ``get_matches`` stays a pure function of (statement, bag)."""
 
     first_pass_only = False
     recursive = False
 
-    def __init__(self, match_type, merge):
+    def __init__(self, match_type, merge, merge_key):
         self.match_type = match_type
         self.merge = merge  # (statement, m1, m2) -> Match | None
+        self.merge_key = merge_key  # m -> hashable
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         if match_bag.count == 0:
             return
         statement = match_bag.statement
-        similar = sorted(
-            (m for m in match_bag.matches if isinstance(m, self.match_type)),
-            key=lambda m: statement.get_index(m.start),
-        )
+        tokens = statement.tokens
+        match_type = self.match_type
+        merge = self.merge
+        merge_key = self.merge_key
+        similar = [m for m in match_bag.matches if isinstance(m, match_type)]
+        # start token -> merge key -> matches, bag order kept
+        by_start: dict = {}
+        for m in similar:
+            by_start.setdefault(m.start, {}).setdefault(merge_key(m), []).append(m)
+        similar.sort(key=lambda m: statement.get_index(m.start))
         merged_ids = set()
 
         def try_merge_with_next(m):
             end_token_idx = statement.get_index(m.end)
-            tokens = statement.tokens
-            next_matches = None
+            next_token = None
             for i in range(end_token_idx + 1, len(tokens)):
                 t = tokens[i]
-                if t.type == WORD or t.type == NUMBER:
-                    next_matches = match_bag.find_by_start(t)
-                    if next_matches:
-                        break
-            if not next_matches:
+                if (t.type == WORD or t.type == NUMBER) and match_bag.find_by_start(t):
+                    next_token = t
+                    break
+            if next_token is None:
                 return None
-            for next_match in next_matches:
-                if isinstance(next_match, self.match_type):
-                    merged = self.merge(statement, m, next_match)
-                    if merged is None:
-                        continue
-                    merged.matched_tokens_count = (
-                        m.matched_tokens_count + next_match.matched_tokens_count
-                    )
-                    merged_ids.add(id(next_match))
-                    if isinstance(merged, self.match_type):
-                        next_merged = try_merge_with_next(merged)
-                        if next_merged is not None:
-                            return next_merged
-                    return merged
+            for next_match in by_start.get(next_token, {}).get(merge_key(m), ()):
+                merged = merge(statement, m, next_match)
+                if merged is None:
+                    continue
+                merged.matched_tokens_count = (
+                    m.matched_tokens_count + next_match.matched_tokens_count
+                )
+                merged_ids.add(id(next_match))
+                if isinstance(merged, match_type):
+                    next_merged = try_merge_with_next(merged)
+                    if next_merged is not None:
+                        return next_merged
+                return merged
             return None
 
         for match in similar:

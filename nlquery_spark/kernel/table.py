@@ -13,6 +13,7 @@ pickled into a Spark broadcast and executed per-page inside Arrow batches.
 
 from __future__ import annotations
 
+from operator import attrgetter
 from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 from .matches import (
@@ -356,9 +357,18 @@ class TableMatcherBuilder:
             res.extend(self.keyword_matchers)
 
         if self.keyword_matchers:
-            res.append(MergePhraseMatcher(ColumnMatch, self._merge_column_match))
+            # merge keys: the fields each merge rule requires to be equal
             res.append(
-                MergePhraseMatcher(ColumnConditionMatch, self._merge_column_condition)
+                MergePhraseMatcher(
+                    ColumnMatch, self._merge_column_match, attrgetter("column")
+                )
+            )
+            res.append(
+                MergePhraseMatcher(
+                    ColumnConditionMatch,
+                    self._merge_column_condition,
+                    attrgetter("column", "matched_value"),
+                )
             )
             res.append(hint_matcher)
 

@@ -14,9 +14,7 @@ hot-entity salting lives in operators.canonicalize.
 
 from __future__ import annotations
 
-import hashlib
 import itertools
-import json
 from typing import Dict, Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
@@ -73,17 +71,12 @@ def extract_triples(
     micro-batches (one streaming query = one invocation). Pass a stable
     string to share boilerplate across separate batch invocations.
     """
-    from ..kernel.extract import build_prescreen
+    from ..kernel.extract import build_prescreen, spec_key
 
     spark = pages.sparkSession
     schema_specs = list(schema_specs)
     prescreen = build_prescreen(schema_specs, options_spec) if use_prescreen else None
-    # md5 of the canonical spec JSON (ADVICE r3): a 32-bit crc across
-    # different specs in one executor process could collide and silently
-    # reuse the wrong compiled recognizer; 128 bits cannot in practice.
-    cache_key = hashlib.md5(
-        json.dumps([schema_specs, options_spec], sort_keys=True).encode()
-    ).hexdigest()
+    cache_key = spec_key(schema_specs, options_spec)
     payload_bc = spark.sparkContext.broadcast(
         (schema_specs, options_spec, prescreen, cache_key, top_k,
          memo_chunks,

@@ -19,8 +19,6 @@ span.
 
 from __future__ import annotations
 
-import hashlib
-import json
 from typing import Dict, Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -61,14 +59,12 @@ def extract_mentions(
     boilerplate-chunk memo (bit-identical, per-invocation namespace by
     default; see extract_triples for the memo/salt contract).
     """
-    from ..kernel.extract import build_prescreen
+    from ..kernel.extract import build_prescreen, spec_key
 
     spark = pages.sparkSession
     schema_specs = list(schema_specs)
     prescreen = build_prescreen(schema_specs, options_spec) if use_prescreen else None
-    cache_key = hashlib.md5(  # 128-bit key: crc32 could collide across specs
-        json.dumps([schema_specs, options_spec], sort_keys=True).encode()
-    ).hexdigest()
+    cache_key = spec_key(schema_specs, options_spec)
     from .extract import _MEMO_SALTS
 
     payload_bc = spark.sparkContext.broadcast(

@@ -15,7 +15,12 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..kernel.extract import build_recognizer, candidate_score
+from ..kernel.extract import (
+    build_recognizer,
+    cached_recognizer,
+    candidate_score,
+    spec_key,
+)
 from ..kernel.matches import DateMatch, DateOffsetMatch, NumberMatch
 from ..kernel.recognizer import TopSet
 from ..kernel.table import (
@@ -267,10 +272,14 @@ def parse_best_matches(
     recognition path; parse_best is a thin view over it.
     ``include_column_mentions`` controls whether bare ColumnMatches
     compete in the combination search (the OLAP/pivot lifecycles want
-    them; the plain filter lifecycle does not)."""
+    them; the plain filter lifecycle does not). The compiled recognizer
+    is reused across calls with the same specs (``cached_recognizer``)."""
     from ..kernel.table import ColumnMatch
 
-    rec = build_recognizer(schema_specs, options_spec)
+    rec = cached_recognizer(
+        schema_specs, options_spec, spec_key(schema_specs, options_spec)
+    )
+    # the recognizer is shared: set the flag on every call
     rec.include_zero_matches = True
     seq = TokenSequence(_query_tokens(nl, options_spec))
     best: List = [None, -1.0]
@@ -568,9 +577,6 @@ def suggest_keywords_df(
     per-executor compiled recognizer (cached_recognizer), Arrow batches,
     no shuffle — embarrassingly parallel over the prefix stream (e.g.
     scoring a day of partial search queries against the dictionary)."""
-    import hashlib
-    import json
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -581,9 +587,7 @@ def suggest_keywords_df(
 
     spark = prefixes.sparkSession
     schema_specs = list(schema_specs)
-    cache_key = hashlib.md5(  # 128-bit key: crc32 could collide across specs
-        json.dumps([schema_specs, options_spec], sort_keys=True).encode()
-    ).hexdigest()
+    cache_key = spec_key(schema_specs, options_spec)
     payload_bc = spark.sparkContext.broadcast((schema_specs, options_spec, cache_key))
     out_schema = StructType(
         [

@@ -15,7 +15,11 @@ Coverage (all deterministic, generated from the committed fixtures):
 - mention extraction over 2,500 of the same texts;
 - the full combination-DFS enumeration (include_zero_matches=True, the
   nl_* path) with per-combination match types, scores, spans AND
-  enumeration order — ~430k combinations.
+  enumeration order — ~430k combinations;
+- triple and mention extraction over 120 benchmark gazetteer pages
+  (``perfbench/gen.py``, seeds 1-3) against the Orders spec plus the
+  5,000-title gazetteer, once plain and once with stop words and the
+  stemmer — the only part of the surface whose value lists are large.
 
 The snapshot lives outside the repo (SNAPSHOT_PATH below): it is a
 session-local gate, not a committed artifact; `check` against a
@@ -47,9 +51,11 @@ def _surface():
         extract_text_mentions,
         extract_text_triples,
     )
+    from nlquery_spark.kernel.table import ENGLISH_STOP_WORDS
     from nlquery_spark.kernel.tokenizer import tokenize
     from nlquery_spark.kernel.tokens import TokenSequence
     from nlquery_spark.sources.pages import _page_text, orders_schema_spec
+    from perfbench import gen  # read-only: the benchmark's input generator
 
     spec = orders_schema_spec()
     rec = build_recognizer([spec])
@@ -96,7 +102,26 @@ def _surface():
         "price between 10 and 20",
     ] + [_page_text(i, 0.0)[:120] for i in range(300)]
 
+    gspecs = [gen.ORDERS_SPEC, gen.titles_spec()]
+    titles = gspecs[1]["columns"][0]["values"]
+    gtexts = [
+        t
+        for seed in (1, 2, 3)
+        for t in gen.gazetteer_pages(seed, 40, titles)["text"]
+    ]
+    gopts = {"stop_words": ENGLISH_STOP_WORDS, "use_stemmer": True}
+    gaz = [
+        (build_recognizer(gspecs, o), build_prescreen(gspecs, o))
+        for o in (None, gopts)
+    ]
+
     return {
+        "gazetteer_triples": [
+            extract_text_triples(t, r, prescreen=s) for r, s in gaz for t in gtexts
+        ],
+        "gazetteer_mentions": [
+            extract_text_mentions(t, r, prescreen=s) for r, s in gaz for t in gtexts
+        ],
         "orders_triples": [
             extract_text_triples(t, rec, prescreen=screen) for t in texts
         ],
