@@ -424,6 +424,110 @@ def _combo_compare(a: _ScoredCombo, b: _ScoredCombo) -> int:
     return 0
 
 
+def _is_triple_match(m: Match) -> bool:
+    """Keep triple-relevant matches (ListQueryParser.cs:59-66)."""
+    if isinstance(m, ColumnConditionMatch):
+        return m.value is not m or m.matched_value is not None
+    return isinstance(m, (ColumnMatch, TableMatch, GroupMatch))
+
+
+def _top_combinations(
+    pos_matches: List[Optional[List[Tuple[Match, int]]]],
+    next_pos: List[int],
+    pre_won: List[int],
+    pre_sig: List[int],
+    top_k: int,
+    long_match_boost: bool,
+    max_combinations: int,
+) -> TopSet:
+    """The top-k of the first ``max_combinations + 1`` DFS combinations
+    of the position index ``(pos_matches, next_pos)``
+    (``MatchCombinationBuilder.index``), visiting only the subtrees whose
+    best leaf could still enter the top-k.
+
+    The fast-path score of a combination is additive over its DFS steps:
+    ``(sum(score * won) - c * (matches + significant gaps)) / total_won
+    + c`` with ``c = 0.3`` under the long-match boost (else 0), and each
+    gap depends only on the resume position and the next match start.
+    One right-to-left pass gives, per resume position ``p``, ``cnt[p]``
+    (leaves below ``p``) and ``ub[p]`` (the largest additive score any
+    leaf below ``p`` reaches). A child is skipped when the top-k is full
+    and ``(prefix + step + ub[after]) / total_won + c`` is below the
+    current minimum by more than 1e-9 (the margin absorbs rounding
+    between this sum and the leaf's own); a later combination with an
+    equal score never displaces an earlier one, so no skipped leaf
+    could have entered. Skipped leaves still count toward the cap.
+    Visited leaves are scored with the exact arithmetic and order of the
+    exhaustive walk, so the top-k is identical to scoring every one of
+    the first ``max_combinations + 1`` combinations.
+    """
+    n = len(next_pos) - 1
+    total_won = pre_won[n]
+    c = 0.3 if long_match_boost else 0.0
+    # per start position: (match, resume, score * won) in index order
+    steps: List[Optional[List[Tuple[Match, int, float]]]] = [None] * n
+    ub = [0.0] * (n + 1)
+    cnt = [0] * (n + 1)
+    for p in range(n, -1, -1):
+        j = next_pos[p]
+        if j == p and p < n:
+            row = []
+            for m, after in pos_matches[p]:
+                assert after > p, "match ends before it starts"
+                row.append((m, after, m.score * (pre_won[after] - pre_won[p])))
+            steps[p] = row
+            ub[p] = max(w - c + ub[after] for _, after, w in row)
+            cnt[p] = sum(cnt[after] for _, after, _ in row)
+        else:
+            gap = c if pre_sig[j] - pre_sig[p] > 0 else 0.0
+            ub[p] = (0.0 if j == n else ub[j]) - gap
+            cnt[p] = 1 if j == n else cnt[j]
+
+    top = TopSet(top_k, _combo_compare)
+    chain: List[Tuple[Match, float]] = []  # visited path, sentence order
+    n_leaves = 0
+    bar = float("-inf")  # top's minimum score less the margin, once full
+
+    def walk(p: int, prefix: float, n_stubs: int) -> bool:
+        nonlocal n_leaves, bar
+        j = next_pos[p]
+        significant_gap = pre_sig[j] - pre_sig[p] > 0
+        if j == n:
+            order = n_leaves
+            n_leaves += 1
+            if chain:
+                total = 0.0
+                for _, w in reversed(chain):  # recognize() order: tail first
+                    total += w
+                total /= total_won
+                if long_match_boost:
+                    n_matches = len(chain) + n_stubs + significant_gap
+                    total += 0.3 * (1.0 - n_matches / total_won)
+                top.add(_ScoredCombo(total, order, [m for m, _ in reversed(chain)]))
+                if top.count == top.max_size:
+                    bar = top.min.score - 1e-9
+            return n_leaves <= max_combinations
+        if significant_gap:
+            n_stubs += 1
+            prefix -= c
+        for m, after, w in steps[j]:
+            v = prefix + w - c
+            if (v + ub[after]) / total_won + c < bar:
+                n_leaves += cnt[after]
+                if n_leaves > max_combinations:
+                    return False
+                continue
+            chain.append((m, w))
+            ok = walk(after, v, n_stubs)
+            chain.pop()
+            if not ok:
+                return False
+        return True
+
+    walk(0, 0.0, 0)
+    return top
+
+
 def extract_text_triples(
     text: str,
     recognizer: Recognizer,
@@ -435,10 +539,19 @@ def extract_text_triples(
 ) -> List[Tuple[str, str, float, int, int, str]]:
     """Extract triples from one page text.
 
-    Per chunk: tokenize -> recognize -> enumerate combinations (capped) ->
-    top-k by candidate score -> emit triples of the best combination(s).
-    Returns (pred, obj, score, start, end, rule) tuples with absolute char
-    offsets into ``text``.
+    Per chunk: tokenize -> collect matches -> top-k by candidate score
+    over the recognizer's combination DFS -> emit triples of the best
+    combination(s). Returns (pred, obj, score, start, end, rule) tuples
+    with absolute char offsets into ``text``.
+
+    Cap: the top-k are the best of the FIRST ``max_combinations + 1``
+    combinations in the DFS order of ``Recognizer.recognize`` (greedy
+    longest-first); ties go to the earlier combination. The search is
+    bounded (:func:`_top_combinations`): a subtree is skipped only when
+    the top-k set is full and the subtree's best possible score is below
+    its minimum by more than 1e-9; its combinations still count toward
+    the cap, and the search stops when the count passes it. The result
+    is identical to scoring every combination up to the cap.
 
     ``memo`` (see :func:`chunk_memo`) caches relative-offset chunk results;
     chunk extraction is a pure function of (chunk, recognizer, params), so
@@ -454,92 +567,55 @@ def extract_text_triples(
     stub-including combination; covered by tests).
     """
     out: List[Tuple[str, str, float, int, int, str]] = []
-    include_zero = recognizer.include_zero_matches
-    recognizer.include_zero_matches = False
-    try:
-        for offset, chunk in _chunks(text):
-            if memo is not None:
-                hit = _memo_hit(memo, chunk)
-                if hit is not None:
-                    if hit:
-                        out.extend(
-                            (p, o, sc, s + offset, e + offset, r)
-                            for p, o, sc, s, e, r in hit
-                        )
-                    continue
-            chunk_tokens = tokenize(chunk)
-            if prescreen is not None and not _chunk_can_match(chunk_tokens, prescreen):
-                # memo the screened-out chunk too: a repeat skips tokenize
-                if memo is not None:
-                    _memo_put(memo, chunk, ())
-                continue  # fast path: no dictionary token in chunk
-            n_tok = len(chunk_tokens)
-            pre_won = [0] * (n_tok + 1)  # word-or-number prefix counts
-            pre_sig = [0] * (n_tok + 1)  # non-separator/sentence-end prefix
-            for i, t in enumerate(chunk_tokens):
-                tt = t.type
-                pre_won[i + 1] = pre_won[i] + (1 if tt == WORD or tt == NUMBER else 0)
-                pre_sig[i + 1] = pre_sig[i] + (
-                    1 if tt != SEPARATOR and tt != SENTENCE_END else 0
-                )
-            total_won = pre_won[n_tok]
-            if total_won == 0:
-                if memo is not None:
-                    _memo_put(memo, chunk, ())
+    for offset, chunk in _chunks(text):
+        if memo is not None:
+            hit = _memo_hit(memo, chunk)
+            if hit is not None:
+                if hit:
+                    out.extend(
+                        (p, o, sc, s + offset, e + offset, r)
+                        for p, o, sc, s, e, r in hit
+                    )
                 continue
-            seq = TokenSequence(chunk_tokens)
-            seq.get_index(chunk_tokens[0])  # force index map build
-            idx_map = seq._token_to_index
-            top = TopSet(top_k, _combo_compare)
-            state = {"n": 0}
-
-            def handler(matches: List[Match]) -> bool:
-                n_combo = state["n"]
-                state["n"] = n_combo + 1
-                if matches:
-                    total = 0.0
-                    spans = []
-                    for m in matches:
-                        s = idx_map[m.start]
-                        e = idx_map[m.end]
-                        total += m.score * (pre_won[e + 1] - pre_won[s])
-                        spans.append((s, e))
-                    total /= total_won
-                    if long_match_boost:
-                        # stubs = significant gaps (see docstring)
-                        n_matches = len(matches)
-                        prev_end = -1
-                        for s, e in reversed(spans):  # DFS order is reversed
-                            if pre_sig[s] - pre_sig[prev_end + 1] > 0:
-                                n_matches += 1
-                            prev_end = e
-                        if pre_sig[n_tok] - pre_sig[prev_end + 1] > 0:
-                            n_matches += 1
-                        total += 0.3 * (1.0 - n_matches / total_won)
-                    top.add(_ScoredCombo(total, n_combo, matches))
-                return state["n"] <= max_combinations
-
-            def match_filter(m: Match) -> bool:
-                # keep triple-relevant matches (ListQueryParser.cs:59-66)
-                if isinstance(m, ColumnConditionMatch):
-                    return m.value is not m or m.matched_value is not None
-                return isinstance(m, (ColumnMatch, TableMatch, GroupMatch))
-
-            recognizer.recognize(seq, handler, match_filter)
-            # emit at relative offset 0, then shift — int addition is
-            # exact, so memoized replay at another offset is identical
-            rel: List[Tuple[str, str, float, int, int, str]] = []
-            for combo in top.to_array():
-                rel.extend(_emit_triples(combo.matches, seq, 0, combo.score))
+        chunk_tokens = tokenize(chunk)
+        if prescreen is not None and not _chunk_can_match(chunk_tokens, prescreen):
+            # memo the screened-out chunk too: a repeat skips tokenize
             if memo is not None:
-                _memo_put(memo, chunk, tuple(rel))
-            if rel:
-                out.extend(
-                    (p, o, sc, s + offset, e + offset, r)
-                    for p, o, sc, s, e, r in rel
-                )
-    finally:
-        recognizer.include_zero_matches = include_zero
+                _memo_put(memo, chunk, ())
+            continue  # fast path: no dictionary token in chunk
+        n_tok = len(chunk_tokens)
+        pre_won = [0] * (n_tok + 1)  # word-or-number prefix counts
+        pre_sig = [0] * (n_tok + 1)  # non-separator/sentence-end prefix
+        for i, t in enumerate(chunk_tokens):
+            tt = t.type
+            pre_won[i + 1] = pre_won[i] + (1 if tt == WORD or tt == NUMBER else 0)
+            pre_sig[i + 1] = pre_sig[i] + (
+                1 if tt != SEPARATOR and tt != SENTENCE_END else 0
+            )
+        if pre_won[n_tok] == 0:
+            if memo is not None:
+                _memo_put(memo, chunk, ())
+            continue
+        seq = TokenSequence(chunk_tokens)
+        pos_matches, next_pos = recognizer.combination_builder(
+            seq, _is_triple_match
+        ).index()
+        top = _top_combinations(
+            pos_matches, next_pos, pre_won, pre_sig,
+            top_k, long_match_boost, max_combinations,
+        )
+        # emit at relative offset 0, then shift — int addition is
+        # exact, so memoized replay at another offset is identical
+        rel: List[Tuple[str, str, float, int, int, str]] = []
+        for combo in top.to_array():
+            rel.extend(_emit_triples(combo.matches, seq, 0, combo.score))
+        if memo is not None:
+            _memo_put(memo, chunk, tuple(rel))
+        if rel:
+            out.extend(
+                (p, o, sc, s + offset, e + offset, r)
+                for p, o, sc, s, e, r in rel
+            )
     return out
 
 

@@ -916,7 +916,14 @@ class ComparisonMatcher:
 
 class GroupMatcher:
     """AND/OR combiner, one merge per pass for correct left-assoc nesting
-    (GroupMatcher.cs:29-151)."""
+    (GroupMatcher.cs:29-151).
+
+    Screen: a group needs an operator after the left match, either a
+    phrase (``and``/``or``; its first word must be a token of the
+    statement) or ``||``. A statement whose token values hold neither a
+    phrase's first word nor ``|`` can yield nothing, so ``get_matches``
+    returns before walking the bag (it would otherwise do so on every
+    fixpoint generation)."""
 
     first_pass_only = False
     recursive = True
@@ -963,6 +970,12 @@ class GroupMatcher:
         return None
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
+        vs = match_bag.statement.value_set
+        if "|" not in vs and not any(
+            words and words[0].lower() in vs
+            for words, _ in self.phrase_group_types or ()
+        ):
+            return
         tokens = match_bag.statement.tokens
         for left in list(match_bag.matches):
             if not self.left_part_predicate(left, match_bag):

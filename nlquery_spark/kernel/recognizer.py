@@ -116,21 +116,33 @@ class Recognizer:
         self._process_recursive_matchers(self._recursive, match_bag)
         return match_bag
 
+    def combination_builder(
+        self,
+        statement: TokenSequence,
+        match_filter: Optional[Callable[[Match], bool]] = None,
+        combination_handler: Optional[Callable[[List[Match]], bool]] = None,
+    ) -> "MatchCombinationBuilder":
+        """The combination DFS's input: ``collect_matches``, the optional
+        filter, then matches grouped by start token in the reference's
+        per-start order. ``recognize`` walks it with ``build()``; bounded
+        searches (``extract_text_triples``) walk its ``index()``."""
+        matches: Iterable[Match] = self.collect_matches(statement).matches
+        if match_filter is not None:
+            matches = [m for m in matches if match_filter(m)]
+        return MatchCombinationBuilder(
+            self._compose_start_token_to_matches(matches),
+            statement,
+            combination_handler,
+        )
+
     def recognize(
         self,
         statement: TokenSequence,
         combination_handler: Callable[[List[Match]], bool],
         match_filter: Optional[Callable[[Match], bool]] = None,
     ) -> None:
-        match_bag = self.collect_matches(statement)
-
-        matches: Iterable[Match] = match_bag.matches
-        if match_filter is not None:
-            matches = [m for m in matches if match_filter(m)]
-
-        start_token_matches = self._compose_start_token_to_matches(matches)
-        builder = MatchCombinationBuilder(
-            start_token_matches, statement, combination_handler
+        builder = self.combination_builder(
+            statement, match_filter, combination_handler
         )
         builder.include_zero_matches = self.include_zero_matches
         builder.build()
@@ -146,24 +158,27 @@ class MatchCombinationBuilder:
         self,
         start_to_matches: Dict[Token, List[Match]],
         sentence: TokenSequence,
-        combination_handler: Callable[[List[Match]], bool],
+        combination_handler: Optional[Callable[[List[Match]], bool]],
     ):
         self.start_to_matches = start_to_matches
         self.sentence = sentence
         self.result_handler = combination_handler
         self.include_zero_matches = False
 
-    def build(self) -> None:
-        # Precompute what the reference walk re-derives at every node:
-        # (1) matches keyed by start POSITION (tokens are unique by
-        # start_index within a sequence, so this is the token-equality
-        # lookup); a key token equal to no sequence token was unreachable
-        # in the token-keyed walk and stays excluded here; (2) each
-        # match's resume index (get_index(end)+1 — including the -1+1=0
-        # case for an end token outside the sequence, same as the lazy
-        # form); (3) for every position, the next position >= it that
-        # carries matches, collapsing the per-node linear scan to one
-        # array read.
+    def index(self) -> Tuple[List[Optional[List[Tuple[Match, int]]]], List[int]]:
+        """The position index every walk of this builder enumerates in:
+        ``(pos_matches, next_pos)``.
+
+        Precomputes what the reference walk re-derives at every node:
+        (1) ``pos_matches[i]``: the matches starting at position ``i``
+        (tokens are unique by start_index within a sequence, so this is
+        the token-equality lookup), each with its resume index
+        (get_index(end)+1 — including the -1+1=0 case for an end token
+        outside the sequence, same as the lazy form); a key token equal
+        to no sequence token was unreachable in the token-keyed walk and
+        stays excluded here; (2) ``next_pos[i]``: the next position >= i
+        that carries matches (``n`` if none), collapsing the per-node
+        linear scan to one array read."""
         sentence = self.sentence
         n = len(sentence.tokens)
         pos_matches: List[Optional[List[Tuple[Match, int]]]] = [None] * n
@@ -182,6 +197,10 @@ class MatchCombinationBuilder:
         self._pos_matches = pos_matches
         self._next_pos = nxt
         self._n = n
+        return pos_matches, nxt
+
+    def build(self) -> None:
+        self.index()
         self._traverse(None, 0)
 
     def _traverse(self, prev_node, start_idx: int) -> bool:

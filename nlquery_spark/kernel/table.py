@@ -762,15 +762,21 @@ class AssignDefaultDateColumnMatcher:
         self.date_column = date_column
 
     def get_matches(self, match_bag: MatchBag):
+        # a date already bound to a date-column condition is consumed;
+        # the bag cannot change during this call (the recognizer adds a
+        # recursive matcher's output only after materializing it), so
+        # the consumed set is built once, on the first date match
+        consumed = None
         for m in list(match_bag.matches):
             if isinstance(m, (DateMatch, DateOffsetMatch)):
-                consumed = any(
-                    isinstance(mm, ColumnConditionMatch)
-                    and mm.value is m
-                    and mm.column.data_type == DT_DATE
-                    for mm in match_bag.matches
-                )
-                if consumed:
+                if consumed is None:
+                    consumed = {
+                        id(mm.value)
+                        for mm in match_bag.matches
+                        if isinstance(mm, ColumnConditionMatch)
+                        and mm.column.data_type == DT_DATE
+                    }
+                if id(m) in consumed:
                     continue
                 cnd = ColumnConditionMatch()
                 cnd.column = self.date_column

@@ -19,7 +19,10 @@ Coverage (all deterministic, generated from the committed fixtures):
 - triple and mention extraction over 120 benchmark gazetteer pages
   (``perfbench/gen.py``, seeds 1-3) against the Orders spec plus the
   5,000-title gazetteer, once plain and once with stop words and the
-  stemmer — the only part of the surface whose value lists are large.
+  stemmer — the only part of the surface whose value lists are large;
+- the same gazetteer triples (plain recognizer) under non-default
+  scoring parameters: ``top_k=3``, ``long_match_boost=False`` and
+  ``max_combinations=50`` (a cap that falls inside most chunks' DFS).
 
 The snapshot lives outside the repo (SNAPSHOT_PATH below): it is a
 session-local gate, not a committed artifact; `check` against a
@@ -115,9 +118,20 @@ def _surface():
         for o in (None, gopts)
     ]
 
+    gazetteer_params = [
+        {"top_k": 3},
+        {"long_match_boost": False},
+        {"max_combinations": 50},
+    ]
+
     return {
         "gazetteer_triples": [
             extract_text_triples(t, r, prescreen=s) for r, s in gaz for t in gtexts
+        ],
+        "gazetteer_param_triples": [
+            extract_text_triples(t, gaz[0][0], prescreen=gaz[0][1], **kw)
+            for kw in gazetteer_params
+            for t in gtexts
         ],
         "gazetteer_mentions": [
             extract_text_mentions(t, r, prescreen=s) for r, s in gaz for t in gtexts

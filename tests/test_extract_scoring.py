@@ -29,9 +29,17 @@ from nlquery_spark.kernel.tokens import TokenSequence
 from nlquery_spark.sources.pages import _page_text, orders_schema_spec
 
 
-def slow_extract(text, recognizer, prescreen=None, top_k=1):
+def slow_extract(
+    text,
+    recognizer,
+    prescreen=None,
+    top_k=1,
+    long_match_boost=True,
+    max_combinations=MAX_COMBINATIONS,
+):
     """The pre-optimization implementation: IncludeZeroMatches=True,
-    stubs materialized, candidate_score over the full combination."""
+    stubs materialized, candidate_score over every combination of the
+    exhaustive DFS up to the cap."""
     out = []
     recognizer.include_zero_matches = True
     try:
@@ -48,10 +56,10 @@ def slow_extract(text, recognizer, prescreen=None, top_k=1):
             def handler(matches):
                 significant = [m for m in matches if not isinstance(m, StubMatch)]
                 if significant:
-                    score = candidate_score(matches, seq, True)
+                    score = candidate_score(matches, seq, long_match_boost)
                     top.add(_ScoredCombo(score, state["n"], significant))
                 state["n"] += 1
-                return state["n"] <= MAX_COMBINATIONS
+                return state["n"] <= max_combinations
 
             def match_filter(m):
                 if isinstance(m, ColumnConditionMatch):
@@ -87,6 +95,127 @@ def test_fast_path_equals_slow_path(source):
         fast = extract_text_triples(text, rec, prescreen=screen)
         slow = slow_extract(text, rec, prescreen=screen)
         assert fast == slow, text[:80]
+
+
+# ---------------------------------------------------------------------------
+# Bounded combination search vs the exhaustive walk on the benchmark's
+# gazetteer pages, where a chunk has hundreds of combinations and most
+# chunks hit the cap.
+
+GAZETTEER_PARAMS = [
+    {},
+    {"top_k": 3},
+    {"long_match_boost": False},
+    {"max_combinations": 5},
+    {"max_combinations": 50},
+]
+
+
+@pytest.fixture(scope="module")
+def gazetteer_setup():
+    from perfbench import gen  # read-only: the benchmark's input generator
+
+    specs = [gen.ORDERS_SPEC, gen.titles_spec()]
+    titles = specs[1]["columns"][0]["values"]
+    texts = [
+        t for seed in (1, 2, 3) for t in gen.gazetteer_pages(seed, 12, titles)["text"]
+    ]
+    return build_recognizer(specs), build_prescreen(specs), texts
+
+
+def _recording_top_set(made):
+    """A TopSet class whose instances append themselves to ``made`` and
+    remember the enumeration order of every combination offered to them,
+    i.e. every leaf the search scored."""
+
+    class RecordingTopSet(TopSet):
+        def __init__(self, *args):
+            super().__init__(*args)
+            self.offered = []
+            made.append(self)
+
+        def add(self, elem):
+            self.offered.append(elem.order)
+            return super().add(elem)
+
+    return RecordingTopSet
+
+
+def _capped_combination_counts(text, rec, prescreen, max_combinations):
+    """Per chunk that extract_text_triples searches: the number of
+    combinations the exhaustive DFS enumerates, capped at
+    max_combinations + 1 like the extraction."""
+    from nlquery_spark.kernel.extract import _chunk_can_match, _is_triple_match
+    from nlquery_spark.kernel.tokens import NUMBER, WORD
+
+    for _, chunk in _chunks(text):
+        tokens = tokenize(chunk)
+        if not _chunk_can_match(tokens, prescreen):
+            continue
+        if not any(t.type == WORD or t.type == NUMBER for t in tokens):
+            continue
+        n = [0]
+
+        def handler(_matches):
+            n[0] += 1
+            return n[0] <= max_combinations
+
+        rec.recognize(TokenSequence(tokens), handler, _is_triple_match)
+        yield n[0]
+
+
+@pytest.mark.parametrize(
+    "params",
+    GAZETTEER_PARAMS,
+    ids=lambda p: ",".join(f"{k}={v}" for k, v in p.items()) or "default",
+)
+def test_bounded_search_equals_exhaustive_on_gazetteer(
+    params, gazetteer_setup, monkeypatch
+):
+    import nlquery_spark.kernel.extract as ke
+
+    rec, screen, texts = gazetteer_setup
+    cap = params.get("max_combinations", MAX_COMBINATIONS)
+    made = []
+    monkeypatch.setattr(ke, "TopSet", _recording_top_set(made))
+    searched = skipped_leaves = cap_in_skipped = 0
+    for text in texts:
+        made.clear()
+        fast = extract_text_triples(text, rec, prescreen=screen, **params)
+        assert fast == slow_extract(text, rec, prescreen=screen, **params), text[:80]
+        counts = list(_capped_combination_counts(text, rec, screen, cap))
+        assert len(counts) == len(made)
+        for top, count in zip(made, counts):
+            searched += 1
+            # no combination past the cap is ever scored
+            assert all(order <= cap for order in top.offered)
+            # a leaf is left unscored only when it is skipped by the bound
+            if top.count and len(top.offered) < count:
+                skipped_leaves += 1
+                assert top.count == top.max_size
+            # the cap's last combination was skipped: the search stopped
+            # inside a subtree that could not improve the top-k
+            if count == cap + 1 and cap not in top.offered:
+                cap_in_skipped += 1
+    # the fixture reaches the hard cases of the bound (with top_k=3, the
+    # skipped leaves were skipped against a full top-3)
+    assert searched > 100
+    assert skipped_leaves > 0
+    assert cap_in_skipped > 0
+
+
+def test_bounded_search_cap_sweep(gazetteer_setup):
+    """Every cap from 0 to 29: the search must stop at the same
+    combination as the exhaustive walk wherever the cap falls, inside a
+    skipped subtree, on its last leaf or on a scored leaf."""
+    rec, screen, texts = gazetteer_setup
+    for cap in range(30):
+        for top_k in (1, 2):
+            for text in texts[:6]:
+                params = {"top_k": top_k, "max_combinations": cap}
+                fast = extract_text_triples(text, rec, prescreen=screen, **params)
+                slow = slow_extract(text, rec, prescreen=screen, **params)
+                assert fast == slow, (params, text[:80])
 
 
 # ---------------------------------------------------------------------------
