@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .extract import _MEMO_SALTS, prune_zip_importers
+
 MENTIONS_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -65,7 +67,6 @@ def extract_mentions(
     schema_specs = list(schema_specs)
     prescreen = build_prescreen(schema_specs, options_spec) if use_prescreen else None
     cache_key = spec_key(schema_specs, options_spec)
-    from .extract import _MEMO_SALTS
 
     payload_bc = spark.sparkContext.broadcast(
         (schema_specs, options_spec, prescreen, cache_key, memo_chunks,
@@ -84,6 +85,7 @@ def extract_mentions(
             extract_text_mentions,
         )
 
+        prune_zip_importers()
         specs, opts, screen, key, use_memo, salt = payload_bc.value
         rec = cached_recognizer(specs, opts, key)
         # "mentions:" prefix: a distinct namespace from the triples memo

@@ -42,6 +42,7 @@ from ..kernel.tokenizer import (
     tokenize,
 )
 from ..kernel.tokens import TokenSequence
+from .extract import prune_zip_importers
 
 
 def _query_tokens(nl: str, options_spec: Optional[Dict]):
@@ -603,6 +604,7 @@ def suggest_keywords_df(
 
         from ..kernel.extract import cached_recognizer
 
+        prune_zip_importers()
         specs, opts, key = payload_bc.value
         rec = cached_recognizer(specs, opts, key)
         for pdf in batches:
