@@ -485,11 +485,16 @@ def _top_combinations(
 
     top = TopSet(top_k, _combo_compare)
     chain: List[Tuple[Match, float]] = []  # visited path, sentence order
+    # the DFS runs on an explicit stack, not a nested function that
+    # recurses through its closure cell: that would be a reference cycle
+    # keeping this call's rows alive until the cyclic GC runs. One frame
+    # per open position: (its unvisited children, prefix, n_stubs);
+    # chain[i] is the step taken out of frame i
+    frames: List[Tuple[Iterator[Tuple[Match, int, float]], float, int]] = []
     n_leaves = 0
     bar = float("-inf")  # top's minimum score less the margin, once full
-
-    def walk(p: int, prefix: float, n_stubs: int) -> bool:
-        nonlocal n_leaves, bar
+    p, prefix, n_stubs = 0, 0.0, 0
+    while True:
         j = next_pos[p]
         significant_gap = pre_sig[j] - pre_sig[p] > 0
         if j == n:
@@ -506,26 +511,35 @@ def _top_combinations(
                 top.add(_ScoredCombo(total, order, [m for m, _ in reversed(chain)]))
                 if top.count == top.max_size:
                     bar = top.min.score - 1e-9
-            return n_leaves <= max_combinations
-        if significant_gap:
-            n_stubs += 1
-            prefix -= c
-        for m, after, w in steps[j]:
-            v = prefix + w - c
-            if (v + ub[after]) / total_won + c < bar:
-                n_leaves += cnt[after]
-                if n_leaves > max_combinations:
-                    return False
+                chain.pop()
+            if n_leaves > max_combinations:
+                return top
+        else:
+            if significant_gap:
+                n_stubs += 1
+                prefix -= c
+            frames.append((iter(steps[j]), prefix, n_stubs))
+        # the next child to visit, from the innermost open frame out
+        while frames:
+            children, prefix, n_stubs = frames[-1]
+            for m, after, w in children:
+                v = prefix + w - c
+                if (v + ub[after]) / total_won + c < bar:
+                    n_leaves += cnt[after]
+                    if n_leaves > max_combinations:
+                        return top
+                    continue
+                chain.append((m, w))
+                p, prefix = after, v
+                break
+            else:
+                frames.pop()
+                if chain:
+                    chain.pop()
                 continue
-            chain.append((m, w))
-            ok = walk(after, v, n_stubs)
-            chain.pop()
-            if not ok:
-                return False
-        return True
-
-    walk(0, 0.0, 0)
-    return top
+            break
+        else:
+            return top
 
 
 def extract_text_triples(

@@ -366,11 +366,17 @@ class ListContainsMatcher:
     """Gazetteer operator: dictionary value x token substring containment
     with per-token max-score throttling (ListContainsMatcher.cs:23-127).
 
-    Emission is lazy: the throttle runs on plain ``(token, contains,
-    score)`` hits and a match object is built only for a hit that is
-    yielded, so a hot token that hits thousands of values costs tuples,
-    not matches. The emission order is the reference's (value-outer,
-    token-inner)."""
+    The throttle decides a token's k-th hit, in value order, from that
+    token's own hits alone: the hit passes if k is within
+    ``max_score_filter_threshold`` or its score beats every earlier hit
+    of the token. So the decision is made once per token value and kept
+    in the token memo, as ``{value_idx: (contains, score, passed)}`` plus
+    the list of passing values (the memo is rebuilt when the threshold
+    changes). Per chunk, a value is emitted if one of its hits passed or
+    if two or more token occurrences hit it (the reference then yields
+    its skipped hits too); only those values are grouped, sorted and
+    built into matches. The emission order is the reference's
+    (value-outer, token-inner)."""
 
     first_pass_only = True
     recursive = False
@@ -385,24 +391,31 @@ class ListContainsMatcher:
         self.apply_stemmer: Optional[Callable[[str], str]] = None
         self.max_score_filter_threshold = 10
         self._values_lower = [v.lower() for v in self.values]
-        # (token value, is NUMBER) -> [(value_idx, contains, score)];
-        # keyed by the exact token value (the stemmer is case-sensitive)
+        # (token value, is NUMBER) -> ({value_idx: (contains, score,
+        # passed)}, [passing value_idx]) under _memo_threshold; keyed by
+        # the exact token value (the stemmer is case-sensitive)
         self._token_memo = {}
+        self._memo_threshold = self.max_score_filter_threshold
 
     def _lookup(self, token: Token):
-        """All (value_idx, contains, score) hits for a token across the
-        whole gazetteer, in value order — memoized (tokens are Zipfian;
-        one O(V) scan per distinct token amortizes the V x T loop away).
-        The score depends only on the token value and whether it is a
-        NUMBER, which together key the memo."""
+        """All hits of a token across the whole gazetteer, in value
+        order, with the throttle's verdict on each, and the values whose
+        hit passed — memoized (tokens are Zipfian; one O(V) scan per
+        distinct token amortizes the V x T loop away). The score depends
+        only on the token value and whether it is a NUMBER, which
+        together key the memo."""
         token_val = token.value
         is_number = token.type == NUMBER
         memo = self._token_memo
-        hits = memo.get((token_val, is_number))
-        if hits is None:
+        entry = memo.get((token_val, is_number))
+        if entry is None:
             if len(memo) > self.MEMO_MAX:
                 _evict_half(memo)
-            hits = []
+            hits = {}
+            passing = []
+            threshold = self._memo_threshold
+            n_hits = 0
+            max_score = 0.0
             token_lower = token.value_lower
             stemmer = self.apply_stemmer
             token_stem = None
@@ -435,9 +448,16 @@ class ListContainsMatcher:
                         score /= 2  # not number end
                 elif idx > 0 and val[idx - 1].isalnum():
                     score /= 2  # not word start penalty
-                hits.append((vi, contains, score))
-            memo[(token_val, is_number)] = hits
-        return hits
+                n_hits += 1
+                is_new_max = score > max_score
+                if is_new_max:
+                    max_score = score
+                passed = n_hits <= threshold or is_new_max
+                if passed:
+                    passing.append(vi)
+                hits[vi] = (contains, score, passed)
+            entry = memo[(token_val, is_number)] = (hits, passing)
+        return entry
 
     def _match(self, vi: int, t: Token, contains: int, score: float) -> Match:
         m = self.get_match(contains, (vi, self.values[vi]))
@@ -448,35 +468,39 @@ class ListContainsMatcher:
         return m
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
-        word_or_num = [
-            t for t in match_bag.statement.tokens if t.type == WORD or t.type == NUMBER
-        ]
-        threshold = self.max_score_filter_threshold
-        token_matches_count = [0] * len(word_or_num)
-        token_max_score = [0.0] * len(word_or_num)
-
-        # hits grouped by value, token order kept inside each value
-        hits_by_value: dict = {}
-        for t_idx, t in enumerate(word_or_num):
-            for vi, contains, score in self._lookup(t):
-                hits_by_value.setdefault(vi, []).append((t_idx, t, contains, score))
-
-        for vi in sorted(hits_by_value):
-            entries = hits_by_value[vi]
-            skipped = []
-            for t_idx, t, contains, score in entries:
-                token_matches_count[t_idx] += 1
-                is_new_max = score > token_max_score[t_idx]
-                if is_new_max:
-                    token_max_score[t_idx] = score
-                if token_matches_count[t_idx] <= threshold or is_new_max:
+        if self.max_score_filter_threshold != self._memo_threshold:
+            self._token_memo = {}
+            self._memo_threshold = self.max_score_filter_threshold
+        occurrences = []  # (token, hits) per word/number token, in order
+        emitted = set()
+        seen = set()
+        for t in match_bag.statement.tokens:
+            if t.type == WORD or t.type == NUMBER:
+                hits, passing = self._lookup(t)
+                if hits:
+                    keys = hits.keys()
+                    emitted.update(passing)
+                    emitted |= keys & seen  # hit by an earlier occurrence too
+                    seen |= keys
+                    occurrences.append((t, hits))
+        if not emitted:
+            return
+        # emitted values grouped by value, token order kept inside each
+        by_value: dict = {}
+        for t, hits in occurrences:
+            for vi in hits.keys() & emitted:
+                by_value.setdefault(vi, []).append((t, hits[vi]))
+        for vi in sorted(by_value):
+            entries = by_value[vi]
+            for t, (contains, score, passed) in entries:
+                if passed:
                     yield self._match(vi, t, contains, score)
-                elif len(entries) > 1:
-                    # the reference yields a value's skipped hits after its
-                    # other ones whenever the value has more than one hit
-                    skipped.append((t, contains, score))
-            for t, contains, score in skipped:
-                yield self._match(vi, t, contains, score)
+            if len(entries) > 1:
+                # the reference yields a value's skipped hits after its
+                # other ones whenever the value has more than one hit
+                for t, (contains, score, passed) in entries:
+                    if not passed:
+                        yield self._match(vi, t, contains, score)
 
 
 class NumberMatcher:
@@ -1118,7 +1142,12 @@ class MergePhraseMatcher:
     match in that group that merges is the one the reference's scan of
     all the next token's matches finds, because every match outside the
     group returns None. The index is rebuilt from the bag on every call,
-    so ``get_matches`` stays a pure function of (statement, bag)."""
+    so ``get_matches`` stays a pure function of (statement, bag).
+
+    The reference follows a merge chain by recursion; here it is a loop,
+    because a nested function that calls itself through its closure
+    cell is a reference cycle that keeps the call's whole index alive
+    until Python's cyclic collector runs."""
 
     first_pass_only = False
     recursive = False
@@ -1143,36 +1172,41 @@ class MergePhraseMatcher:
             by_start.setdefault(m.start, {}).setdefault(merge_key(m), []).append(m)
         similar.sort(key=lambda m: statement.get_index(m.start))
         merged_ids = set()
-
-        def try_merge_with_next(m):
-            end_token_idx = statement.get_index(m.end)
-            next_token = None
-            for i in range(end_token_idx + 1, len(tokens)):
-                t = tokens[i]
-                if (t.type == WORD or t.type == NUMBER) and match_bag.find_by_start(t):
-                    next_token = t
-                    break
-            if next_token is None:
-                return None
-            for next_match in by_start.get(next_token, {}).get(merge_key(m), ()):
-                merged = merge(statement, m, next_match)
-                if merged is None:
-                    continue
-                merged.matched_tokens_count = (
-                    m.matched_tokens_count + next_match.matched_tokens_count
-                )
-                merged_ids.add(id(next_match))
-                if isinstance(merged, match_type):
-                    next_merged = try_merge_with_next(merged)
-                    if next_merged is not None:
-                        return next_merged
-                return merged
-            return None
+        # end token -> by_start's groups at the next word/number token
+        # that starts a match ({} if none): the bag is fixed during a
+        # call, and most matches share their end token with others
+        next_groups: dict = {}
 
         for match in similar:
             if id(match) in merged_ids:
                 continue
             merged_ids.add(id(match))  # mark as processed
-            merged_match = try_merge_with_next(match)
+            # the reference's TryMergeWithNext recursion: each step merges
+            # with the first partner at the next matched token and goes on
+            # from the merged match; the chain's last merge is yielded
+            m = match
+            merged_match = None
+            while m is not None:
+                groups = next_groups.get(m.end)
+                if groups is None:
+                    groups = {}
+                    for i in range(statement.get_index(m.end) + 1, len(tokens)):
+                        t = tokens[i]
+                        if (t.type == WORD or t.type == NUMBER) and match_bag.find_by_start(t):
+                            groups = by_start.get(t, {})
+                            break
+                    next_groups[m.end] = groups
+                for next_match in groups.get(merge_key(m), ()):
+                    merged = merge(statement, m, next_match)
+                    if merged is not None:
+                        break
+                else:
+                    break
+                merged.matched_tokens_count = (
+                    m.matched_tokens_count + next_match.matched_tokens_count
+                )
+                merged_ids.add(id(next_match))
+                merged_match = merged
+                m = merged if isinstance(merged, match_type) else None
             if merged_match is not None:
                 yield merged_match

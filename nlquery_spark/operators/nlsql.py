@@ -16,6 +16,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..kernel.extract import (
+    _iter_group_leaves,
     build_recognizer,
     cached_recognizer,
     candidate_score,
@@ -302,16 +303,11 @@ def parse_best_matches(
 
     rec.recognize(seq, handler, match_filter)
     out: List = []
-
-    def collect(m):
+    for m in best[0] or []:
         if isinstance(m, GroupMatch):
-            for ch in m.group_matches:
-                collect(ch)
+            out.extend(_iter_group_leaves(m))
         else:
             out.append(m)
-
-    for m in best[0] or []:
-        collect(m)
     return out, seq
 
 

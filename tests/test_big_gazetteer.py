@@ -190,6 +190,7 @@ def _per_hit_list_contains(lcm: ListContainsMatcher, match_bag, stats):
     token_matches_count = [0] * len(word_or_num)
     token_max_score = [0.0] * len(word_or_num)
     hits_by_value = {}
+    hot = []  # (token value, is NUMBER) of each hot occurrence
     for t_idx, t in enumerate(word_or_num):
         stem = lcm.apply_stemmer(t.value) if lcm.apply_stemmer is not None else None
         stem = stem if stem != t.value else None
@@ -207,6 +208,15 @@ def _per_hit_list_contains(lcm: ListContainsMatcher, match_bag, stats):
                 hits_by_value.setdefault(vi, []).append((t_idx, t, idx, used))
         stats["hot_tokens"] += n_hits > threshold
         stats["number_hits"] += n_hits if t.type == NUMBER else 0
+        if n_hits > threshold:
+            hot.append((t.value, t.type == NUMBER))
+    # a hot token that occurs twice in the chunk; a value hit by both a
+    # word token and a number token
+    stats["repeated_hot_tokens"] += len(hot) - len(set(hot))
+    stats["word_and_number_values"] += sum(
+        {t.type for _, t, _, _ in entries} == {WORD, NUMBER}
+        for entries in hits_by_value.values()
+    )
 
     for i, val in enumerate(lcm.values):
         entries = hits_by_value.get(i)
@@ -322,8 +332,18 @@ def _oracle_setups():
         yield builder, builder.build(), chunks
 
 
+_ORACLE_STATS = [
+    "stem_hits",
+    "hot_tokens",
+    "number_hits",
+    "skipped_yields",
+    "repeated_hot_tokens",
+    "word_and_number_values",
+]
+
+
 def test_lazy_gazetteer_emission_matches_per_hit_oracle():
-    stats = dict.fromkeys(["stem_hits", "hot_tokens", "number_hits", "skipped_yields"], 0)
+    stats = dict.fromkeys(_ORACLE_STATS, 0)
     n_lists = 0
     for builder, _matchers, chunks in _oracle_setups():
         for lcm in builder.keyword_matchers:
@@ -339,6 +359,33 @@ def test_lazy_gazetteer_emission_matches_per_hit_oracle():
                     assert got == want, chunk
     assert n_lists == 6  # Title, Genres and Year lists, with and without stemmer
     assert all(stats.values()), stats
+
+
+def test_memoized_throttle_follows_threshold_change():
+    """The token memo holds the throttle's verdicts, which depend on
+    ``max_score_filter_threshold``: after the threshold of a warm
+    matcher changes, it emits what the per-hit oracle emits with the new
+    threshold."""
+    builder, _matchers, chunks = next(_oracle_setups())
+    lcm = next(
+        m
+        for m in builder.keyword_matchers
+        if isinstance(m, ListContainsMatcher) and len(m.values) == 5000
+    )
+    stats = dict.fromkeys(_ORACLE_STATS, 0)
+    emitted = {}
+    for threshold in (10, 3, 40, 10):
+        lcm.max_score_filter_threshold = threshold
+        got_all = []
+        for chunk in chunks:
+            seq = TokenSequence(tokenize(chunk))
+            want = [_desc(m) for m in _per_hit_list_contains(lcm, MatchBag(seq), stats)]
+            got = [_desc(m) for m in lcm.get_matches(MatchBag(seq))]
+            assert got == want, (threshold, chunk)
+            got_all.append(got)
+        emitted[threshold] = got_all
+    # the thresholds do change what is emitted
+    assert emitted[3] != emitted[10] != emitted[40]
 
 
 def test_keyed_phrase_merge_matches_all_pairs_oracle():
