@@ -10,6 +10,9 @@ same source tree always produces byte-identical zip bytes — which keeps
 the ``_code_digest`` zip-fallback fingerprint stable too.
 
 Usage: python scripts/build_dist.py
+
+The zip is a build output (``dist/`` is git-ignored):
+``scripts/spark_submit_demo.sh`` rebuilds it before every submit.
 """
 
 from __future__ import annotations
@@ -21,9 +24,11 @@ import zipfile
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
-def main() -> None:
-    out = REPO / "dist" / "nlquery_spark.zip"
-    out.parent.mkdir(exist_ok=True)
+def main(
+    out: os.PathLike | str = REPO / "dist" / "nlquery_spark.zip",
+) -> pathlib.Path:
+    out = pathlib.Path(out)
+    out.parent.mkdir(parents=True, exist_ok=True)
     sources = sorted((REPO / "nlquery_spark").rglob("*.py"))
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sources:
@@ -36,6 +41,7 @@ def main() -> None:
             info.compress_type = zipfile.ZIP_DEFLATED
             z.writestr(info, p.read_bytes())
     print(f"{out}: {len(sources)} sources, {os.path.getsize(out)} bytes")
+    return out
 
 
 if __name__ == "__main__":

@@ -20,3 +20,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def build_dist():
+    """``scripts/build_dist.py``'s ``main(out)``: builds the
+    spark-submit zip at ``out``."""
+    import importlib.util
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "build_dist.py",
+    )
+    spec = importlib.util.spec_from_file_location("build_dist", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.main
