@@ -1,14 +1,39 @@
-"""Skewed-corpus extraction + physical-plan assertions (pushdown,
-column pruning, partitioned sink, checkpointed link prediction) — the
-'100 TB posture' checks."""
+"""Skew utilities + physical-plan assertions (pushdown, broadcast,
+partitioned sink) — the '100 TB posture' checks."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from nlquery_spark.operators.extract import extract_triples, write_triples
+from nlquery_spark.operators.skew import hot_keys, salted_count, salted_join
 from nlquery_spark.sources.pages import orders_schema_spec, synth_pages
+
+
+def test_salted_join_matches_plain_join(spark):
+    left = spark.createDataFrame(
+        [(1, i) for i in range(500)] + [(2, i) for i in range(10)] + [(3, 1)],
+        "k long, v long",
+    )
+    right = spark.createDataFrame([(1, "a"), (2, "b"), (4, "d")], "k long, w string")
+    plain = {(r.k, r.v, r.w) for r in left.join(right, "k").collect()}
+    salted = {
+        (r.k, r.v, r.w)
+        for r in salted_join(left, right, "k", salt=8, hot_threshold=100).collect()
+    }
+    assert plain == salted
+    assert {r.k for r in hot_keys(left, "k", 100).collect()} == {1}
+
+
+def test_salted_count_matches_plain(spark):
+    df = spark.createDataFrame(
+        [(1,)] * 1000 + [(2,)] * 3 + [(5,)] * 7, "k long"
+    )
+    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
+    salted = {r.k: r.cnt for r in salted_count(df, "k", salt=8).collect()}
+    assert plain == salted
 
 
 def test_skewed_corpus_extraction(spark):
@@ -39,6 +64,16 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice,150000.0)" in plan, plan
 
 
+def test_q5_uses_broadcast_joins(spark, sf_dir):
+    plan = (
+        em.queries()["q5_local_supplier"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastHashJoin" in plan
+
+
 def test_column_pruning_in_extraction(spark, tmp_path):
     """Extraction ships only url+text to Python: column pruning must
     reach the parquet scan (html binary never read)."""
@@ -65,6 +100,28 @@ def test_write_triples_partitioned_sink(spark, tmp_path):
     assert "subj_bucket" in back.columns
 
 
+def test_q17_broadcasts_avg_side(spark, sf_dir):
+    """The decorrelated per-part average is dim-sized: it must broadcast
+    so the fact scan is shuffle-free."""
+    plan = (
+        em.queries()["q17_small_quantity_revenue"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastHashJoin" in plan, plan
+
+
+def test_event_json_stays_in_codegen(spark, sf_dir):
+    """get_json_object must run JVM-side (no Python in the plan) and
+    the scan must prune to the two referenced columns."""
+    df = em.queries()["event_props_json"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    read_schema = plan.split("ReadSchema:")[-1].splitlines()[0]
+    assert "props" in read_schema and "value" not in read_schema, read_schema
+
+
 def test_linker_prunes_to_url_text(spark, tmp_path):
     from nlquery_spark.operators.linker import extract_mentions
 
@@ -75,6 +132,123 @@ def test_linker_prunes_to_url_text(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     read_schema = plan.split("ReadSchema:")[-1].splitlines()[0]
     assert "html" not in read_schema and "text" in read_schema, read_schema
+
+
+def test_corpus_clean_pushdown_and_stage_order(spark, sf_dir):
+    """The doc_id predicate must reach the parquet scan, and the quality
+    gate must execute below (before) every shuffle — cheap narrowing
+    precedes the dedup window and the shingle join."""
+    # other tests may have cached the documents table session-wide, in
+    # which case the scan is an InMemoryTableScan and parquet pushdown
+    # can't appear — clear the cache so the assertion is deterministic
+    spark.catalog.clearCache()
+    df = em.queries()["corpus_clean"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,120)" in plan, plan
+    # the quality gate exists as a plan Filter and sits deeper in the
+    # printed tree than the topmost (final-stage) Exchange. NOTE: with a
+    # multi-branch tree, string positions can't prove it precedes EVERY
+    # shuffle — the pushdown assertion above plus this topmost-exchange
+    # ordering is what the test actually enforces.
+    q_pos = plan.find(">= 0.75")
+    assert q_pos > 0, plan[:1500]
+    assert q_pos > plan.find("Exchange") > 0, plan[:1500]
+
+
+def test_decontaminate_broadcasts_benchmark(spark, sf_dir):
+    """The benchmark n-gram side must broadcast — the corpus join is
+    map-side; a shuffled corpus join would be the 100-TB killer."""
+    plan = (
+        em.queries()["corpus_decontaminate"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
+
+
+def test_inverted_index_single_exchange(spark, sf_dir):
+    """One shuffle on (token, shard) — the count_distinct adds a partial
+    expand but no extra corpus-wide exchange beyond the keyed aggs."""
+    plan = (
+        em.queries()["inverted_index"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Scan parquet") == 1  # one corpus pass
+    assert "CartesianProduct" not in plan
+
+
+def test_phrase_search_no_fanout_joins(spark, sf_dir):
+    plan = (
+        em.queries()["index_phrase_search"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "CartesianProduct" not in plan
+
+
+def test_phrase_search_single_corpus_scan(spark, sf_dir):
+    """VERDICT r4 item 2: a k-term phrase must cost ONE corpus
+    tokenization, not k. The isin-prefiltered exploded stream is
+    localCheckpointed, so the final plan's per-term streams read the
+    checkpoint — zero parquet scans survive in the query plan."""
+    plan = (
+        em.queries()["index_phrase_search"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Scan parquet" not in plan
+    assert "Scan ExistingRDD" in plan
+
+
+def test_cooccurrence_single_corpus_scan(spark, sf_dir):
+    """The localCheckpoint means the four consumers of the filtered
+    (group, item) projection read materialized blocks — the final plan
+    must scan the corpus parquet zero times (checkpoint RDD scans only)
+    beyond the lineage already materialized."""
+    plan = (
+        em.queries()["token_cooccurrence_lift"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Scan parquet" not in plan  # all inputs come from the checkpoint
+    assert "Scan ExistingRDD" in plan
+
+
+def test_content_defined_chunks_shuffle_free(spark, sf_dir):
+    """Chunking is per-document: the chunker itself must plan with ZERO
+    exchanges (one Arrow mapInPandas pass), and the paragraph_boilerplate
+    query's only corpus-wide shuffle is the final digest aggregation."""
+    from nlquery_spark.operators.corpus import content_defined_chunks
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    chunk_plan = (
+        content_defined_chunks(docs, avg_tokens=16)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in chunk_plan
+    assert "MapInPandas" in chunk_plan
+    q_plan = (
+        em.queries()["paragraph_boilerplate"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    # the digest agg's count_distinct(doc_id) plans as the standard
+    # two-phase distinct aggregate: partial agg map-side, then an
+    # exchange keyed (chunk_hash, doc_id) and one keyed chunk_hash —
+    # BOTH carry 32-byte-digest rows; chunk text and tokens never
+    # shuffle (the partial agg reduces them before any exchange)
+    assert q_plan.count("Exchange hashpartitioning") <= 2
+    assert q_plan.index("MapInPandas") > q_plan.index("Exchange")  # text stays below
 
 
 def test_link_prediction_reads_only_checkpoints(spark, sf_dir):
@@ -91,3 +265,153 @@ def test_link_prediction_reads_only_checkpoints(spark, sf_dir):
     )
     assert "Scan parquet" not in plan
     assert "Scan ExistingRDD" in plan
+
+
+def test_order_distribution_preaggregates_and_prunes(spark, sf_dir):
+    """Q13-analog posture: the fact table is aggregated BEFORE the
+    dimension join (the join input is one row per customer, not one row
+    per order), and the customer scan is pruned to the single join key
+    column."""
+    plan = (
+        em.queries()["customer_order_distribution"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    # column pruning: the customer relation contributes only c_custkey
+    assert "ReadSchema: struct<c_custkey:bigint>" in plan, plan
+    # pre-aggregation: the orders side aggregates below the join — the
+    # join itself must see an aggregate, so HashAggregate appears on
+    # the streamed side before SortMergeJoin/BroadcastHashJoin consumes
+    # it (textually: an aggregate over o_custkey exists in the plan)
+    assert "partial_count" in plan or "count(1)" in plan, plan
+
+
+def test_running_spend_single_exchange(spark, sf_dir):
+    """The running-total window costs exactly ONE shuffle (by the
+    customer key); the sort inside the partition is local."""
+    plan = (
+        em.queries()["customer_running_spend"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Window" in plan
+
+
+def test_ewma_single_exchange(spark, sf_dir):
+    """The k-lag EWMA window is one user-keyed shuffle and stays
+    entirely in JVM window evaluation — no Arrow/Python stage."""
+    plan = (
+        em.queries()["events_ewma"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_shard_assign_single_exchange(spark, sf_dir):
+    """Shard layout is one shuffle on the (uniform, key-only) shard id;
+    the per-shard position sort is local to the shard partition."""
+    plan = (
+        em.queries()["corpus_shard_assign"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_url_normalize_zero_exchange_no_python(spark, sf_dir):
+    """URL canonicalization must ride the scan: zero shuffles, zero
+    Python stages, one codegen span of regexp/array expressions — at
+    10^12 URLs anything else turns a projection into a job."""
+    plan = (
+        em.queries()["web_url_normalize"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "*(1)" in plan  # generator stage is whole-stage-codegen'd
+
+
+def test_split_assign_zero_exchange(spark, sf_dir):
+    """Train/val/test assignment is a pure projection of the md5
+    uniform — no shuffle anywhere in the plan."""
+    plan = (
+        em.queries()["corpus_split_assign"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan, plan
+
+
+def test_dedup_incremental_join_is_stats_driven(spark, sf_dir):
+    """The anti join strategy is left to Catalyst's stats: at fixture
+    scale the history digest set fits under the broadcast threshold so
+    the anti join must be a BroadcastHashJoin LeftAnti (no digest
+    shuffle of the batch for the join); the within-batch winnow then
+    costs the one digest exchange. At crawl scale the same declarative
+    plan flips to a shuffle join when the index outgrows the
+    threshold — that flip is the point of NOT forcing a strategy."""
+    plan = (
+        em.queries()["dedup_incremental"](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "LeftAnti, BuildRight" in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    # one digest exchange for the winnow window + the history
+    # distinct's exchange inside the broadcast build (rendered per
+    # union branch in the plan text); the batch rows are never
+    # digest-shuffled for the join itself
+    assert plan.count("Exchange hashpartitioning") <= 4, plan
+
+
+def test_web_link_graph_one_exchange_no_python(spark, sf_dir):
+    """Link extraction + host mapping must ride the page scan as a
+    narrow JVM projection: the only Exchange is the final
+    (src_host, dst_host) hash aggregation, and no Python stage
+    appears anywhere."""
+    df = em.queries()["web_link_graph"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_gopher_filters_zero_exchange(spark, sf_dir):
+    """The Gopher rule audit is a pure per-row projection — zero
+    shuffles, zero Python."""
+    df = em.queries()["doc_gopher_filters"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Exchange" not in plan, plan
+
+
+def test_crawl_diff_single_scan_full_outer(spark, sf_dir):
+    """Both snapshots read the narrow checkpointed digest base (no
+    second parquet scan of documents), joined by ONE full outer join."""
+    df = em.queries()["web_crawl_diff"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("Scan parquet") == 0, plan  # checkpoint feeds both
+    assert "FullOuter" in plan, plan
+
+
+def test_anchor_text_two_exchanges(spark, sf_dir):
+    """Mode-per-key needs exactly two keyed exchanges: the
+    (target, anchor) count agg and the per-target window — the window
+    must reuse the agg's hash partitioning prefix, never add a third."""
+    df = em.queries()["web_anchor_text"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # count keyed shuffles specifically — a bare "Exchange" would also
+    # match BroadcastExchange/ReusedExchange nodes
+    assert plan.count("Exchange hashpartitioning") <= 2, plan

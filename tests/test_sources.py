@@ -53,6 +53,15 @@ def test_read_table_compressed_extension_dispatch(spark, tmp_path):
     )
 
 
+def test_sample_frames_rejects_nonpositive_interval(spark):
+    import pytest as _pytest
+
+    from nlquery_spark.operators.multimodal import sample_frames, synth_media
+
+    with _pytest.raises(ValueError):
+        sample_frames(synth_media(spark, 3), every_ms=0)
+
+
 def test_iceberg_bucketed_triples_sink(spark, tmp_path):
     """SURVEY §1.3 Iceberg layout: writeTo(...).partitionedBy(pred,
     bucket(N, subj)) lands a table whose partition spec is
