@@ -34,7 +34,7 @@ from .matchers import (  # noqa: F401
     StopWordsFilter,
     TokenFilterMatcher,
 )
-from .recognizer import Recognizer, TopSet, NGramGenerator  # noqa: F401
+from .recognizer import Recognizer, NGramGenerator  # noqa: F401
 from .table import (  # noqa: F401
     ColumnSchema,
     TableSchema,

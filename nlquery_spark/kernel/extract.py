@@ -15,14 +15,15 @@ closures are not picklable, the spec dict is).
 from __future__ import annotations
 
 import hashlib
+import heapq
 import json
 import os
 import re
 from itertools import islice
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
-from .matches import DateMatch, DateOffsetMatch, Match, NumberMatch, StubMatch
-from .recognizer import Recognizer, TopSet
+from .matches import DateMatch, DateOffsetMatch, Match, NumberMatch
+from .recognizer import Recognizer
 from .table import (
     COND_NAMES,
     ColumnConditionMatch,
@@ -43,12 +44,13 @@ from .tokens import NUMBER, SENTENCE_END, SEPARATOR, WORD, TokenSequence
 REFERENCE_DATE = (2024, 1, 1)
 
 # Sentence chunking for long page text: the reference processes short
-# queries; web pages are split into query-sized chunks so the combination
-# DFS stays bounded. Chunking is internal — the page `text` column itself
-# is never modified (byte-identity invariant).
+# queries; web pages are split into query-sized chunks so the match bag
+# and the combination search stay small. Chunking is internal — the
+# page `text` column itself is never modified (byte-identity invariant).
 _SENTENCE_SPLIT = re.compile(r"[^.!?\n]*[.!?\n]+|[^.!?\n]+$")
 MAX_CHUNK_CHARS = 400
-MAX_COMBINATIONS = 1000  # per chunk, reference examples' cap
+# the cap perfbench counts combinations up to; not an extraction bound
+MAX_COMBINATIONS = 1000
 
 
 def schema_from_dict(spec: Dict) -> TableSchema:
@@ -163,7 +165,7 @@ def _parse_memo_cap(raw) -> int:
 
 
 # Boilerplate-chunk memo: chunk -> triples is a pure function of
-# (chunk text, compiled spec, top_k/boost/cap params), and web corpora
+# (chunk text, compiled spec, top_k/boost params), and web corpora
 # repeat chunks heavily (navigation, footers, templated sentences — this
 # repo's CC-style fixture runs ~53-59% repeated chunks, real Common Crawl
 # similar). Memoizing relative-offset results per worker process turns
@@ -218,13 +220,11 @@ def _memo_hit(memo: Dict[str, tuple], chunk: str):
     return hit
 
 
-def chunk_memo(
-    cache_key: str, top_k: int, long_match_boost: bool, max_combinations: int
-) -> Dict[str, tuple]:
+def chunk_memo(cache_key: str, top_k: int, long_match_boost: bool) -> Dict[str, tuple]:
     """Per-executor-process chunk-result memo, scoped to every parameter
     that affects ``extract_text_triples`` output (the recognizer spec via
-    ``cache_key`` plus the scoring/cap knobs)."""
-    key = f"{cache_key}:{top_k}:{long_match_boost}:{max_combinations}"
+    ``cache_key`` plus the scoring knobs)."""
+    key = f"{cache_key}:{top_k}:{long_match_boost}"
     memo = _CHUNK_MEMO.get(key)
     if memo is None:
         # bound the namespace registry as well: salted bench runs mint a
@@ -281,32 +281,6 @@ def _chunk_can_match(tokens, prescreen: str) -> bool:
         if t.type == WORD and t.value_lower in prescreen:
             return True
     return False
-
-
-def candidate_score(
-    matches: Sequence[Match], seq: TokenSequence, long_match_boost: bool = True
-) -> float:
-    """Weighted-match-sum scoring (QueryCandidate.cs:23-44) with the
-    optional long-match boost (ListQueryParser.cs:144-146)."""
-    tokens = seq.tokens
-    total_word_or_num = sum(1 for t in tokens if t.type == WORD or t.type == NUMBER)
-    if total_word_or_num == 0:
-        return 0.0
-    total = 0.0
-    total_matched = 0
-    for m in matches:
-        start_idx = seq.get_index(m.start)
-        end_idx = seq.get_index(m.end)
-        cnt = sum(
-            1
-            for i in range(start_idx, end_idx + 1)
-            if tokens[i].type == WORD or tokens[i].type == NUMBER
-        )
-        total_matched += cnt
-        total += m.score * cnt / total_word_or_num
-    if long_match_boost and total_matched > 0:
-        total += 0.3 * (1.0 - len(matches) / total_matched)
-    return total
 
 
 def _value_repr(m: Match) -> str:
@@ -405,30 +379,26 @@ def _chunks(text: str) -> Iterator[Tuple[int, str]]:
         yield pos, text[pos:]
 
 
-class _ScoredCombo:
-    __slots__ = ("score", "order", "matches")
-
-    def __init__(self, score: float, order: int, matches: List[Match]):
-        self.score = score
-        self.order = order
-        self.matches = matches
-
-
-def _combo_compare(a: _ScoredCombo, b: _ScoredCombo) -> int:
-    if a.score != b.score:
-        return -1 if a.score < b.score else 1
-    # deterministic tie-break: earlier enumeration wins (DFS order is
-    # greedy longest-first, so earlier == preferred)
-    if a.order != b.order:
-        return 1 if a.order < b.order else -1
-    return 0
-
-
 def _is_triple_match(m: Match) -> bool:
     """Keep triple-relevant matches (ListQueryParser.cs:59-66)."""
     if isinstance(m, ColumnConditionMatch):
         return m.value is not m or m.matched_value is not None
     return isinstance(m, (ColumnMatch, TableMatch, GroupMatch))
+
+
+def _prefix_counts(tokens) -> Tuple[List[int], List[int]]:
+    """Per token position, the word-or-number tokens before it
+    (``pre_won``) and the significant ones, neither separator nor
+    sentence end (``pre_sig``)."""
+    pre_won = [0] * (len(tokens) + 1)
+    pre_sig = [0] * (len(tokens) + 1)
+    for i, t in enumerate(tokens):
+        tt = t.type
+        pre_won[i + 1] = pre_won[i] + (1 if tt == WORD or tt == NUMBER else 0)
+        pre_sig[i + 1] = pre_sig[i] + (
+            1 if tt != SEPARATOR and tt != SENTENCE_END else 0
+        )
+    return pre_won, pre_sig
 
 
 def _top_combinations(
@@ -438,108 +408,89 @@ def _top_combinations(
     pre_sig: List[int],
     top_k: int,
     long_match_boost: bool,
-    max_combinations: int,
-) -> TopSet:
-    """The top-k of the first ``max_combinations + 1`` DFS combinations
-    of the position index ``(pos_matches, next_pos)``
-    (``MatchCombinationBuilder.index``), visiting only the subtrees whose
-    best leaf could still enter the top-k.
+) -> List[Tuple[float, List[Match]]]:
+    """The exact top-k non-empty combinations of the position index
+    ``(pos_matches, next_pos)`` (``MatchCombinationBuilder.index``) as
+    ``(score, matches)``, best first, matches tail first like the
+    handler of ``Recognizer.recognize``. Needs ``pre_won[-1] > 0``.
 
-    The fast-path score of a combination is additive over its DFS steps:
-    ``(sum(score * won) - c * (matches + significant gaps)) / total_won
-    + c`` with ``c = 0.3`` under the long-match boost (else 0), and each
-    gap depends only on the resume position and the next match start.
-    One right-to-left pass gives, per resume position ``p``, ``cnt[p]``
-    (leaves below ``p``) and ``ub[p]`` (the largest additive score any
-    leaf below ``p`` reaches). A child is skipped when the top-k is full
-    and ``(prefix + step + ub[after]) / total_won + c`` is below the
-    current minimum by more than 1e-9 (the margin absorbs rounding
-    between this sum and the leaf's own); a later combination with an
-    equal score never displaces an earlier one, so no skipped leaf
-    could have entered. Skipped leaves still count toward the cap.
-    Visited leaves are scored with the exact arithmetic and order of the
-    exhaustive walk, so the top-k is identical to scoring every one of
-    the first ``max_combinations + 1`` combinations.
+    A combination is a path through the DAG of resume positions, and
+    its score is additive over the path's steps: ``(sum(score * won) -
+    c * (matches + significant gaps)) / total_won + c`` with ``c = 0.3``
+    under the long-match boost (else 0); each gap depends only on the
+    resume position and the next match start. One right-to-left pass
+    keeps, per resume position, the ``top_k`` best suffixes by that
+    additive score, ties to the earlier child (the earlier combination
+    in DFS order, which is greedy longest-first): k-best paths in a DAG
+    (Eppstein 1998). The winners are then scored with the arithmetic of
+    the exhaustive walk's leaf, the weighted sum from the tail first,
+    ``/ total_won``, then the boost, and ordered by that score, ties to
+    the earlier combination.
     """
     n = len(next_pos) - 1
     total_won = pre_won[n]
     c = 0.3 if long_match_boost else 0.0
-    # per start position: (match, resume, score * won) in index order
-    steps: List[Optional[List[Tuple[Match, int, float]]]] = [None] * n
-    ub = [0.0] * (n + 1)
-    cnt = [0] * (n + 1)
-    for p in range(n, -1, -1):
+    # best[p]: up to top_k (additive score, path) suffixes from resume
+    # position p, best first; a path is a linked tuple
+    # (match, score * won, resume, child index, rest of the path)
+    best: List[list] = [None] * (n + 1)
+    best[n] = [(0.0, None)]
+    for p in range(n - 1, -1, -1):
         j = next_pos[p]
-        if j == p and p < n:
-            row = []
-            for m, after in pos_matches[p]:
-                assert after > p, "match ends before it starts"
-                row.append((m, after, m.score * (pre_won[after] - pre_won[p])))
-            steps[p] = row
-            ub[p] = max(w - c + ub[after] for _, after, w in row)
-            cnt[p] = sum(cnt[after] for _, after, _ in row)
-        else:
+        if j != p:
             gap = c if pre_sig[j] - pre_sig[p] > 0 else 0.0
-            ub[p] = (0.0 if j == n else ub[j]) - gap
-            cnt[p] = 1 if j == n else cnt[j]
+            best[p] = [(v - gap, path) for v, path in best[j]] if gap else best[j]
+            continue
+        row = pos_matches[p]
+        won = pre_won[p]
+        if top_k == 1:  # the first child that reaches the best score
+            top = None
+            for i, (m, after) in enumerate(row):
+                w = m.score * (pre_won[after] - won)
+                v = w - c + best[after][0][0]
+                if top is None or v > top:
+                    top, ti, tw = v, i, w
+            m, after = row[ti]
+            best[p] = [(top, (m, tw, after, ti, best[after][0][1]))]
+            continue
+        # (-score, child, rank, score * won, path): the first three are
+        # unique, so ties go to the earlier child, then the better suffix
+        cands = [
+            (-(w - c + v), i, r, w, path)
+            for i, (m, after) in enumerate(row)
+            for w in (m.score * (pre_won[after] - won),)
+            for r, (v, path) in enumerate(best[after])
+        ]
+        best[p] = [
+            (-neg, (row[i][0], w, row[i][1], i, path))
+            for neg, i, _, w, path in heapq.nsmallest(top_k, cands)
+        ]
 
-    top = TopSet(top_k, _combo_compare)
-    chain: List[Tuple[Match, float]] = []  # visited path, sentence order
-    # the DFS runs on an explicit stack, not a nested function that
-    # recurses through its closure cell: that would be a reference cycle
-    # keeping this call's rows alive until the cyclic GC runs. One frame
-    # per open position: (its unvisited children, prefix, n_stubs);
-    # chain[i] is the step taken out of frame i
-    frames: List[Tuple[Iterator[Tuple[Match, int, float]], float, int]] = []
-    n_leaves = 0
-    bar = float("-inf")  # top's minimum score less the margin, once full
-    p, prefix, n_stubs = 0, 0.0, 0
-    while True:
-        j = next_pos[p]
-        significant_gap = pre_sig[j] - pre_sig[p] > 0
-        if j == n:
-            order = n_leaves
-            n_leaves += 1
-            if chain:
-                total = 0.0
-                for _, w in reversed(chain):  # recognize() order: tail first
-                    total += w
-                total /= total_won
-                if long_match_boost:
-                    n_matches = len(chain) + n_stubs + significant_gap
-                    total += 0.3 * (1.0 - n_matches / total_won)
-                top.add(_ScoredCombo(total, order, [m for m, _ in reversed(chain)]))
-                if top.count == top.max_size:
-                    bar = top.min.score - 1e-9
-                chain.pop()
-            if n_leaves > max_combinations:
-                return top
-        else:
-            if significant_gap:
+    out = []
+    for _, path in best[0]:
+        if path is None:
+            continue  # no matches at all: the empty combination
+        # walk the path: its matches, gaps and DFS position
+        matches, dfs, n_stubs = [], [], 0
+        p = 0
+        total = 0.0
+        while True:
+            j = next_pos[p]
+            if pre_sig[j] - pre_sig[p] > 0:
                 n_stubs += 1
-                prefix -= c
-            frames.append((iter(steps[j]), prefix, n_stubs))
-        # the next child to visit, from the innermost open frame out
-        while frames:
-            children, prefix, n_stubs = frames[-1]
-            for m, after, w in children:
-                v = prefix + w - c
-                if (v + ub[after]) / total_won + c < bar:
-                    n_leaves += cnt[after]
-                    if n_leaves > max_combinations:
-                        return top
-                    continue
-                chain.append((m, w))
-                p, prefix = after, v
+            if path is None:
                 break
-            else:
-                frames.pop()
-                if chain:
-                    chain.pop()
-                continue
-            break
-        else:
-            return top
+            m, w, p, i, path = path
+            matches.append((m, w))
+            dfs.append(i)
+        for _, w in reversed(matches):  # recognize() order: tail first
+            total += w
+        total /= total_won
+        if long_match_boost:
+            total += 0.3 * (1.0 - (len(matches) + n_stubs) / total_won)
+        out.append((-total, dfs, [m for m, _ in reversed(matches)]))
+    out.sort(key=lambda t: (t[0], t[1]))
+    return [(-neg, matches) for neg, _, matches in out]
 
 
 def extract_text_triples(
@@ -547,38 +498,30 @@ def extract_text_triples(
     recognizer: Recognizer,
     top_k: int = 1,
     long_match_boost: bool = True,
-    max_combinations: int = MAX_COMBINATIONS,
     prescreen: Optional[str] = None,
     memo: Optional[Dict[str, tuple]] = None,
 ) -> List[Tuple[str, str, float, int, int, str]]:
     """Extract triples from one page text.
 
-    Per chunk: tokenize -> collect matches -> top-k by candidate score
-    over the recognizer's combination DFS -> emit triples of the best
-    combination(s). Returns (pred, obj, score, start, end, rule) tuples
-    with absolute char offsets into ``text``.
-
-    Cap: the top-k are the best of the FIRST ``max_combinations + 1``
-    combinations in the DFS order of ``Recognizer.recognize`` (greedy
-    longest-first); ties go to the earlier combination. The search is
-    bounded (:func:`_top_combinations`): a subtree is skipped only when
-    the top-k set is full and the subtree's best possible score is below
-    its minimum by more than 1e-9; its combinations still count toward
-    the cap, and the search stops when the count passes it. The result
-    is identical to scoring every combination up to the cap.
+    Per chunk: tokenize -> collect matches -> the exact top-k by
+    candidate score over all of the recognizer's match combinations
+    (:func:`_top_combinations`; ties go to the earlier combination in
+    the DFS order of ``Recognizer.recognize``, greedy longest-first) ->
+    emit triples of the best combination(s). Returns (pred, obj, score,
+    start, end, rule) tuples with absolute char offsets into ``text``.
 
     ``memo`` (see :func:`chunk_memo`) caches relative-offset chunk results;
     chunk extraction is a pure function of (chunk, recognizer, params), so
     memoized output is bit-identical to recomputation — repeated boilerplate
     chunks (the common case on web corpora) cost one dict probe.
 
-    Scoring fast path: with IncludeZeroMatches semantics, stub spans
-    partition the non-covered tokens, so total-matched-word-count always
-    equals the chunk's word count and the stub count equals the number of
-    significant gaps between match spans — both computable from prefix
-    sums in O(|combo|) instead of materializing StubMatches per
-    combination (numerically identical to candidate_score over the
-    stub-including combination; covered by tests).
+    Scoring: with IncludeZeroMatches semantics, stub spans partition the
+    non-covered tokens, so the reference's weighted match sum
+    (QueryCandidate.cs:23-44) needs no StubMatch per combination: the
+    matched word count always equals the chunk's word count and the stub
+    count equals the number of significant gaps between match spans,
+    both from prefix sums (the tests check this against the reference
+    scoring over the stub-including combination).
     """
     out: List[Tuple[str, str, float, int, int, str]] = []
     for offset, chunk in _chunks(text):
@@ -597,16 +540,8 @@ def extract_text_triples(
             if memo is not None:
                 _memo_put(memo, chunk, ())
             continue  # fast path: no dictionary token in chunk
-        n_tok = len(chunk_tokens)
-        pre_won = [0] * (n_tok + 1)  # word-or-number prefix counts
-        pre_sig = [0] * (n_tok + 1)  # non-separator/sentence-end prefix
-        for i, t in enumerate(chunk_tokens):
-            tt = t.type
-            pre_won[i + 1] = pre_won[i] + (1 if tt == WORD or tt == NUMBER else 0)
-            pre_sig[i + 1] = pre_sig[i] + (
-                1 if tt != SEPARATOR and tt != SENTENCE_END else 0
-            )
-        if pre_won[n_tok] == 0:
+        pre_won, pre_sig = _prefix_counts(chunk_tokens)
+        if pre_won[-1] == 0:
             if memo is not None:
                 _memo_put(memo, chunk, ())
             continue
@@ -615,14 +550,13 @@ def extract_text_triples(
             seq, _is_triple_match
         ).index()
         top = _top_combinations(
-            pos_matches, next_pos, pre_won, pre_sig,
-            top_k, long_match_boost, max_combinations,
+            pos_matches, next_pos, pre_won, pre_sig, top_k, long_match_boost
         )
         # emit at relative offset 0, then shift — int addition is
         # exact, so memoized replay at another offset is identical
         rel: List[Tuple[str, str, float, int, int, str]] = []
-        for combo in top.to_array():
-            rel.extend(_emit_triples(combo.matches, seq, 0, combo.score))
+        for score, matches in top:
+            rel.extend(_emit_triples(matches, seq, 0, score))
         if memo is not None:
             _memo_put(memo, chunk, tuple(rel))
         if rel:

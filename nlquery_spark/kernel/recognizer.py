@@ -1,7 +1,7 @@
 """Recognizer: matcher orchestration + non-overlapping combination DFS.
 
-Behavioral parity with /root/reference/src/NReco.NLQuery/Recognizer.cs:24-228,
-TopSet.cs:22-138 and NGramGenerator.cs:22-54.
+Behavioral parity with the reference's NReco.NLQuery Recognizer.cs:24-228
+and NGramGenerator.cs:22-54.
 """
 
 from __future__ import annotations
@@ -124,8 +124,9 @@ class Recognizer:
     ) -> "MatchCombinationBuilder":
         """The combination DFS's input: ``collect_matches``, the optional
         filter, then matches grouped by start token in the reference's
-        per-start order. ``recognize`` walks it with ``build()``; bounded
-        searches (``extract_text_triples``) walk its ``index()``."""
+        per-start order. ``recognize`` walks it with ``build()``; the
+        exact search (``extract._top_combinations``) reads its
+        ``index()``."""
         matches: Iterable[Match] = self.collect_matches(statement).matches
         if match_filter is not None:
             matches = [m for m in matches if match_filter(m)]
@@ -270,71 +271,6 @@ class MatchCombinationBuilder:
         last_zero = create_zero_match(zero_tokens)
         if last_zero is not None:
             yield last_zero
-
-
-class TopSet:
-    """Fixed-size top-K with min-replacement (TopSet.cs:22-138).
-
-    ``compare(a, b)`` returns <0/0/>0 like a C# Comparison<T>.
-    """
-
-    def __init__(self, max_size: int, compare: Callable[[object, object], int]):
-        self.compare = compare
-        self.max_size = max_size
-        self.elements: List[object] = []
-        self.min_index = -1
-        self.max_index = -1
-
-    @property
-    def count(self) -> int:
-        return len(self.elements)
-
-    @property
-    def max(self):
-        return self.elements[self.max_index] if self.max_index >= 0 else None
-
-    @property
-    def min(self):
-        return self.elements[self.min_index] if self.min_index >= 0 else None
-
-    def add(self, elem) -> bool:
-        if len(self.elements) < self.max_size:
-            self.elements.append(elem)
-            i = len(self.elements) - 1
-            self._refresh_min(elem, i)
-            self._refresh_max(elem, i)
-            return True
-        if self.compare(elem, self.elements[self.min_index]) > 0:
-            self.elements[self.min_index] = elem
-            self._refresh_max(elem, self.min_index)
-            new_min = 0
-            for i in range(1, len(self.elements)):
-                if self.compare(self.elements[i], self.elements[new_min]) < 0:
-                    new_min = i
-            self.min_index = new_min
-            return True
-        return False
-
-    def to_array(self) -> List[object]:
-        import functools
-
-        return sorted(
-            self.elements, key=functools.cmp_to_key(self.compare), reverse=True
-        )
-
-    def _refresh_min(self, elem, i: int) -> None:
-        if self.min_index >= 0:
-            if self.compare(elem, self.elements[self.min_index]) < 0:
-                self.min_index = i
-        else:
-            self.min_index = i
-
-    def _refresh_max(self, elem, i: int) -> None:
-        if self.max_index >= 0:
-            if self.compare(elem, self.elements[self.max_index]) > 0:
-                self.max_index = i
-        else:
-            self.max_index = i
 
 
 class NGramGenerator:

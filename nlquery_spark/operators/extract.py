@@ -121,7 +121,6 @@ def extract_triples(
         import pandas as pd
 
         from ..kernel.extract import (
-            MAX_COMBINATIONS,
             cached_recognizer,
             chunk_memo,
             extract_text_triples,
@@ -130,11 +129,7 @@ def extract_triples(
         prune_zip_importers()
         specs, opts, screen, key, k, use_memo, salt = payload_bc.value
         rec = cached_recognizer(specs, opts, key)
-        memo = (
-            chunk_memo(salt + ":" + key, k, True, MAX_COMBINATIONS)
-            if use_memo
-            else None
-        )
+        memo = chunk_memo(salt + ":" + key, k, True) if use_memo else None
         for pdf in batches:
             subjs, preds, objs, scores, starts, ends, rules = (
                 [], [], [], [], [], [], []

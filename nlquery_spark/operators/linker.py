@@ -90,11 +90,7 @@ def extract_mentions(
         rec = cached_recognizer(specs, opts, key)
         # "mentions:" prefix: a distinct namespace from the triples memo
         # (same spec key, different output shape)
-        memo = (
-            chunk_memo(f"mentions:{salt}:{key}", 0, False, 0)
-            if use_memo
-            else None
-        )
+        memo = chunk_memo(f"mentions:{salt}:{key}", 0, False) if use_memo else None
         for pdf in batches:
             rows = {k: [] for k in ("url", "kind", "name", "value", "score", "start", "end")}
             for url, text in zip(pdf["url"], pdf["text"]):

@@ -17,13 +17,13 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..kernel.extract import (
     _iter_group_leaves,
+    _prefix_counts,
+    _top_combinations,
     build_recognizer,
     cached_recognizer,
-    candidate_score,
     spec_key,
 )
 from ..kernel.matches import DateMatch, DateOffsetMatch, NumberMatch
-from ..kernel.recognizer import TopSet
 from ..kernel.table import (
     COND_CONTAINS,
     COND_EQUAL,
@@ -73,7 +73,6 @@ def parse_best(
     nl: str,
     schema_specs: Sequence[Dict],
     options_spec: Optional[Dict] = None,
-    max_combinations: int = 1000,
     keep_column_mentions: bool = False,
 ):
     """Best-scoring combination for an NL query string.
@@ -87,11 +86,7 @@ def parse_best(
     from ..kernel.table import ColumnMatch
 
     matches, _seq = parse_best_matches(
-        nl,
-        schema_specs,
-        options_spec,
-        max_combinations,
-        include_column_mentions=keep_column_mentions,
+        nl, schema_specs, options_spec, include_column_mentions=keep_column_mentions
     )
     conditions = [m for m in matches if isinstance(m, ColumnConditionMatch)]
     mentions = [m for m in matches if isinstance(m, ColumnMatch)]
@@ -102,10 +97,9 @@ def parse_conditions(
     nl: str,
     schema_specs: Sequence[Dict],
     options_spec: Optional[Dict] = None,
-    max_combinations: int = 1000,
 ) -> List[ColumnConditionMatch]:
     """Best-combination column conditions for an NL query string."""
-    return parse_best(nl, schema_specs, options_spec, max_combinations)[0]
+    return parse_best(nl, schema_specs, options_spec)[0]
 
 
 def _value_literal(cnd: ColumnConditionMatch):
@@ -264,7 +258,6 @@ def parse_best_matches(
     nl: str,
     schema_specs: Sequence[Dict],
     options_spec: Optional[Dict] = None,
-    max_combinations: int = 1000,
     include_column_mentions: bool = True,
 ):
     """Ordered best-combination matches with group trees expanded in
@@ -272,6 +265,11 @@ def parse_best_matches(
     iterates (NliPivotTable QueryParser.cs:249-270) — plus the token
     sequence (for filter-string rendering). This is the single
     recognition path; parse_best is a thin view over it.
+
+    The best combination is the exact top-1 of the extraction search
+    (``_top_combinations``, long-match boost on), listed like the
+    reference's IncludeZeroMatches candidate: its matches tail first,
+    then StubMatches over the uncovered spans in sentence order.
     ``include_column_mentions`` controls whether bare ColumnMatches
     compete in the combination search (the OLAP/pivot lifecycles want
     them; the plain filter lifecycle does not). The compiled recognizer
@@ -281,18 +279,7 @@ def parse_best_matches(
     rec = cached_recognizer(
         schema_specs, options_spec, spec_key(schema_specs, options_spec)
     )
-    # the recognizer is shared: set the flag on every call
-    rec.include_zero_matches = True
     seq = TokenSequence(_query_tokens(nl, options_spec))
-    best: List = [None, -1.0]
-    state = {"n": 0}
-
-    def handler(matches):
-        score = candidate_score(matches, seq)
-        if score > best[1]:
-            best[0], best[1] = matches, score
-        state["n"] += 1
-        return state["n"] <= max_combinations
 
     def match_filter(m):
         if isinstance(m, ColumnConditionMatch):
@@ -301,9 +288,19 @@ def parse_best_matches(
             return True
         return isinstance(m, GroupMatch)
 
-    rec.recognize(seq, handler, match_filter)
+    builder = rec.combination_builder(seq, match_filter)
+    pre_won, pre_sig = _prefix_counts(seq.tokens)
+    node = None  # the best combination as the builder's linked chain
+    # a query with no word or number token keeps no match (stubs only),
+    # as its chunk gives no triple in extraction
+    if pre_won[-1]:
+        for _score, matches in _top_combinations(
+            *builder.index(), pre_won, pre_sig, 1, True
+        ):
+            for m in reversed(matches):  # tail first -> head first
+                node = (node, m)
     out: List = []
-    for m in best[0] or []:
+    for m in builder._get_all_matches(node):
         if isinstance(m, GroupMatch):
             out.extend(_iter_group_leaves(m))
         else:

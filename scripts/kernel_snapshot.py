@@ -13,16 +13,16 @@ Coverage (all deterministic, generated from the committed fixtures):
 - triple extraction over 8,500 synthetic pages (incl. skewed-entity
   variants) + every sf0.01 document, both schema specs;
 - mention extraction over 2,500 of the same texts;
-- the full combination-DFS enumeration (include_zero_matches=True, the
-  nl_* path) with per-combination match types, scores, spans AND
-  enumeration order — ~430k combinations;
+- the full combination-DFS enumeration of ``Recognizer.recognize``
+  (include_zero_matches=True) on NL-query-sized texts, with
+  per-combination match types, scores, spans AND enumeration order —
+  ~430k combinations;
 - triple and mention extraction over 120 benchmark gazetteer pages
   (``perfbench/gen.py``, seeds 1-3) against the Orders spec plus the
   5,000-title gazetteer, once plain and once with stop words and the
   stemmer — the only part of the surface whose value lists are large;
 - the same gazetteer triples (plain recognizer) under non-default
-  scoring parameters: ``top_k=3``, ``long_match_boost=False`` and
-  ``max_combinations=50`` (a cap that falls inside most chunks' DFS).
+  scoring parameters: ``top_k=3`` and ``long_match_boost=False``.
 
 The snapshot lives outside the repo (SNAPSHOT_PATH below): it is a
 session-local gate, not a committed artifact; `check` against a
@@ -121,7 +121,6 @@ def _surface():
     gazetteer_params = [
         {"top_k": 3},
         {"long_match_boost": False},
-        {"max_combinations": 50},
     ]
 
     return {

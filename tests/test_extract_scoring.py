@@ -1,23 +1,22 @@
 """Equivalence of the prefix-sum scoring fast path vs the reference-shaped
 slow path (IncludeZeroMatches + StubMatch materialization +
-candidate_score)."""
+candidate_score), and of the exact combination search vs uncapped
+oracles."""
 
 import duckdb
 import pytest
 
 from nlquery_spark.kernel.extract import (
     MAX_COMBINATIONS,
+    _chunk_can_match,
     _chunks,
     _emit_triples,
-    _ScoredCombo,
-    _combo_compare,
+    _is_triple_match,
     build_prescreen,
     build_recognizer,
-    candidate_score,
     extract_text_triples,
 )
-from nlquery_spark.kernel.matches import Match, StubMatch
-from nlquery_spark.kernel.recognizer import TopSet
+from nlquery_spark.kernel.matches import StubMatch
 from nlquery_spark.kernel.table import (
     ColumnConditionMatch,
     ColumnMatch,
@@ -25,49 +24,59 @@ from nlquery_spark.kernel.table import (
     TableMatch,
 )
 from nlquery_spark.kernel.tokenizer import tokenize
-from nlquery_spark.kernel.tokens import TokenSequence
+from nlquery_spark.kernel.tokens import NUMBER, WORD, TokenSequence
 from nlquery_spark.sources.pages import _page_text, orders_schema_spec
 
+from combination_oracle import (
+    ScoredCombo,
+    TopSet,
+    bounded_top_combinations,
+    candidate_score,
+    combo_compare,
+)
 
-def slow_extract(
-    text,
-    recognizer,
-    prescreen=None,
-    top_k=1,
-    long_match_boost=True,
-    max_combinations=MAX_COMBINATIONS,
-):
+
+def _scored(combos, seq, long_match_boost):
+    """``combos`` (handler lists, stubs included) that hold a match,
+    scored by candidate_score, in enumeration order."""
+    out = []
+    for order, matches in enumerate(combos):
+        significant = [m for m in matches if not isinstance(m, StubMatch)]
+        if significant:
+            score = candidate_score(matches, seq, long_match_boost)
+            out.append(ScoredCombo(score, order, significant))
+    return out
+
+
+def _top_of(scored, top_k):
+    """The reference's TopSet over ``scored``: ties to the earlier."""
+    top = TopSet(top_k, combo_compare)
+    for combo in scored:
+        top.add(combo)
+    return top.to_array()
+
+
+def slow_extract(text, recognizer, prescreen=None, top_k=1, long_match_boost=True):
     """The pre-optimization implementation: IncludeZeroMatches=True,
     stubs materialized, candidate_score over every combination of the
-    exhaustive DFS up to the cap."""
+    exhaustive DFS."""
     out = []
     recognizer.include_zero_matches = True
     try:
         for offset, chunk in _chunks(text):
-            from nlquery_spark.kernel.extract import _chunk_can_match
-
             chunk_tokens = tokenize(chunk)
             if prescreen is not None and not _chunk_can_match(chunk_tokens, prescreen):
                 continue
             seq = TokenSequence(chunk_tokens)
-            top = TopSet(top_k, _combo_compare)
-            state = {"n": 0}
-
-            def handler(matches):
-                significant = [m for m in matches if not isinstance(m, StubMatch)]
-                if significant:
-                    score = candidate_score(matches, seq, long_match_boost)
-                    top.add(_ScoredCombo(score, state["n"], significant))
-                state["n"] += 1
-                return state["n"] <= max_combinations
+            combos = []
 
             def match_filter(m):
                 if isinstance(m, ColumnConditionMatch):
                     return m.value is not m or m.matched_value is not None
                 return isinstance(m, (ColumnMatch, TableMatch, GroupMatch))
 
-            recognizer.recognize(seq, handler, match_filter)
-            for combo in top.to_array():
+            recognizer.recognize(seq, lambda c: combos.append(c) or True, match_filter)
+            for combo in _top_of(_scored(combos, seq, long_match_boost), top_k):
                 out.extend(_emit_triples(combo.matches, seq, offset, combo.score))
     finally:
         recognizer.include_zero_matches = False
@@ -98,17 +107,13 @@ def test_fast_path_equals_slow_path(source):
 
 
 # ---------------------------------------------------------------------------
-# Bounded combination search vs the exhaustive walk on the benchmark's
-# gazetteer pages, where a chunk has hundreds of combinations and most
-# chunks hit the cap.
+# The exact combination search vs uncapped oracles on the benchmark's
+# gazetteer pages, where most chunks have more combinations than the
+# reference examples' cap of 1,000.
 
-GAZETTEER_PARAMS = [
-    {},
-    {"top_k": 3},
-    {"long_match_boost": False},
-    {"max_combinations": 5},
-    {"max_combinations": 50},
-]
+GAZETTEER_PARAMS = [{}, {"top_k": 3}, {"long_match_boost": False}]
+# chunks with at most this many combinations are enumerated in full
+EXHAUSTIVE_LIMIT = 20_000
 
 
 @pytest.fixture(scope="module")
@@ -123,45 +128,25 @@ def gazetteer_setup():
     return build_recognizer(specs), build_prescreen(specs), texts
 
 
-def _recording_top_set(made):
-    """A TopSet class whose instances append themselves to ``made`` and
-    remember the enumeration order of every combination offered to them,
-    i.e. every leaf the search scored."""
-
-    class RecordingTopSet(TopSet):
-        def __init__(self, *args):
-            super().__init__(*args)
-            self.offered = []
-            made.append(self)
-
-        def add(self, elem):
-            self.offered.append(elem.order)
-            return super().add(elem)
-
-    return RecordingTopSet
-
-
-def _capped_combination_counts(text, rec, prescreen, max_combinations):
+def _combination_counts(texts, rec, prescreen, limit):
     """Per chunk that extract_text_triples searches: the number of
-    combinations the exhaustive DFS enumerates, capped at
-    max_combinations + 1 like the extraction."""
-    from nlquery_spark.kernel.extract import _chunk_can_match, _is_triple_match
-    from nlquery_spark.kernel.tokens import NUMBER, WORD
+    combinations the exhaustive DFS enumerates, counted up to
+    ``limit + 1``."""
+    for text in texts:
+        for _, chunk in _chunks(text):
+            tokens = tokenize(chunk)
+            if not _chunk_can_match(tokens, prescreen):
+                continue
+            if not any(t.type == WORD or t.type == NUMBER for t in tokens):
+                continue
+            n = [0]
 
-    for _, chunk in _chunks(text):
-        tokens = tokenize(chunk)
-        if not _chunk_can_match(tokens, prescreen):
-            continue
-        if not any(t.type == WORD or t.type == NUMBER for t in tokens):
-            continue
-        n = [0]
+            def handler(_matches):
+                n[0] += 1
+                return n[0] <= limit
 
-        def handler(_matches):
-            n[0] += 1
-            return n[0] <= max_combinations
-
-        rec.recognize(TokenSequence(tokens), handler, _is_triple_match)
-        yield n[0]
+            rec.recognize(TokenSequence(tokens), handler, _is_triple_match)
+            yield n[0]
 
 
 @pytest.mark.parametrize(
@@ -172,50 +157,68 @@ def _capped_combination_counts(text, rec, prescreen, max_combinations):
 def test_bounded_search_equals_exhaustive_on_gazetteer(
     params, gazetteer_setup, monkeypatch
 ):
+    """The exact search returns the triples of the uncapped
+    branch-and-bound walk (``bounded_top_combinations``) on every page."""
     import nlquery_spark.kernel.extract as ke
 
     rec, screen, texts = gazetteer_setup
-    cap = params.get("max_combinations", MAX_COMBINATIONS)
-    made = []
-    monkeypatch.setattr(ke, "TopSet", _recording_top_set(made))
-    searched = skipped_leaves = cap_in_skipped = 0
-    for text in texts:
-        made.clear()
-        fast = extract_text_triples(text, rec, prescreen=screen, **params)
-        assert fast == slow_extract(text, rec, prescreen=screen, **params), text[:80]
-        counts = list(_capped_combination_counts(text, rec, screen, cap))
-        assert len(counts) == len(made)
-        for top, count in zip(made, counts):
-            searched += 1
-            # no combination past the cap is ever scored
-            assert all(order <= cap for order in top.offered)
-            # a leaf is left unscored only when it is skipped by the bound
-            if top.count and len(top.offered) < count:
-                skipped_leaves += 1
-                assert top.count == top.max_size
-            # the cap's last combination was skipped: the search stopped
-            # inside a subtree that could not improve the top-k
-            if count == cap + 1 and cap not in top.offered:
-                cap_in_skipped += 1
-    # the fixture reaches the hard cases of the bound (with top_k=3, the
-    # skipped leaves were skipped against a full top-3)
-    assert searched > 100
-    assert skipped_leaves > 0
-    assert cap_in_skipped > 0
+    exact = [extract_text_triples(t, rec, prescreen=screen, **params) for t in texts]
+    monkeypatch.setattr(ke, "_top_combinations", bounded_top_combinations)
+    oracle = [extract_text_triples(t, rec, prescreen=screen, **params) for t in texts]
+    for text, got, want in zip(texts, exact, oracle):
+        assert got == want, text[:80]
+    # the fixture is where a cap would bite: many chunks have more
+    # combinations than the reference examples' 1,000
+    counts = list(_combination_counts(texts, rec, screen, MAX_COMBINATIONS))
+    assert len(counts) > 100
+    assert sum(c > MAX_COMBINATIONS for c in counts) > 30
 
 
-def test_bounded_search_cap_sweep(gazetteer_setup):
-    """Every cap from 0 to 29: the search must stop at the same
-    combination as the exhaustive walk wherever the cap falls, inside a
-    skipped subtree, on its last leaf or on a scored leaf."""
+def test_exact_search_equals_exhaustive_walk(gazetteer_setup):
+    """Every fixture chunk with at most EXHAUSTIVE_LIMIT combinations,
+    each combination scored by the reference's candidate_score: the
+    exact search picks the same top-k, for k = 1..3, with and without
+    the long-match boost."""
     rec, screen, texts = gazetteer_setup
-    for cap in range(30):
-        for top_k in (1, 2):
-            for text in texts[:6]:
-                params = {"top_k": top_k, "max_combinations": cap}
-                fast = extract_text_triples(text, rec, prescreen=screen, **params)
-                slow = slow_extract(text, rec, prescreen=screen, **params)
-                assert fast == slow, (params, text[:80])
+    n_checked = n_over_cap = 0
+    saved = rec.include_zero_matches
+    try:
+        for chunk in dict.fromkeys(ch for t in texts for _, ch in _chunks(t)):
+            tokens = tokenize(chunk)
+            if not _chunk_can_match(tokens, screen):
+                continue
+            seq = TokenSequence(tokens)
+            combos = []
+            # count without stubs first: the large chunks cost less so
+            for include_zero in (False, True):
+                combos.clear()
+                rec.include_zero_matches = include_zero
+                rec.recognize(
+                    seq,
+                    lambda c: combos.append(c) or len(combos) <= EXHAUSTIVE_LIMIT,
+                    _is_triple_match,
+                )
+                if len(combos) > EXHAUSTIVE_LIMIT:
+                    break
+            else:
+                n_checked += 1
+                n_over_cap += len(combos) > MAX_COMBINATIONS
+                for boost in (True, False):
+                    scored = _scored(combos, seq, boost)
+                    for top_k in (1, 2, 3):
+                        want = [
+                            t
+                            for combo in _top_of(scored, top_k)
+                            for t in _emit_triples(combo.matches, seq, 0, combo.score)
+                        ]
+                        got = extract_text_triples(
+                            chunk, rec, top_k=top_k, long_match_boost=boost
+                        )
+                        assert got == want, (top_k, boost, chunk)
+    finally:
+        rec.include_zero_matches = saved
+    assert n_checked > 30
+    assert n_over_cap > 5
 
 
 # ---------------------------------------------------------------------------
@@ -337,10 +340,10 @@ def test_chunk_memo_namespace_registry_bounded():
     import nlquery_spark.kernel.extract as ke
 
     ke._CHUNK_MEMO.clear()
-    handles = [ke.chunk_memo(f"salt{i}", 1, True, 1000) for i in range(10)]
+    handles = [ke.chunk_memo(f"salt{i}", 1, True) for i in range(10)]
     assert len(ke._CHUNK_MEMO) <= 4
     # same key returns the same dict while it lives
-    again = ke.chunk_memo("salt9", 1, True, 1000)
+    again = ke.chunk_memo("salt9", 1, True)
     assert again is handles[9]
 
 

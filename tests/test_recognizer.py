@@ -13,11 +13,12 @@ from nlquery_spark.kernel import (
     TableMatcherBuilder,
     TableSchema,
     TokenSequence,
-    TopSet,
     tokenize,
 )
 from nlquery_spark.kernel.table import DT_DATE, DT_NUMBER, DT_STRING
 from nlquery_spark.kernel.tokens import WORD, Token
+
+from combination_oracle import TopSet
 
 
 def simple_recognizer() -> Recognizer:
@@ -212,7 +213,8 @@ def test_fixpoint_skip_purity_contract(monkeypatch):
     monkeypatch.setattr(rmod, "DEBUG_PURITY", True)
     assert run() == base  # assertion inside the skip did not fire
 
-    # the extraction surface (chunking + TopSet + filters) under the flag
+    # the extraction surface (chunking + combination search + filters)
+    # under the flag
     spec = orders_schema_spec()
     erec = build_recognizer([spec])
     texts = [_page_text(i, 0.0) for i in range(50)]
