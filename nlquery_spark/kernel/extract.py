@@ -20,7 +20,7 @@ import json
 import os
 import re
 from itertools import islice
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterator, List, Optional, Sequence, Tuple
 
 from .matches import DateMatch, DateOffsetMatch, Match, NumberMatch
 from .recognizer import Recognizer
@@ -164,9 +164,9 @@ def _parse_memo_cap(raw) -> int:
         return 100_000
 
 
-# Boilerplate-chunk memo: chunk -> triples is a pure function of
-# (chunk text, compiled spec, top_k/boost params), and web corpora
-# repeat chunks heavily (navigation, footers, templated sentences — this
+# Boilerplate-chunk memo: a chunk's rows are a pure function of
+# (chunk text, compiled spec, kernel params), and web corpora repeat
+# chunks heavily (navigation, footers, templated sentences — this
 # repo's CC-style fixture runs ~53-59% repeated chunks, real Common Crawl
 # similar). Memoizing relative-offset results per worker process turns
 # the recognizer cost of every repeated chunk into a dict hit. Bounded:
@@ -175,17 +175,17 @@ def _parse_memo_cap(raw) -> int:
 # (dict preserves insertion order and _memo_hit re-appends on every
 # hit, so dict order IS recency order), so a worker that crosses the
 # cap keeps its live boilerplate instead of oscillating between a full
-# and an empty memo on adversarially diverse corpora (VERDICT r7
-# item 3). A pathological corpus degrades to the unmemoized
-# cost plus a dict probe, never to unbounded memory. Output is identical
-# with any eviction policy (memoized replay is bit-identical; only the
-# hit rate changes — property-tested in tests/test_extract_scoring.py).
-# The cap is tunable via NLQUERY_MEMO_MAX_CHUNKS (read once per worker
-# process at import; propagate with spark.executorEnv.* on a cluster)
-# for memory-constrained deployments — ~1-2 KB/entry is the sizing rule.
-# Namespaces are salted per operator invocation by default (operators
-# mint memo_salt=auto<N>), so a benchmark that re-times the same pages
-# starts cold each pass — run 2 measures the engine, not the cache.
+# and an empty memo on adversarially diverse corpora. A pathological
+# corpus degrades to the unmemoized cost plus a dict probe, never to
+# unbounded memory. Output is identical with any eviction policy
+# (memoized replay is bit-identical; only the hit rate changes —
+# property-tested in tests/test_extract_scoring.py). The cap is tunable
+# via NLQUERY_MEMO_MAX_CHUNKS (read once per worker process at import;
+# propagate with spark.executorEnv.* on a cluster) for memory-constrained
+# deployments — ~1-2 KB/entry is the sizing rule. Each operator
+# invocation gets its own namespace (``...:auto<N>:<spec key>``), so
+# a benchmark that re-times the same pages starts cold each pass — run
+# 2 measures the engine, not the cache.
 MEMO_MAX_CHUNKS = _parse_memo_cap(os.environ.get("NLQUERY_MEMO_MAX_CHUNKS", "100000"))
 
 _CHUNK_MEMO: Dict[str, Dict[str, tuple]] = {}
@@ -220,20 +220,19 @@ def _memo_hit(memo: Dict[str, tuple], chunk: str):
     return hit
 
 
-def chunk_memo(cache_key: str, top_k: int, long_match_boost: bool) -> Dict[str, tuple]:
-    """Per-executor-process chunk-result memo, scoped to every parameter
-    that affects ``extract_text_triples`` output (the recognizer spec via
-    ``cache_key`` plus the scoring knobs)."""
-    key = f"{cache_key}:{top_k}:{long_match_boost}"
-    memo = _CHUNK_MEMO.get(key)
+def chunk_memo(namespace: str) -> Dict[str, tuple]:
+    """Per-executor-process chunk-result memo for ``namespace``, which
+    the caller scopes to everything that affects the kernel's output
+    (the recognizer spec and the scoring params)."""
+    memo = _CHUNK_MEMO.get(namespace)
     if memo is None:
-        # bound the namespace registry as well: salted bench runs mint a
-        # fresh namespace per timed pass, and reused python workers live
-        # for the whole application
+        # bound the namespace registry as well: every operator
+        # invocation mints a fresh namespace, and reused python workers
+        # live for the whole application
         if len(_CHUNK_MEMO) >= 4:
             _CHUNK_MEMO.clear()
         memo = {}
-        _CHUNK_MEMO[key] = memo
+        _CHUNK_MEMO[namespace] = memo
     return memo
 
 
@@ -311,10 +310,7 @@ def _span_text(m: Match) -> str:
 
 
 def _emit_triples(
-    matches: Sequence[Match],
-    seq: TokenSequence,
-    offset: int,
-    combo_score: float,
+    matches: Sequence[Match], offset: int
 ) -> Iterator[Tuple[str, str, float, int, int, str]]:
     """Yield (pred, obj, score, start, end, rule) per match of the winning
     combination. Subject (the page url) is attached by the caller."""
@@ -493,6 +489,38 @@ def _top_combinations(
     return [(-neg, matches) for neg, _, matches in out]
 
 
+def _chunk_rows(
+    text: str,
+    prescreen: Optional[str],
+    memo: Optional[Dict[str, tuple]],
+    rows_of: Callable[[list], tuple],
+) -> Iterator[Tuple[int, tuple]]:
+    """The chunk loop both page kernels share: ``(offset, rows)`` for
+    every chunk of ``text`` that gives rows, with ``rows_of(tokens)``'s
+    rows at chunk-relative offsets; the caller shifts them by
+    ``offset``. A chunk's rows are a pure function of the chunk, so
+    ``memo`` (see :func:`chunk_memo`) keeps them, and a repeated chunk
+    costs one ``get`` probe: exactly one per chunk, in ``_chunks``
+    order. A chunk the prescreen rejects is memoized too, so a repeat
+    skips tokenize."""
+    for offset, chunk in _chunks(text):
+        if memo is not None:
+            rows = _memo_hit(memo, chunk)
+            if rows is not None:
+                if rows:
+                    yield offset, rows
+                continue
+        tokens = tokenize(chunk)
+        if prescreen is not None and not _chunk_can_match(tokens, prescreen):
+            rows = ()  # fast path: no dictionary token in the chunk
+        else:
+            rows = rows_of(tokens)
+        if memo is not None:
+            _memo_put(memo, chunk, rows)
+        if rows:
+            yield offset, rows
+
+
 def extract_text_triples(
     text: str,
     recognizer: Recognizer,
@@ -509,11 +537,9 @@ def extract_text_triples(
     the DFS order of ``Recognizer.recognize``, greedy longest-first) ->
     emit triples of the best combination(s). Returns (pred, obj, score,
     start, end, rule) tuples with absolute char offsets into ``text``.
-
-    ``memo`` (see :func:`chunk_memo`) caches relative-offset chunk results;
-    chunk extraction is a pure function of (chunk, recognizer, params), so
-    memoized output is bit-identical to recomputation — repeated boilerplate
-    chunks (the common case on web corpora) cost one dict probe.
+    ``prescreen`` and ``memo`` skip work and never change the output
+    (:func:`_chunk_rows`); a memo namespace must be scoped to
+    ``top_k`` and ``long_match_boost``.
 
     Scoring: with IncludeZeroMatches semantics, stub spans partition the
     non-covered tokens, so the reference's weighted match sum
@@ -523,48 +549,26 @@ def extract_text_triples(
     both from prefix sums (the tests check this against the reference
     scoring over the stub-including combination).
     """
-    out: List[Tuple[str, str, float, int, int, str]] = []
-    for offset, chunk in _chunks(text):
-        if memo is not None:
-            hit = _memo_hit(memo, chunk)
-            if hit is not None:
-                if hit:
-                    out.extend(
-                        (p, o, sc, s + offset, e + offset, r)
-                        for p, o, sc, s, e, r in hit
-                    )
-                continue
-        chunk_tokens = tokenize(chunk)
-        if prescreen is not None and not _chunk_can_match(chunk_tokens, prescreen):
-            # memo the screened-out chunk too: a repeat skips tokenize
-            if memo is not None:
-                _memo_put(memo, chunk, ())
-            continue  # fast path: no dictionary token in chunk
-        pre_won, pre_sig = _prefix_counts(chunk_tokens)
+
+    def triples_of(tokens) -> tuple:
+        pre_won, pre_sig = _prefix_counts(tokens)
         if pre_won[-1] == 0:
-            if memo is not None:
-                _memo_put(memo, chunk, ())
-            continue
-        seq = TokenSequence(chunk_tokens)
+            return ()
         pos_matches, next_pos = recognizer.combination_builder(
-            seq, _is_triple_match
+            TokenSequence(tokens), _is_triple_match
         ).index()
         top = _top_combinations(
             pos_matches, next_pos, pre_won, pre_sig, top_k, long_match_boost
         )
-        # emit at relative offset 0, then shift — int addition is
-        # exact, so memoized replay at another offset is identical
-        rel: List[Tuple[str, str, float, int, int, str]] = []
-        for score, matches in top:
-            rel.extend(_emit_triples(matches, seq, 0, score))
-        if memo is not None:
-            _memo_put(memo, chunk, tuple(rel))
-        if rel:
-            out.extend(
-                (p, o, sc, s + offset, e + offset, r)
-                for p, o, sc, s, e, r in rel
-            )
-    return out
+        # emit at relative offset 0; int addition is exact, so memoized
+        # replay at another offset is identical
+        return tuple(t for _, matches in top for t in _emit_triples(matches, 0))
+
+    return [
+        (p, o, sc, s + offset, e + offset, r)
+        for offset, rows in _chunk_rows(text, prescreen, memo, triples_of)
+        for p, o, sc, s, e, r in rows
+    ]
 
 
 def extract_text_mentions(
@@ -579,35 +583,17 @@ def extract_text_mentions(
     char offsets. This feeds the batched entity-link scorer
     (operators.linker.link_topk), which resolves overlapping candidate
     mentions per span; extract_text_triples by contrast emits only the
-    winning combination.
+    winning combination. ``prescreen`` and ``memo`` as in
+    :func:`extract_text_triples`; the memo namespace must not be one of
+    the triples'."""
 
-    ``memo`` caches relative-offset chunk results exactly as in
-    :func:`extract_text_triples` (pure function of chunk + spec; offsets
-    shift additively) — use a distinct :func:`chunk_memo` namespace."""
-    out: List[Tuple[str, str, str, float, int, int]] = []
-    for offset, chunk in _chunks(text):
-        if memo is not None:
-            hit = _memo_hit(memo, chunk)
-            if hit is not None:
-                if hit:
-                    out.extend(
-                        (k, n, v, sc, s + offset, e + offset)
-                        for k, n, v, sc, s, e in hit
-                    )
-                continue
-        chunk_tokens = tokenize(chunk)
-        if prescreen is not None and not _chunk_can_match(chunk_tokens, prescreen):
-            if memo is not None:
-                _memo_put(memo, chunk, ())
-            continue
-        seq = TokenSequence(chunk_tokens)
-        bag = recognizer.collect_matches(seq)
-        rel: List[Tuple[str, str, str, float, int, int]] = []
-        for m in bag.matches:
+    def mentions_of(tokens) -> tuple:
+        rows = []
+        for m in recognizer.collect_matches(TokenSequence(tokens)).matches:
             start = m.start.start_index
             end = m.end.start_index + len(m.end.value)
             if isinstance(m, ColumnConditionMatch):
-                rel.append(
+                rows.append(
                     (
                         "condition",
                         f"{m.column.name}:{COND_NAMES[m.condition].lower()}",
@@ -618,17 +604,17 @@ def extract_text_mentions(
                     )
                 )
             elif isinstance(m, ColumnMatch):
-                rel.append(
+                rows.append(
                     ("column", m.column.name, _span_text(m), m.score, start, end)
                 )
             elif isinstance(m, TableMatch):
-                rel.append(
+                rows.append(
                     ("table", m.table.name, _span_text(m), m.score, start, end)
                 )
-        if memo is not None:
-            _memo_put(memo, chunk, tuple(rel))
-        if rel:
-            out.extend(
-                (k, n, v, sc, s + offset, e + offset) for k, n, v, sc, s, e in rel
-            )
-    return out
+        return tuple(rows)
+
+    return [
+        (k, n, v, sc, s + offset, e + offset)
+        for offset, rows in _chunk_rows(text, prescreen, memo, mentions_of)
+        for k, n, v, sc, s, e in rows
+    ]

@@ -25,9 +25,13 @@ DEBUG_PURITY = os.environ.get("NLQUERY_DEBUG_PURITY", "") not in ("", "0", "fals
 
 
 class Recognizer:
-    """Runs first-pass matchers once, recursive matchers to a fixpoint,
-    then enumerates non-overlapping match combinations via bounded DFS
-    (Recognizer.cs:102-132)."""
+    """Runs first-pass matchers once and recursive matchers to a
+    fixpoint (``collect_matches``), then indexes the non-overlapping
+    match combinations by resume position (``combination_builder``)
+    for the exact top-k search of ``kernel.extract._top_combinations``.
+    ``recognize`` is the reference's exhaustive DFS over the same
+    combinations (Recognizer.cs:102-132), kept for perfbench's
+    combination counters and the test oracles."""
 
     def __init__(self, matchers: Sequence):
         self.matchers = list(matchers)

@@ -14,22 +14,40 @@ hot-entity salting lives in operators.canonicalize.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import sys
 import zipimport
-from typing import Dict, Iterator, Optional, Sequence
+from typing import Callable, Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-# driver-side counter for per-invocation memo namespaces (memo_salt=None)
+from ..kernel.extract import (
+    build_prescreen,
+    cached_recognizer,
+    chunk_memo,
+    extract_text_triples,
+    spec_key,
+)
+
+# driver-side counter for per-invocation memo namespaces (auto<N>)
 _MEMO_SALTS = itertools.count()
+
+# the pandas dtype of each output field type Arrow converts back
+_PANDAS_DTYPES = {
+    StringType: "object",
+    DoubleType: "float64",
+    IntegerType: "int32",
+    LongType: "int64",
+}
 
 
 def prune_zip_importers() -> None:
@@ -73,15 +91,69 @@ TRIPLES_SCHEMA = StructType(
 )
 
 
+def recognizer_task(
+    frame: DataFrame,
+    schema_specs: Sequence[Dict],
+    options_spec: Optional[Dict],
+    out_schema: StructType,
+    kernel: Callable[..., Sequence[tuple]],
+    memo_namespace: Optional[str] = None,
+) -> DataFrame:
+    """The ``mapInPandas`` task of every recognizer operator.
+
+    The dictionary spec is broadcast; each Python worker compiles it
+    once (``cached_recognizer``) and runs ``kernel(text, recognizer,
+    prescreen=, memo=)`` on the last column of each non-empty row of
+    ``frame``. Each tuple it returns is one output row, after the input
+    row's first column. The frame's dtypes follow ``out_schema``.
+
+    ``memo_namespace`` is for the chunk kernels (``extract_text_*``):
+    it names the kernel's chunk memo by its output shape and params.
+    Each call qualifies it with a fresh ``auto<N>`` salt and the spec
+    key, so the memo is cold at the start of every invocation and
+    shared by its tasks in a worker; the kernel then also gets the
+    dictionary's prescreen. Without it, the kernel gets neither.
+    """
+    schema_specs = list(schema_specs)
+    key = spec_key(schema_specs, options_spec)
+    prescreen = None
+    if memo_namespace:
+        memo_namespace = f"{memo_namespace}:auto{next(_MEMO_SALTS)}:{key}"
+        prescreen = build_prescreen(schema_specs, options_spec)
+    payload_bc = frame.sparkSession.sparkContext.broadcast(
+        (schema_specs, options_spec, key, prescreen)
+    )
+    names = out_schema.fieldNames()
+    dtypes = [_PANDAS_DTYPES[type(f.dataType)] for f in out_schema.fields]
+
+    def run(batches):
+        import pandas as pd
+
+        prune_zip_importers()
+        specs, opts, key, screen = payload_bc.value
+        rec = cached_recognizer(specs, opts, key)
+        memo = chunk_memo(memo_namespace) if memo_namespace else None
+        for pdf in batches:
+            firsts, rows = [], []
+            for first, text in zip(pdf.iloc[:, 0], pdf.iloc[:, -1]):
+                if text:
+                    out = kernel(text, rec, prescreen=screen, memo=memo)
+                    firsts += [first] * len(out)
+                    rows += out
+            cols = [firsts, *zip(*rows)] if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=d) for n, c, d in zip(names, cols, dtypes)}
+            )
+
+    return frame.mapInPandas(run, out_schema)
+
+
 def extract_triples(
     pages: DataFrame,
     schema_specs: Sequence[Dict],
     options_spec: Optional[Dict] = None,
     top_k: int = 1,
     lang_filter: Optional[str] = "en",
-    use_prescreen: bool = True,
-    memo_chunks: bool = True,
-    memo_salt: Optional[str] = None,
 ) -> DataFrame:
     """pages(url, text, ...) -> triples(subj=url, pred, obj, score,
     start, end, rule).
@@ -89,77 +161,28 @@ def extract_triples(
     Column pruning: only url+text are shipped to Python. The lang filter
     is applied Spark-side so it pushes into the source scan.
 
-    ``memo_chunks`` enables the per-worker boilerplate-chunk memo
+    Each worker keeps a boilerplate-chunk memo
     (kernel.extract.chunk_memo): chunk extraction is a pure function of
-    (chunk text, spec, params), so results are bit-identical with it on
-    or off; repeated chunks — navigation/footer boilerplate on real web
-    corpora, templated sentences on the fixture — cost one dict probe
-    instead of a recognizer run. Bounded per process (MEMO_MAX_CHUNKS).
-    ``memo_salt`` namespaces the memo. Default None mints a unique salt
-    per operator invocation: the memo is cold at the start of every
-    extract job (honest-by-default — re-timing the same pages measures
-    the engine, not the cache) and shared across the job's tasks *and*
-    micro-batches (one streaming query = one invocation). Pass a stable
-    string to share boilerplate across separate batch invocations.
+    (chunk text, spec, params), so results are bit-identical to
+    recomputation; repeated chunks — navigation/footer boilerplate on
+    real web corpora, templated sentences on the fixture — cost one dict
+    probe instead of a recognizer run. Bounded per process
+    (MEMO_MAX_CHUNKS). Every invocation gets a fresh namespace
+    (``recognizer_task``): the memo is cold at the start of every
+    extract job (re-timing the same pages measures the engine, not the
+    cache) and shared across the job's tasks *and* micro-batches (one
+    streaming query = one invocation).
     """
-    from ..kernel.extract import build_prescreen, spec_key
-
-    spark = pages.sparkSession
-    schema_specs = list(schema_specs)
-    prescreen = build_prescreen(schema_specs, options_spec) if use_prescreen else None
-    cache_key = spec_key(schema_specs, options_spec)
-    payload_bc = spark.sparkContext.broadcast(
-        (schema_specs, options_spec, prescreen, cache_key, top_k,
-         memo_chunks,
-         memo_salt if memo_salt is not None else f"auto{next(_MEMO_SALTS)}")
-    )
-
     if lang_filter is not None:
         pages = pages.filter(F.col("lang") == lang_filter)
-
-    def run(batches) -> Iterator:
-        import pandas as pd
-
-        from ..kernel.extract import (
-            cached_recognizer,
-            chunk_memo,
-            extract_text_triples,
-        )
-
-        prune_zip_importers()
-        specs, opts, screen, key, k, use_memo, salt = payload_bc.value
-        rec = cached_recognizer(specs, opts, key)
-        memo = chunk_memo(salt + ":" + key, k, True) if use_memo else None
-        for pdf in batches:
-            subjs, preds, objs, scores, starts, ends, rules = (
-                [], [], [], [], [], [], []
-            )
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for pred, obj, score, start, end, rule in extract_text_triples(
-                    text, rec, top_k=k, prescreen=screen, memo=memo
-                ):
-                    subjs.append(url)
-                    preds.append(pred)
-                    objs.append(obj)
-                    scores.append(score)
-                    starts.append(start)
-                    ends.append(end)
-                    rules.append(rule)
-            yield pd.DataFrame(
-                {
-                    "subj": pd.Series(subjs, dtype="object"),
-                    "pred": pd.Series(preds, dtype="object"),
-                    "obj": pd.Series(objs, dtype="object"),
-                    "score": pd.Series(scores, dtype="float64"),
-                    "start": pd.Series(starts, dtype="int32"),
-                    "end": pd.Series(ends, dtype="int32"),
-                    "rule": pd.Series(rules, dtype="object"),
-                }
-            )
-
-    return pages.select("url", "text").mapInPandas(run, TRIPLES_SCHEMA)
+    return recognizer_task(
+        pages.select("url", "text"),
+        schema_specs,
+        options_spec,
+        TRIPLES_SCHEMA,
+        functools.partial(extract_text_triples, top_k=top_k),
+        memo_namespace=f"triples:{top_k}",
+    )
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:

@@ -19,7 +19,7 @@ span.
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
@@ -30,7 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .extract import _MEMO_SALTS, prune_zip_importers
+from ..kernel.extract import extract_text_mentions
+from .extract import recognizer_task
 
 MENTIONS_SCHEMA = StructType(
     [
@@ -50,75 +51,24 @@ def extract_mentions(
     schema_specs: Sequence[Dict],
     options_spec: Optional[Dict] = None,
     lang_filter: Optional[str] = "en",
-    use_prescreen: bool = True,
-    memo_chunks: bool = True,
-    memo_salt: Optional[str] = None,
 ) -> DataFrame:
     """pages(url, text, ...) -> candidate mention rows (stage S2-S3).
 
-    Same plumbing as extract_triples: broadcast spec, per-executor
-    compiled recognizer, Arrow batches, url+text column pruning,
-    boilerplate-chunk memo (bit-identical, per-invocation namespace by
-    default; see extract_triples for the memo/salt contract).
+    Same task as extract_triples (operators.extract.recognizer_task):
+    broadcast spec, per-executor compiled recognizer, Arrow batches,
+    url+text column pruning, and a boilerplate-chunk memo in its own
+    per-invocation namespace (bit-identical; see extract_triples).
     """
-    from ..kernel.extract import build_prescreen, spec_key
-
-    spark = pages.sparkSession
-    schema_specs = list(schema_specs)
-    prescreen = build_prescreen(schema_specs, options_spec) if use_prescreen else None
-    cache_key = spec_key(schema_specs, options_spec)
-
-    payload_bc = spark.sparkContext.broadcast(
-        (schema_specs, options_spec, prescreen, cache_key, memo_chunks,
-         memo_salt if memo_salt is not None else f"auto{next(_MEMO_SALTS)}")
-    )
-
     if lang_filter is not None:
         pages = pages.filter(F.col("lang") == lang_filter)
-
-    def run(batches) -> Iterator:
-        import pandas as pd
-
-        from ..kernel.extract import (
-            cached_recognizer,
-            chunk_memo,
-            extract_text_mentions,
-        )
-
-        prune_zip_importers()
-        specs, opts, screen, key, use_memo, salt = payload_bc.value
-        rec = cached_recognizer(specs, opts, key)
-        # "mentions:" prefix: a distinct namespace from the triples memo
-        # (same spec key, different output shape)
-        memo = chunk_memo(f"mentions:{salt}:{key}", 0, False) if use_memo else None
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "kind", "name", "value", "score", "start", "end")}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for kind, name, value, score, start, end in extract_text_mentions(
-                    text, rec, prescreen=screen, memo=memo
-                ):
-                    rows["url"].append(url)
-                    rows["kind"].append(kind)
-                    rows["name"].append(name)
-                    rows["value"].append(value)
-                    rows["score"].append(score)
-                    rows["start"].append(start)
-                    rows["end"].append(end)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(rows["url"], dtype="object"),
-                    "kind": pd.Series(rows["kind"], dtype="object"),
-                    "name": pd.Series(rows["name"], dtype="object"),
-                    "value": pd.Series(rows["value"], dtype="object"),
-                    "score": pd.Series(rows["score"], dtype="float64"),
-                    "start": pd.Series(rows["start"], dtype="int32"),
-                    "end": pd.Series(rows["end"], dtype="int32"),
-                }
-            )
-
-    return pages.select("url", "text").mapInPandas(run, MENTIONS_SCHEMA)
+    return recognizer_task(
+        pages.select("url", "text"),
+        schema_specs,
+        options_spec,
+        MENTIONS_SCHEMA,
+        extract_text_mentions,
+        memo_namespace="mentions",
+    )
 
 
 def link_topk(mentions: DataFrame, k: int = 3) -> DataFrame:

@@ -43,7 +43,7 @@ from ..kernel.tokenizer import (
     tokenize,
 )
 from ..kernel.tokens import TokenSequence
-from .extract import prune_zip_importers
+from .extract import recognizer_task
 
 
 def _query_tokens(nl: str, options_spec: Optional[Dict]):
@@ -512,21 +512,12 @@ def nl_pivot(
 def _suggest_with_recognizer(rec, prefix: str, top_n: int) -> List[Tuple[str, float]]:
     """Core of suggest_keywords given a prebuilt recognizer (shared by
     the driver-side helper and the distributed batch operator)."""
-    from ..kernel.matchers import CompositeMatcher
     from ..kernel.matches import MatchBag
     from ..kernel.table import ColumnMatch, TableMatch
 
     seq = TokenSequence(tokenize(prefix))
     bag = MatchBag(seq, [])
-    # the recognizer prebuilds its first-pass composite; rebuild only
-    # for foreign recognizer-likes without one (batch hot path runs
-    # this per prefix row)
-    first_pass = getattr(rec, "_first_pass", None)
-    if first_pass is None:
-        first_pass = CompositeMatcher(
-            [m for m in rec.matchers if m.first_pass_only]
-        )
-    for m in first_pass.get_matches(bag):
+    for m in rec._first_pass.get_matches(bag):
         bag.add(m)
     scored: Dict[str, float] = {}
     for m in bag.matches:
@@ -567,8 +558,8 @@ def suggest_keywords_df(
     """Batch autocomplete-as-a-service: (prefix) rows -> (prefix,
     suggestion, score, rank) rows, top_n per prefix.
 
-    Same distribution pattern as extract_mentions: broadcast spec,
-    per-executor compiled recognizer (cached_recognizer), Arrow batches,
+    Same task as extract_mentions (operators.extract.recognizer_task):
+    broadcast spec, per-executor compiled recognizer, Arrow batches,
     no shuffle — embarrassingly parallel over the prefix stream (e.g.
     scoring a day of partial search queries against the dictionary)."""
     from pyspark.sql.types import (
@@ -579,10 +570,6 @@ def suggest_keywords_df(
         StructType,
     )
 
-    spark = prefixes.sparkSession
-    schema_specs = list(schema_specs)
-    cache_key = spec_key(schema_specs, options_spec)
-    payload_bc = spark.sparkContext.broadcast((schema_specs, options_spec, cache_key))
     out_schema = StructType(
         [
             StructField("prefix", StringType(), False),
@@ -592,33 +579,15 @@ def suggest_keywords_df(
         ]
     )
 
-    def run(batches):
-        import pandas as pd
-
-        from ..kernel.extract import cached_recognizer
-
-        prune_zip_importers()
-        specs, opts, key = payload_bc.value
-        rec = cached_recognizer(specs, opts, key)
-        for pdf in batches:
-            rows = {"prefix": [], "suggestion": [], "score": [], "rank": []}
-            for p in pdf[prefix_col]:
-                if not p:
-                    continue
-                for rank, (sug, score) in enumerate(
-                    _suggest_with_recognizer(rec, str(p), top_n), 1
-                ):
-                    rows["prefix"].append(p)
-                    rows["suggestion"].append(sug)
-                    rows["score"].append(score)
-                    rows["rank"].append(rank)
-            yield pd.DataFrame(
-                {
-                    "prefix": pd.Series(rows["prefix"], dtype="object"),
-                    "suggestion": pd.Series(rows["suggestion"], dtype="object"),
-                    "score": pd.Series(rows["score"], dtype="float64"),
-                    "rank": pd.Series(rows["rank"], dtype="int64"),
-                }
+    def suggestions(prefix, rec, prescreen, memo):
+        return [
+            (sug, score, rank)
+            for rank, (sug, score) in enumerate(
+                _suggest_with_recognizer(rec, str(prefix), top_n), 1
             )
+        ]
 
-    return prefixes.select(prefix_col).mapInPandas(run, out_schema)
+    return recognizer_task(
+        prefixes.select(prefix_col), schema_specs, options_spec, out_schema,
+        suggestions,
+    )

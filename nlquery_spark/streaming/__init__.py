@@ -1,7 +1,6 @@
 from .dedup import streaming_exact_dedup  # noqa: F401
 from .joins import interval_join_stream  # noqa: F401
 from .extract import (  # noqa: F401
-    extract_triples_stream,
     read_latest_triples,
     read_pages_stream,
     triples_merge_sink,

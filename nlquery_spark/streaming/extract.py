@@ -17,7 +17,7 @@ from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import TRIPLES_SCHEMA, extract_triples
+from ..operators.extract import extract_triples
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -30,16 +30,6 @@ def read_pages_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )
-
-
-def extract_triples_stream(
-    pages_stream: DataFrame,
-    schema_specs: Sequence[Dict],
-    options_spec: Optional[Dict] = None,
-) -> DataFrame:
-    """Same operator as batch — extract_triples is master/stream agnostic
-    because it is a stateless mapInPandas."""
-    return extract_triples(pages_stream, schema_specs, options_spec)
 
 
 def triples_to_sink(

@@ -61,17 +61,28 @@ def test_spark_triples_match_local_kernel(spark, pages):
     assert got == expected
 
 
+def _plain_kernel_rows(pages, kernel, spec):
+    """``kernel`` over the English pages in one process, without the
+    prescreen or the chunk memo, as sorted (url, *row) tuples."""
+    from nlquery_spark.kernel.extract import build_recognizer
+
+    rec = build_recognizer([spec])
+    return sorted(
+        (row.url, *r)
+        for row in pages.filter("lang = 'en'").select("url", "text").collect()
+        for r in kernel(row.text, rec, prescreen=None, memo=None)
+    )
+
+
 def test_prescreen_changes_nothing(spark, pages):
+    """The operator always prescreens; its triples equal the kernel's
+    without a prescreen (sorted-collect equality: duplicates count)."""
+    from nlquery_spark.kernel.extract import extract_text_triples
+
     spec = orders_schema_spec()
-    with_screen = {
-        tuple(r)
-        for r in extract_triples(pages, [spec], use_prescreen=True).collect()
-    }
-    without_screen = {
-        tuple(r)
-        for r in extract_triples(pages, [spec], use_prescreen=False).collect()
-    }
-    assert with_screen == without_screen
+    with_screen = sorted(map(tuple, extract_triples(pages, [spec]).collect()))
+    assert with_screen
+    assert with_screen == _plain_kernel_rows(pages, extract_text_triples, spec)
 
 
 def test_dedup_triples(spark, pages):
@@ -121,19 +132,17 @@ def test_incremental_delta_merge_equals_full_recompute(spark):
 
 
 def test_chunk_memo_changes_nothing_spark(spark, pages):
-    """memo_chunks on (default) vs off: bit-identical triples AND
-    mentions through the distributed stage (sorted-collect equality, not
-    sets — duplicates must match too)."""
+    """The operators always memoize chunks (and prescreen): their
+    triples AND mentions equal the kernel's with neither, bit for bit
+    (sorted-collect equality, not sets — duplicates must match too)."""
+    from nlquery_spark.kernel.extract import (
+        extract_text_mentions,
+        extract_text_triples,
+    )
     from nlquery_spark.operators.linker import extract_mentions
 
     spec = orders_schema_spec()
     on = sorted(map(tuple, extract_triples(pages, [spec]).collect()))
-    off = sorted(
-        map(tuple, extract_triples(pages, [spec], memo_chunks=False).collect())
-    )
-    assert on == off and on
+    assert on and on == _plain_kernel_rows(pages, extract_text_triples, spec)
     m_on = sorted(map(tuple, extract_mentions(pages, [spec]).collect()))
-    m_off = sorted(
-        map(tuple, extract_mentions(pages, [spec], memo_chunks=False).collect())
-    )
-    assert m_on == m_off and m_on
+    assert m_on and m_on == _plain_kernel_rows(pages, extract_text_mentions, spec)
