@@ -93,25 +93,17 @@ GAZETTEER = ["spark", "table", "join", "query", "window", "hash", "scan", "batch
 
 def _doc_token_array() -> "F.Column":
     """THE tokenization convention as an array expression — the single
-    source both the exploding and the filter-before-explode variants
-    derive from: Java \\s+ == the explicit [ \\t\\n\\x0B\\f\\r]+ class the
-    DuckDB oracles use. Keep this in ONE place; a fork silently breaks
-    Spark-vs-oracle parity for some queries but not others."""
+    source every token query derives from: Java \\s+ == the explicit
+    [ \\t\\n\\x0B\\f\\r]+ class the DuckDB oracles use. Keep this in ONE
+    place; a fork silently breaks Spark-vs-oracle parity for some queries
+    but not others."""
     return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
-def _doc_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, token) — every corpus token as a row (heavy hitters)."""
-    return docs.select(
-        "doc_id", F.explode(_doc_token_array()).alias("token")
-    )
-
-
 def _doc_token_hits(docs: DataFrame, terms: list) -> DataFrame:
-    """(doc_id, token) for tokens in ``terms`` only — the SAME
-    convention, but the membership filter runs INSIDE the token array
-    before exploding (optimization r9, guide §2.3), so only hits ever
-    become rows."""
+    """(doc_id, token) for tokens in ``terms`` only — the membership
+    filter runs INSIDE the token array before exploding (optimization
+    r9, guide §2.3), so only hits ever become rows."""
     hits = F.filter(_doc_token_array(), lambda t: t.isin(terms))
     return docs.select("doc_id", F.explode(hits).alias("token"))
 
@@ -1824,29 +1816,6 @@ def _corpus_pack(spark, sf_dir):
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
     return pack_documents(counted, max_tokens=512, n_groups=16)
-
-
-def _doc_heavy_hitters(spark, sf_dir):
-    """Count-Min-Sketch heavy hitters (operators/sketch.py): the sketch
-    prescreen never undercounts, so candidates superset the true
-    hitters and exact verification makes the output EXACT — hence a
-    plain HAVING oracle. At token universes of billions this shuffles
-    only plausible hitters instead of every distinct token."""
-    from nlquery_spark.operators.sketch import heavy_hitters
-
-    docs = _load(spark, sf_dir, "documents")["documents"]
-    toks = _doc_tokens(docs).select("token")
-    return heavy_hitters(toks, threshold=400).select(
-        "token", F.col("n").cast("long").alias("n")
-    )
-
-
-_HEAVY_HITTERS_SQL = r"""
-SELECT t AS token, COUNT(*) AS n FROM (
-  SELECT unnest(string_split_regex(trim(lower(text), ' '), '[ \t\n\x0B\f\r]+')) AS t
-  FROM documents
-) GROUP BY t HAVING COUNT(*) >= 400
-"""
 
 
 def _gazetteer_mentions(spark, sf_dir):
@@ -4959,7 +4928,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": _dedup_ngram_jaccard,
         "corpus_clean": _corpus_clean,
         "corpus_sample": _corpus_sample,
-        "doc_heavy_hitters": _doc_heavy_hitters,
         "ann_cosine_topk": _ann_cosine_topk,
         "dedup_minhash": _dedup_minhash,
         "dedup_simhash": _dedup_simhash,
@@ -5096,7 +5064,6 @@ def oracle_sql() -> dict[str, str]:
         "doc_chunks": _CHUNKS_SQL,
         # corpus_pack: iterative greedy bin state -> rows-only; exact
         # invariants pytest-pinned (tests/test_corpus.py)
-        "doc_heavy_hitters": _HEAVY_HITTERS_SQL,
         "gazetteer_mentions": _gazetteer_sql(),
         "gazetteer_topk_entities": _gazetteer_topk_sql(),
         "ann_cosine_topk": _ANN_SQL,

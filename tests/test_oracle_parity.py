@@ -406,7 +406,7 @@ def test_correctness_window_holds_all_active_queries():
         # the rest of the r6-green r7 tail
         "purchase_attribution", "event_session_assignment",
         "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
-        "corpus_clean", "corpus_sample", "doc_heavy_hitters",
+        "corpus_clean", "corpus_sample",
         "ann_cosine_topk", "dedup_minhash", "dedup_simhash",
         "emb_neardup_exact", "part_coorder_triangles",
         "corpus_decontaminate", "streaming_session_windows",
