@@ -1,5 +1,5 @@
-"""Skew utilities + physical-plan assertions (pushdown, broadcast,
-partitioned sink) — the '100 TB posture' checks."""
+"""Skewed-input extraction + physical-plan assertions (pushdown,
+broadcast, partitioned sink) — the '100 TB posture' checks."""
 
 import os
 
@@ -8,32 +8,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from nlquery_spark.operators.extract import extract_triples, write_triples
-from nlquery_spark.operators.skew import hot_keys, salted_count, salted_join
 from nlquery_spark.sources.pages import orders_schema_spec, synth_pages
-
-
-def test_salted_join_matches_plain_join(spark):
-    left = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(2, i) for i in range(10)] + [(3, 1)],
-        "k long, v long",
-    )
-    right = spark.createDataFrame([(1, "a"), (2, "b"), (4, "d")], "k long, w string")
-    plain = {(r.k, r.v, r.w) for r in left.join(right, "k").collect()}
-    salted = {
-        (r.k, r.v, r.w)
-        for r in salted_join(left, right, "k", salt=8, hot_threshold=100).collect()
-    }
-    assert plain == salted
-    assert {r.k for r in hot_keys(left, "k", 100).collect()} == {1}
-
-
-def test_salted_count_matches_plain(spark):
-    df = spark.createDataFrame(
-        [(1,)] * 1000 + [(2,)] * 3 + [(5,)] * 7, "k long"
-    )
-    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r.k: r.cnt for r in salted_count(df, "k", salt=8).collect()}
-    assert plain == salted
 
 
 def test_skewed_corpus_extraction(spark):
