@@ -1007,76 +1007,6 @@ SELECT l_partkey AS partkey FROM (
 """
 
 
-def _orders_upsert_merge(spark, sf_dir):
-    """Keyed MERGE/upsert (CDC apply without a transactional format):
-    a deterministic change set — every 10th order re-priced +10% (every
-    50th of those a tombstone delete), every 97th re-inserted as a new
-    key — merged into the orders table via ONE broadcast anti join (no
-    full outer join, no target shuffle). Price recomputed in DECIMAL on
-    both sides so the oracle is value-exact."""
-    from nlquery_spark.operators.upsert import merge_upsert
-
-    orders = _load(spark, sf_dir, "orders")["orders"]
-    upd = (
-        orders.filter(F.col("o_orderkey") % 10 == 0)
-        .withColumn(
-            "o_totalprice",
-            (
-                F.col("o_totalprice").cast("decimal(12,2)")
-                * F.lit("1.1").cast("decimal(3,1)")
-            )
-            .cast("decimal(12,2)")
-            .cast("double"),
-        )
-        .withColumn("o_orderstatus", F.lit("U"))
-        .withColumn("_del", F.col("o_orderkey") % 50 == 0)
-    )
-    ins = (
-        orders.filter(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-        .withColumn("o_orderstatus", F.lit("N"))
-        .withColumn("_del", F.lit(False))
-    )
-    merged = merge_upsert(
-        orders, upd.unionByName(ins), ["o_orderkey"], tombstone_col="_del"
-    )
-    return merged.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-        "o_orderpriority",
-    )
-
-
-_UPSERT_SQL = """
-WITH upd AS (
-  SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
-    -- ROUND, not a decimal down-cast: DuckDB's scale-reducing cast is
-    -- half-to-even while Spark's is HALF_UP; ROUND is half-away in both
-    CAST(ROUND(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(12,2)) * CAST('1.1' AS DECIMAL(3,1)), 2)
-         AS DOUBLE) AS o_totalprice,
-    o_orderdate, o_orderpriority,
-    (o_orderkey % 50 = 0) AS _del
-  FROM orders WHERE o_orderkey % 10 = 0
-  UNION ALL
-  SELECT o_orderkey + 10000000, o_custkey, 'N', o_totalprice,
-         o_orderdate, o_orderpriority, FALSE
-  FROM orders WHERE o_orderkey % 97 = 0
-), merged AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM upd WHERE NOT _del
-  UNION ALL
-  SELECT t.* FROM orders t ANTI JOIN upd u ON t.o_orderkey = u.o_orderkey
-)
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_orderpriority
-FROM merged
-"""
-
-
 def _events_sessionize(spark, sf_dir):
     """Stateful sessionization: 30-min inactivity gap starts a new
     session (lag + cumulative sum over an event-time window)."""
@@ -4973,7 +4903,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "order_value_percentiles": _order_value_percentiles,
         "order_priority_rollup": _order_priority_rollup,
         "part_setops_98_not_99": _part_supplier_setops,
-        "orders_upsert_merge": _orders_upsert_merge,
         "q1_pricing_summary": _q1_pricing_summary,
         "q5_local_supplier": _q5_local_supplier,
         "nl_filter_orders": _nl_filter_orders,
@@ -5043,7 +4972,6 @@ def oracle_sql() -> dict[str, str]:
         "order_priority_rollup": _ROLLUP_SQL,
         "part_setops_98_not_99": _SETOPS_SQL,
         "events_sessionize": _SESSIONIZE_SQL,
-        "orders_upsert_merge": _UPSERT_SQL,
         "purchase_attribution": _ASOF_SQL,
         "event_session_assignment": _RANGE_JOIN_SQL,
         "events_time_rollup": _TIME_ROLLUP_SQL,

@@ -72,8 +72,7 @@ def crawl_diff(
     full-outer-join queries).
 
     Callers must pass snapshots already unique per key (one row per
-    canonical URL — the latest-per-key upsert operator is the
-    de-duplicating step); the full outer join then stays 1:1.
+    canonical URL); the full outer join then stays 1:1.
 
     Scale posture: ONE full outer sort-merge join on the canonical-URL
     key — both sides hash-partition on the same key, no broadcast of

@@ -128,51 +128,6 @@ def test_pack_documents_oversized_gets_own_bin(spark):
     assert out[1].bin_id == out[3].bin_id != out[2].bin_id
 
 
-def test_merge_upsert_semantics(spark):
-    from nlquery_spark.operators.upsert import latest_per_key, merge_upsert
-
-    target = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "k long, s string, v double",
-    )
-    updates = spark.createDataFrame(
-        [(2, "B", 25.0, False), (3, "c", 30.0, True), (9, "new", 90.0, False)],
-        "k long, s string, v double, _del boolean",
-    )
-    got = sorted(
-        tuple(r) for r in merge_upsert(target, updates, ["k"], "_del").collect()
-    )
-    # 1 untouched, 2 replaced, 3 tombstoned away, 9 inserted
-    assert got == [(1, "a", 10.0), (2, "B", 25.0), (9, "new", 90.0)]
-
-    cdc = spark.createDataFrame(
-        [(2, "v1", 1.0, 1), (2, "v2", 2.0, 2), (5, "x", 5.0, 1)],
-        "k long, s string, v double, ver long",
-    )
-    latest = {r.k: r.s for r in latest_per_key(cdc, ["k"], "ver").collect()}
-    assert latest == {2: "v2", 5: "x"}
-
-
-def test_merge_upsert_broadcast_anti_plan(spark):
-    """The merge must plan as a broadcast anti join on the target — no
-    full outer join, no target-side shuffle (the property that makes a
-    small change set against a 100-TB table a map-only pass)."""
-    from nlquery_spark.operators.upsert import merge_upsert
-
-    target = spark.range(10000).select(
-        F.col("id").alias("k"), F.lit("x").alias("s")
-    )
-    updates = spark.createDataFrame([(5, "y")], "k long, s string")
-    plan = (
-        merge_upsert(target, updates, ["k"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LeftAnti" in plan and "Broadcast" in plan
-    assert "SortMergeJoin" not in plan and "FullOuter" not in plan
-
-
 def test_chunk_documents_window_arithmetic(spark):
     from nlquery_spark.operators.corpus import chunk_documents
 

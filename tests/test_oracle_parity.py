@@ -364,7 +364,7 @@ def test_correctness_window_holds_all_active_queries():
         "nl_autocomplete", "dict_spec_part", "emb_cosine_jvm",
         "q17_small_quantity_revenue", "event_props_json",
         "order_value_percentiles", "order_priority_rollup",
-        "part_setops_98_not_99", "orders_upsert_merge",
+        "part_setops_98_not_99",
         "q1_pricing_summary", "q5_local_supplier", "nl_filter_orders",
         "nl_agg_orders", "nl_pivot_orders",
         "q3_shipping_priority", "ship_lag_by_month", "promo_revenue_share",
@@ -683,7 +683,7 @@ _ORDERS_FUZZ_QUERIES = [
     "q1_pricing_summary", "q3_shipping_priority", "ship_lag_by_month",
     "order_priority_rollup", "topk_orders_per_customer",
     "order_value_percentiles", "customers_without_orders",
-    "orders_upsert_merge", "customer_order_full_outer",
+    "customer_order_full_outer",
     "customer_order_distribution", "customer_rfm_segments",
     "promo_revenue_share", "q17_small_quantity_revenue",
     "part_setops_98_not_99", "orders_with_returns",
