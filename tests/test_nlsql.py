@@ -30,6 +30,47 @@ def test_parse_conditions_comparison():
     assert float(c.value.value) == 150000.0
 
 
+# perfbench's Orders dictionary (perfbench/gen.py CAPTIONS, STATUSES,
+# PRIORITIES) written out, so the parse needs no Spark session.
+_PERFBENCH_ORDERS_SPEC = {
+    "caption": "orders",
+    "name": "orders",
+    "columns": [
+        {"caption": "order status", "name": "o_orderstatus",
+         "datatype": "string", "values": ["F", "O", "P"]},
+        {"caption": "order priority", "name": "o_orderpriority",
+         "datatype": "string",
+         "values": ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]},
+        {"caption": "total price", "name": "o_totalprice", "datatype": "number"},
+        {"caption": "order date", "name": "o_orderdate", "datatype": "date"},
+    ],
+}
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="known departure: with stop words, 'order status P' parses as "
+    "o_orderpriority contains 'status' and the status condition is lost "
+    "(F or O, or no options, parse correctly)",
+)
+def test_order_status_p_with_stop_words():
+    from nlquery_spark.kernel.table import COND_NAMES, ENGLISH_STOP_WORDS
+    from nlquery_spark.operators.nlsql import _value_literal
+
+    conds = parse_conditions(
+        "orders with order status P and total price more than 5000",
+        [_PERFBENCH_ORDERS_SPEC],
+        {"stop_words": ENGLISH_STOP_WORDS + ["with", "where", "whose"]},
+    )
+    got = sorted(
+        (c.column.name, COND_NAMES[c.condition], _value_literal(c)) for c in conds
+    )
+    assert got == [
+        ("o_orderstatus", "Exact", "P"),
+        ("o_totalprice", "GreaterThan", 5000.0),
+    ]
+
+
 def test_nl_filter_matches_manual(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     got = nl_filter(

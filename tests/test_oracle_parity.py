@@ -347,80 +347,83 @@ def test_kg_pagerank_oracle_reads_what_query_wrote(spark):
     assert expect.exceptAll(edges).count() == 0
 
 
+_STABLE_TAIL = {
+    # every entry here has a FULL-green row in CORRECTNESS_r07.json
+    # (rows+schema+hash, 50/50) and unchanged driver-surface code
+    # in round 8.
+    "streaming_kg_merge", "customer_order_full_outer",
+    "doc_tfidf_keywords", "customer_rfm_segments",
+    "nl_autocomplete", "dict_spec_part", "emb_cosine_jvm",
+    "q17_small_quantity_revenue", "event_props_json",
+    "order_value_percentiles", "order_priority_rollup",
+    "part_setops_98_not_99",
+    "q1_pricing_summary", "q5_local_supplier", "nl_filter_orders",
+    "nl_agg_orders", "nl_pivot_orders",
+    "q3_shipping_priority", "ship_lag_by_month", "promo_revenue_share",
+    "customers_without_orders", "events_sessionize",
+    "daily_active_users", "topk_orders_per_customer",
+    "events_time_rollup", "events_by_minute", "doc_token_stats",
+    "doc_subword_stats", "doc_quality", "doc_lang_id",
+    "doc_fingerprint", "doc_repetition", "doc_pii_scrub", "doc_chunks",
+    "nl_filter_stemmed", "nl_filter_culture", "nl_filter_inferred",
+    "paragraph_boilerplate", "streaming_extract",
+    "index_phrase_search", "index_phrase_postings",
+    "token_cooccurrence_lift", "part_khop_neighbors", "event_funnel",
+    "event_type_transitions", "events_daily_anomaly",
+    "event_retention_cohorts", "part_link_prediction",
+    "events_sliding_windows",
+    # rows-only lossy ops: a rows-only driver row proves less than
+    # their pytest recall/invariant gates already do (last driver
+    # row r4, rows-only there too; code unchanged since)
+    "dedup_embedding", "ann_pq_topk", "corpus_pack",
+}
+
+# the r7 tail (last driver row r6) must all be INSIDE the window
+# now — led by the kernel-path queries whose green predated the
+# round-7 kernel edits (VERDICT r7 item 1) — plus ann_ivf_topk
+# (r7-edited centroid draw earns the fresh rows-only slot)
+_ROTATED_IN = {
+    # kernel-path: exercise kernel/extract.py + recognizer.py code
+    # edited in round 7 (chunk memo, fixpoint skip, DFS precompute)
+    "kg_extract_triples", "gazetteer_mentions", "entity_link_topk",
+    "chunk_boilerplate", "kg_pagerank", "kg_similarity_edges",
+    "kg_canonicalize", "kg_degree_stats", "kg_negative_samples",
+    "kg_editdist_edges", "part_lpa_communities",
+    "gazetteer_topk_entities",
+    # r7-edited lossy op (rows-only by design)
+    "ann_ivf_topk",
+    # the rest of the r6-green r7 tail
+    "purchase_attribution", "event_session_assignment",
+    "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
+    "corpus_clean", "corpus_sample",
+    "ann_cosine_topk", "dedup_minhash", "dedup_simhash",
+    "emb_neardup_exact", "part_coorder_triangles",
+    "corpus_decontaminate", "streaming_session_windows",
+    "streaming_events_by_minute", "inverted_index",
+    "events_resample_locf", "index_bm25_topk",
+    "customer_order_distribution", "customer_running_spend",
+    "events_ewma", "corpus_shard_assign", "dedup_clusters",
+    "corpus_split_assign", "dedup_incremental", "web_url_normalize",
+    "web_host_stats", "web_link_graph", "web_host_pagerank",
+    "web_crawl_diff", "doc_gopher_filters", "streaming_crawl_dedup",
+    "web_anchor_text", "web_redirect_resolve", "corpus_host_balance",
+    "streaming_attribution",
+}
+
+
 def test_correctness_window_holds_all_active_queries():
     """ORDERING CONTRACT (VERDICT r3 item 1, rotated per r4/r5 item 1):
     the driver's correctness harness checks the FIRST 50 queries()
     entries. Everything past position 50 must belong to the documented
     r5-driver-green tail — adding a new query at the tail would
-    silently exempt it from the driver's hard gate. UPDATE this set
-    when rotating the window between rounds."""
+    silently exempt it from the driver's hard gate. UPDATE _STABLE_TAIL
+    and _ROTATED_IN when rotating the window between rounds."""
     qs = list(entry_mod.queries())
-    stable_tail = {
-        # every entry here has a FULL-green row in CORRECTNESS_r07.json
-        # (rows+schema+hash, 50/50) and unchanged driver-surface code
-        # in round 8.
-        "streaming_kg_merge", "customer_order_full_outer",
-        "doc_tfidf_keywords", "customer_rfm_segments",
-        "nl_autocomplete", "dict_spec_part", "emb_cosine_jvm",
-        "q17_small_quantity_revenue", "event_props_json",
-        "order_value_percentiles", "order_priority_rollup",
-        "part_setops_98_not_99",
-        "q1_pricing_summary", "q5_local_supplier", "nl_filter_orders",
-        "nl_agg_orders", "nl_pivot_orders",
-        "q3_shipping_priority", "ship_lag_by_month", "promo_revenue_share",
-        "customers_without_orders", "events_sessionize",
-        "daily_active_users", "topk_orders_per_customer",
-        "events_time_rollup", "events_by_minute", "doc_token_stats",
-        "doc_subword_stats", "doc_quality", "doc_lang_id",
-        "doc_fingerprint", "doc_repetition", "doc_pii_scrub", "doc_chunks",
-        "nl_filter_stemmed", "nl_filter_culture", "nl_filter_inferred",
-        "paragraph_boilerplate", "streaming_extract",
-        "index_phrase_search", "index_phrase_postings",
-        "token_cooccurrence_lift", "part_khop_neighbors", "event_funnel",
-        "event_type_transitions", "events_daily_anomaly",
-        "event_retention_cohorts", "part_link_prediction",
-        "events_sliding_windows",
-        # rows-only lossy ops: a rows-only driver row proves less than
-        # their pytest recall/invariant gates already do (last driver
-        # row r4, rows-only there too; code unchanged since)
-        "dedup_embedding", "ann_pq_topk", "corpus_pack",
-    }
-    assert set(qs[50:]) <= stable_tail, (
+    assert set(qs[50:]) <= _STABLE_TAIL, (
         f"non-stable queries past the 50-entry driver window: "
-        f"{set(qs[50:]) - stable_tail}"
+        f"{set(qs[50:]) - _STABLE_TAIL}"
     )
-    # the r7 tail (last driver row r6) must all be INSIDE the window
-    # now — led by the kernel-path queries whose green predated the
-    # round-7 kernel edits (VERDICT r7 item 1) — plus ann_ivf_topk
-    # (r7-edited centroid draw earns the fresh rows-only slot)
-    rotated_in = {
-        # kernel-path: exercise kernel/extract.py + recognizer.py code
-        # edited in round 7 (chunk memo, fixpoint skip, DFS precompute)
-        "kg_extract_triples", "gazetteer_mentions", "entity_link_topk",
-        "chunk_boilerplate", "kg_pagerank", "kg_similarity_edges",
-        "kg_canonicalize", "kg_degree_stats", "kg_negative_samples",
-        "kg_editdist_edges", "part_lpa_communities",
-        "gazetteer_topk_entities",
-        # r7-edited lossy op (rows-only by design)
-        "ann_ivf_topk",
-        # the rest of the r6-green r7 tail
-        "purchase_attribution", "event_session_assignment",
-        "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
-        "corpus_clean", "corpus_sample",
-        "ann_cosine_topk", "dedup_minhash", "dedup_simhash",
-        "emb_neardup_exact", "part_coorder_triangles",
-        "corpus_decontaminate", "streaming_session_windows",
-        "streaming_events_by_minute", "inverted_index",
-        "events_resample_locf", "index_bm25_topk",
-        "customer_order_distribution", "customer_running_spend",
-        "events_ewma", "corpus_shard_assign", "dedup_clusters",
-        "corpus_split_assign", "dedup_incremental", "web_url_normalize",
-        "web_host_stats", "web_link_graph", "web_host_pagerank",
-        "web_crawl_diff", "doc_gopher_filters", "streaming_crawl_dedup",
-        "web_anchor_text", "web_redirect_resolve", "corpus_host_balance",
-        "streaming_attribution",
-    }
-    assert rotated_in <= set(qs[:50])
+    assert _ROTATED_IN <= set(qs[:50])
     # kernel-path queries must LEAD the window (first driver rows on
     # the post-memo engine)
     assert qs[:4] == [
@@ -751,9 +754,10 @@ def emb_fuzz_sf(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize(
-    "name", ["ann_cosine_topk", "emb_cosine_jvm", "emb_neardup_exact"]
-)
+_EMB_FUZZ_QUERIES = ["ann_cosine_topk", "emb_cosine_jvm", "emb_neardup_exact"]
+
+
+@pytest.mark.parametrize("name", _EMB_FUZZ_QUERIES)
 def test_oracle_parity_on_embeddings_fuzz(spark, emb_fuzz_sf, name):
     q = entry_mod.queries()[name]
     sdf = q(spark, emb_fuzz_sf)
@@ -925,3 +929,24 @@ def test_oracle_parity_on_graph_fuzz(spark, graph_fuzz_sf, name):
     s_vals, _ = _rows_to_multiset(list(sdf.columns), spark_rows)
     d_vals, _ = _rows_to_multiset(duck_cols, duck_rows)
     assert s_vals == d_vals, f"{name}: values differ"
+
+
+def test_query_lists_name_existing_queries():
+    """Every name in the lists above is a live query, and every name a
+    parity test runs has an oracle: a deleted query must leave no stale
+    name behind that a set comparison would pass silently."""
+    queries, oracles = set(entry_mod.queries()), set(entry_mod.oracle_sql())
+    parity = {
+        "_NASTY_QUERIES": _NASTY_QUERIES,
+        "_FUZZ_QUERIES": _FUZZ_QUERIES,
+        "_ORDERS_FUZZ_QUERIES": _ORDERS_FUZZ_QUERIES,
+        "_EVENTS_FUZZ_QUERIES": _EVENTS_FUZZ_QUERIES,
+        "_WEB_FUZZ_QUERIES": _WEB_FUZZ_QUERIES,
+        "_GRAPH_FUZZ_QUERIES": _GRAPH_FUZZ_QUERIES,
+        "_EMB_FUZZ_QUERIES": _EMB_FUZZ_QUERIES,
+    }
+    window = {"_STABLE_TAIL": _STABLE_TAIL, "_ROTATED_IN": _ROTATED_IN}
+    for list_name, names in {**parity, **window}.items():
+        assert set(names) <= queries, f"{list_name}: {set(names) - queries}"
+    for list_name, names in parity.items():
+        assert set(names) <= oracles, f"{list_name}: {set(names) - oracles}"
