@@ -102,8 +102,8 @@ def _doc_token_array() -> "F.Column":
 
 def _doc_token_hits(docs: DataFrame, terms: list) -> DataFrame:
     """(doc_id, token) for tokens in ``terms`` only — the membership
-    filter runs INSIDE the token array before exploding (optimization
-    r9, guide §2.3), so only hits ever become rows."""
+    filter runs INSIDE the token array before exploding, so only hits
+    ever become rows."""
     hits = F.filter(_doc_token_array(), lambda t: t.isin(terms))
     return docs.select("doc_id", F.explode(hits).alias("token"))
 
