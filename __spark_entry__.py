@@ -347,9 +347,9 @@ FROM (SELECT DISTINCT p_type FROM part WHERE p_type IS NOT NULL
 
 def _emb_cosine_jvm(spark, sf_dir):
     """Single-pair cosine scoring entirely in whole-stage codegen
-    (functions/vectors.py: zip_with+aggregate, no Python worker) — the
-    re-rank path of the ANN stack; the broadcast turns the query-vector
-    lookup into a map-side expression with no shuffle."""
+    (functions/vectors.py: zip_with+aggregate, no Python worker); the
+    broadcast turns the query-vector lookup into a map-side expression
+    with no shuffle."""
     from nlquery_spark.functions import cosine
 
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
@@ -2047,42 +2047,6 @@ SELECT url, kind, name, value, score, "start", "end", link_rank FROM (
 """
 
 
-def _ann_cosine_topk(spark, sf_dir):
-    from nlquery_spark.operators.similarity import cosine_topk_bruteforce
-
-    emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    res = cosine_topk_bruteforce(emb, query_ids=[0, 1, 2, 3, 4], k=5)
-    return res.select(
-        "query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id", "cosine"
-    )
-
-
-_ANN_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-  FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)
-), c AS (
-  SELECT vec_id AS neighbor_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-  FROM embeddings
-), s AS (
-  -- zero-norm-safe cosine, mirroring functions.vectors.cosine: a zero
-  -- vector scores 0.0 (cosine undefined -> ranks last), never a
-  -- division error
-  SELECT query_id, neighbor_id,
-    CASE WHEN sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)) = 0
-         THEN 0.0
-         ELSE ROUND(list_dot_product(qv, cv) /
-              (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), 6)
-    END AS cosine
-  FROM q CROSS JOIN c WHERE neighbor_id <> query_id
-)
-SELECT query_id, rank, neighbor_id, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM s
-) WHERE rank <= 5
-"""
-
-
 # ------- kernel-based / LSH queries (rows-only checks, no SQL oracle) ------
 
 
@@ -2151,18 +2115,6 @@ SELECT subj, pred, obj,
 FROM '{_kg_raw_triples_path(sf_dir)}/*.parquet'
 GROUP BY subj, pred, obj
 """
-
-
-def _ann_pq_topk(spark, sf_dir):
-    """PQ-ANN over the embeddings table: 64x-compressed codes + ADC
-    shortlist + exact re-rank (operators/similarity.py::pq_topk) — the
-    memory-bounded scale path (10^12 embeddings as m bytes/vector).
-    Lossy by design -> rows-only for the driver; recall vs bruteforce
-    is pytest-gated (tests/test_operators.py::test_pq_topk_recall*)."""
-    from nlquery_spark.operators.similarity import pq_topk
-
-    emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    return pq_topk(emb, query_ids=[0, 1, 2, 3, 4], k=5, m=8, n_centroids=64, rerank=16)
 
 
 def _kg_edges_path(sf_dir: str) -> str:
@@ -2628,34 +2580,6 @@ def _dedup_embedding(spark, sf_dir):
     return embedding_neardup_pairs(
         emb, threshold=0.3, block_planes=None, n_tables=16
     )
-
-
-def _emb_neardup_exact(spark, sf_dir):
-    """EXACT all-pairs cosine near-dup (distributed triangle block join);
-    the oracle-checkable counterpart of dedup_embedding and the recall
-    baseline for its LSH."""
-    from nlquery_spark.operators.similarity import cosine_allpairs_exact
-
-    emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    return cosine_allpairs_exact(emb, threshold=0.3)
-
-
-_EMB_EXACT_SQL = """
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-  FROM embeddings
-), n AS (
-  -- zero-norm guard mirrors the Spark side (norms==0 -> 1.0, cosine 0,
-  -- below threshold): without it 0/0 = NaN, which DuckDB sorts above
-  -- every double and would pass the >= filter
-  SELECT vec_id, ev, sqrt(list_dot_product(ev, ev)) AS nrm FROM v
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-  ROUND(list_dot_product(a.ev, b.ev) / (a.nrm * b.nrm), 6) AS cosine
-FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE a.nrm > 0 AND b.nrm > 0
-  AND ROUND(list_dot_product(a.ev, b.ev) / (a.nrm * b.nrm), 6) >= 0.3
-"""
 
 
 # ----------------------- editdist edges + LOCF resample (round 4) --
@@ -4790,19 +4714,6 @@ FROM r
 """
 
 
-def _ann_ivf_topk(spark, sf_dir):
-    """IVF-pruned ANN over the embeddings table (operators/similarity
-    .py::ivf_topk): deterministic Lloyd-refined centroids, each query
-    scans only nprobe/n_cells of the corpus — the compute-bounded scale
-    path next to PQ's memory-bounded one. Lossy by design -> rows-only
-    for the driver; recall vs bruteforce is pytest-gated >= 0.9
-    (tests/test_operators.py::test_ivf_topk_recall)."""
-    from nlquery_spark.operators.similarity import ivf_topk
-
-    emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    return ivf_topk(emb, query_ids=[0, 1, 2, 3, 4], k=5, n_cells=16, nprobe=4)
-
-
 # ----------------------------------------------------------------- driver --
 
 
@@ -4847,9 +4758,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_editdist_edges": _kg_editdist_edges,
         "part_lpa_communities": _part_lpa_communities,
         "gazetteer_topk_entities": _gazetteer_topk_entities,
-        # r7-edited lossy op: fresh rows-only row on the new centroid
-        # draw (recall gate lives in tests/test_operators.py)
-        "ann_ivf_topk": _ann_ivf_topk,
         # -- the rest of the r6-green tail (last driver row r6) --------
         "purchase_attribution": _purchase_attribution,
         "event_session_assignment": _event_session_assignment,
@@ -4858,10 +4766,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": _dedup_ngram_jaccard,
         "corpus_clean": _corpus_clean,
         "corpus_sample": _corpus_sample,
-        "ann_cosine_topk": _ann_cosine_topk,
         "dedup_minhash": _dedup_minhash,
         "dedup_simhash": _dedup_simhash,
-        "emb_neardup_exact": _emb_neardup_exact,
         "part_coorder_triangles": _part_coorder_triangles,
         "corpus_decontaminate": _corpus_decontaminate,
         "streaming_session_windows": _streaming_session_windows,
@@ -4943,7 +4849,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rows-only lossy ops (pytest recall/invariant gates are the
         # stronger evidence; unchanged since their r4 rows-only rows)
         "dedup_embedding": _dedup_embedding,
-        "ann_pq_topk": _ann_pq_topk,
         "corpus_pack": _corpus_pack,
     }
 
@@ -4994,7 +4899,6 @@ def oracle_sql() -> dict[str, str]:
         # invariants pytest-pinned (tests/test_corpus.py)
         "gazetteer_mentions": _gazetteer_sql(),
         "gazetteer_topk_entities": _gazetteer_topk_sql(),
-        "ann_cosine_topk": _ANN_SQL,
         "kg_similarity_edges": _KG_EDGES_SQL,
         "kg_canonicalize": _KG_CANONICALIZE_SQL,
         "kg_degree_stats": _KG_DEGREE_SQL,
@@ -5046,18 +4950,14 @@ def oracle_sql() -> dict[str, str]:
         "corpus_host_balance": _host_balance_sql(),
         "streaming_attribution": _STREAM_ATTR_SQL,
         "part_lpa_communities": _LPA_SQL,
-        "emb_neardup_exact": _EMB_EXACT_SQL,
         "kg_extract_triples": _kg_extract_triples_sql(),
         "customer_order_distribution": _ORDER_DIST_SQL,
         "customer_running_spend": _RUNNING_SPEND_SQL,
         "events_ewma": _ewma_sql(),
         "corpus_shard_assign": _SHARD_ASSIGN_SQL,
-        # ann_ivf_topk: pruned-search recall is lossy by design ->
-        # rows-only for the driver; recall >= 0.9 pytest-gated against
-        # the oracled bruteforce (ann_cosine_topk).
         # dedup_embedding: probabilistic LSH recall -> rows-only check
-        # by the driver; recall is pytest-gated >= 0.95 vs
-        # emb_neardup_exact (its oracled exact counterpart above).
+        # by the driver; recall is pytest-gated >= 0.95 vs the exact
+        # all-pairs cosine in DuckDB (tests/test_oracle_parity.py).
         # kg_extract_triples is hash-oracled (round 6) against its
         # fingerprinted raw-extraction artifact; kernel P/R stays
         # pytest-gated (= 1.0 on the ported fixture corpus).

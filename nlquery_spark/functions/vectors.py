@@ -1,9 +1,8 @@
 """Vector column functions over array<float|double> embeddings.
 
 JVM-side (`zip_with` + `aggregate`) so similarity expressions stay in
-whole-stage codegen — no Python worker, no Arrow transfer. For GEMM-
-blocked / IVF top-k over large corpora use `operators/similarity.py`;
-these are the cheap per-row expressions (single-pair scoring, norm
+whole-stage codegen — no Python worker, no Arrow transfer. These are
+the cheap per-row expressions (single-pair scoring, norm
 precomputation, re-ranking inside an already-blocked candidate set).
 
 Everything is computed in double regardless of the stored element type:

@@ -162,10 +162,29 @@ def test_oracle_parity_on_adversarial_texts(spark, nasty_sf, name):
     assert s_vals == d_vals, f"{name}: values differ\nspark={s_vals}\nduck={d_vals}"
 
 
+# exact all-pairs cosine near-dups (threshold 0.3, dedup_embedding's),
+# the reference for its LSH recall below
+_EMB_EXACT_SQL = """
+WITH v AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
+  FROM embeddings
+), n AS (
+  -- zero-norm guard: without it 0/0 = NaN, which DuckDB sorts above
+  -- every double and would pass the >= filter
+  SELECT vec_id, ev, sqrt(list_dot_product(ev, ev)) AS nrm FROM v
+)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+  ROUND(list_dot_product(a.ev, b.ev) / (a.nrm * b.nrm), 6) AS cosine
+FROM n a JOIN n b ON a.vec_id < b.vec_id
+WHERE a.nrm > 0 AND b.nrm > 0
+  AND ROUND(list_dot_product(a.ev, b.ev) / (a.nrm * b.nrm), 6) >= 0.3
+"""
+
+
 def test_dedup_embedding_recall_vs_exact_query(spark):
     """dedup_embedding is rows-only for the driver (probabilistic LSH),
     so pin its exactness here: at fixture scale the OR-amplified plan
-    must recover the oracled exact all-pairs result with no false
+    must recover the exact all-pairs result (DuckDB) with no false
     positives and recall >= 0.95 (auto-derived planes only raise
     collide probability, so this also guards the auto path)."""
     g = {
@@ -173,28 +192,12 @@ def test_dedup_embedding_recall_vs_exact_query(spark):
         for r in entry_mod.queries()["dedup_embedding"](spark, SF_DIR).collect()
     }
     e = {
-        (r.id_a, r.id_b)
-        for r in entry_mod.queries()["emb_neardup_exact"](spark, SF_DIR).collect()
+        (id_a, id_b)
+        for id_a, id_b, _ in _duck(SF_DIR).execute(_EMB_EXACT_SQL).fetchall()
     }
     assert e, "fixture must contain exact near-dup pairs"
     assert not (g - e)  # exact verify: no false positives
     assert len(g & e) / len(e) >= 0.95
-
-
-def test_ann_pq_topk_recall_vs_exact_query(spark):
-    """ann_pq_topk is rows-only (lossy PQ); pin its usefulness here:
-    >= 0.8 recall vs the oracled exact bruteforce on the same fixture
-    (near-tie-dense synthetic cosines are the hard case)."""
-    bf = {
-        (r.query_id, r.neighbor_id)
-        for r in entry_mod.queries()["ann_cosine_topk"](spark, SF_DIR).collect()
-    }
-    pq = {
-        (r.query_id, r.neighbor_id)
-        for r in entry_mod.queries()["ann_pq_topk"](spark, SF_DIR).collect()
-    }
-    assert bf
-    assert len(bf & pq) / len(bf) >= 0.8
 
 
 # ------------------------------------------- run-scoped oracle support --
@@ -375,13 +378,12 @@ _STABLE_TAIL = {
     # rows-only lossy ops: a rows-only driver row proves less than
     # their pytest recall/invariant gates already do (last driver
     # row r4, rows-only there too; code unchanged since)
-    "dedup_embedding", "ann_pq_topk", "corpus_pack",
+    "dedup_embedding", "corpus_pack",
 }
 
 # the r7 tail (last driver row r6) must all be INSIDE the window
 # now — led by the kernel-path queries whose green predated the
-# round-7 kernel edits (VERDICT r7 item 1) — plus ann_ivf_topk
-# (r7-edited centroid draw earns the fresh rows-only slot)
+# round-7 kernel edits (VERDICT r7 item 1)
 _ROTATED_IN = {
     # kernel-path: exercise kernel/extract.py + recognizer.py code
     # edited in round 7 (chunk memo, fixpoint skip, DFS precompute)
@@ -390,14 +392,11 @@ _ROTATED_IN = {
     "kg_canonicalize", "kg_degree_stats", "kg_negative_samples",
     "kg_editdist_edges", "part_lpa_communities",
     "gazetteer_topk_entities",
-    # r7-edited lossy op (rows-only by design)
-    "ann_ivf_topk",
     # the rest of the r6-green r7 tail
     "purchase_attribution", "event_session_assignment",
     "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
     "corpus_clean", "corpus_sample",
-    "ann_cosine_topk", "dedup_minhash", "dedup_simhash",
-    "emb_neardup_exact", "part_coorder_triangles",
+    "dedup_minhash", "dedup_simhash", "part_coorder_triangles",
     "corpus_decontaminate", "streaming_session_windows",
     "streaming_events_by_minute", "inverted_index",
     "events_resample_locf", "index_bm25_topk",
@@ -432,9 +431,7 @@ def test_correctness_window_holds_all_active_queries():
     ]
     # rows-only-by-nature queries (no oracle possible) excepted; every
     # other tail query still has its oracle run per-session here
-    rows_only = {
-        "dedup_embedding", "ann_pq_topk", "corpus_pack", "ann_ivf_topk",
-    }
+    rows_only = {"dedup_embedding", "corpus_pack"}
     assert set(qs[50:]) - rows_only <= set(entry_mod.oracle_sql())
 
 
@@ -721,14 +718,12 @@ def test_oracle_parity_on_orders_fuzz(spark, orders_fuzz_sf, name):
 
 @pytest.fixture(scope="module")
 def emb_fuzz_sf(spark, tmp_path_factory):
-    """Seeded pseudo-random EMBEDDINGS table stressing the similarity
-    family's risk surface: exact-duplicate vectors and colinear scaled
-    copies (cosine == 1 rank ties), and ZERO-NORM vectors — a real
-    corpus artifact (empty docs, padding) that crashed the inline
-    cosine with DIVIDE_BY_ZERO under ANSI mode before round 8 switched
-    the similarity operators to the shared zero-safe
-    functions.vectors.cosine. Promoted from a 5-seed deep sweep
-    (15/15 green post-fix)."""
+    """Seeded pseudo-random EMBEDDINGS table stressing the JVM cosine's
+    risk surface: exact-duplicate vectors and colinear scaled copies
+    (cosine == 1 rank ties), and ZERO-NORM vectors — a real corpus
+    artifact (empty docs, padding) that must score 0.0 through the
+    zero-safe functions.vectors.cosine, not raise DIVIDE_BY_ZERO under
+    ANSI mode. Promoted from a 5-seed deep sweep (15/15 green)."""
     import os
     import random
 
@@ -754,7 +749,7 @@ def emb_fuzz_sf(spark, tmp_path_factory):
     return str(d)
 
 
-_EMB_FUZZ_QUERIES = ["ann_cosine_topk", "emb_cosine_jvm", "emb_neardup_exact"]
+_EMB_FUZZ_QUERIES = ["emb_cosine_jvm"]
 
 
 @pytest.mark.parametrize("name", _EMB_FUZZ_QUERIES)
