@@ -2347,65 +2347,6 @@ _KG_CANONICALIZE_SQL = _KG_FORMS_CTE + r""", sym AS (
 SELECT node AS form, MIN(r) AS canonical_id FROM reach GROUP BY node"""
 
 
-def _kg_negative_samples(spark, sf_dir):
-    """Negative sampling for KG-embedding training: each (customer ->
-    order) positive edge gets a corrupted customer drawn via a PORTABLE
-    md5 uniform over a distributed dense entity index (salted two-level
-    — no single-reducer global sort), never equal to the true entity.
-    Deterministic and engine-reproducible: the oracle regenerates the
-    identical negatives, which is what makes a training corpus
-    resumable/auditable (rand() would change under retries and
-    repartitioning)."""
-    from nlquery_spark.operators.negatives import negative_samples
-
-    d = _load(spark, sf_dir, "orders", "customer")
-    return negative_samples(
-        d["orders"], "o_orderkey", "o_custkey", d["customer"].select(
-            F.col("c_custkey").alias("o_custkey")
-        )
-    ).select(
-        F.col("edge_id").alias("o_orderkey"),
-        F.col("entity").alias("true_custkey"),
-        F.col("neg_entity").alias("neg_custkey"),
-    )
-
-
-_KG_NEG_SQL = """
-WITH ents AS (
-  SELECT DISTINCT c_custkey AS entity FROM customer
-), salted AS (
-  SELECT entity,
-    CAST(('0x' || substr(md5(CAST(entity AS VARCHAR)), 1, 16))::UBIGINT % 64
-         AS INTEGER) AS s
-  FROM ents
-), ranked AS (
-  SELECT entity, s, ROW_NUMBER() OVER (PARTITION BY s ORDER BY entity) AS rn
-  FROM salted
-), offs AS (
-  SELECT s, COALESCE(SUM(cnt) OVER (ORDER BY s
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-  FROM (SELECT s, COUNT(*) AS cnt FROM ranked GROUP BY s)
-), uni AS (
-  SELECT r.entity, CAST(o.off + r.rn - 1 AS BIGINT) AS idx
-  FROM ranked r JOIN offs o USING (s)
-), nn AS (SELECT COUNT(*) AS n FROM uni),
-tagged AS (
-  SELECT o.o_orderkey AS edge_id, o.o_custkey AS entity, u.idx AS true_idx,
-    CAST(('0x' || substr(md5('neg:' || o.o_orderkey), 1, 16))::UBIGINT
-         % (SELECT n FROM nn) AS BIGINT) AS draw
-  FROM orders o JOIN uni u ON u.entity = o.o_custkey
-)
-SELECT t.edge_id AS o_orderkey, t.entity AS true_custkey,
-       c.entity AS neg_custkey
-FROM (
-  SELECT edge_id, entity,
-    CASE WHEN draw = true_idx THEN (draw + 1) % (SELECT n FROM nn)
-         ELSE draw END AS neg_idx
-  FROM tagged
-) t JOIN uni c ON c.idx = t.neg_idx
-"""
-
-
 def _dedup_minhash(spark, sf_dir):
     """MinHash-LSH near-dup, fully oracled: md5 shingle hashes +
     exact-integer universal hashing make the signatures reproducible in
@@ -4754,7 +4695,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_similarity_edges": _kg_similarity_edges,
         "kg_canonicalize": _kg_canonicalize,
         "kg_degree_stats": _kg_degree_stats,
-        "kg_negative_samples": _kg_negative_samples,
         "kg_editdist_edges": _kg_editdist_edges,
         "part_lpa_communities": _part_lpa_communities,
         "gazetteer_topk_entities": _gazetteer_topk_entities,
@@ -4902,7 +4842,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_similarity_edges": _KG_EDGES_SQL,
         "kg_canonicalize": _KG_CANONICALIZE_SQL,
         "kg_degree_stats": _KG_DEGREE_SQL,
-        "kg_negative_samples": _KG_NEG_SQL,
         "kg_pagerank": _kg_pagerank_sql(),
         "entity_link_topk": _entity_link_sql(),
         "token_cooccurrence_lift": _cooccurrence_sql(),

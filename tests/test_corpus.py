@@ -159,46 +159,6 @@ def test_chunk_documents_window_arithmetic(spark):
             assert ch == toks[k * 3 : k * 3 + 5], (d, k)
 
 
-def test_negative_samples_exact_vs_python_reference(spark):
-    """The portable negative sampler must match a from-scratch python
-    implementation exactly: dense salt-major index, md5 draw, shift-on-
-    collision — and never sample the positive's entity."""
-    from nlquery_spark.operators.negatives import negative_samples
-
-    ents = [f"e{i:03d}" for i in range(57)]
-    uni = spark.createDataFrame([(e,) for e in ents], "entity string")
-    edges = spark.createDataFrame(
-        [(i, ents[i % 57]) for i in range(300)], "edge_id long, entity string"
-    )
-    got = {
-        r.edge_id: (r.entity, r.neg_entity)
-        for r in negative_samples(edges, "edge_id", "entity", uni).collect()
-    }
-
-    def u64(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:16], 16)
-
-    # python reference: same salt-major dense index
-    by_salt = {}
-    for e in sorted(ents):
-        by_salt.setdefault(u64(e) % 64, []).append(e)
-    idx = {}
-    i = 0
-    for s in sorted(by_salt):
-        for e in by_salt[s]:
-            idx[e] = i
-            i += 1
-    ent_of = {v: k for k, v in idx.items()}
-    n = len(ents)
-    for eid in range(300):
-        true_e = ents[eid % 57]
-        d = u64(f"neg:{eid}") % n
-        if d == idx[true_e]:
-            d = (d + 1) % n
-        assert got[eid] == (true_e, ent_of[d]), eid
-    assert all(t != ng for t, ng in got.values())
-
-
 def test_decontaminate_flags_ngram_overlap(spark):
     from nlquery_spark.operators.corpus import decontaminate
 

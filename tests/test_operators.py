@@ -326,21 +326,6 @@ def test_simhash_wide_hamming_plan_subquadratic(spark):
     assert m_wide["max_bucket"] ** 2 < n * (n - 1) / 8
 
 
-def test_negative_samples_strict_raises_on_uncovered_edges(spark):
-    from nlquery_spark.operators.negatives import negative_samples
-
-    edges = spark.createDataFrame(
-        [(1, "a"), (2, "zz")], "edge_id long, entity string"
-    )
-    uni = spark.createDataFrame([("a",), ("b",), ("c",)], "entity string")
-    with pytest.raises(ValueError, match="missing"):
-        negative_samples(edges, "edge_id", "entity", uni, strict=True)
-    # default (non-strict) drops the uncovered edge — the documented
-    # universe-must-cover-edges contract
-    out = negative_samples(edges, "edge_id", "entity", uni).collect()
-    assert {r.edge_id for r in out} == {1}
-
-
 def test_inverted_index_postings_numeric_order(spark):
     from nlquery_spark.operators.index import inverted_index
 

@@ -389,9 +389,8 @@ _ROTATED_IN = {
     # edited in round 7 (chunk memo, fixpoint skip, DFS precompute)
     "kg_extract_triples", "gazetteer_mentions", "entity_link_topk",
     "chunk_boilerplate", "kg_pagerank", "kg_similarity_edges",
-    "kg_canonicalize", "kg_degree_stats", "kg_negative_samples",
-    "kg_editdist_edges", "part_lpa_communities",
-    "gazetteer_topk_entities",
+    "kg_canonicalize", "kg_degree_stats", "kg_editdist_edges",
+    "part_lpa_communities", "gazetteer_topk_entities",
     # the rest of the r6-green r7 tail
     "purchase_attribution", "event_session_assignment",
     "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
