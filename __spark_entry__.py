@@ -2523,7 +2523,7 @@ def _dedup_embedding(spark, sf_dir):
     )
 
 
-# ----------------------- editdist edges + LOCF resample (round 4) --
+# ------------------------------------- editdist edges (round 4) --
 
 
 def _kg_editdist_edges(spark, sf_dir):
@@ -2567,58 +2567,6 @@ SELECT DISTINCT a.form AS form_a, b.form AS form_b,
 FROM capped a
 JOIN capped b ON a.block = b.block AND a.form < b.form
 WHERE levenshtein(a.norm, b.norm) <= 2
-"""
-
-
-def _events_resample_locf(spark, sf_dir):
-    """Time-series regularization: hourly grid per user from first to
-    last event, empty buckets gap-filled by last-observation-carried-
-    forward (operators/timeseries.py::resample_locf). Deterministic
-    in-bucket tie-break (ts, event_id) makes the filled series exactly
-    reproducible in SQL."""
-    from nlquery_spark.operators.timeseries import resample_locf
-
-    events = _load(spark, sf_dir, "events")["events"].filter(
-        F.col("user_id") < 20
-    )
-    out = resample_locf(events, unit="hour")
-    return out.select(
-        "user_id",
-        F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
-        "value_locf",
-        "n_obs",
-    )
-
-
-_LOCF_SQL = """
-WITH e AS (
-  SELECT user_id, ts, value, event_id FROM events WHERE user_id < 20
-), b AS (
-  SELECT user_id, date_trunc('hour', MIN(ts)) AS mn,
-         date_trunc('hour', MAX(ts)) AS mx
-  FROM e GROUP BY user_id
-), spine AS (
-  SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
-  FROM b
-), obs AS (
-  SELECT user_id, date_trunc('hour', ts) AS bucket, value,
-    ROW_NUMBER() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-                       ORDER BY ts DESC, event_id DESC) AS rn
-  FROM e
-), last_obs AS (
-  SELECT user_id, bucket, value FROM obs WHERE rn = 1
-), cnt AS (
-  SELECT user_id, bucket, COUNT(*) AS n FROM obs GROUP BY user_id, bucket
-)
-SELECT s.user_id,
-  strftime(s.bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-  last_value(l.value IGNORE NULLS) OVER (
-    PARTITION BY s.user_id ORDER BY s.bucket
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf,
-  CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_obs
-FROM spine s
-LEFT JOIN last_obs l ON l.user_id = s.user_id AND l.bucket = s.bucket
-LEFT JOIN cnt ON cnt.user_id = s.user_id AND cnt.bucket = s.bucket
 """
 
 
@@ -3712,48 +3660,6 @@ FROM orders
 """
 
 
-def _events_ewma(spark, sf_dir):
-    """Per-user exponentially-weighted moving average of event value
-    over the last 5 observations (operators/timeseries.py::ewma) — the
-    distributed-friendly finite-window EWMA monitoring pipelines use
-    for smoothed rates. Weights are computed ONCE in Python and
-    embedded as exact double literals in BOTH the Spark expression and
-    the oracle (same association order), so the only float ops are
-    bit-identical on both engines."""
-    from nlquery_spark.operators.timeseries import ewma
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    r = ewma(ev, alpha=0.3, k=5)
-    return r.select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
-        "event_id",
-        "value",
-        "ewma",
-    )
-
-
-def _ewma_sql() -> str:
-    """Oracle mirror of _events_ewma: SAME weight literals (repr() of
-    the exact doubles from ewma_weights) and SAME left-associative term
-    order, so num/den is reproduced bit-for-bit before ROUND(..,6)."""
-    from nlquery_spark.operators.timeseries import ewma_weights
-
-    terms_n, terms_d = [], []
-    for j, wj in enumerate(ewma_weights(0.3, 5)):
-        x = "value" if j == 0 else f"lag(value, {j}) OVER w"
-        terms_n.append(f"CASE WHEN {x} IS NOT NULL THEN {x} * {wj!r} ELSE 0.0 END")
-        terms_d.append(f"CASE WHEN {x} IS NOT NULL THEN {wj!r} ELSE 0.0 END")
-    num = " + ".join(terms_n)
-    den = " + ".join(terms_d)
-    return f"""
-SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_s, event_id, value,
-       ROUND(({num}) / ({den}), 6) AS ewma
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-
 def _corpus_shard_assign(spark, sf_dir):
     """Deterministic training-shard layout (operators/corpus.py::
     shard_assign): every document gets a (shard, position) that is
@@ -4713,11 +4619,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_session_windows": _streaming_session_windows,
         "streaming_events_by_minute": _streaming_events_by_minute,
         "inverted_index": _inverted_index,
-        "events_resample_locf": _events_resample_locf,
         "index_bm25_topk": _index_bm25_topk,
         "customer_order_distribution": _customer_order_distribution,
         "customer_running_spend": _customer_running_spend,
-        "events_ewma": _events_ewma,
         "corpus_shard_assign": _corpus_shard_assign,
         "dedup_clusters": _dedup_clusters,
         "corpus_split_assign": _corpus_split_assign,
@@ -4869,7 +4773,6 @@ def oracle_sql() -> dict[str, str]:
         "index_phrase_search": _PHRASE_SEARCH_SQL,
         "index_phrase_postings": _PHRASE_SEARCH_SQL,
         "kg_editdist_edges": _KG_EDITDIST_SQL,
-        "events_resample_locf": _LOCF_SQL,
         "customer_order_full_outer": _FULL_OUTER_SQL,
         "chunk_boilerplate": _BOILERPLATE_SQL,
         "dedup_simhash": _SIMHASH_SQL,
@@ -4892,7 +4795,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_extract_triples": _kg_extract_triples_sql(),
         "customer_order_distribution": _ORDER_DIST_SQL,
         "customer_running_spend": _RUNNING_SPEND_SQL,
-        "events_ewma": _ewma_sql(),
         "corpus_shard_assign": _SHARD_ASSIGN_SQL,
         # dedup_embedding: probabilistic LSH recall -> rows-only check
         # by the driver; recall is pytest-gated >= 0.95 vs the exact

@@ -397,10 +397,9 @@ _ROTATED_IN = {
     "corpus_clean", "corpus_sample",
     "dedup_minhash", "dedup_simhash", "part_coorder_triangles",
     "corpus_decontaminate", "streaming_session_windows",
-    "streaming_events_by_minute", "inverted_index",
-    "events_resample_locf", "index_bm25_topk",
+    "streaming_events_by_minute", "inverted_index", "index_bm25_topk",
     "customer_order_distribution", "customer_running_spend",
-    "events_ewma", "corpus_shard_assign", "dedup_clusters",
+    "corpus_shard_assign", "dedup_clusters",
     "corpus_split_assign", "dedup_incremental", "web_url_normalize",
     "web_host_stats", "web_link_graph", "web_host_pagerank",
     "web_crawl_diff", "doc_gopher_filters", "streaming_crawl_dedup",
@@ -587,8 +586,7 @@ _EVENTS_FUZZ_QUERIES = [
     "events_time_rollup", "event_funnel", "event_type_transitions",
     "events_daily_anomaly", "event_retention_cohorts",
     "events_sliding_windows", "event_props_json",
-    "event_session_assignment", "events_resample_locf", "events_ewma",
-    "customer_running_spend",
+    "event_session_assignment", "customer_running_spend",
 ]
 
 

@@ -4,7 +4,6 @@ resume-from-checkpoint equivalence, metrics/lineage presence."""
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from nlquery_spark.operators.canonicalize import (
@@ -425,36 +424,6 @@ def test_edit_distance_blocking_recall_adversarial(spark):
     assert recall >= 0.85
 
 
-def test_resample_locf_fills_gaps(spark):
-    import datetime as dt
-
-    from nlquery_spark.operators.timeseries import resample_locf
-
-    base = dt.datetime(2024, 1, 1, 0, 30)
-    rows = [
-        # user 1: obs in hours 0 and 3 -> hours 1, 2 carry 10.0 forward;
-        # two obs in hour 0, later one (by ts) wins
-        (100, base, 1, "x", 5.0, "{}"),
-        (101, base + dt.timedelta(minutes=10), 1, "x", 10.0, "{}"),
-        (102, base + dt.timedelta(hours=3), 1, "x", 7.0, "{}"),
-        # user 2: single obs
-        (103, base, 2, "x", 1.5, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    out = {
-        (r.user_id, str(r.bucket)): (r.value_locf, r.n_obs)
-        for r in resample_locf(df, unit="hour").collect()
-    }
-    assert out[(1, "2024-01-01 00:00:00")] == (10.0, 2)
-    assert out[(1, "2024-01-01 01:00:00")] == (10.0, 0)
-    assert out[(1, "2024-01-01 02:00:00")] == (10.0, 0)
-    assert out[(1, "2024-01-01 03:00:00")] == (7.0, 1)
-    assert out[(2, "2024-01-01 00:00:00")] == (1.5, 1)
-    assert len(out) == 5
-
-
 def test_pipeline_linkpred_stage(spark, tmp_path):
     """The KG-completion stage: every candidate is a NON-edge pair with
     >= 2 shared neighbors and a valid (0, 1] Jaccard score."""
@@ -484,52 +453,3 @@ def test_pipeline_linkpred_stage(spark, tmp_path):
     import json, os
     meta = json.load(open(os.path.join(workdir, "_meta", "linkpred.json")))
     assert "blocks_capped" in meta.get("metrics", {})
-
-
-def test_ewma_matches_hand_computation(spark):
-    import datetime as dt
-
-    from nlquery_spark.operators.timeseries import ewma, ewma_weights
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, base, 1, "x", 2.0, "{}"),
-        (2, base + dt.timedelta(minutes=1), 1, "x", 4.0, "{}"),
-        (3, base + dt.timedelta(minutes=2), 1, "x", 8.0, "{}"),
-        # user 2: a single observation averages over itself only
-        (4, base, 2, "x", 5.0, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {r.event_id: r.ewma for r in ewma(df, alpha=0.3, k=5).collect()}
-    w = ewma_weights(0.3, 5)
-    assert got[1] == pytest.approx(2.0)
-    assert got[4] == pytest.approx(5.0)
-    assert got[2] == pytest.approx((4.0 * w[0] + 2.0 * w[1]) / (w[0] + w[1]), abs=1e-6)
-    assert got[3] == pytest.approx(
-        (8.0 * w[0] + 4.0 * w[1] + 2.0 * w[2]) / (w[0] + w[1] + w[2]), abs=1e-6
-    )
-
-
-def test_ewma_window_caps_at_k(spark):
-    """Observation k+1 rows back must NOT influence the average: with
-    constant history except an old outlier beyond the k-window, the
-    EWMA equals the constant."""
-    import datetime as dt
-
-    from nlquery_spark.operators.timeseries import ewma
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [(i, base + dt.timedelta(minutes=i), 1, "x", v, "{}")
-            for i, v in enumerate([1000.0, 3.0, 3.0, 3.0, 3.0, 3.0])]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {r.event_id: r.ewma for r in ewma(df, alpha=0.3, k=5).collect()}
-    assert got[5] == pytest.approx(3.0)   # outlier aged out
-    assert got[4] > 3.0                   # still inside the window here

@@ -275,19 +275,6 @@ def test_running_spend_single_exchange(spark, sf_dir):
     assert "Window" in plan
 
 
-def test_ewma_single_exchange(spark, sf_dir):
-    """The k-lag EWMA window is one user-keyed shuffle and stays
-    entirely in JVM window evaluation — no Arrow/Python stage."""
-    plan = (
-        em.queries()["events_ewma"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
 def test_shard_assign_single_exchange(spark, sf_dir):
     """Shard layout is one shuffle on the (uniform, key-only) shard id;
     the per-shard position sort is local to the shard partition."""
