@@ -4571,25 +4571,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Driver query map. ORDERING IS A CONTRACT: the driver's correctness
-    harness evaluates the FIRST 50 entries, so the window ROTATES each
-    round (standing VERDICT item since r3). Round 8 (VERDICT r7 item 1):
-    50 of the 53-entry r7 tail rotate in — led by the KERNEL-PATH
+    harness checks only the first 50 entries. The four kernel-path
     queries (kg_extract_triples, gazetteer_mentions, entity_link_topk,
-    chunk_boilerplate and the kg_* family built on extracted triples)
-    whose driver-oracle green predated round 7's kernel edits (chunk
-    memo, fixpoint skip, DFS navigation precompute); this window
-    re-proves them on the shipping engine via the driver's own oracle.
-    The one window slot not spent on an oracled veteran (position 13)
-    goes to ann_ivf_topk: rows-only by design (pruned-search recall,
-    pytest-gated >= 0.9) but its centroid draw changed in r7, so it
-    earns the fresh rows-only row over the three untouched lossy ops
-    (dedup_embedding, ann_pq_topk, corpus_pack) — those three do NOT
-    rotate in: they stay in the tail where their pytest
-    recall/invariant gates prove more than a rows-only driver row
-    would. The tail's other 50 entries are all
-    r7-driver-green (CORRECTNESS_r07 50/50 full green) with unchanged
-    driver-surface code this round, and every oracled tail entry is
-    still oracle-checked per-session by tests/test_oracle_parity.py."""
+    chunk_boilerplate) lead, and every entry past position 50 must be
+    in _STABLE_TAIL (tests/test_oracle_parity.py).
+    test_correctness_window_holds_all_active_queries checks all of
+    this."""
     return {
         # -- kernel-path first: these exercise kernel/extract.py and
         #    kernel/recognizer.py code edited in round 7 ---------------
@@ -4637,10 +4624,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "web_redirect_resolve": _web_redirect_resolve,
         "corpus_host_balance": _corpus_host_balance,
         "streaming_attribution": _streaming_attribution,
-        # ==== tail: r7-driver-green (CORRECTNESS_r07, 50/50 full
-        # green), code unchanged at the driver surface this round;
-        # every entry still oracle-checked per-session by
-        # tests/test_oracle_parity.py ====
+        # ==== _STABLE_TAIL (tests/test_oracle_parity.py): only these
+        # entries may sit past the 50-entry window ====
         "streaming_kg_merge": _streaming_kg_merge,
         "customer_order_full_outer": _customer_order_full_outer,
         "doc_tfidf_keywords": _doc_tfidf_keywords,
