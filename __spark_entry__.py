@@ -1056,138 +1056,6 @@ FROM s GROUP BY user_id, session_id
 """
 
 
-def _event_session_assignment(spark, sf_dir):
-    """RANGE JOIN surface (points-in-intervals, bucketed equi-join
-    composition — operators/asof.py::range_join): every event assigned
-    to the session interval containing it. Intervals come from the same
-    30-min-gap sessionization the oracle recomputes in SQL; no
-    timestamps are emitted, so no serialization hazard."""
-    from nlquery_spark.operators.asof import range_join
-
-    events = _load(spark, sf_dir, "events")["events"].filter(
-        F.col("user_id") < 40
-    )
-    w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp_ltz").cast("long")
-    gap = epoch - F.lag(epoch).over(w_user)
-    new_session = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sessions = (
-        events.withColumn("session_id", F.sum(new_session).over(w_user).cast("long"))
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
-    )
-    pts = events.select("event_id", "user_id", "ts")
-    assigned = range_join(
-        pts, sessions, on="user_id", point_time="ts",
-        start_col="s_start", end_col="s_end", bucket="1 hour",
-    )
-    return assigned.select("event_id", "user_id", "session_id")
-
-
-_RANGE_JOIN_SQL = """
-WITH e AS (
-  SELECT event_id, user_id, ts FROM events WHERE user_id < 40
-), g AS (
-  SELECT user_id, event_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR date_diff('second', lag(ts) OVER w, ts) > 1800
-         THEN 1 ELSE 0 END AS new_session
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-  FROM g
-), iv AS (
-  SELECT user_id, session_id, MIN(ts) AS s_start, MAX(ts) AS s_end
-  FROM s GROUP BY user_id, session_id
-)
-SELECT e.event_id, e.user_id, iv.session_id
-FROM e JOIN iv ON e.user_id = iv.user_id
-              AND e.ts BETWEEN iv.s_start AND iv.s_end
-"""
-
-
-def _events_time_rollup(spark, sf_dir):
-    """Hypertable-style continuous aggregate (multi-grain time rollup in
-    one GROUPING SETS scan, operators/asof.py::time_rollup) — one
-    shuffle produces minute+hour+day resolutions together."""
-    from nlquery_spark.operators.asof import time_rollup
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    return time_rollup(ev, "ts", "value")
-
-
-_TIME_ROLLUP_SQL = """
-WITH b AS (
-  SELECT value,
-    strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS b_minute,
-    strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS b_hour,
-    strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S') AS b_day
-  FROM events WHERE ts IS NOT NULL
-)
-SELECT
-  CASE WHEN b_minute IS NOT NULL THEN 'minute'
-       WHEN b_hour IS NOT NULL THEN 'hour' ELSE 'day' END AS grain,
-  COALESCE(b_minute, b_hour, b_day) AS bucket_ts,
-  COUNT(*) AS n_events,
-  CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(10,2))) AS DOUBLE) AS sum_value
-FROM b GROUP BY GROUPING SETS ((b_minute), (b_hour), (b_day))
-"""
-
-
-def _purchase_attribution(spark, sf_dir):
-    """AS-OF JOIN surface (an operator Spark's SQL lacks, composed from
-    union + window — operators/asof.py): every purchase event attributed
-    to the user's latest view event at or before it. Oracled against
-    DuckDB's native ASOF JOIN. Timestamps carry micros -> serialized as
-    canonical strings on both sides (the sessionize lesson)."""
-    from nlquery_spark.operators.asof import asof_join
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        # deterministic right side: unique (user, ts), keep max event_id
-        .groupBy("user_id", F.col("ts").alias("vts"))
-        .agg(F.max("event_id").alias("view_event_id"))
-    )
-    j = asof_join(
-        purchases, views, on="user_id", left_time="ts", right_time="vts",
-        right_cols=["vts", "view_event_id"],
-    )
-    gap = (
-        F.col("ts").cast("timestamp_ltz").cast("long")
-        - F.col("vts").cast("timestamp_ltz").cast("long")
-    )
-    return j.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
-        "view_event_id",
-        F.date_format("vts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("view_ts"),
-        gap.cast("long").alias("gap_sec"),
-    )
-
-
-_ASOF_SQL = """
-WITH p AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-), v AS (
-  SELECT user_id, ts AS vts, MAX(event_id) AS view_event_id
-  FROM events WHERE event_type = 'view' GROUP BY user_id, ts
-)
-SELECT p.event_id, p.user_id,
-  strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-  v.view_event_id,
-  strftime(v.vts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts,
-  CAST(date_diff('second', v.vts, p.ts) AS BIGINT) AS gap_sec
-FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.vts
-"""
-
-
 def _orders_with_returns(spark, sf_dir):
     """Semi-join (EXISTS): orders having at least one returned lineitem,
     counted by priority."""
@@ -4592,8 +4460,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "part_lpa_communities": _part_lpa_communities,
         "gazetteer_topk_entities": _gazetteer_topk_entities,
         # -- the rest of the r6-green tail (last driver row r6) --------
-        "purchase_attribution": _purchase_attribution,
-        "event_session_assignment": _event_session_assignment,
         "orders_with_returns": _orders_with_returns,
         "dedup_exact": _dedup_exact,
         "dedup_ngram_jaccard": _dedup_ngram_jaccard,
@@ -4650,7 +4516,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_sessionize": _events_sessionize,
         "daily_active_users": _daily_active_users,
         "topk_orders_per_customer": _topk_orders_per_customer,
-        "events_time_rollup": _events_time_rollup,
         "events_by_minute": _events_by_minute,
         "doc_token_stats": _doc_token_stats,
         "doc_subword_stats": _doc_subword_stats,
@@ -4706,9 +4571,6 @@ def oracle_sql() -> dict[str, str]:
         "order_priority_rollup": _ROLLUP_SQL,
         "part_setops_98_not_99": _SETOPS_SQL,
         "events_sessionize": _SESSIONIZE_SQL,
-        "purchase_attribution": _ASOF_SQL,
-        "event_session_assignment": _RANGE_JOIN_SQL,
-        "events_time_rollup": _TIME_ROLLUP_SQL,
         "orders_with_returns": _SEMI_SQL,
         "promo_revenue_share": _PROMO_SQL,
         "daily_active_users": _DAU_SQL,

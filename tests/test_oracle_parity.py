@@ -365,7 +365,7 @@ _STABLE_TAIL = {
     "q3_shipping_priority", "ship_lag_by_month", "promo_revenue_share",
     "customers_without_orders", "events_sessionize",
     "daily_active_users", "topk_orders_per_customer",
-    "events_time_rollup", "events_by_minute", "doc_token_stats",
+    "events_by_minute", "doc_token_stats",
     "doc_subword_stats", "doc_quality", "doc_lang_id",
     "doc_fingerprint", "doc_repetition", "doc_pii_scrub", "doc_chunks",
     "nl_filter_stemmed", "nl_filter_culture", "nl_filter_inferred",
@@ -396,7 +396,6 @@ _ROTATED_IN = {
     "kg_canonicalize", "kg_degree_stats", "kg_editdist_edges",
     "part_lpa_communities", "gazetteer_topk_entities",
     # the rest of the r6-green r7 tail
-    "purchase_attribution", "event_session_assignment",
     "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
     "corpus_clean", "corpus_sample",
     "dedup_minhash", "dedup_simhash", "part_coorder_triangles",
@@ -586,10 +585,9 @@ def events_fuzz_sf(spark, tmp_path_factory):
 
 _EVENTS_FUZZ_QUERIES = [
     "events_sessionize", "events_by_minute", "daily_active_users",
-    "events_time_rollup", "event_funnel", "event_type_transitions",
-    "events_daily_anomaly", "event_retention_cohorts",
-    "events_sliding_windows", "event_props_json",
-    "event_session_assignment", "customer_running_spend",
+    "event_funnel", "event_type_transitions", "events_daily_anomaly",
+    "event_retention_cohorts", "events_sliding_windows",
+    "event_props_json", "customer_running_spend",
 ]
 
 
