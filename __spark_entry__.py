@@ -4320,65 +4320,6 @@ QUALIFY rank <= 30
     )
 
 
-def _streaming_crawl_dedup(spark, sf_dir):
-    """FOURTH fully-oracled streaming query — ingest-time exact dedup
-    on a page STREAM (streaming/dedup.py::streaming_exact_dedup): the
-    staged crawl replays as the original pages PLUS a re-crawl of
-    every 7th doc under a second URL (same content at a different
-    location — the standard crawl dup), in 2+ availableNow
-    micro-batches; dropDuplicates keyed on content digest must keep
-    exactly one row per distinct text ACROSS batches (JVM state
-    store). Only the digest KEY SET is emitted — which duplicate row
-    survives is micro-batch-order dependent, but the distinct key set
-    is order-invariant, so the oracle (DISTINCT md5(text)) is exact:
-    the value hash proves the stream neither dropped a distinct text
-    nor let a cross-batch duplicate through."""
-    import uuid
-
-    from nlquery_spark.streaming.dedup import streaming_exact_dedup
-
-    docs = _load(spark, sf_dir, "documents")["documents"]
-    d = F.col("doc_id")
-    crawl = docs.select(
-        _redir_url_col(d).alias("url"),
-        "text",
-    ).union(
-        docs.filter(d % 7 == 0).select(
-            F.concat(
-                F.lit("http://mirror.example.org/cache/"), d.cast("string")
-            ).alias("url"),
-            "text",
-        )
-    )
-    src = _materialize_once(
-        _oracle_path("stream_crawl_src", sf_dir, table="documents"),
-        lambda p: crawl.repartition(8).write.mode("overwrite").parquet(p),
-    )
-    stream = (
-        spark.readStream.schema("url string, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(src)
-    )
-    out = streaming_exact_dedup(stream).select(F.md5("text").alias("digest"))
-    table = f"crawl_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_crawl_dedup did not finish in 300s")
-    return spark.table(table).select("digest")
-
-
-_STREAM_CRAWL_DEDUP_SQL = """
-SELECT DISTINCT md5(text) AS digest FROM documents
-"""
-
-
 def _doc_gopher_filters(spark, sf_dir):
     """Gopher-rule quality audit (operators/textstats.py::gopher_rules,
     Rae et al. 2021 §A1.1): per-document rule booleans (word-count
@@ -4485,7 +4426,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "web_host_pagerank": _web_host_pagerank,
         "web_crawl_diff": _web_crawl_diff,
         "doc_gopher_filters": _doc_gopher_filters,
-        "streaming_crawl_dedup": _streaming_crawl_dedup,
         "web_anchor_text": _web_anchor_text,
         "web_redirect_resolve": _web_redirect_resolve,
         "corpus_host_balance": _corpus_host_balance,
@@ -4633,7 +4573,6 @@ def oracle_sql() -> dict[str, str]:
         "web_host_pagerank": _HOST_PAGERANK_SQL,
         "web_crawl_diff": _CRAWL_DIFF_SQL,
         "doc_gopher_filters": _GOPHER_SQL,
-        "streaming_crawl_dedup": _STREAM_CRAWL_DEDUP_SQL,
         "web_anchor_text": _ANCHOR_TEXT_SQL,
         "web_redirect_resolve": _REDIRECT_SQL,
         "corpus_host_balance": _host_balance_sql(),

@@ -1,4 +1,3 @@
-from .dedup import streaming_exact_dedup  # noqa: F401
 from .joins import interval_join_stream  # noqa: F401
 from .extract import (  # noqa: F401
     read_latest_triples,

@@ -405,7 +405,7 @@ _ROTATED_IN = {
     "corpus_shard_assign", "dedup_clusters",
     "corpus_split_assign", "dedup_incremental", "web_url_normalize",
     "web_host_stats", "web_link_graph", "web_host_pagerank",
-    "web_crawl_diff", "doc_gopher_filters", "streaming_crawl_dedup",
+    "web_crawl_diff", "doc_gopher_filters",
     "web_anchor_text", "web_redirect_resolve", "corpus_host_balance",
     "streaming_attribution",
 }

@@ -171,50 +171,6 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path, sf_dir):
     assert g == b and g
 
 
-def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
-    """Exact dedup over a stream keeps one row per distinct text even
-    when duplicates span micro-batches, matching the batch operator
-    (first-seen == min doc_id under ordered replay)."""
-    import glob
-    import os
-    import shutil
-
-    from nlquery_spark.operators.dedup import exact_dedup
-    from nlquery_spark.streaming.dedup import streaming_exact_dedup
-
-    rows = []
-    for i in range(40):
-        rows.append((i, f"text body {i % 10}"))  # every text repeats 4x
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "docs_in")
-    os.makedirs(src)
-    for part in range(4):  # duplicates split ACROSS files/batches
-        sl = str(tmp_path / f"dslice{part}")
-        docs.filter(
-            (F.col("doc_id") >= part * 10) & (F.col("doc_id") < (part + 1) * 10)
-        ).coalesce(1).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(sl)
-        shutil.move(glob.glob(f"{sl}/part-*.parquet")[0], f"{src}/{part:02d}.parquet")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, ckpt = str(tmp_path / "dd_out"), str(tmp_path / "dd_ckpt")
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r.doc_id, r.text) for r in spark.read.parquet(out).collect()}
-    expected = {(r.doc_id, r.text) for r in exact_dedup(docs).collect()}
-    assert got == expected and len(got) == 10
-
-
 def test_buffered_sessionize_out_of_order_matches_batch(spark, tmp_path, sf_dir):
     """Watermark-buffered sessionization: events arrive out of order
     across micro-batches (bounded by the watermark delay) and sessions
