@@ -4149,125 +4149,6 @@ QUALIFY row_number() OVER (PARTITION BY url ORDER BY hops DESC) = 1
 """
 
 
-def _streaming_attribution(spark, sf_dir):
-    """FIFTH fully-oracled streaming query — stream-stream watermarked
-    interval join (streaming/joins.py::interval_join_stream): purchases
-    joined to the clicks that preceded them within 4 HOURS (14400 s,
-    mirrored in the oracle's INTERVAL) per user, both sides replaying
-    from the SAME file stream as 4 ts-ranged slices, 2 per trigger =
-    cross-batch matching, exactly-once parquet sink. The watermark
-    delay EXCEEDS the full 30-day event span, so no row can ever be
-    late regardless of file replay order — parity does not depend on
-    slice mtimes (state is simply retained to end-of-replay, which a
-    bounded availableNow run affords; production uses a real delay and
-    ordered ingestion). The emitted (purchase, click) pair set is
-    order-invariant, so the DuckDB oracle is the plain batch interval
-    join — the value hash proves the stream-stream state machine
-    buffers and matches every cross-batch pair and drops none."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from nlquery_spark.streaming.joins import interval_join_stream
-
-    ev = (
-        _load(spark, sf_dir, "events")["events"]
-        .filter(F.col("user_id") < 100)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-    )
-
-    def write_slices(p):
-        os.makedirs(p, exist_ok=True)
-        # checkpointed once: the global ntile sort would otherwise
-        # recompute for each of the four slice writes
-        ranged = ev.withColumn(
-            "bucket", F.ntile(4).over(Window.orderBy("ts", "event_id"))
-        ).localCheckpoint(eager=True)
-        for i in range(1, 5):
-            sdir = os.path.join(p, f"_sl{i}")
-            ranged.filter(F.col("bucket") == i).drop("bucket").coalesce(
-                1
-            ).write.mode("overwrite").parquet(sdir)
-            shutil.move(
-                glob.glob(f"{sdir}/part-*.parquet")[0],
-                os.path.join(p, f"{i:02d}.parquet"),
-            )
-            shutil.rmtree(sdir)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-
-    src = _materialize_once(
-        _oracle_path("stream_attr_src", sf_dir, table="events"), write_slices
-    )
-    # state-store partition count = shuffle partitions at first batch:
-    # a stream-stream join maintains per-partition state files for BOTH
-    # sides every micro-batch, so 32 partitions x 4 batches was pure
-    # file churn for a fixture-sized key space (measured 25 s warm ->
-    # 4.8 s with 8 partitions / 2 batches, identical output). Scoped
-    # set/restore; production sizes this to the cluster, not the query.
-    old_shuf = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, "
-                "event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
-        joined = interval_join_stream(
-            stream.filter(F.col("event_type") == "purchase"),
-            stream.filter(F.col("event_type") == "click"),
-            "user_id",
-            "ts",
-            "ts",
-            window_sec=14400,
-            watermark_delay="45 days",
-        )
-        # project to the three output columns BEFORE the sink (the
-        # join carries value/type/ts columns the query never returns)
-        pairs = joined.select(
-            F.col("l_key").alias("user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("r_event_id").alias("click_id"),
-        )
-        work = tempfile.mkdtemp(prefix="nlq_attr_")
-        out, ckpt = f"{work}/out", f"{work}/ckpt"
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming_attribution did not finish in 300s")
-        # materialize, then remove the temp sink + checkpoint — repeat
-        # invocations (driver window, bench, parity tests) must not
-        # accumulate state dirs in /tmp
-        result = spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuf)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
-
-
-_STREAM_ATTR_SQL = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type
-  FROM events WHERE user_id < 100
-), p AS (SELECT * FROM e WHERE event_type = 'purchase'),
-c AS (SELECT * FROM e WHERE event_type = 'click')
-SELECT p.user_id AS user_id, p.event_id AS purchase_id,
-       c.event_id AS click_id
-FROM p JOIN c ON p.user_id = c.user_id
-  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 14400 SECOND
-"""
-
-
 def _corpus_host_balance(spark, sf_dir):
     """Domain balancing — the corpus-diversity step every web-scale
     training set applies (a handful of hosts dominate any crawl; cap
@@ -4429,7 +4310,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "web_anchor_text": _web_anchor_text,
         "web_redirect_resolve": _web_redirect_resolve,
         "corpus_host_balance": _corpus_host_balance,
-        "streaming_attribution": _streaming_attribution,
         # ==== _STABLE_TAIL (tests/test_oracle_parity.py): only these
         # entries may sit past the 50-entry window ====
         "streaming_kg_merge": _streaming_kg_merge,
@@ -4576,7 +4456,6 @@ def oracle_sql() -> dict[str, str]:
         "web_anchor_text": _ANCHOR_TEXT_SQL,
         "web_redirect_resolve": _REDIRECT_SQL,
         "corpus_host_balance": _host_balance_sql(),
-        "streaming_attribution": _STREAM_ATTR_SQL,
         "part_lpa_communities": _LPA_SQL,
         "kg_extract_triples": _kg_extract_triples_sql(),
         "customer_order_distribution": _ORDER_DIST_SQL,

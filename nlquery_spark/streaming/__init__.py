@@ -1,4 +1,3 @@
-from .joins import interval_join_stream  # noqa: F401
 from .extract import (  # noqa: F401
     read_latest_triples,
     read_pages_stream,

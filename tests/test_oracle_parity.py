@@ -407,7 +407,6 @@ _ROTATED_IN = {
     "web_host_stats", "web_link_graph", "web_host_pagerank",
     "web_crawl_diff", "doc_gopher_filters",
     "web_anchor_text", "web_redirect_resolve", "corpus_host_balance",
-    "streaming_attribution",
 }
 
 

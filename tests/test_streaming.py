@@ -290,75 +290,6 @@ def test_sessionize_update_accepts_tz_aware_ts():
     assert list(out_naive["session_id"]) == [1, 2]  # 2h gap splits sessions
 
 
-def test_interval_join_stream_matches_batch(spark, tmp_path, sf_dir):
-    """Watermarked stream-stream interval join (purchases x preceding
-    clicks within 30 min per user) emits exactly the batch join's pairs
-    when the same events replay across micro-batches."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    from nlquery_spark.streaming.joins import interval_join_stream
-
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("user_id") < 40)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-    )
-    purchases = events.filter(F.col("event_type") == "purchase")
-    clicks = events.filter(F.col("event_type") == "click")
-    batch = {
-        (r.event_id, r.r_event_id)
-        for r in interval_join_stream(
-            purchases, clicks, "user_id", "ts", "ts", window_sec=1800
-        ).collect()
-    }
-    assert batch, "fixture must produce click->purchase attributions"
-
-    # ordered replay: 4 ts-ranged slices with ascending names+mtimes
-    src = str(tmp_path / "ev_in")
-    os.makedirs(src)
-    ranged = events.withColumn(
-        "bucket", F.ntile(4).over(Window.orderBy("ts", "event_id"))
-    ).cache()
-    for i in range(1, 5):
-        sdir = str(tmp_path / f"sl{i}")
-        ranged.filter(F.col("bucket") == i).drop("bucket").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sdir)
-        shutil.move(glob.glob(f"{sdir}/part-*.parquet")[0], f"{src}/{i:02d}.parquet")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    joined = interval_join_stream(
-        stream.filter(F.col("event_type") == "purchase"),
-        stream.filter(F.col("event_type") == "click"),
-        "user_id",
-        "ts",
-        "ts",
-        window_sec=1800,
-        watermark_delay="120 minutes",
-    )
-    out, ckpt = str(tmp_path / "ij_out"), str(tmp_path / "ij_ckpt")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = {
-        (r.event_id, r.r_event_id) for r in spark.read.parquet(out).collect()
-    }
-    assert got == batch
-
-
 def test_streaming_incremental_merge_matches_batch(spark, tmp_path):
     """Continuous-crawl KG maintenance: micro-batched pages merged
     incrementally (dedup per batch + merge_triple_deltas into a
