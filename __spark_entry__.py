@@ -2670,89 +2670,7 @@ def _index_phrase_postings(spark, sf_dir):
     )
 
 
-# ------------------------------------- streaming session windows (r4) --
-
-
-def _streaming_session_windows(spark, sf_dir):
-    """BUILT-IN session windows on a real STREAM (vs the custom
-    applyInPandasWithState sessionizers, and vs the batch window-SQL
-    sessionize): the events table replays through an availableNow file
-    stream in multiple micro-batches, F.session_window merges sessions
-    across batches in the JVM state store, and a complete-mode memory
-    sink snapshots the final state — which must equal the batch answer,
-    so unlike streaming_extract this streaming query is FULLY ORACLED.
-    Session rule (probed + pinned): merge iff next_ts <= prev_ts + gap
-    (inclusive), window end = last_ts + gap; DuckDB reproduces it with
-    precise-microsecond interval arithmetic (date_diff('second') would
-    truncate sub-second gaps and mis-split)."""
-    import uuid
-
-    from nlquery_spark.streaming import session_window_stats
-
-    events = (
-        _load(spark, sf_dir, "events")["events"]
-        .select("user_id", F.col("ts").cast("timestamp_ltz").alias("ts"))
-    )
-    # fingerprint-stable source path (same mechanism as the oracle
-    # artifacts): repeat runs at the same sf reuse the staged files
-    # instead of leaking a new events copy into /tmp per invocation.
-    # repartition, NOT coalesce: the scan of one small parquet file is
-    # a single partition and coalesce can only shrink — 8 files / 4 per
-    # trigger = 2+ micro-batches, so cross-batch session merging in the
-    # state store is actually exercised
-    src = _materialize_once(
-        _oracle_path("stream_sessions_src", sf_dir, table="events"),
-        lambda p: events.repartition(8).write.mode("overwrite").parquet(p),
-    )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(src)
-    )
-    sessions = session_window_stats(stream, gap="30 minutes")
-    table = f"sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_session_windows did not finish in 300s")
-    return spark.table(table).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_start"
-        ),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "session_end"
-        ),
-        F.col("n_events").cast("long").alias("n_events"),
-    )
-
-
-_STREAM_SESSIONS_SQL = """
-WITH g AS (
-  SELECT user_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR ts > lag(ts) OVER w + INTERVAL 1800 SECOND
-         THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), s AS (
-  SELECT *, SUM(new_session) OVER (
-    PARTITION BY user_id ORDER BY ts
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM g
-)
-SELECT user_id,
-  strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-  strftime(MAX(ts) + INTERVAL 1800 SECOND, '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-  CAST(COUNT(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, sid
-"""
+# -------------------------------------- streaming tumbling windows (r4) --
 
 
 def _streaming_events_by_minute(spark, sf_dir):
@@ -4291,7 +4209,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": _dedup_simhash,
         "part_coorder_triangles": _part_coorder_triangles,
         "corpus_decontaminate": _corpus_decontaminate,
-        "streaming_session_windows": _streaming_session_windows,
         "streaming_events_by_minute": _streaming_events_by_minute,
         "inverted_index": _inverted_index,
         "index_bm25_topk": _index_bm25_topk,
@@ -4428,7 +4345,6 @@ def oracle_sql() -> dict[str, str]:
         "events_daily_anomaly": _DAILY_ANOMALY_SQL,
         "part_coorder_triangles": _TRIANGLES_SQL,
         "corpus_decontaminate": _decontaminate_sql(),
-        "streaming_session_windows": _STREAM_SESSIONS_SQL,
         "streaming_events_by_minute": _STREAM_MINUTES_SQL,
         "streaming_extract": _streaming_extract_sql(),
         # the incremental merge converges to EXACTLY the batch aggregate

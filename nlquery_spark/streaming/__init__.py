@@ -5,7 +5,6 @@ from .extract import (  # noqa: F401
     triples_to_sink,
     windowed_mention_rate,
 )
-from .sessions import session_window_stats  # noqa: F401
 from .stateful import (  # noqa: F401
     streaming_pred_stats,
     streaming_sessionize,

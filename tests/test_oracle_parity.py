@@ -399,7 +399,7 @@ _ROTATED_IN = {
     "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
     "corpus_clean", "corpus_sample",
     "dedup_minhash", "dedup_simhash", "part_coorder_triangles",
-    "corpus_decontaminate", "streaming_session_windows",
+    "corpus_decontaminate",
     "streaming_events_by_minute", "inverted_index", "index_bm25_topk",
     "customer_order_distribution", "customer_running_spend",
     "corpus_shard_assign", "dedup_clusters",

@@ -403,58 +403,3 @@ def test_triples_merge_sink_rejects_remote_base_dir():
     for uri in ("hdfs://nn/kg", "s3a://bucket/kg", "abfss://c@a/kg"):
         with pytest.raises(ValueError, match="local path"):
             _require_local_dir(uri)
-
-
-def test_session_window_semantics_pinned(spark):
-    """Inclusive-at-gap merge rule and end = last_ts + gap — the exact
-    semantics the streaming_session_windows oracle mirrors in SQL."""
-    import datetime as dt
-
-    from nlquery_spark.streaming import session_window_stats
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, base),
-        (1, base + dt.timedelta(seconds=1800)),  # exactly gap -> merge
-        (2, base),
-        (2, base + dt.timedelta(seconds=1800, microseconds=1)),  # split
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    out = sorted(
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in session_window_stats(df).collect()
-    )
-    assert out == [
-        (1, "2024-01-01 00:00:00", "2024-01-01 01:00:00", 2),
-        (2, "2024-01-01 00:00:00", "2024-01-01 00:30:00", 1),
-        (2, "2024-01-01 00:30:00.000001", "2024-01-01 01:00:00.000001", 1),
-    ]
-
-
-def test_streaming_session_windows_equals_batch(spark, sf_dir):
-    """The streamed complete-mode snapshot must equal the batch
-    session_window aggregation on the same events."""
-    import __spark_entry__ as em
-    from pyspark.sql import functions as F
-
-    from nlquery_spark.streaming import session_window_stats
-
-    got = {
-        (r.user_id, r.session_start, r.session_end): r.n_events
-        for r in em.queries()["streaming_session_windows"](spark, sf_dir).collect()
-    }
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp_ltz").alias("ts")
-    )
-    batch = session_window_stats(events)
-    want = {
-        (r.user_id, s, e): r.n_events
-        for r in batch.select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("e"),
-            "n_events",
-        ).collect()
-        for s, e in [(r.s, r.e)]
-    }
-    assert got == want
