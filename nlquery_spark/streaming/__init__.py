@@ -5,8 +5,3 @@ from .extract import (  # noqa: F401
     triples_to_sink,
     windowed_mention_rate,
 )
-from .stateful import (  # noqa: F401
-    streaming_pred_stats,
-    streaming_sessionize,
-    streaming_sessionize_buffered,
-)

@@ -1,9 +1,6 @@
 """Structured Streaming wiring: file-stream extraction with availableNow
 trigger produces the same triples as the batch path."""
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from nlquery_spark.operators.extract import extract_triples
@@ -54,240 +51,6 @@ def test_windowed_mention_rate_plan(spark, tmp_path):
     # the final watermark update may keep windows open — the plan running
     # end-to-end (state store + watermark wiring) is the assertion here.
     spark.sql("select * from mention_rate").collect()
-
-
-def test_stateful_pred_stats(spark, tmp_path):
-    """applyInPandasWithState running stats equal batch ground truth."""
-    from nlquery_spark.streaming.stateful import streaming_pred_stats
-
-    src = str(tmp_path / "pages_state")
-    synth_pages(spark, 80).write.mode("overwrite").parquet(src)
-    stream = read_pages_stream(spark, src, max_files_per_trigger=1)
-    triples_stream = extract_triples(stream, [orders_schema_spec()])
-    stats = streaming_pred_stats(triples_stream)
-    q = (
-        stats.writeStream.format("memory")
-        .queryName("pred_stats")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "select * from pred_stats"
-    ).toPandas()
-    # last update per pred = final state
-    final = rows.groupby("pred").last()
-
-    batch = extract_triples(spark.read.parquet(src), [orders_schema_spec()])
-    expected = (
-        batch.groupBy("pred")
-        .agg(
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.countDistinct("subj").alias("n_subjects"),
-            F.max("score").alias("max_score"),
-        )
-        .collect()
-    )
-    assert len(expected) > 0
-    for r in expected:
-        got = final.loc[r.pred]
-        assert int(got.n_mentions) == r.n_mentions, r.pred
-        assert int(got.n_subjects_bounded) == r.n_subjects, r.pred
-        assert abs(float(got.max_score) - r.max_score) < 1e-9, r.pred
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path, sf_dir):
-    """Custom stateful streaming sessionization (applyInPandasWithState)
-    produces exactly the batch lag+cumsum sessionization when events are
-    replayed in event-time order across micro-batches."""
-    from pyspark.sql import Window
-
-    from nlquery_spark.streaming.stateful import streaming_sessionize
-
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("user_id") < 40)
-    )
-    # event-time-ordered replay: write 6 ts-ranged files one by one
-    # (ascending names AND mtimes) so the file source replays each
-    # micro-batch strictly later than the previous one
-    import glob
-    import os
-    import shutil
-
-    src = str(tmp_path / "events_in")
-    os.makedirs(src)
-    ranged = events.withColumn(
-        "bucket", F.ntile(6).over(Window.orderBy("ts", "event_id"))
-    ).cache()
-    for i in range(1, 7):
-        slice_dir = str(tmp_path / f"slice{i}")
-        ranged.filter(F.col("bucket") == i).drop("bucket").coalesce(
-            1
-        ).sortWithinPartitions("ts", "event_id").write.mode("overwrite").parquet(
-            slice_dir
-        )
-        part = glob.glob(f"{slice_dir}/part-*.parquet")[0]
-        shutil.move(part, f"{src}/{i:02d}.parquet")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, ckpt = str(tmp_path / "sess_out"), str(tmp_path / "sess_ckpt")
-
-    # parquet sinks don't accept update mode: land each micro-batch's
-    # update rows via foreachBatch append (downstream dedups snapshots)
-    def _sink(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        streaming_sessionize(stream)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # update-mode sink: final snapshot per (user, session) = max n_events
-    w = Window.partitionBy("user_id", "session_id").orderBy(F.desc("n_events"))
-    got = (
-        spark.read.parquet(out)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    import __spark_entry__ as em
-
-    batch = em.queries()["events_sessionize"](spark, sf_dir).filter(
-        F.col("user_id") < 40
-    )
-    g = {(r.user_id, r.session_id): (r.n_events, r.session_start, r.session_end, round(r.sum_value, 2))
-         for r in got.collect()}
-    b = {(r.user_id, r.session_id): (r.n_events, r.session_start, r.session_end, round(r.sum_value, 2))
-         for r in batch.collect()}
-    assert g == b and g
-
-
-def test_buffered_sessionize_out_of_order_matches_batch(spark, tmp_path, sf_dir):
-    """Watermark-buffered sessionization: events arrive out of order
-    across micro-batches (bounded by the watermark delay) and sessions
-    still emit append-mode equal to the batch sessionization."""
-    import glob
-    import shutil
-
-    import numpy as np
-    from pyspark.sql import Window
-
-    from nlquery_spark.streaming.stateful import streaming_sessionize_buffered
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
-        F.col("user_id") < 30
-    )
-    # bounded disorder: order by ts + seeded jitter (±45 min), split into
-    # sequential files on the JITTERED order -> a "2 hours" watermark
-    # covers the lateness
-    jitter = (F.hash("event_id") % 5400) - 2700  # seconds
-    jittered = events.withColumn(
-        "_jts", F.col("ts").cast("timestamp_ltz").cast("long") + jitter
-    )
-    max_ts = events.agg(F.max("ts")).first()[0]
-    # per-user sentinel one day later closes every real session at
-    # end-of-stream; its own (still-open) session is never emitted
-    import datetime
-
-    sentinel_ts = max_ts + datetime.timedelta(days=1)
-    sentinels = (
-        events.select("user_id").distinct()
-        .withColumn("event_id", F.lit(10_000_000) + F.col("user_id"))
-        .withColumn("ts", F.lit(sentinel_ts))
-        .withColumn("event_type", F.lit("flush"))
-        .withColumn("value", F.lit(0.0))
-        .withColumn("props", F.lit("{}"))
-        .select(*events.columns)
-        .withColumn("_jts", F.lit(2**62))
-    )
-    allrows = jittered.unionByName(sentinels)
-    src = str(tmp_path / "ooo_events")
-    os.makedirs(src)
-    ranged = allrows.withColumn(
-        "bucket", F.ntile(6).over(Window.orderBy("_jts", "event_id"))
-    ).cache()
-    for i in range(1, 7):
-        sl = str(tmp_path / f"ooo{i}")
-        ranged.filter(F.col("bucket") == i).drop("bucket", "_jts").coalesce(
-            1
-        ).write.mode("overwrite").parquet(sl)
-        shutil.move(glob.glob(f"{sl}/part-*.parquet")[0], f"{src}/{i:02d}.parquet")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, ckpt = str(tmp_path / "ooo_out"), str(tmp_path / "ooo_ckpt")
-    q = (
-        streaming_sessionize_buffered(stream, watermark_delay="2 hours")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = {
-        (r.user_id, r.session_id): (r.n_events, r.session_start, r.session_end,
-                                    round(r.sum_value, 2))
-        for r in spark.read.parquet(out).collect()
-    }
-    import __spark_entry__ as em
-
-    batch = em.queries()["events_sessionize"](spark, sf_dir).filter(
-        F.col("user_id") < 30
-    )
-    b = {
-        (r.user_id, r.session_id): (r.n_events, r.session_start, r.session_end,
-                                    round(r.sum_value, 2))
-        for r in batch.collect()
-    }
-    assert got == b and got  # sentinel sessions never emitted; rest exact
-
-
-def test_sessionize_update_accepts_tz_aware_ts():
-    """_sessionize_update must normalize tz-aware event time (what a
-    timestamp_ltz column becomes in pandas) exactly like the buffered
-    variant — same sessions as the tz-naive equivalent input."""
-    import pandas as pd
-
-    from nlquery_spark.streaming.stateful import _sessionize_update
-
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.exists, self._v = True, v
-
-        @property
-        def get(self):
-            return self._v
-
-    naive = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 02:00:00"]
-            ),
-            "event_id": [1, 2, 3],
-            "value": [1.0, 2.0, 3.0],
-        }
-    )
-    aware = naive.copy()
-    aware["ts"] = aware["ts"].dt.tz_localize("UTC")
-    out_naive = list(_sessionize_update((7,), iter([naive]), FakeState(), 1800))[0]
-    out_aware = list(_sessionize_update((7,), iter([aware]), FakeState(), 1800))[0]
-    pd.testing.assert_frame_equal(out_naive, out_aware)
-    assert list(out_naive["session_id"]) == [1, 2]  # 2h gap splits sessions
 
 
 def test_streaming_incremental_merge_matches_batch(spark, tmp_path):
