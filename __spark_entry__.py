@@ -469,9 +469,8 @@ def _stream_triples_select(df):
 
 def _streaming_extract(spark, sf_dir):
     """Structured Streaming extraction — FULLY ORACLED since round 5
-    (VERDICT r4 item 4, via the recipe the session-window queries
-    proved): documents-derived pages are staged as parquet files
-    (scale-adaptive count, 8 at fixture scale up to 64 — see
+    (VERDICT r4 item 4): documents-derived pages are staged as parquet
+    files (scale-adaptive count, 8 at fixture scale up to 64 — see
     _staged_stream_pages), an availableNow file stream replays them
     through the SAME stateless mapInPandas extraction in EXACTLY 2
     micro-batches (ceil(n_files/2) per trigger), and the exactly-once
@@ -506,7 +505,7 @@ def _streaming_extract(spark, sf_dir):
 
 
 def _streaming_kg_merge(spark, sf_dir):
-    """SIXTH fully-oracled streaming query (VERDICT r6 item 2) —
+    """Fully-oracled streaming query (VERDICT r6 item 2) —
     incremental KG maintenance via streaming/extract.py::
     triples_merge_sink: the same staged pages replay as an availableNow
     file stream (ceil(n_files/2) per trigger = exactly 2 micro-batches
@@ -538,9 +537,10 @@ def _streaming_kg_merge(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="nlq_kgmerge_")
     base, ckpt = f"{work}/base", f"{work}/ckpt"
     # per-batch merges are tiny batch jobs over fixture-scale aggregates:
-    # 32-way shuffles would be pure scheduling churn (the
-    # streaming_attribution lesson — OPERATIONS.md sizes this to the
-    # cluster in production, per-query here). Scale-adaptive since r9:
+    # each one runs a task per shuffle partition however few rows it
+    # holds, so 32-way shuffles would be pure scheduling churn
+    # (OPERATIONS.md sizes this to the cluster in production; it is set
+    # per query here). Scale-adaptive since r9:
     # at corpus scale the per-batch delta is ~10^5-10^6 aggregated
     # triples, where 8 reducers under-use the machine — grow with the
     # staged-batch width, still capped at the core count.
@@ -560,8 +560,8 @@ def _streaming_kg_merge(spark, sf_dir):
             q.stop()
             raise RuntimeError("streaming_kg_merge did not finish within 300s")
         merged = _stream_triples_select(read_latest_triples(spark, base))
-        # materialize before the version dirs are deleted (the
-        # streaming_attribution cleanup pattern: no /tmp leak per run)
+        # materialize before the version dirs are deleted, so that no
+        # run leaves its base versions or checkpoint in the temp dir
         out = merged.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuf)
@@ -2674,13 +2674,12 @@ def _index_phrase_postings(spark, sf_dir):
 
 
 def _streaming_events_by_minute(spark, sf_dir):
-    """Tumbling-window streaming aggregation — the other stateful
-    window class next to session windows, and the most common streaming
-    op in production: per-minute per-type event counts and exact
-    decimal sums maintained in the JVM state store across micro-batches
-    (availableNow file stream, complete-mode memory snapshot). Fully
-    ORACLED: the snapshot must equal the batch GROUP BY, so this is the
-    second streaming query with a value-hash oracle."""
+    """Tumbling-window streaming aggregation — the most common stateful
+    streaming op in production: per-minute per-type event counts and
+    exact decimal sums maintained in the JVM state store across
+    micro-batches (availableNow file stream, complete-mode memory
+    snapshot). Fully ORACLED: the snapshot must equal the batch
+    GROUP BY, which the value-hash oracle checks."""
     import uuid
 
     events = _load(spark, sf_dir, "events")["events"].select(
@@ -3233,13 +3232,12 @@ FROM per
 
 
 def _events_sliding_windows(spark, sf_dir):
-    """Sliding-window aggregation (10-minute windows, 5-minute slide) —
-    completes the window-type triad next to the oracled tumbling
-    (streaming_events_by_minute) and session (streaming_session_windows)
-    queries. Built-in F.window assigns each event its window-size/slide
-    overlapping windows JVM-side (epoch-aligned starts); sums in exact
-    DECIMAL then cast to double (the q1 convention — double-sum order
-    dependence never reaches the hash)."""
+    """Sliding-window aggregation (10-minute windows, 5-minute slide),
+    the overlapping counterpart of the oracled tumbling windows of
+    streaming_events_by_minute. Built-in F.window assigns each event
+    its window-size/slide overlapping windows JVM-side (epoch-aligned
+    starts); sums in exact DECIMAL then cast to double (the q1
+    convention — double-sum order dependence never reaches the hash)."""
     ev = _load(spark, sf_dir, "events")["events"]
     w = F.window(F.col("ts"), "10 minutes", "5 minutes")
     return (
