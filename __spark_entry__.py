@@ -2670,7 +2670,7 @@ def _index_phrase_postings(spark, sf_dir):
     )
 
 
-# -------------------------------------- streaming tumbling windows (r4) --
+# ------------------------------------------- streaming tumbling windows --
 
 
 def _streaming_events_by_minute(spark, sf_dir):
