@@ -22,7 +22,11 @@ Coverage (all deterministic, generated from the committed fixtures):
   5,000-title gazetteer, once plain and once with stop words and the
   stemmer — the only part of the surface whose value lists are large;
 - the same gazetteer triples (plain recognizer) under non-default
-  scoring parameters: ``top_k=3`` and ``long_match_boost=False``.
+  scoring parameters: ``top_k=3`` and ``long_match_boost=False``;
+- ``nlsql.parse_best_matches`` over the NL workload's requests
+  (``perfbench/gen.py`` seed 11) against its customer and orders
+  dictionaries with its stop words, with and without column mentions —
+  the surface where every parse runs through ``TokenFilterMatcher``.
 
 The snapshot lives outside the repo (SNAPSHOT_PATH below): it is a
 session-local gate, not a committed artifact; `check` against a
@@ -57,8 +61,12 @@ def _surface():
     from nlquery_spark.kernel.table import ENGLISH_STOP_WORDS
     from nlquery_spark.kernel.tokenizer import tokenize
     from nlquery_spark.kernel.tokens import TokenSequence
+    from nlquery_spark.operators.nlsql import parse_best_matches
     from nlquery_spark.sources.pages import _page_text, orders_schema_spec
     from perfbench import gen  # read-only: the benchmark's input generator
+
+    sys.path.insert(0, os.path.join(REPO, "tests"))
+    from combination_oracle import NL_OPTIONS, nl_specs
 
     spec = orders_schema_spec()
     rec = build_recognizer([spec])
@@ -123,7 +131,21 @@ def _surface():
         {"long_match_boost": False},
     ]
 
+    nspecs = nl_specs(gen)
+
+    def nl_parse(table, nl, mentions):
+        matches, _seq = parse_best_matches(nl, [nspecs[table]], NL_OPTIONS, mentions)
+        return [
+            (type(m).__name__, str(m), m.score, m.start.start_index, m.end.start_index)
+            for m in matches
+        ]
+
     return {
+        "nlsql_parses": [
+            nl_parse(table, nl, mentions)
+            for table, nl, _conds in gen.nl_queries(11, 400) + gen.warmup_queries(11)
+            for mentions in (False, True)
+        ],
         "gazetteer_triples": [
             extract_text_triples(t, r, prescreen=s) for r, s in gaz for t in gtexts
         ],

@@ -26,7 +26,12 @@ from typing import Callable, Iterator, List, Optional, Sequence, Tuple
 
 from nlquery_spark.kernel.extract import _iter_group_leaves, cached_recognizer, spec_key
 from nlquery_spark.kernel.matches import Match
-from nlquery_spark.kernel.table import ColumnConditionMatch, ColumnMatch, GroupMatch
+from nlquery_spark.kernel.table import (
+    ENGLISH_STOP_WORDS,
+    ColumnConditionMatch,
+    ColumnMatch,
+    GroupMatch,
+)
 from nlquery_spark.kernel.tokens import NUMBER, WORD, TokenSequence
 
 
@@ -110,6 +115,28 @@ def combo_compare(a: ScoredCombo, b: ScoredCombo) -> int:
     if a.order != b.order:
         return 1 if a.order < b.order else -1
     return 0
+
+
+# the NL workload's options: stop words on, so every parse goes through
+# TokenFilterMatcher
+NL_OPTIONS = {"stop_words": ENGLISH_STOP_WORDS + ["with", "where", "whose"]}
+
+
+def nl_specs(gen):
+    """The NL workload's dictionaries, built as ``spec_from_dataframe``
+    builds them from the generated tables, without Spark."""
+    tables = gen.nl_tables(11, 6000, 50)
+    kinds = {"c_acctbal": "number", "o_totalprice": "number", "o_orderdate": "date"}
+    specs = {}
+    for table, captions in gen.CAPTIONS.items():
+        cols = []
+        for col, caption in captions.items():
+            entry = {"caption": caption, "name": col, "datatype": kinds.get(col, "string")}
+            if entry["datatype"] == "string":
+                entry["values"] = sorted(set(tables[table][col]))[:5000]
+            cols.append(entry)
+        specs[table] = {"caption": table, "name": table, "columns": cols}
+    return specs
 
 
 def candidate_score(

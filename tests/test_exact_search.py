@@ -17,14 +17,16 @@ from nlquery_spark.kernel.extract import (
     extract_text_triples,
 )
 from nlquery_spark.kernel.matches import StubMatch
-from nlquery_spark.kernel.table import ENGLISH_STOP_WORDS, ColumnConditionMatch, GroupMatch
+from nlquery_spark.kernel.table import ColumnConditionMatch, GroupMatch
 from nlquery_spark.kernel.tokenizer import tokenize
 from nlquery_spark.kernel.tokens import TokenSequence
 from nlquery_spark.operators.nlsql import parse_best_matches, parse_conditions
 
 from combination_oracle import (
+    NL_OPTIONS,
     bounded_top_combinations,
     candidate_score,
+    nl_specs,
     reference_best_matches,
 )
 
@@ -125,33 +127,15 @@ def test_nl_query_past_the_cap(gazetteer_specs):
     assert capped_score < candidate_score(matches, seq)
 
 
-def _nl_specs(gen):
-    """The NL workload's dictionaries, built as ``spec_from_dataframe``
-    builds them from the generated tables, without Spark."""
-    tables = gen.nl_tables(11, 6000, 50)
-    kinds = {"c_acctbal": "number", "o_totalprice": "number", "o_orderdate": "date"}
-    specs = {}
-    for table, captions in gen.CAPTIONS.items():
-        cols = []
-        for col, caption in captions.items():
-            entry = {"caption": caption, "name": col, "datatype": kinds.get(col, "string")}
-            if entry["datatype"] == "string":
-                entry["values"] = sorted(set(tables[table][col]))[:5000]
-            cols.append(entry)
-        specs[table] = {"caption": table, "name": table, "columns": cols}
-    return specs
-
-
 def test_nl_parse_equals_reference_walk(gazetteer_specs):
     """The benchmark's NL requests, with and without column mentions:
     the same matches as the exhaustive reference walk."""
     gen, _specs = gazetteer_specs
-    specs = _nl_specs(gen)
-    options = {"stop_words": ENGLISH_STOP_WORDS + ["with", "where", "whose"]}
+    specs = nl_specs(gen)
 
     requests = gen.nl_queries(11, 400) + gen.warmup_queries(11)
     for table, nl, _conds in requests:
         for mentions in (False, True):
-            got, _ = parse_best_matches(nl, [specs[table]], options, mentions)
-            want, _ = reference_best_matches(nl, [specs[table]], options, mentions)
+            got, _ = parse_best_matches(nl, [specs[table]], NL_OPTIONS, mentions)
+            want, _ = reference_best_matches(nl, [specs[table]], NL_OPTIONS, mentions)
             assert _desc(got) == _desc(want), (nl, mentions)

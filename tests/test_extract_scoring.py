@@ -347,6 +347,39 @@ def test_chunk_memo_namespace_registry_bounded():
     assert again is handles[9]
 
 
+def _unmemoized_can_match(tokens, prescreen):
+    """The prescreen verdict with a scan of ``prescreen`` per token."""
+    return any(
+        t.type == NUMBER or (t.type == WORD and t.value_lower in prescreen)
+        for t in tokens
+    )
+
+
+def test_prescreen_verdict_on_benchmark_chunks():
+    """``_chunk_can_match`` gives the unmemoized verdict on every
+    distinct chunk of the crawl workloads' pages, on a first and on a
+    repeated pass, and both verdicts occur."""
+    from perfbench import gen  # read-only: the benchmark's input generator
+
+    gspecs = [gen.ORDERS_SPEC, gen.titles_spec()]
+    titles = gspecs[1]["columns"][0]["values"]
+    inputs = [
+        (gspecs, [t for seed in (1, 2, 3) for t in gen.gazetteer_pages(seed, 120, titles)["text"]]),
+        ([gen.ORDERS_SPEC], list(gen.boilerplate_pages(5301, 3000)["text"])),
+    ]
+    verdicts = set()
+    for specs, texts in inputs:
+        screen = build_prescreen(specs)
+        chunks = {chunk for text in texts for _, chunk in _chunks(text)}
+        for _pass in range(2):
+            for chunk in chunks:
+                tokens = tokenize(chunk)
+                want = _unmemoized_can_match(tokens, screen)
+                assert _chunk_can_match(tokens, screen) == want, chunk
+                verdicts.add(want)
+    assert verdicts == {True, False}
+
+
 def test_mentions_memo_bit_identical():
     from nlquery_spark.kernel.extract import extract_text_mentions
 

@@ -323,6 +323,22 @@ def test_comparison_and_group():
         assert ";".join(str(m) for m in grp_matches) == exp_grp, inp
 
 
+def test_kernel_match_classes_subclass_match_directly():
+    """``MatchBag`` indexes matches by exact class; a matcher asking for
+    one of the kernel's match classes gets what ``isinstance`` would
+    give only while no match class derives from another."""
+    from nlquery_spark.kernel import matches, table
+
+    classes = {
+        c
+        for mod in (matches, table)
+        for c in vars(mod).values()
+        if isinstance(c, type) and issubclass(c, Match) and c is not Match
+    }
+    assert len(classes) == 9
+    assert all(c.__bases__ == (Match,) for c in classes)
+
+
 def test_exact_phrase_matcher_empty_words_is_noop():
     """A phrase that tokenizes to zero WORD tokens (numeric/punct-only
     config phrases) must yield nothing, not crash the first-word screen."""

@@ -6,9 +6,17 @@ reproduces the input exactly (TokenizerTests.cs:41). Goldens pin the
 known cases; these properties pin it for arbitrary unicode inputs.
 """
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
-from nlquery_spark.kernel.tokenizer import tokenize
+from nlquery_spark.kernel.extract import build_recognizer
+from nlquery_spark.kernel.matchers import TokenFilterMatcher
+from nlquery_spark.kernel.table import ENGLISH_STOP_WORDS, english_stem
+from nlquery_spark.kernel.tokenizer import (
+    apply_stemmer_tokens,
+    parse_quoted_constants,
+    tokenize,
+)
+from nlquery_spark.operators.nlsql import _query_tokens
 from nlquery_spark.operators.html import extract_text_str
 
 # printable-ish unicode incl. whitespace classes, digits, punctuation
@@ -33,6 +41,56 @@ def test_tokenizer_offsets_partition_input(s):
         assert t.start_index == pos
         pos += len(t.value)
     assert pos == len(s)
+
+
+# the stop-word predicate TokenFilterMatcher applies when stop words are on
+_NOT_STOP = next(
+    m.predicate
+    for m in build_recognizer(
+        [{"caption": "t", "name": "t", "columns": [{"caption": "c", "name": "c"}]}],
+        {"stop_words": ENGLISH_STOP_WORDS},
+    ).matchers
+    if isinstance(m, TokenFilterMatcher)
+)
+
+
+def _assert_unique_starts(tokens, strict=True):
+    """No two tokens of ``tokens`` share a ``start_index``; with
+    ``strict=False``, two that do are equal tokens (same value), so an
+    index keyed by ``start_index`` groups exactly as one keyed by the
+    token does."""
+    seen = {}
+    for t in tokens:
+        other = seen.setdefault(t.start_index, t)
+        if other is not t:
+            assert not strict and other == t, (other, t)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(_texts, st.text(alphabet='ab "1.\'', max_size=40)))
+@example("")
+@example('"')
+@example('a "')
+@example('a "b')
+@example('say ""yes"" "on hold')
+def test_kernel_sequences_key_tokens_by_start(s):
+    """Every token sequence the kernel builds can key its tokens by
+    ``start_index``: ``tokenize`` output, its stemmed and stop-word
+    filtered forms strictly; ``parse_quoted_constants`` output (alone,
+    stemmed or filtered, and as nlsql builds it) up to equal tokens —
+    a lone quote at the end yields an empty Word at the sentence end's
+    start, equal to the sentence end."""
+    toks = tokenize(s)
+    _assert_unique_starts(toks)
+    _assert_unique_starts(apply_stemmer_tokens(toks, english_stem))
+    _assert_unique_starts([t for t in toks if _NOT_STOP(t)])
+    quoted = list(parse_quoted_constants(toks))
+    _assert_unique_starts(quoted, strict=False)
+    _assert_unique_starts(apply_stemmer_tokens(quoted, english_stem), strict=False)
+    _assert_unique_starts([t for t in quoted if _NOT_STOP(t)], strict=False)
+    _assert_unique_starts(
+        _query_tokens(s, {"parse_quoted": True, "stem_tokens": True}), strict=False
+    )
 
 
 @settings(max_examples=300, deadline=None)

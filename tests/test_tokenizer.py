@@ -2,6 +2,8 @@
 /root/reference/src/NReco.NLQuery.Tests/TokenizerTests.cs."""
 
 from nlquery_spark.kernel import Token, TokenSequence, tokenize, parse_quoted_constants
+from nlquery_spark.kernel.table import english_stem
+from nlquery_spark.kernel.tokenizer import apply_stemmer_tokens
 from nlquery_spark.kernel.tokens import (
     NUMBER,
     SEPARATOR,
@@ -101,3 +103,39 @@ def test_quoted_constants():
         tokens = parse_quoted_constants(tokenize(inp))
         s = "".join(f"{TOKEN_TYPE_NAMES[t.type]}[{t.value}]" for t in tokens)
         assert s == expected
+
+
+def test_quoted_lone_quote_at_end_shares_the_sentence_end_start():
+    tokens = list(parse_quoted_constants(tokenize('a "')))
+    assert [(t.value, t.start_index) for t in tokens] == [
+        ("a", 0), (" ", 1), ("", 3), ("", 3)
+    ]
+    assert tokens[2] == tokens[3]
+    # both find the same position, the last of the two
+    seq = TokenSequence(tokens)
+    assert seq.get_index(tokens[2]) == seq.get_index(tokens[3]) == 3
+
+
+def test_get_index_is_the_sequences_own_position():
+    """``get_index`` gives a token's position in the sequence asked,
+    which for a filtered, a stemmed or a quoted sequence is not its
+    position in the tokenizer's output, and -1 for a token the
+    sequence does not hold."""
+    tokens = tokenize('show "big apple" statuses of the orders')
+    quoted = list(parse_quoted_constants(tokens))
+    stemmed = apply_stemmer_tokens(quoted, english_stem)
+    filtered = [t for t in tokens if t.type == WORD and t.value != "the"]
+    assert len(quoted) < len(tokens) and len(filtered) < len(tokens)
+    assert any(a is not b for a, b in zip(quoted, stemmed))
+    for toks in (tokens, quoted, stemmed, filtered):
+        seq = TokenSequence(toks)
+        assert [seq.get_index(t) for t in toks] == list(range(len(toks)))
+    statuses = next(t for t in quoted if t.value == "statuses")
+    assert TokenSequence(stemmed).get_index(statuses) == -1
+    the = next(t for t in tokens if t.value == "the")
+    assert TokenSequence(filtered).get_index(the) == -1
+    apple = next(t for t in tokens if t.value == "apple")
+    assert TokenSequence(quoted).get_index(apple) == -1
+    for t in tokenize("zzz qqq"):
+        for toks in (tokens, quoted, stemmed, filtered):
+            assert TokenSequence(toks).get_index(t) == -1
