@@ -22,6 +22,7 @@ import re
 from itertools import islice
 from typing import Callable, Dict, Iterator, List, Optional, Sequence, Tuple
 
+from .matchers import _evict_half
 from .matches import DateMatch, DateOffsetMatch, Match, NumberMatch
 from .recognizer import Recognizer
 from .table import (
@@ -244,9 +245,10 @@ def build_prescreen(
     A chunk can only produce matches if some word token is a substring of a
     dictionary phrase (captions/values/boost/month names/offset phrases) or
     is a digit run (numbers & dates). We concatenate every matchable
-    phrase (lowercase, NUL-separated) so the per-token screen is a single
-    C-speed ``token in superstring`` check. Conservative: never skips a
-    chunk that could match.
+    phrase (lowercase, NUL-separated) so the per-token screen is one
+    ``token in superstring`` check. A miss scans the whole dictionary
+    text, so :func:`_chunk_can_match` memoizes the verdict per token.
+    Conservative: never skips a chunk that could match.
     """
     from .matchers import _MONTH_ABBREVS, _MONTH_NAMES
 
@@ -273,12 +275,34 @@ def build_prescreen(
     return "\x00" + "\x00".join(p.lower() for p in parts) + "\x00"
 
 
+# Prescreen verdicts per worker process: prescreen -> lowered word ->
+# ``word in prescreen``. A miss scans the whole dictionary text (93 KB
+# for perfbench's 5,000 titles), so each distinct word pays it once.
+# Bounded like the chunk memo: half-eviction at PRESCREEN_MEMO_MAX
+# words, and at most four prescreens.
+PRESCREEN_MEMO_MAX = 100_000
+
+_PRESCREEN_MEMO: Dict[str, Dict[str, bool]] = {}
+
+
 def _chunk_can_match(tokens, prescreen: str) -> bool:
+    memo = _PRESCREEN_MEMO.get(prescreen)
+    if memo is None:
+        if len(_PRESCREEN_MEMO) >= 4:
+            _PRESCREEN_MEMO.clear()
+        memo = _PRESCREEN_MEMO[prescreen] = {}
     for t in tokens:
         if t.type == NUMBER:
             return True
-        if t.type == WORD and t.value_lower in prescreen:
-            return True
+        if t.type == WORD:
+            word = t.value_lower
+            hit = memo.get(word)
+            if hit is None:
+                if len(memo) >= PRESCREEN_MEMO_MAX:
+                    _evict_half(memo)
+                hit = memo[word] = word in prescreen
+            if hit:
+                return True
     return False
 
 

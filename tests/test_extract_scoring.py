@@ -380,6 +380,22 @@ def test_prescreen_verdict_on_benchmark_chunks():
     assert verdicts == {True, False}
 
 
+def test_prescreen_memo_and_registry_bounded(monkeypatch):
+    import nlquery_spark.kernel.extract as ke
+
+    monkeypatch.setattr(ke, "PRESCREEN_MEMO_MAX", 4)
+    ke._PRESCREEN_MEMO.clear()
+    screen = build_prescreen([orders_schema_spec()])
+    words = "alpha beta gamma delta epsilon zeta eta theta iota price".split()
+    for w in words:
+        tokens = tokenize(w)
+        assert ke._chunk_can_match(tokens, screen) == _unmemoized_can_match(tokens, screen)
+        assert len(ke._PRESCREEN_MEMO[screen]) <= 4
+    for i in range(10):
+        ke._chunk_can_match(tokenize("alpha"), f"\x00salt{i}\x00")
+    assert len(ke._PRESCREEN_MEMO) <= 4
+
+
 def test_mentions_memo_bit_identical():
     from nlquery_spark.kernel.extract import extract_text_mentions
 
