@@ -1136,8 +1136,8 @@ class MergePhraseMatcher:
 
     ``merge_key(m)`` must be equal for any two matches that ``merge`` can
     join: ``merge`` returns None for every pair whose keys differ. Each
-    call indexes the bag's ``match_type`` matches by start token, then by
-    key, in bag order (the build side of a hash join); a merge attempt
+    call indexes the bag's ``match_type`` matches by start token (its
+    ``start_index``, as the bag's own indexes), then by key, in bag order (the build side of a hash join); a merge attempt
     probes only the next token's group for ``merge_key(m)``. The first
     match in that group that merges is the one the reference's scan of
     all the next token's matches finds, because every match outside the
@@ -1166,15 +1166,17 @@ class MergePhraseMatcher:
         merge = self.merge
         merge_key = self.merge_key
         similar = [m for m in match_bag.matches if isinstance(m, match_type)]
-        # start token -> merge key -> matches, bag order kept
+        # start token's start_index -> merge key -> matches, bag order kept
         by_start: dict = {}
         for m in similar:
-            by_start.setdefault(m.start, {}).setdefault(merge_key(m), []).append(m)
+            by_start.setdefault(m.start.start_index, {}).setdefault(
+                merge_key(m), []
+            ).append(m)
         similar.sort(key=lambda m: statement.get_index(m.start))
         merged_ids = set()
-        # end token -> by_start's groups at the next word/number token
-        # that starts a match ({} if none): the bag is fixed during a
-        # call, and most matches share their end token with others
+        # end token's start_index -> by_start's groups at the next
+        # word/number token that starts a match ({} if none): the bag is
+        # fixed during a call, and most matches share their end token
         next_groups: dict = {}
 
         for match in similar:
@@ -1187,15 +1189,16 @@ class MergePhraseMatcher:
             m = match
             merged_match = None
             while m is not None:
-                groups = next_groups.get(m.end)
+                end = m.end.start_index
+                groups = next_groups.get(end)
                 if groups is None:
                     groups = {}
                     for i in range(statement.get_index(m.end) + 1, len(tokens)):
                         t = tokens[i]
                         if (t.type == WORD or t.type == NUMBER) and match_bag.find_by_start(t):
-                            groups = by_start.get(t, {})
+                            groups = by_start.get(t.start_index, {})
                             break
-                    next_groups[m.end] = groups
+                    next_groups[end] = groups
                 for next_match in groups.get(merge_key(m), ()):
                     merged = merge(statement, m, next_match)
                     if merged is not None:

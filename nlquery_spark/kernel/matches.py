@@ -181,15 +181,21 @@ class KeyMatch(Match):
 
 class MatchBag:
     """Recognition state: match list + start/end token indexes
-    (MatchBag.cs:22-91)."""
+    (MatchBag.cs:22-91).
+
+    The indexes key by the token's ``start_index``: two tokens of one
+    sequence that share it are equal tokens (``tokenize``,
+    ``parse_quoted_constants``, the stemmer and stop-word filters keep
+    it so; ``tests/test_properties.py`` checks), so the int key groups
+    exactly as the reference's token key does."""
 
     __slots__ = ("statement", "matches", "_start_to_matches", "_end_to_matches")
 
     def __init__(self, statement: TokenSequence, matches=None):
         self.statement = statement
         self.matches: List[Match] = []
-        self._start_to_matches: Dict[Token, List[Match]] = {}
-        self._end_to_matches: Dict[Token, List[Match]] = {}
+        self._start_to_matches: Dict[int, List[Match]] = {}
+        self._end_to_matches: Dict[int, List[Match]] = {}
         if matches is not None:
             for m in matches:
                 self.add(m)
@@ -200,14 +206,14 @@ class MatchBag:
 
     def add(self, m: Match) -> None:
         self.matches.append(m)
-        self._start_to_matches.setdefault(m.start, []).append(m)
-        self._end_to_matches.setdefault(m.end, []).append(m)
+        self._start_to_matches.setdefault(m.start.start_index, []).append(m)
+        self._end_to_matches.setdefault(m.end.start_index, []).append(m)
 
     def find_by_start(self, t: Token) -> List[Match]:
-        return self._start_to_matches.get(t, [])
+        return self._start_to_matches.get(t.start_index, [])
 
     def find_by_end(self, t: Token) -> List[Match]:
-        return self._end_to_matches.get(t, [])
+        return self._end_to_matches.get(t.start_index, [])
 
     def find(self, match_type) -> List[Match]:
         return [m for m in self.matches if isinstance(m, match_type)]

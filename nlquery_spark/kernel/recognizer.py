@@ -47,10 +47,11 @@ class Recognizer:
 
     def _compose_start_token_to_matches(
         self, all_matches: Iterable[Match]
-    ) -> Dict[Token, List[Match]]:
-        by_start: Dict[Token, List[Match]] = {}
+    ) -> Dict[int, List[Match]]:
+        # keyed by the start token's start_index, as MatchBag's indexes
+        by_start: Dict[int, List[Match]] = {}
         for m in all_matches:
-            by_start.setdefault(m.start, []).append(m)
+            by_start.setdefault(m.start.start_index, []).append(m)
         for matches in by_start.values():
             # longer char-span first, then higher score (Recognizer.cs:55-62);
             # stable sort matches the reference's effective small-array order
@@ -161,7 +162,7 @@ class MatchCombinationBuilder:
 
     def __init__(
         self,
-        start_to_matches: Dict[Token, List[Match]],
+        start_to_matches: Dict[int, List[Match]],
         sentence: TokenSequence,
         combination_handler: Optional[Callable[[List[Match]], bool]],
     ):
@@ -176,19 +177,20 @@ class MatchCombinationBuilder:
 
         Precomputes what the reference walk re-derives at every node:
         (1) ``pos_matches[i]``: the matches starting at position ``i``
-        (tokens are unique by start_index within a sequence, so this is
-        the token-equality lookup), each with its resume index
-        (get_index(end)+1 — including the -1+1=0 case for an end token
-        outside the sequence, same as the lazy form); a key token equal
-        to no sequence token was unreachable in the token-keyed walk and
+        (a group's matches share their start token's start_index, so
+        they start at equal tokens and its first match's start gives
+        the position), each with its resume index (get_index(end)+1 —
+        including the -1+1=0 case for an end token outside the
+        sequence, same as the lazy form); a start token equal to no
+        sequence token was unreachable in the token-keyed walk and
         stays excluded here; (2) ``next_pos[i]``: the next position >= i
         that carries matches (``n`` if none), collapsing the per-node
         linear scan to one array read."""
         sentence = self.sentence
         n = len(sentence.tokens)
         pos_matches: List[Optional[List[Tuple[Match, int]]]] = [None] * n
-        for t, matches in self.start_to_matches.items():
-            i = sentence.get_index(t)
+        for matches in self.start_to_matches.values():
+            i = sentence.get_index(matches[0].start)
             if i >= 0:
                 pos_matches[i] = [
                     (m, sentence.get_index(m.end) + 1) for m in matches

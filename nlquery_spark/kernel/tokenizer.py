@@ -87,28 +87,28 @@ def tokenize(s: str) -> List[Token]:
             # digits extend a Word in progress (allowed types = [Word])
             if token_type != NUMBER and token_type != WORD:
                 if buf:
-                    tokens.append(Token(token_type, start_idx, "".join(buf)))
+                    tokens.append(Token(token_type, start_idx, "".join(buf), len(tokens)))
                     start_idx = pos
                     buf.clear()
                 token_type = NUMBER
         elif new_type in _FORCE_TYPES:
             if buf:
-                tokens.append(Token(token_type, start_idx, "".join(buf)))
+                tokens.append(Token(token_type, start_idx, "".join(buf), len(tokens)))
                 start_idx = pos
                 buf.clear()
             token_type = new_type
         else:
             if token_type != new_type:
                 if buf:
-                    tokens.append(Token(token_type, start_idx, "".join(buf)))
+                    tokens.append(Token(token_type, start_idx, "".join(buf), len(tokens)))
                     start_idx = pos
                     buf.clear()
                 token_type = new_type
         buf.append(ch)
     if buf:
-        tokens.append(Token(token_type, start_idx, "".join(buf)))
+        tokens.append(Token(token_type, start_idx, "".join(buf), len(tokens)))
         start_idx = n
-    tokens.append(Token(SENTENCE_END, start_idx, ""))
+    tokens.append(Token(SENTENCE_END, start_idx, "", len(tokens)))
     return tokens
 
 

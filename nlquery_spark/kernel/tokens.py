@@ -9,7 +9,7 @@ module must stay broadcast/pickle friendly and dependency-free).
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, List, Optional
+from typing import Callable, List, Optional
 
 # Token type codes (reference: Token.cs:77-86). Kept as ints (tinyint on
 # the Spark side) for cheap Arrow transport.
@@ -38,15 +38,18 @@ class Token:
     """Immutable token (reference: Token.cs:22-72).
 
     Equality/hash use (value, start_index) only — type excluded — to match
-    the reference (Token.cs:56-66); MatchBag indexes rely on this.
+    the reference (Token.cs:56-66). ``pos`` is the token's position in
+    ``tokenize``'s output (-1 for a token made elsewhere), which
+    ``TokenSequence.get_index`` tries before its dict.
     """
 
-    __slots__ = ("value", "type", "start_index", "_lower", "_hash")
+    __slots__ = ("value", "type", "start_index", "pos", "_lower", "_hash")
 
-    def __init__(self, token_type: int, start_index: int, value: str):
+    def __init__(self, token_type: int, start_index: int, value: str, pos: int = -1):
         self.value = value
         self.type = token_type
         self.start_index = start_index
+        self.pos = pos
         self._lower: Optional[str] = None
         self._hash = hash((value, start_index))
 
@@ -105,6 +108,13 @@ class TokenSequence:
         return self.tokens[-1] if self.tokens else None
 
     def get_index(self, t: Token) -> int:
+        # the tokenizer's position is this sequence's when the token sits
+        # there; filtered, quoted and stemmed sequences fall through to
+        # the dict, which finds the last token equal to ``t``
+        pos = t.pos
+        tokens = self.tokens
+        if 0 <= pos < len(tokens) and tokens[pos] is t:
+            return pos
         idx_map = self._token_to_index
         if idx_map is None:
             idx_map = {tok: i for i, tok in enumerate(self.tokens)}
@@ -127,16 +137,16 @@ class TokenSequence:
                     return self.tokens[j]
         return None
 
-    def between(self, t1: Token, t2: Token, inclusive: bool = True) -> Iterable[Token]:
+    def between(self, t1: Token, t2: Token, inclusive: bool = True) -> List[Token]:
+        """The tokens from ``t1`` to ``t2``, both included unless
+        ``inclusive`` is false; empty if either is not in the sequence."""
         start = self.get_index(t1)
         end = self.get_index(t2)
         if start < 0 or end < 0:
-            return
+            return []
         if not inclusive:
-            start += 1
-            end -= 1
-        for i in range(start, end + 1):
-            yield self.tokens[i]
+            return self.tokens[start + 1 : end]
+        return self.tokens[start : end + 1]
 
     def distance(self, t1: Token, t2: Token) -> int:
         start = self.get_index(t1)
