@@ -168,9 +168,10 @@ class TokenFilterMatcher:
         return self.matcher.recursive
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
+        # wrapped matchers only read the bag, so they can share it
         filtered = [t for t in match_bag.statement.tokens if self.predicate(t)]
         return self.matcher.get_matches(
-            MatchBag(TokenSequence(filtered), match_bag.matches)
+            match_bag.with_statement(TokenSequence(filtered))
         )
 
 
@@ -712,13 +713,14 @@ class _DateState:
 
 class ComparisonMatcher:
     """Merges '<entity> <op> <value>' and '<op> <value> <entity>'
-    (ComparisonMatcher.cs:20-218)."""
+    (ComparisonMatcher.cs:20-218). The entity is a match of class
+    ``left_type``."""
 
     first_pass_only = False
     recursive = False
 
-    def __init__(self, left_part_predicate, get_comparison_match):
-        self.left_part_predicate = left_part_predicate
+    def __init__(self, left_type, get_comparison_match):
+        self.left_type = left_type
         self.get_comparison_match = get_comparison_match
         # list of (words_tuple, cmp_type) in priority order
         self.phrase_comparison_types: Optional[
@@ -832,9 +834,7 @@ class ComparisonMatcher:
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         tokens = match_bag.statement.tokens
         active = self._active_phrases(match_bag.statement)
-        for left in list(match_bag.matches):
-            if not self.left_part_predicate(left):
-                continue
+        for left in list(match_bag.of_type(self.left_type)):
             end_idx = match_bag.statement.get_index(left.end)
             cmp = 0
             cmp_tokens = 0
@@ -1060,9 +1060,7 @@ class HintMatcher:
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         tokens = match_bag.statement.tokens
-        for hint_m in list(match_bag.matches):
-            if not isinstance(hint_m, self.hint_type):
-                continue
+        for hint_m in list(match_bag.of_type(self.hint_type)):
             end_idx = match_bag.statement.get_index(hint_m.end)
             hint_force = False
             direct_order_matched = False
@@ -1132,7 +1130,8 @@ class HintMatcher:
 
 class MergePhraseMatcher:
     """Merges adjacent same-type matches into one
-    (MergePhraseMatcher.cs:22-85). ``match_type`` plays the C# generic T.
+    (MergePhraseMatcher.cs:22-85). ``match_type`` plays the C# generic T;
+    the call walks only the bag's matches of that class.
 
     ``merge_key(m)`` must be equal for any two matches that ``merge`` can
     join: ``merge`` returns None for every pair whose keys differ. Each
@@ -1158,14 +1157,14 @@ class MergePhraseMatcher:
         self.merge_key = merge_key  # m -> hashable
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
-        if match_bag.count == 0:
+        match_type = self.match_type
+        similar = list(match_bag.of_type(match_type))
+        if not similar:
             return
         statement = match_bag.statement
         tokens = statement.tokens
-        match_type = self.match_type
         merge = self.merge
         merge_key = self.merge_key
-        similar = [m for m in match_bag.matches if isinstance(m, match_type)]
         # start token's start_index -> merge key -> matches, bag order kept
         by_start: dict = {}
         for m in similar:

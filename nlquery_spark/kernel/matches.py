@@ -187,18 +187,34 @@ class MatchBag:
     sequence that share it are equal tokens (``tokenize``,
     ``parse_quoted_constants``, the stemmer and stop-word filters keep
     it so; ``tests/test_properties.py`` checks), so the int key groups
-    exactly as the reference's token key does."""
+    exactly as the reference's token key does. A third index lists the
+    matches of each exact class in bag order; every match class
+    subclasses ``Match`` directly, so it holds what ``isinstance``
+    would select."""
 
-    __slots__ = ("statement", "matches", "_start_to_matches", "_end_to_matches")
+    __slots__ = (
+        "statement", "matches", "_start_to_matches", "_end_to_matches", "_by_type"
+    )
 
     def __init__(self, statement: TokenSequence, matches=None):
         self.statement = statement
         self.matches: List[Match] = []
         self._start_to_matches: Dict[int, List[Match]] = {}
         self._end_to_matches: Dict[int, List[Match]] = {}
+        self._by_type: Dict[type, List[Match]] = {}
         if matches is not None:
             for m in matches:
                 self.add(m)
+
+    def with_statement(self, statement: TokenSequence) -> "MatchBag":
+        """A view of this bag over another statement: the same match
+        list and indexes, shared, not copied."""
+        view = MatchBag(statement)
+        view.matches = self.matches
+        view._start_to_matches = self._start_to_matches
+        view._end_to_matches = self._end_to_matches
+        view._by_type = self._by_type
+        return view
 
     @property
     def count(self) -> int:
@@ -208,6 +224,7 @@ class MatchBag:
         self.matches.append(m)
         self._start_to_matches.setdefault(m.start.start_index, []).append(m)
         self._end_to_matches.setdefault(m.end.start_index, []).append(m)
+        self._by_type.setdefault(type(m), []).append(m)
 
     def find_by_start(self, t: Token) -> List[Match]:
         return self._start_to_matches.get(t.start_index, [])
@@ -215,5 +232,6 @@ class MatchBag:
     def find_by_end(self, t: Token) -> List[Match]:
         return self._end_to_matches.get(t.start_index, [])
 
-    def find(self, match_type) -> List[Match]:
-        return [m for m in self.matches if isinstance(m, match_type)]
+    def of_type(self, match_class) -> List[Match]:
+        """The bag's matches of exactly ``match_class``, in bag order."""
+        return self._by_type.get(match_class, [])

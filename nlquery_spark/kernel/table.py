@@ -228,8 +228,8 @@ class GroupMatch(Match):
 
     @staticmethod
     def is_already_in_group(match_bag: MatchBag, left: Match, right: Match) -> bool:
-        for m in match_bag.matches:
-            if isinstance(m, GroupMatch) and len(m.group_matches) == 2:
+        for m in match_bag.of_type(GroupMatch):
+            if len(m.group_matches) == 2:
                 if m.group_matches[0] is left and m.group_matches[1] is right:
                     return True
         return False
@@ -546,7 +546,7 @@ class TableMatcherBuilder:
         if self.opts.match_math_operators:
 
             def get_comparison_match(left: Match, cmp: int, right: Match):
-                left_col = left  # ColumnMatch by predicate
+                left_col = left  # a ColumnMatch: the matcher's left type
                 right_m = None
                 score = 0.0
                 if isinstance(right, NumberMatch) and self._ensure_column_data_type(
@@ -585,9 +585,7 @@ class TableMatcherBuilder:
                     return m
                 return None
 
-            cmp_matcher = ComparisonMatcher(
-                lambda m: isinstance(m, ColumnMatch), get_comparison_match
-            )
+            cmp_matcher = ComparisonMatcher(ColumnMatch, get_comparison_match)
             if self.opts.math_operator_phrases is not None:
                 phrases = []
                 for phrase, cmp_type in self.opts.math_operator_phrases:

@@ -256,7 +256,7 @@ def test_comparison_and_group():
             return ComparisonMatch(left, cmp, right)
         return None
 
-    comparison_matcher = ComparisonMatcher(lambda m: isinstance(m, KeyMatch), get_cmp)
+    comparison_matcher = ComparisonMatcher(KeyMatch, get_cmp)
     comparison_matcher.phrase_comparison_types = [
         (("greater", "than"), CMP_GREATER_THAN),
         (("greater",), CMP_GREATER_THAN),
@@ -337,6 +337,32 @@ def test_kernel_match_classes_subclass_match_directly():
     }
     assert len(classes) == 9
     assert all(c.__bases__ == (Match,) for c in classes)
+
+
+def test_token_filter_matcher_shares_the_bag():
+    """The wrapped matcher reads the caller's bag, matches and indexes
+    shared, over the filtered statement."""
+    from nlquery_spark.kernel.matchers import TokenFilterMatcher
+
+    seen = []
+
+    class Spy:
+        first_pass_only = False
+        recursive = False
+
+        def get_matches(self, match_bag):
+            seen.append(match_bag)
+            return iter(())
+
+    p = seq("city of Rome")
+    bag = MatchBag(p, ListContainsMatcher(["Rome"], lambda c, kv: KeyMatch(kv[1])).get_matches(MatchBag(p)))
+    list(TokenFilterMatcher(Spy(), lambda t: t.value != "of").get_matches(bag))
+    (view,) = seen
+    assert view.matches is bag.matches
+    assert [t.value for t in view.statement.tokens] == ["city", " ", " ", "Rome", ""]
+    rome = p.tokens[4]
+    assert view.find_by_start(rome) is bag.find_by_start(rome) and len(bag.find_by_start(rome)) == 1
+    assert view.of_type(KeyMatch) is bag.of_type(KeyMatch)
 
 
 def test_exact_phrase_matcher_empty_words_is_noop():
