@@ -1136,8 +1136,9 @@ class MergePhraseMatcher:
     ``merge_key(m)`` must be equal for any two matches that ``merge`` can
     join: ``merge`` returns None for every pair whose keys differ. Each
     call indexes the bag's ``match_type`` matches by start token (its
-    ``start_index``, as the bag's own indexes), then by key, in bag order (the build side of a hash join); a merge attempt
-    probes only the next token's group for ``merge_key(m)``. The first
+    ``start_index``, as the bag's own indexes), then by key, in bag
+    order (the build side of a hash join); a merge attempt probes only
+    the next token's group for ``merge_key(m)``. The first
     match in that group that merges is the one the reference's scan of
     all the next token's matches finds, because every match outside the
     group returns None. The index is rebuilt from the bag on every call,
