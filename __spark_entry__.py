@@ -3049,100 +3049,6 @@ FROM bfs GROUP BY node
 """
 
 
-def _event_funnel(spark, sf_dir):
-    """Product-analytics surface: strict-order funnel view -> click ->
-    purchase over the event stream (first qualifying occurrence per
-    user at each stage), with step-over-step conversion. User-keyed
-    join chain with a shrinking reach set — AQE broadcasts it as soon
-    as it fits (operators/events.py::funnel_stages)."""
-    from nlquery_spark.operators.events import funnel_stages
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    return funnel_stages(ev, ["view", "click", "purchase"])
-
-
-_FUNNEL_SQL = """
-WITH v AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type='view' GROUP BY user_id
-), c AS (
-  SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type='click' AND e.ts > v.t1 GROUP BY e.user_id
-), p AS (
-  SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type='purchase' AND e.ts > c.t2 GROUP BY e.user_id
-), n AS (
-  SELECT (SELECT COUNT(*) FROM v) AS n1,
-         (SELECT COUNT(*) FROM c) AS n2,
-         (SELECT COUNT(*) FROM p) AS n3
-)
-SELECT 1 AS stage, 'view' AS event_type, CAST(n1 AS BIGINT) AS users, 1.0 AS conversion FROM n
-UNION ALL
-SELECT 2, 'click', CAST(n2 AS BIGINT), ROUND(CAST(n2 AS DOUBLE)/n1, 6) FROM n
-UNION ALL
-SELECT 3, 'purchase', CAST(n3 AS BIGINT), ROUND(CAST(n3 AS DOUBLE)/n2, 6) FROM n
-"""
-
-
-def _event_type_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event
-    sequences — (src, dst, n, prob) with (ts, event_id) total order so
-    lead() is deterministic. One user-keyed exchange; row totals come
-    from a window over the tiny matrix itself
-    (operators/events.py::type_transitions)."""
-    from nlquery_spark.operators.events import type_transitions
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    return type_transitions(ev)
-
-
-_TRANSITIONS_SQL = """
-WITH s AS (
-  SELECT event_type AS src,
-         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), b AS (
-  SELECT src, dst, COUNT(*) AS n FROM s WHERE dst IS NOT NULL GROUP BY 1, 2
-)
-SELECT src, dst, CAST(n AS BIGINT) AS n,
-  ROUND(CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY src), 6) AS prob
-FROM b
-"""
-
-
-def _events_daily_anomaly(spark, sf_dir):
-    """Monitoring surface: per-(event_type, day) volumes z-scored
-    against the type's own daily history — the basic pipeline-health
-    anomaly detector (|z| >= 3 = investigate). Day cast to string for
-    the cross-engine hash (repo date convention); NULL z for
-    single-day/constant types, never NaN/Inf
-    (operators/events.py::daily_volume_zscore)."""
-    from nlquery_spark.operators.events import daily_volume_zscore
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    return daily_volume_zscore(ev).select(
-        "event_type",
-        F.col("day").cast("string").alias("day"),
-        "n",
-        "zscore",
-    )
-
-
-_DAILY_ANOMALY_SQL = """
-WITH c AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, strftime(d, '%Y-%m-%d') AS day, CAST(n AS BIGINT) AS n,
-  CASE WHEN stddev_samp(CAST(n AS DOUBLE)) OVER (PARTITION BY event_type) IS NULL
-         OR stddev_samp(CAST(n AS DOUBLE)) OVER (PARTITION BY event_type) = 0
-       THEN NULL
-       ELSE ROUND((n - AVG(CAST(n AS DOUBLE)) OVER (PARTITION BY event_type))
-            / stddev_samp(CAST(n AS DOUBLE)) OVER (PARTITION BY event_type), 6)
-  END AS zscore
-FROM c
-"""
-
-
 def _doc_tfidf_keywords(spark, sf_dir):
     """Keyword extraction: top-3 characteristic terms per document by
     tf-idf — the per-document counterpart of index_bm25_topk's
@@ -3280,43 +3186,6 @@ SELECT strftime(make_timestamp(s * 1000000), '%Y-%m-%d %H:%M:%S') AS win_start,
        event_type, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(10,2))) AS DOUBLE) AS total_value
 FROM e GROUP BY 1, 2, 3
-"""
-
-
-def _event_retention_cohorts(spark, sf_dir):
-    """Cohort analytics surface: weekly retention matrix (cohort = week
-    of a user's first event), the standard growth-accounting view over
-    the event stream. Weeks cast to string for the cross-engine hash
-    (repo date convention) — date_trunc week = ISO Monday in both
-    engines (operators/events.py::retention_cohorts)."""
-    from nlquery_spark.operators.events import retention_cohorts
-
-    ev = _load(spark, sf_dir, "events")["events"]
-    out = retention_cohorts(ev)
-    return out.select(
-        F.col("cohort_week").cast("string").alias("cohort_week"),
-        F.col("activity_week").cast("string").alias("activity_week"),
-        "users",
-        "retention",
-    )
-
-
-_RETENTION_SQL = """
-WITH fw AS (
-  SELECT user_id, MIN(date_trunc('week', ts)) AS cw FROM events GROUP BY user_id
-), act AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS aw FROM events
-), j AS (
-  SELECT cw, aw, COUNT(DISTINCT a.user_id) AS users
-  FROM act a JOIN fw ON a.user_id = fw.user_id GROUP BY cw, aw
-)
-SELECT strftime(CAST(cw AS DATE), '%Y-%m-%d') AS cohort_week,
-       strftime(CAST(aw AS DATE), '%Y-%m-%d') AS activity_week,
-       CAST(users AS BIGINT) AS users,
-       ROUND(CAST(users AS DOUBLE)
-             / MAX(CASE WHEN aw = cw THEN users END) OVER (PARTITION BY cw),
-             6) AS retention
-FROM j
 """
 
 
@@ -4269,10 +4138,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "index_phrase_postings": _index_phrase_postings,
         "token_cooccurrence_lift": _token_cooccurrence,
         "part_khop_neighbors": _part_khop_neighbors,
-        "event_funnel": _event_funnel,
-        "event_type_transitions": _event_type_transitions,
-        "events_daily_anomaly": _events_daily_anomaly,
-        "event_retention_cohorts": _event_retention_cohorts,
         "part_link_prediction": _part_link_prediction,
         "events_sliding_windows": _events_sliding_windows,
         # rows-only lossy ops (pytest recall/invariant gates are the
@@ -4336,11 +4201,7 @@ def oracle_sql() -> dict[str, str]:
         "customer_rfm_segments": _RFM_SQL,
         "index_bm25_topk": _BM25_SQL,
         "part_khop_neighbors": _KHOP_SQL,
-        "event_retention_cohorts": _RETENTION_SQL,
         "part_link_prediction": _LINKPRED_SQL,
-        "event_funnel": _FUNNEL_SQL,
-        "event_type_transitions": _TRANSITIONS_SQL,
-        "events_daily_anomaly": _DAILY_ANOMALY_SQL,
         "part_coorder_triangles": _TRIANGLES_SQL,
         "corpus_decontaminate": _decontaminate_sql(),
         "streaming_events_by_minute": _STREAM_MINUTES_SQL,

@@ -45,7 +45,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Oracle parity emits naive UTC-aligned timestamp strings
-        # (sliding windows, daily anomalies, retention cohorts);
+        # (sliding and tumbling windows, ship-lag months);
         # date_format/to_date render in the session timezone, so pin it
         # rather than depend on a UTC host.
         .config("spark.sql.session.timeZone", "UTC")

@@ -371,10 +371,8 @@ _STABLE_TAIL = {
     "nl_filter_stemmed", "nl_filter_culture", "nl_filter_inferred",
     "paragraph_boilerplate", "streaming_extract",
     "index_phrase_search", "index_phrase_postings",
-    "token_cooccurrence_lift", "part_khop_neighbors", "event_funnel",
-    "event_type_transitions", "events_daily_anomaly",
-    "event_retention_cohorts", "part_link_prediction",
-    "events_sliding_windows",
+    "token_cooccurrence_lift", "part_khop_neighbors",
+    "part_link_prediction", "events_sliding_windows",
     # rows-only lossy ops: a rows-only driver row proves less than
     # their pytest recall/invariant gates already do (last driver
     # row r4, rows-only there too; code unchanged since)
@@ -584,9 +582,7 @@ def events_fuzz_sf(spark, tmp_path_factory):
 
 _EVENTS_FUZZ_QUERIES = [
     "events_sessionize", "events_by_minute", "daily_active_users",
-    "event_funnel", "event_type_transitions", "events_daily_anomaly",
-    "event_retention_cohorts", "events_sliding_windows",
-    "event_props_json", "customer_running_spend",
+    "events_sliding_windows", "event_props_json", "customer_running_spend",
 ]
 
 
