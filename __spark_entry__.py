@@ -3582,358 +3582,6 @@ FROM canon GROUP BY host
 """
 
 
-def _page_html(spark, sf_dir):
-    """Deterministic HTML page fixture: each document wrapped in a
-    minimal page whose body carries 1-3 ``<a href>`` anchors pointing
-    at OTHER ids' messy URLs (targets ``(doc_id*31 + 17k + 7) % 611``
-    — dangling targets included, as in a real crawl frontier). Source
-    and target URLs share one generator (_messy_url_col), so the link
-    graph exercises host extraction on both ends. Anchor TEXT is a
-    word drawn from the linking page's own text (word ``(doc_id+7k) %
-    20``, falling back to ``l{k}`` for short docs) — which is what
-    makes anchor-text aggregation a real surface-form signal; the
-    words array is staged as a column in a first projection so the
-    three anchor expressions reference it instead of re-tokenizing."""
-    docs = _load(spark, sf_dir, "documents")["documents"]
-    d = F.col("doc_id")
-    words = F.filter(
-        F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+"),
-        lambda w: w != "",
-    )
-    base = docs.select("doc_id", "text", words.alias("_w"))
-    anchors = []
-    for k in range(3):
-        # try_element_at, NOT element_at: ANSI mode (Spark 4 default)
-        # makes element_at THROW on out-of-range for short docs, while
-        # DuckDB's w[i] yields NULL — try_ matches the oracle
-        txt = F.coalesce(
-            F.try_element_at(F.col("_w"), ((d + 7 * k) % 20 + 1).cast("int")),
-            F.lit(f"l{k}"),
-        )
-        a = F.concat(
-            F.lit('<a href="'),
-            _messy_url_col((d * 31 + 17 * k + 7) % 611),
-            F.lit('">'),
-            txt,
-            F.lit("</a>"),
-        )
-        anchors.append(a if k == 0 else F.when(d % 3 >= k, a).otherwise(F.lit("")))
-    html = F.concat(
-        F.lit("<html><body><p>"),
-        F.col("text"),
-        F.lit("</p>"),
-        *anchors,
-        F.lit("</body></html>"),
-    )
-    return base.select(
-        "doc_id", _messy_url_col(d).alias("url"), html.alias("html")
-    )
-
-
-def _web_link_graph(spark, sf_dir):
-    """Host-to-host hyperlink graph from raw page HTML (operators/web
-    .py::host_link_graph): regexp-extract every ``<a href>`` target,
-    key both ends by lowercased default-port-elided host, count links
-    per directed pair. Narrow JVM projection riding the page scan +
-    ONE hash aggregation; the oracle replays extraction and host
-    mapping under RE2."""
-    from nlquery_spark.operators.web import host_link_graph
-
-    return host_link_graph(_page_html(spark, sf_dir))
-
-
-def _web_host_pagerank(spark, sf_dir):
-    """Site-level PageRank over the hyperlink host graph — the crawl
-    prioritization / spam-score substrate. Self-links dropped, edges
-    distinct'd, FIXED 20 power-iteration rounds (tol=0) so the
-    recursive-CTE oracle replays bit-comparably at 5 decimals (the
-    kg_pagerank recipe on the web link graph)."""
-    from nlquery_spark.operators.canonicalize import pagerank
-    from nlquery_spark.operators.web import host_link_graph
-
-    g = host_link_graph(_page_html(spark, sf_dir))
-    edges = (
-        g.filter(F.col("src_host") != F.col("dst_host"))
-        .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-        .distinct()
-    )
-    ranks = pagerank(edges, tol=0.0, max_iter=20)
-    return ranks.select(
-        F.col("node").alias("host"), F.round("rank", 5).alias("rank")
-    )
-
-
-def _url_host_sql(e: str) -> str:
-    """DuckDB twin of functions/web.py::url_host over a URL expression."""
-    sch = rf"lower(regexp_extract({e}, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1))"
-    auth = rf"lower(regexp_extract({e}, '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1))"
-    return (
-        f"(CASE WHEN {sch} = 'http' THEN regexp_replace({auth}, ':80$', '') "
-        f"WHEN {sch} = 'https' THEN regexp_replace({auth}, ':443$', '') "
-        f"ELSE {auth} END)"
-    )
-
-
-def _pages_html_cte(recursive: bool = False) -> str:
-    """pages -> links -> hostpairs CTE chain mirroring _page_html +
-    host extraction. ``recursive`` emits WITH RECURSIVE so the
-    pagerank oracle can append its recursive CTE (helper CTEs keep
-    their top level UNION-free per the DuckDB working-table trap)."""
-    anchors = []
-    for k in range(3):
-        t = f"(doc_id*31 + {17 * k} + 7) % 611"
-        txt = f"COALESCE(w[(doc_id + {7 * k}) % 20 + 1], 'l{k}')"
-        piece = (
-            f"'<a href=\"' || {_messy_url_sql(t)} || '\">' || {txt} || '</a>'"
-        )
-        if k > 0:
-            piece = f"(CASE WHEN doc_id % 3 >= {k} THEN {piece} ELSE '' END)"
-        anchors.append(piece)
-    anchor_sql = "\n    || ".join(anchors)
-    kw = "WITH RECURSIVE" if recursive else "WITH"
-    return rf"""
-{kw} pw AS (
-  SELECT doc_id, text,
-    list_filter(string_split_regex(trim(text, ' '), '[ \t\n\x0B\f\r]+'),
-                x -> x <> '') AS w
-  FROM documents
-), pages AS (
-  SELECT doc_id, {_messy_url_sql('doc_id')} AS url,
-    '<html><body><p>' || text || '</p>' || {anchor_sql}
-    || '</body></html>' AS html
-  FROM pw
-), links AS (
-  SELECT url AS src_url,
-         unnest(regexp_extract_all(html, '<a href="([^"]*)"', 1)) AS link
-  FROM pages
-), hostpairs AS (
-  SELECT {_url_host_sql('src_url')} AS src_host,
-         {_url_host_sql('link')} AS dst_host
-  FROM links
-  WHERE lower(regexp_extract(link, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1))
-        IN ('http', 'https')
-)"""
-
-
-_LINK_GRAPH_SQL = _pages_html_cte() + """
-SELECT src_host, dst_host, COUNT(*) AS n_links
-FROM hostpairs GROUP BY src_host, dst_host
-"""
-
-_HOST_PAGERANK_SQL = _pages_html_cte(recursive=True) + """
-, e AS (
-  SELECT DISTINCT src_host AS src, dst_host AS dst
-  FROM hostpairs WHERE src_host <> dst_host
-), nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT src AS node FROM e UNION ALL SELECT dst FROM e) u
-), nn AS (SELECT COUNT(*) AS n FROM nodes),
-deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
-we AS (
-  SELECT * FROM (
-    SELECT e.src, e.dst, CAST(1.0 AS DOUBLE) / deg.d AS w
-    FROM e JOIN deg ON e.src = deg.src
-    UNION ALL
-    SELECT dang.node, nodes.node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn)
-    FROM (SELECT node FROM nodes WHERE node NOT IN (SELECT src FROM deg)) dang
-    CROSS JOIN nodes
-    UNION ALL
-    SELECT node, node, CAST(0.0 AS DOUBLE) FROM nodes
-  ) u
-), pr AS (
-  SELECT 0 AS iter, node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS rank
-  FROM nodes
-  UNION ALL
-  SELECT p.iter + 1, we.dst AS node,
-    0.15 / (SELECT n FROM nn) + 0.85 * SUM(p.rank * we.w) AS rank
-  FROM pr p JOIN we ON p.node = we.src
-  WHERE p.iter < 20
-  GROUP BY p.iter + 1, we.dst
-)
-SELECT node AS host, ROUND(rank, 5) AS rank FROM pr WHERE iter = 20
-"""
-
-
-def _web_crawl_diff(spark, sf_dir):
-    """Incremental-crawl bookkeeping (operators/web.py::crawl_diff):
-    two snapshot crawls of the same corpus — old drops doc_id%10==3,
-    new drops doc_id%8==5 and rewrites content for doc_id%6==2 —
-    diffed by canonical URL into added/removed/changed/unchanged.
-    doc_id < 1200 AND doc_id%17 != 0 keeps canonical URLs unique at
-    every sf: the (host, article) pair repeats at lcm(13,97)=1261, and
-    the %17==0 empty-path docs must be excluded because they all
-    collapse to path '/' and collide across article numbers
-    (simulation-verified: 31 colliding pairs under the bare <1200
-    filter, 0 with the exclusion — crawl_diff requires key-unique
-    snapshots). ONE
-    corpus scan: both digests computed in a narrow localCheckpointed
-    base (urls + digests, never the text) that both snapshot filters
-    read."""
-    from nlquery_spark.functions.web import normalize_url
-    from nlquery_spark.operators.web import crawl_diff
-
-    d = F.col("doc_id")
-    docs = _load(spark, sf_dir, "documents")["documents"].filter(
-        (d < 1200) & (d % 17 != 0)
-    )
-    base = docs.select(
-        "doc_id",
-        normalize_url(_messy_url_col(d)).alias("canonical_url"),
-        F.md5("text").alias("dig_old"),
-        F.md5(
-            F.concat(
-                F.col("text"),
-                F.when(d % 6 == 2, F.lit(" v2")).otherwise(F.lit("")),
-            )
-        ).alias("dig_new"),
-    ).localCheckpoint(eager=True)
-    old = base.filter(F.col("doc_id") % 10 != 3).select(
-        "canonical_url", F.col("dig_old").alias("digest")
-    )
-    new = base.filter(F.col("doc_id") % 8 != 5).select(
-        "canonical_url", F.col("dig_new").alias("digest")
-    )
-    return crawl_diff(old, new)
-
-
-_CRAWL_DIFF_SQL = _messy_urls_cte(
-    "WHERE doc_id < 1200 AND doc_id % 17 <> 0"
-) + """
-, digests AS (
-  SELECT c.doc_id, c.canonical_url, md5(d.text) AS dig_old,
-         md5(d.text || CASE WHEN c.doc_id % 6 = 2 THEN ' v2' ELSE '' END)
-           AS dig_new
-  FROM canon c JOIN documents d ON d.doc_id = c.doc_id
-), o AS (
-  SELECT canonical_url, dig_old AS digest FROM digests WHERE doc_id % 10 <> 3
-), n AS (
-  SELECT canonical_url, dig_new AS digest FROM digests WHERE doc_id % 8 <> 5
-)
-SELECT COALESCE(o.canonical_url, n.canonical_url) AS canonical_url,
-  CASE WHEN o.digest IS NULL THEN 'added'
-       WHEN n.digest IS NULL THEN 'removed'
-       WHEN o.digest <> n.digest THEN 'changed'
-       ELSE 'unchanged' END AS status,
-  COALESCE(o.digest, '') AS old_digest,
-  COALESCE(n.digest, '') AS new_digest
-FROM o FULL OUTER JOIN n ON o.canonical_url = n.canonical_url
-"""
-
-
-def _web_anchor_text(spark, sf_dir):
-    """Anchor-text aggregation per canonical link target (operators/
-    web.py::anchor_text_signals) — the surface-form signal gazetteer
-    builders mine from a crawl: the words OTHER pages use to link to a
-    URL. Top anchor per target by (count desc, text asc), plus total
-    and distinct anchor counts; the oracle replays tag extraction,
-    normalization (shared canonicalization stages), and the top-1 via
-    QUALIFY."""
-    from nlquery_spark.operators.web import anchor_text_signals
-
-    return anchor_text_signals(_page_html(spark, sf_dir))
-
-
-_ANCHOR_TEXT_SQL = (
-    _pages_html_cte()
-    + r"""
-, tags AS (
-  SELECT unnest(regexp_extract_all(html, '<a href="[^"]*">[^<]*</a>', 0))
-    AS tag
-  FROM pages
-), at AS (
-  SELECT url, anchor FROM (
-    SELECT regexp_extract(tag, '<a href="([^"]*)"', 1) AS url,
-           regexp_extract(tag, '>([^<]*)</a>', 1) AS anchor
-    FROM tags
-  ) WHERE lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1))
-          IN ('http', 'https')
-)"""
-    + _url_canon_stages("at", "anchor", suffix="_a")
-    + """
-, counts AS (
-  SELECT canonical_url AS target_url, anchor, COUNT(*) AS cnt
-  FROM canon_a GROUP BY canonical_url, anchor
-)
-SELECT target_url, anchor AS top_anchor,
-  CAST(SUM(cnt) OVER (PARTITION BY target_url) AS BIGINT) AS n_anchors,
-  CAST(COUNT(*) OVER (PARTITION BY target_url) AS BIGINT)
-    AS n_distinct_anchors
-FROM counts
-QUALIFY row_number() OVER (
-  PARTITION BY target_url ORDER BY cnt DESC, anchor ASC) = 1
-"""
-)
-
-
-def _redir_url_col(e):
-    """Already-canonical URL for an integer id column — the redirect
-    fixture skips messy-URL degradation (normalization is exercised by
-    the other web queries); uniqueness per id by embedding the full id
-    in the path."""
-    return F.concat(
-        F.lit("http://www.example"),
-        (e % 13).cast("string"),
-        F.lit(".com/articles/"),
-        e.cast("string"),
-    )
-
-
-def _redir_url_sql(e: str) -> str:
-    return (
-        f"'http://www.example' || CAST(({e}) % 13 AS VARCHAR) "
-        f"|| '.com/articles/' || CAST(({e}) AS VARCHAR)"
-    )
-
-
-def _web_redirect_resolve(spark, sf_dir):
-    """Redirect-chain resolution (operators/web.py::resolve_redirects):
-    every 9th doc's URL 301s — half of them (doc_id%18==4) onto ANOTHER
-    redirecting id (+9 stays ≡4 mod 9), so real multi-hop chains exist
-    (28 two-hop chains at sf0.01), the rest to ``(doc_id*7+13) % 611``.
-    Chains are followed up to 5 hops (the crawler giveup bound), each
-    URL resolving to (final_url, hops). The oracle replays the walk
-    with a depth-bounded recursive CTE and takes the deepest state per
-    URL."""
-    from nlquery_spark.operators.web import resolve_redirects
-
-    docs = _load(spark, sf_dir, "documents")["documents"]
-    d = F.col("doc_id")
-    urls = docs.select(_redir_url_col(d).alias("url"))
-    dst = F.when(d % 18 == 4, d + 9).otherwise((d * 7 + 13) % 611)
-    redirects = docs.filter(d % 9 == 4).select(
-        _redir_url_col(d).alias("src_url"),
-        _redir_url_col(dst).alias("dst_url"),
-    )
-    return resolve_redirects(urls, redirects, max_hops=5)
-
-
-_REDIRECT_SQL = f"""
-WITH RECURSIVE u AS (
-  SELECT {_redir_url_sql('doc_id')} AS url FROM documents
-), r AS (
-  -- mirrors resolve_redirects' one-destination-per-source contract
-  -- (groupBy src, min dst): without it a fixture with duplicate source
-  -- rows would fan out the recursive walk and silently diverge
-  SELECT src_url, MIN(dst_url) AS dst_url FROM (
-    SELECT {_redir_url_sql('doc_id')} AS src_url,
-           {_redir_url_sql(
-               'CASE WHEN doc_id % 18 = 4 THEN doc_id + 9 '
-               'ELSE (doc_id*7+13) % 611 END'
-           )} AS dst_url
-    FROM documents WHERE doc_id % 9 = 4
-  ) GROUP BY src_url
-), walk AS (
-  SELECT url, url AS final_url, 0 AS hops FROM u
-  UNION ALL
-  SELECT w.url, r.dst_url, w.hops + 1
-  FROM walk w JOIN r ON w.final_url = r.src_url
-  WHERE w.hops < 5
-)
-SELECT url, final_url, CAST(hops AS BIGINT) AS hops FROM walk
-QUALIFY row_number() OVER (PARTITION BY url ORDER BY hops DESC) = 1
-"""
-
-
 def _corpus_host_balance(spark, sf_dir):
     """Domain balancing — the corpus-diversity step every web-scale
     training set applies (a handful of hosts dominate any crawl; cap
@@ -4087,12 +3735,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_incremental": _dedup_incremental,
         "web_url_normalize": _web_url_normalize,
         "web_host_stats": _web_host_stats,
-        "web_link_graph": _web_link_graph,
-        "web_host_pagerank": _web_host_pagerank,
-        "web_crawl_diff": _web_crawl_diff,
         "doc_gopher_filters": _doc_gopher_filters,
-        "web_anchor_text": _web_anchor_text,
-        "web_redirect_resolve": _web_redirect_resolve,
         "corpus_host_balance": _corpus_host_balance,
         # ==== _STABLE_TAIL (tests/test_oracle_parity.py): only these
         # entries may sit past the 50-entry window ====
@@ -4224,12 +3867,7 @@ def oracle_sql() -> dict[str, str]:
         "dedup_incremental": _DEDUP_INCREMENTAL_SQL,
         "web_url_normalize": _URL_NORMALIZE_SQL,
         "web_host_stats": _HOST_STATS_SQL,
-        "web_link_graph": _LINK_GRAPH_SQL,
-        "web_host_pagerank": _HOST_PAGERANK_SQL,
-        "web_crawl_diff": _CRAWL_DIFF_SQL,
         "doc_gopher_filters": _GOPHER_SQL,
-        "web_anchor_text": _ANCHOR_TEXT_SQL,
-        "web_redirect_resolve": _REDIRECT_SQL,
         "corpus_host_balance": _host_balance_sql(),
         "part_lpa_communities": _LPA_SQL,
         "kg_extract_triples": _kg_extract_triples_sql(),

@@ -402,9 +402,7 @@ _ROTATED_IN = {
     "customer_order_distribution", "customer_running_spend",
     "corpus_shard_assign", "dedup_clusters",
     "corpus_split_assign", "dedup_incremental", "web_url_normalize",
-    "web_host_stats", "web_link_graph", "web_host_pagerank",
-    "web_crawl_diff", "doc_gopher_filters",
-    "web_anchor_text", "web_redirect_resolve", "corpus_host_balance",
+    "web_host_stats", "doc_gopher_filters", "corpus_host_balance",
 }
 
 
@@ -807,9 +805,7 @@ def web_fuzz_sf(spark, tmp_path_factory):
 
 
 _WEB_FUZZ_QUERIES = [
-    "web_url_normalize", "web_host_stats", "web_link_graph",
-    "web_crawl_diff", "web_redirect_resolve", "web_anchor_text",
-    "web_host_pagerank", "corpus_host_balance",
+    "web_url_normalize", "web_host_stats", "corpus_host_balance",
 ]
 
 
