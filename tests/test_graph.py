@@ -330,6 +330,11 @@ def test_common_neighbors_cap_bounds_hub(spark):
     assert {r.node_a for r in got} | {r.node_b for r in got} == set(range(1, 6))
     assert metrics["blocks_capped"] == 1
     assert metrics["block_rows_dropped"] == 15
+    # determinism: same input repartitioned differently -> same rows
+    got2 = common_neighbor_scores(
+        df.repartition(7), min_common=1, max_neighbors=5
+    ).collect()
+    assert {tuple(r) for r in got2} == {tuple(r) for r in got}
 
 
 def test_common_neighbors_hub_center_cutoff(spark):
