@@ -2647,12 +2647,16 @@ def _streaming_events_by_minute(spark, sf_dir):
     if not q.awaitTermination(300):
         q.stop()
         raise RuntimeError("streaming_events_by_minute did not finish in 300s")
-    return spark.table(table).select(
+    out = spark.table(table).select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("minute"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
         "sum_value",
     )
+    # spark.table analyzes eagerly, so ``out`` keeps the sink's plan and
+    # rows; the view itself would outlive the call in the session catalog
+    spark.catalog.dropTempView(table)
+    return out
 
 
 _STREAM_MINUTES_SQL = """

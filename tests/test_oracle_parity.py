@@ -349,6 +349,18 @@ def test_kg_pagerank_oracle_reads_what_query_wrote(spark):
     assert expect.exceptAll(edges).count() == 0
 
 
+def test_streaming_events_by_minute_leaves_no_table(spark):
+    """The query's complete-mode memory sink is registered as a temp
+    view; each call must drop its own, or a driver that reruns it in
+    one session holds every earlier result in memory."""
+    before = {t.name for t in spark.catalog.listTables()}
+    q = entry_mod.queries()["streaming_events_by_minute"]
+    first, second = q(spark, SF_DIR), q(spark, SF_DIR)
+    assert {t.name for t in spark.catalog.listTables()} == before
+    rows = sorted(tuple(r) for r in first.collect())
+    assert rows and rows == sorted(tuple(r) for r in second.collect())
+
+
 _STABLE_TAIL = {
     # every entry here has a FULL-green row in CORRECTNESS_r07.json
     # (rows+schema+hash, 50/50) and unchanged driver-surface code
