@@ -115,8 +115,8 @@ def _cap_blocks(
     each ``key_col`` partition at ``max_block_size`` rows (row_number,
     ``ord_col``-ordered for determinism), recording blocks_capped /
     block_rows_dropped when a ``metrics`` dict is passed — no silent
-    caps. similarity_edges caps its blocks with it, and
-    graph.common_neighbor_scores its per-node neighbor lists."""
+    caps. Reused by the trigram and edit-distance edge builders here
+    and by graph.cooccurrence_lift's per-group vocabulary cap."""
     if metrics is not None:
         over = (
             blocked.groupBy(key_col)
@@ -135,6 +135,81 @@ def _cap_blocks(
         blocked.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_block_size)
         .drop("_rn")
+    )
+
+
+def edit_distance_edges(
+    forms: DataFrame,
+    form_col: str = "form",
+    max_dist: int = 2,
+    max_block_size: int = 200,
+    metrics: Optional[dict] = None,
+) -> DataFrame:
+    """(form_a, form_b, dist) edges between surface forms whose
+    NORMALIZED forms are within ``max_dist`` Levenshtein edits — the
+    typo/OCR-noise complement to :func:`similarity_edges`' trigram
+    Jaccard (which needs shared trigrams; a 2-edit typo in a short form
+    can destroy most of them). Levenshtein is integer-exact, so the
+    edge set is bit-comparable against any engine with the classic DP
+    definition (DuckDB's levenshtein()).
+
+    Blocking: each form lands in two blocks — first and last character
+    of its norm — and pairs are generated within blocks. A pair whose
+    edits touch BOTH the first and last character is missed: the
+    standard recall/scale tradeoff of exact-key blocking, stated rather
+    than hidden (deletion-neighborhood blocking is complete for k=1 but
+    explodes combinatorially at k=2). MEASURED, not just stated
+    (tests/test_pipeline.py recall gates): recall vs brute-force
+    all-pairs Levenshtein is 1.0 on the kg_editdist fixture (the
+    sf0.001 form universe, 155 true pairs, query config 80-cap) and
+    0.898 on an adversarial mix that deliberately seeds both-ends
+    substitutions (gated >= 0.85) — real-world name/typo variants
+    rarely edit both end characters simultaneously. Oversized blocks
+    are capped by the same row_number guard as similarity_edges, with
+    the same ``metrics`` accounting.
+    """
+    f = (
+        forms.select(F.col(form_col).alias("form"))
+        .distinct()
+        .withColumn("norm", normalize_form(F.col("form")))
+        .filter(F.length("norm") > 0)
+    )
+    blocked = f.select(
+        "form",
+        "norm",
+        F.explode(
+            F.array(
+                F.substring("norm", 1, 1),
+                F.expr("substr(norm, length(norm), 1)"),
+            )
+        ).alias("block"),
+    ).distinct()
+    blocked = _cap_blocks(blocked, max_block_size, metrics)
+    a, b = blocked.alias("a"), blocked.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.block") == F.col("b.block"))
+            & (F.col("a.form") < F.col("b.form"))
+            # pure pruning, never changes results: dist >= |len diff|,
+            # so pairs failing this can't pass the levenshtein filter —
+            # but they skip the O(n*m) DP entirely
+            & (
+                F.abs(F.length(F.col("a.norm")) - F.length(F.col("b.norm")))
+                <= max_dist
+            ),
+        )
+        # compute the DP once; filtering the projected column halves
+        # the dominant per-pair cost vs a separate filter expression
+        .select(
+            F.col("a.form").alias("form_a"),
+            F.col("b.form").alias("form_b"),
+            F.levenshtein(F.col("a.norm"), F.col("b.norm"))
+            .cast("long")
+            .alias("dist"),
+        )
+        .filter(F.col("dist") <= max_dist)
+        .distinct()
     )
 
 

@@ -174,10 +174,11 @@ def bm25_topk(
         idf(t)  = ln((N - df + 0.5) / (df + 0.5) + 1)
         s(d, t) = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl/avgdl))
     Output: (doc_id, bm25) — score ROUNDed to 6 so an ANSI-SQL oracle
-    is value-hash comparable (ln() here is safe cross-engine: a 1-ulp
-    libm difference sits ~1e10 ulps from the rounding boundary for O(1)
-    scores — and the parity suite pins it empirically). Ties broken by
-    ascending doc id, so top-k is a total order and deterministic.
+    is value-hash comparable (ln() here is safe cross-engine: the
+    rounding boundary is ~1e10 ulps away for O(1) scores, unlike the
+    pure-ratio-only contract cooccurrence_lift needs for PMI — and the
+    parity suite pins it empirically). Ties broken by ascending doc id,
+    so top-k is a total order and deterministic.
 
     Plan — ONE corpus scan (the phrase_search discipline): a single
     tokenization pass aggregates, per document, its LENGTH and its
