@@ -337,17 +337,6 @@ def test_dedup_incremental_join_is_stats_driven(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") <= 4, plan
 
 
-def test_web_link_graph_one_exchange_no_python(spark, sf_dir):
-    """Link extraction + host mapping must ride the page scan as a
-    narrow JVM projection: the only Exchange is the final
-    (src_host, dst_host) hash aggregation, and no Python stage
-    appears anywhere."""
-    df = em.queries()["web_link_graph"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert plan.count("Exchange") == 1, plan
-
-
 def test_gopher_filters_zero_exchange(spark, sf_dir):
     """The Gopher rule audit is a pure per-row projection — zero
     shuffles, zero Python."""
@@ -355,25 +344,3 @@ def test_gopher_filters_zero_exchange(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Exchange" not in plan, plan
-
-
-def test_crawl_diff_single_scan_full_outer(spark, sf_dir):
-    """Both snapshots read the narrow checkpointed digest base (no
-    second parquet scan of documents), joined by ONE full outer join."""
-    df = em.queries()["web_crawl_diff"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert plan.count("Scan parquet") == 0, plan  # checkpoint feeds both
-    assert "FullOuter" in plan, plan
-
-
-def test_anchor_text_two_exchanges(spark, sf_dir):
-    """Mode-per-key needs exactly two keyed exchanges: the
-    (target, anchor) count agg and the per-target window — the window
-    must reuse the agg's hash partitioning prefix, never add a third."""
-    df = em.queries()["web_anchor_text"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # count keyed shuffles specifically — a bare "Exchange" would also
-    # match BroadcastExchange/ReusedExchange nodes
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
