@@ -682,50 +682,6 @@ def test_extract_links_order_and_quoting(spark):
     assert got == ["http://a.com/1", "https://B.com/2?q=1"]
 
 
-def test_host_link_graph_counts_and_hosts(spark):
-    from nlquery_spark.operators.web import host_link_graph
-
-    pages = spark.createDataFrame(
-        [
-            ("http://A.com/x",
-             '<a href="http://b.com/1">.</a><a href="HTTP://B.COM:80/2">.</a>'
-             '<a href="http://a.com/self">.</a>'),
-            ("https://b.com:443/y", '<a href="http://a.com/z">.</a>'),
-        ],
-        "url string, html string",
-    )
-    got = {(r.src_host, r.dst_host): r.n_links
-           for r in host_link_graph(pages).collect()}
-    # case + default-port variants of b.com collapse into one dst host;
-    # self-links kept
-    assert got == {
-        ("a.com", "b.com"): 2,
-        ("a.com", "a.com"): 1,
-        ("b.com", "a.com"): 1,
-    }
-
-
-def test_crawl_diff_statuses(spark):
-    from nlquery_spark.operators.web import crawl_diff
-
-    old = spark.createDataFrame(
-        [("u1", "d1"), ("u2", "d2"), ("u3", "d3")],
-        "canonical_url string, digest string",
-    )
-    new = spark.createDataFrame(
-        [("u1", "d1"), ("u2", "d2x"), ("u4", "d4")],
-        "canonical_url string, digest string",
-    )
-    got = {r.canonical_url: (r.status, r.old_digest, r.new_digest)
-           for r in crawl_diff(old, new).collect()}
-    assert got == {
-        "u1": ("unchanged", "d1", "d1"),
-        "u2": ("changed", "d2", "d2x"),
-        "u3": ("removed", "d3", ""),
-        "u4": ("added", "", "d4"),
-    }
-
-
 def test_gopher_rules_boundaries(spark):
     """Each rule at its inclusive boundary: 50 words passes the count
     band, mean length exactly 3.0 passes, symbol ratio exactly at the
@@ -755,50 +711,6 @@ def test_gopher_rules_boundaries(spark):
     assert got[5].ok_symbol_ratio == 0 and got[5].keep == 0
 
 
-def test_anchor_text_signals_mode_and_ties(spark):
-    from nlquery_spark.operators.web import anchor_text_signals
-
-    pages = spark.createDataFrame(
-        [
-            ('<a href="http://t.com/x">alpha</a>'
-             '<a href="http://T.COM:80/x">beta</a>'
-             '<a href="http://t.com/x/">alpha</a>',),
-            ('<a href="http://t.com/x">beta</a>'
-             '<a href="http://other.com/y">gamma</a>',),
-        ],
-        "html string",
-    )
-    got = {r.target_url: (r.top_anchor, r.n_anchors, r.n_distinct_anchors)
-           for r in anchor_text_signals(pages).collect()}
-    # all four t.com variants canonicalize to one target; alpha and
-    # beta tie 2-2 -> smallest text wins
-    assert got == {
-        "http://t.com/x": ("alpha", 4, 2),
-        "http://other.com/y": ("gamma", 1, 1),
-    }
-
-
-def test_resolve_redirects_chain_loop_and_cap(spark):
-    from nlquery_spark.operators.web import resolve_redirects
-
-    urls = spark.createDataFrame(
-        [("a",), ("b",), ("z",), ("p",)], "url string"
-    )
-    redirects = spark.createDataFrame(
-        # chain a->b->c (ends), loop p->q->p, nothing for z
-        [("a", "b"), ("b", "c"), ("p", "q"), ("q", "p")],
-        "src_url string, dst_url string",
-    )
-    got = {r.url: (r.final_url, r.hops)
-           for r in resolve_redirects(urls, redirects, max_hops=5).collect()}
-    assert got["a"] == ("c", 2)
-    assert got["b"] == ("c", 1)
-    assert got["z"] == ("z", 0)
-    # loop: capped at 5 hops, lands wherever the 5th hop ends (p->q->
-    # p->q->p->q)
-    assert got["p"] == ("q", 5)
-
-
 def test_normalize_url_fragment_query_not_leaked(spark):
     """A '?' inside the fragment (SPA-style '#/route?x=1') is NOT a
     query — fragment content must be fully dropped (review fix: the
@@ -811,45 +723,3 @@ def test_normalize_url_fragment_query_not_leaked(spark):
     )
     got = [r.c for r in df.select(normalize_url(F.col("url")).alias("c")).collect()]
     assert got == ["http://ex.com/a", "http://ex.com/a?b=1"]
-
-
-def test_host_link_graph_drops_relative_and_nonweb(spark):
-    from nlquery_spark.operators.web import host_link_graph
-
-    pages = spark.createDataFrame(
-        [("http://a.com/x",
-          '<a href="/about">.</a><a href="mailto:z@q.com">.</a>'
-          '<a href="http://b.com/1">.</a>')],
-        "url string, html string",
-    )
-    got = {(r.src_host, r.dst_host): r.n_links
-           for r in host_link_graph(pages).collect()}
-    assert got == {("a.com", "b.com"): 1}
-
-
-def test_anchor_text_drops_relative_targets(spark):
-    from nlquery_spark.operators.web import anchor_text_signals
-
-    pages = spark.createDataFrame(
-        [('<a href="/rel">x</a><a href="http://t.com/y">ok</a>',)],
-        "html string",
-    )
-    got = {r.target_url for r in anchor_text_signals(pages).collect()}
-    assert got == {"http://t.com/y"}
-
-
-def test_resolve_redirects_duplicate_sources_no_fanout(spark):
-    """Conflicting/duplicate redirect rows for one source must not fan
-    out the walk — min-dst wins deterministically, one output row per
-    input URL."""
-    from nlquery_spark.operators.web import resolve_redirects
-
-    urls = spark.createDataFrame([("a",), ("b",)], "url string")
-    redirects = spark.createDataFrame(
-        [("a", "c"), ("a", "b"), ("a", "b")],
-        "src_url string, dst_url string",
-    )
-    out = resolve_redirects(urls, redirects, max_hops=5).collect()
-    assert len(out) == 2
-    got = {r.url: (r.final_url, r.hops) for r in out}
-    assert got["a"] == ("b", 1)
