@@ -13,6 +13,7 @@ batches on executors.
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 from itertools import islice
 from typing import Callable, Iterable, Iterator, List, Optional, Sequence, Tuple
@@ -53,6 +54,33 @@ def _evict_half(memo: dict) -> None:
     acceptable."""
     for k in list(islice(iter(memo), max(1, len(memo) // 2))):
         del memo[k]
+
+
+# Executable purity contract (ADVICE r7): every skip of a matcher call
+# in the kernel is exact ONLY if the skipped call would yield nothing:
+# the first pass's trigger table (CompositeMatcher), the recursive
+# matchers' screens (``can_match``) and the fixpoint's unchanged-bag
+# skip (``bag_state``, kernel.recognizer), which relies on every
+# matcher's get_matches being a pure function of (statement, bag
+# contents). With NLQUERY_DEBUG_PURITY=1 every skipped matcher is run
+# anyway and must yield nothing, so a wrong screen or a stateful
+# matcher fails loudly instead of silently changing results. Off by
+# default (it runs every matcher on every call); pinned on in
+# tests/test_recognizer.py.
+DEBUG_PURITY = os.environ.get("NLQUERY_DEBUG_PURITY", "") not in ("", "0", "false")
+
+
+def check_skip(matcher, match_bag: MatchBag, reason: str) -> None:
+    """Under ``DEBUG_PURITY``: run a skipped matcher and raise if it
+    yields anything (raise, not assert: under python -O an assert
+    compiles away and the flag would verify nothing)."""
+    leaked = list(matcher.get_matches(match_bag))
+    if leaked:
+        raise RuntimeError(
+            f"{type(matcher).__name__}.get_matches produced "
+            f"{len(leaked)} match(es) on a call skipped because {reason}; "
+            "the skip is unsound for it"
+        )
 
 
 # Pinned reference year for the DateMatcher year-closeness boost. The
@@ -126,28 +154,71 @@ class StopWordsFilter:
 
 
 class CompositeMatcher:
-    """Concatenates child matchers' outputs (CompositeMatcher.cs:22-41)."""
+    """Concatenates child matchers' outputs (CompositeMatcher.cs:22-41).
+
+    Runs only the children a chunk can trigger. A child with a
+    ``fires_on(value, token_type)`` method yields nothing on a statement
+    unless it fires on one of the statement's tokens, keyed by the exact
+    token value (the stemmer is case-sensitive) and the token's type (a
+    sentence end's empty value is a substring of every phrase word, but
+    no phrase matcher reads it); a child without one always runs. The
+    trigger table maps each such key to the bitmask of the children
+    that fire on it, memoized per instance (so per worker) and
+    half-evicted at ``MEMO_MAX`` like the matchers' token memos. Per
+    statement, one walk over its distinct keys ORs their masks, and the
+    children whose bit is set run in list order, so the emitted matches
+    and their order are those of running every child. With
+    ``DEBUG_PURITY`` on, each left-out child is run anyway and must
+    yield nothing."""
 
     first_pass_only = True
     recursive = False
 
+    MEMO_MAX = 500_000
+
     def __init__(self, matchers):
         self.matchers = list(matchers)
-        # hoisted first-word screens, resolved once: (screen_word, child)
-        self._screened = [
-            (getattr(m, "first_word_screen", None), m) for m in self.matchers
-        ]
+        self._always = 0  # bits of the children without a trigger
+        self._triggers = []  # (bit, fires_on) of the others
+        for i, m in enumerate(self.matchers):
+            fires_on = getattr(m, "fires_on", None)
+            if fires_on is None:
+                self._always |= 1 << i
+            else:
+                self._triggers.append((1 << i, fires_on))
+        self._table = {}  # (token value, token type) -> bitmask
+        self._runs = {}  # bitmask -> the children it selects, in order
+
+    def children_for(self, tokens) -> list:
+        """The children a statement of ``tokens`` can trigger, in list
+        order."""
+        table = self._table
+        mask = self._always
+        for key in {(t.value, t.type) for t in tokens}:
+            bits = table.get(key)
+            if bits is None:
+                if len(table) > self.MEMO_MAX:
+                    _evict_half(table)
+                bits = table[key] = sum(
+                    bit for bit, fires_on in self._triggers if fires_on(*key)
+                )
+            mask |= bits
+        run = self._runs.get(mask)
+        if run is None:
+            if len(self._runs) > self.MEMO_MAX:
+                _evict_half(self._runs)
+            run = self._runs[mask] = [
+                m for i, m in enumerate(self.matchers) if mask >> i & 1
+            ]
+        return run
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
-        # skip children whose screen word is absent from the chunk
-        # (saves the generator round-trip per screened matcher; the
-        # child keeps its own guard too, so this is an optimization,
-        # not a semantics change — emission order of matchers that DO
-        # run is untouched)
-        vs = match_bag.statement.value_set
-        for fw, matcher in self._screened:
-            if fw is not None and fw not in vs:
-                continue
+        run = self.children_for(match_bag.statement.tokens)
+        if DEBUG_PURITY:
+            for matcher in self.matchers:
+                if matcher not in run:
+                    check_skip(matcher, match_bag, "no token triggers it")
+        for matcher in run:
             yield from matcher.get_matches(match_bag)
 
 
@@ -187,19 +258,16 @@ class ExactPhraseMatcher:
         self.get_match = get_match
         self.allow_separators = True
         self._words_lower = [w.lower() for w in self.words]
-        # consumed by CompositeMatcher's hoisted screen
-        self.first_word_screen = (
-            self._words_lower[0] if self._words_lower else None
+
+    def fires_on(self, value: str, token_type: int) -> bool:
+        # the FSM starts only on a non-empty token (of any type) equal,
+        # lowercased, to the first word; a wordless phrase never matches
+        return bool(value) and bool(self._words_lower) and (
+            value.lower() == self._words_lower[0]
         )
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
-        # first-word screen: the FSM only ever advances on exact token
-        # equality, so if word[0] is absent from the chunk's token-value
-        # set the whole NFA run is a no-op — skip it (measured ~25% of
-        # extraction kernel time with dictionary-sized matcher lists).
-        # A wordless phrase (e.g. a numeric/punctuation-only config
-        # phrase) can never match: empty-guard before indexing word[0].
-        if not self._words_lower or self._words_lower[0] not in match_bag.statement.value_set:
+        if not self._words_lower:
             return iter(())
         if len(self.words) == 1:
             return self._match_single_word(match_bag.statement.tokens)
@@ -281,6 +349,12 @@ class LikePhraseMatcher:
         # value (stemmer is case-sensitive); tokens are Zipfian so the
         # per-token phrase scan amortizes away
         self._like_memo = {}
+
+    def fires_on(self, value: str, token_type: int) -> bool:
+        # a match needs a word or number token like a phrase word
+        return (token_type == WORD or token_type == NUMBER) and (
+            self._like(value) is not None
+        )
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         start = None
@@ -398,15 +472,19 @@ class ListContainsMatcher:
         self._token_memo = {}
         self._memo_threshold = self.max_score_filter_threshold
 
-    def _lookup(self, token: Token):
+    def fires_on(self, value: str, token_type: int) -> bool:
+        # a match needs a word or number token that hits a value
+        return (token_type == WORD or token_type == NUMBER) and bool(
+            self._lookup(value, token_type == NUMBER)[0]
+        )
+
+    def _lookup(self, token_val: str, is_number: bool):
         """All hits of a token across the whole gazetteer, in value
         order, with the throttle's verdict on each, and the values whose
         hit passed — memoized (tokens are Zipfian; one O(V) scan per
         distinct token amortizes the V x T loop away). The score depends
         only on the token value and whether it is a NUMBER, which
         together key the memo."""
-        token_val = token.value
-        is_number = token.type == NUMBER
         memo = self._token_memo
         entry = memo.get((token_val, is_number))
         if entry is None:
@@ -417,7 +495,7 @@ class ListContainsMatcher:
             threshold = self._memo_threshold
             n_hits = 0
             max_score = 0.0
-            token_lower = token.value_lower
+            token_lower = token_val.lower()
             stemmer = self.apply_stemmer
             token_stem = None
             if stemmer is not None:
@@ -476,8 +554,9 @@ class ListContainsMatcher:
         emitted = set()
         seen = set()
         for t in match_bag.statement.tokens:
-            if t.type == WORD or t.type == NUMBER:
-                hits, passing = self._lookup(t)
+            ttype = t.type
+            if ttype == WORD or ttype == NUMBER:
+                hits, passing = self._lookup(t.value, ttype == NUMBER)
                 if hits:
                     keys = hits.keys()
                     emitted.update(passing)
@@ -509,6 +588,11 @@ class NumberMatcher:
 
     first_pass_only = True
     recursive = False
+
+    @staticmethod
+    def fires_on(value: str, token_type: int) -> bool:
+        # every match ends on a NUMBER token
+        return token_type == NUMBER
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         return run_state_machine(match_bag.statement.tokens, _NumberState())
@@ -592,6 +676,12 @@ class DateMatcher:
                 if name:
                     lookup.setdefault(name.lower(), i + 1)
         self.month_lookup = lookup
+
+    def fires_on(self, value: str, token_type: int) -> bool:
+        # a date starts on a NUMBER token or a month-name word
+        return token_type == NUMBER or (
+            token_type == WORD and value.lower() in self.month_lookup
+        )
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         return run_state_machine(
@@ -723,35 +813,56 @@ class ComparisonMatcher:
         self.left_type = left_type
         self.get_comparison_match = get_comparison_match
         # list of (words_tuple, cmp_type) in priority order
-        self.phrase_comparison_types: Optional[
-            List[Tuple[Sequence[str], int]]
-        ] = None
+        self.phrase_comparison_types = None
         self.is_phrase_stop_word: Optional[Callable[[str], bool]] = None
-        self._screen_cache = None  # one-slot (statement, active) cache
+        self._screen_cache = None  # one-slot (statement, active, has_math)
 
-    def _active_phrases(self, statement):
-        """Per-statement screen: a phrase op can only match when every
-        one of its words occurs as a token (stop-word skipping inserts
-        tokens, never substitutes), so filter the phrase table against
-        the statement's token-value set once instead of re-walking every
-        phrase at every candidate position. One-slot cache: the recursive
-        fixpoint re-enters get_matches for the same statement every
-        generation, and the screen depends only on the statement's token
-        values (which never change across generations) — identity-keyed
+    @property
+    def phrase_comparison_types(self) -> Optional[List[Tuple[Sequence[str], int]]]:
+        return self._phrase_types
+
+    @phrase_comparison_types.setter
+    def phrase_comparison_types(self, phrases) -> None:
+        self._phrase_types = phrases
+        # each phrase with its words' lowered set, made once for the screen
+        self._phrases_lower = [
+            (phrase, frozenset(w.lower() for w in phrase[0]))
+            for phrase in phrases or ()
+        ]
+        self._screen_cache = None
+
+    def _screen(self, statement):
+        """Per-statement screen, ``(active, has_math)``: a phrase op can
+        only match when every one of its words occurs as a token
+        (stop-word skipping inserts tokens, never substitutes), so the
+        phrase table is filtered against the statement's token-value set
+        once instead of re-walking every phrase at every candidate
+        position; a math op needs a MATH token. One-slot cache: the
+        recursive fixpoint re-enters this matcher for the same statement
+        every generation, and the screen depends only on the statement's
+        tokens (which never change across generations) — identity-keyed
         with a strong ref, so the slot can't dangle onto a recycled id."""
-        if not self.phrase_comparison_types:
-            return []
         cached = self._screen_cache
         if cached is not None and cached[0] is statement:
-            return cached[1]
+            return cached[1], cached[2]
         vs = statement.value_set
         active = [
-            (words, cmp_type)
-            for words, cmp_type in self.phrase_comparison_types
-            if words and all(w.lower() in vs for w in words)
+            phrase
+            for phrase, words_lower in self._phrases_lower
+            if words_lower and words_lower <= vs
         ]
-        self._screen_cache = (statement, active)
-        return active
+        has_math = any(t.type == MATH for t in statement.tokens)
+        self._screen_cache = (statement, active, has_math)
+        return active, has_math
+
+    def can_match(self, match_bag: MatchBag) -> bool:
+        """False only if ``get_matches`` yields nothing: every merge
+        needs a left match and an operator, a math op (a MATH token) or
+        an active phrase."""
+        if not match_bag.of_type(self.left_type):
+            return False
+        active, has_math = self._screen(match_bag.statement)
+        return has_math or bool(active)
 
     def _match_phrase_op(self, tokens, idx, go_reverse=False, phrases=None):
         """Returns (cmp, tokens_count, new_idx) or None."""
@@ -833,7 +944,7 @@ class ComparisonMatcher:
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         tokens = match_bag.statement.tokens
-        active = self._active_phrases(match_bag.statement)
+        active = self._screen(match_bag.statement)[0]
         for left in list(match_bag.of_type(self.left_type)):
             end_idx = match_bag.statement.get_index(left.end)
             cmp = 0
@@ -942,12 +1053,12 @@ class GroupMatcher:
     """AND/OR combiner, one merge per pass for correct left-assoc nesting
     (GroupMatcher.cs:29-151).
 
-    Screen: a group needs an operator after the left match, either a
-    phrase (``and``/``or``; its first word must be a token of the
-    statement) or ``||``. A statement whose token values hold neither a
-    phrase's first word nor ``|`` can yield nothing, so ``get_matches``
-    returns before walking the bag (it would otherwise do so on every
-    fixpoint generation)."""
+    Screen (``can_match``): a group needs an operator after the left
+    match, either a phrase (``and``/``or``; its first word must be a
+    token of the statement) or ``||``. A statement whose token values
+    hold neither a phrase's first word nor ``|`` can yield nothing, so
+    the recognizer skips the call (it would otherwise walk the bag on
+    every fixpoint generation)."""
 
     first_pass_only = False
     recursive = True
@@ -993,13 +1104,14 @@ class GroupMatcher:
                 return None
         return None
 
-    def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
+    def can_match(self, match_bag: MatchBag) -> bool:
         vs = match_bag.statement.value_set
-        if "|" not in vs and not any(
+        return "|" in vs or any(
             words and words[0].lower() in vs
             for words, _ in self.phrase_group_types or ()
-        ):
-            return
+        )
+
+    def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         tokens = match_bag.statement.tokens
         for left in list(match_bag.matches):
             if not self.left_part_predicate(left, match_bag):
@@ -1057,6 +1169,10 @@ class HintMatcher:
     def __init__(self, hint_type, get_match):
         self.hint_type = hint_type
         self.get_match = get_match  # (hint, target, force) -> Match | None
+
+    def can_match(self, match_bag: MatchBag) -> bool:
+        # every binding starts from a match of the hint type
+        return bool(match_bag.of_type(self.hint_type))
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         tokens = match_bag.statement.tokens
@@ -1147,7 +1263,15 @@ class MergePhraseMatcher:
     The reference follows a merge chain by recursion; here it is a loop,
     because a nested function that calls itself through its closure
     cell is a reference cycle that keeps the call's whole index alive
-    until Python's cyclic collector runs."""
+    until Python's cyclic collector runs.
+
+    The recognizer screens and re-runs it by its class alone. A merge
+    needs two matches of ``match_type`` (``can_match``). A call that
+    yielded nothing yields nothing again while the class's count is
+    unchanged (``bag_state``): a new match of another class can only
+    make an earlier token the "next matched token", and that token
+    starts no ``match_type`` match (every token that does was a matched
+    token already), so its group is empty."""
 
     first_pass_only = False
     recursive = False
@@ -1157,21 +1281,33 @@ class MergePhraseMatcher:
         self.merge = merge  # (statement, m1, m2) -> Match | None
         self.merge_key = merge_key  # m -> hashable
 
+    def can_match(self, match_bag: MatchBag) -> bool:
+        return len(match_bag.of_type(self.match_type)) >= 2
+
+    def bag_state(self, match_bag: MatchBag) -> int:
+        return len(match_bag.of_type(self.match_type))
+
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
         match_type = self.match_type
         similar = list(match_bag.of_type(match_type))
-        if not similar:
-            return
         statement = match_bag.statement
         tokens = statement.tokens
         merge = self.merge
         merge_key = self.merge_key
         # start token's start_index -> merge key -> matches, bag order kept
         by_start: dict = {}
+        # a merge joins two matches of one key that start at different
+        # tokens (the partner starts after the match ends)
+        key_start: dict = {}
+        can_merge = False
         for m in similar:
-            by_start.setdefault(m.start.start_index, {}).setdefault(
-                merge_key(m), []
-            ).append(m)
+            key = merge_key(m)
+            start = m.start.start_index
+            if key_start.setdefault(key, start) != start:
+                can_merge = True
+            by_start.setdefault(start, {}).setdefault(key, []).append(m)
+        if not can_merge:
+            return
         similar.sort(key=lambda m: statement.get_index(m.start))
         merged_ids = set()
         # end token's start_index -> by_start's groups at the next

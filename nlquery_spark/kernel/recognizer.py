@@ -6,22 +6,12 @@ and NGramGenerator.cs:22-54.
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple
 
+from . import matchers as _matchers
 from .matches import Match, MatchBag, StubMatch
-from .matchers import CompositeMatcher
+from .matchers import CompositeMatcher, check_skip
 from .tokens import SENTENCE_END, SEPARATOR, Token, TokenSequence
-
-# Executable purity contract (ADVICE r7): the unchanged-bag fixpoint
-# skip (and ComparisonMatcher's statement-keyed screen cache) are exact
-# ONLY if every matcher's get_matches is a pure function of
-# (statement, bag contents). With NLQUERY_DEBUG_PURITY=1 a skipped
-# matcher is re-run anyway and its output asserted empty, so a future
-# stateful matcher fails loudly instead of silently changing fixpoint
-# results. Off by default (doubles recursive-matcher cost); pinned on
-# in tests/test_recognizer.py.
-DEBUG_PURITY = os.environ.get("NLQUERY_DEBUG_PURITY", "") not in ("", "0", "false")
 
 
 class Recognizer:
@@ -43,7 +33,12 @@ class Recognizer:
         self._first_pass = CompositeMatcher(
             [m for m in self.matchers if m.first_pass_only]
         )
-        self._recursive = [m for m in self.matchers if not m.first_pass_only]
+        # (slot, matcher, its screen, the part of the bag it reads;
+        # None for no screen and for the whole bag)
+        self._recursive = [
+            (i, m, getattr(m, "can_match", None), getattr(m, "bag_state", None))
+            for i, m in enumerate(m for m in self.matchers if not m.first_pass_only)
+        ]
 
     def _compose_start_token_to_matches(
         self, all_matches: Iterable[Match]
@@ -64,47 +59,56 @@ class Recognizer:
         return by_start
 
     def _process_recursive_matchers(self, recursive_matchers, match_bag: MatchBag):
-        matchers = list(recursive_matchers)
-        # Unchanged-bag skip: every matcher in this loop is a pure
-        # function of (statement, bag contents) — no instance state
-        # mutates in get_matches — so a matcher that produced NOTHING
-        # against bag state S produces nothing against S again; skipping
-        # the re-call is exact. len(bag.matches) identifies S (adds are
-        # append-only). A run that DID produce matches never arms the
-        # skip: the matcher has not yet seen the bag containing its own
-        # output (GroupMatcher's one-merge-per-pass nesting depends on
-        # that re-run), so it records -1 and always re-runs while kept.
-        last_empty_at: Dict[int, int] = {}
+        """Runs the ``(slot, matcher, can_match, bag_state)`` entries of
+        ``_recursive`` to a fixpoint. Two skips, both exact because every
+        matcher is a pure function of (statement, bag contents): a
+        matcher whose screen (``can_match``) says it can yield nothing is
+        not called, and a matcher that yielded nothing is not called
+        again while the part of the bag it reads is unchanged:
+        ``bag_state``, or else the match count (adds are append-only). A
+        run that DID yield never arms the skip: the matcher has not yet
+        seen the bag containing its own output (GroupMatcher's
+        one-merge-per-pass nesting depends on that re-run), so it
+        records -1 and always re-runs while kept. With ``DEBUG_PURITY``
+        on, every skipped call is made anyway and must yield nothing."""
+        entries = list(recursive_matchers)
+        last_empty_at: List[object] = [None] * len(entries)
+        matches = match_bag.matches
+        add = match_bag.add
+        debug = _matchers.DEBUG_PURITY
         for _generation in range(self.max_passes):
             total = 0
-            to_run = matchers
-            matchers = []
-            for matcher in to_run:
-                mid = id(matcher)
-                if last_empty_at.get(mid) == len(match_bag.matches):
-                    if DEBUG_PURITY:
-                        # raise, not assert: under python -O an assert
-                        # compiles away and the flag would silently
-                        # verify nothing while still paying the re-run
-                        leaked = list(matcher.get_matches(match_bag))
-                        if leaked:
-                            raise RuntimeError(
-                                f"{type(matcher).__name__}.get_matches "
-                                f"produced {len(leaked)} match(es) on a bag "
-                                "unchanged since its last empty run — "
-                                "matcher is not a pure function of "
-                                "(statement, bag); the fixpoint skip is "
-                                "unsound for it"
-                            )
-                    matchers.append(matcher)  # unchanged bag -> same no-op
+            to_run = entries
+            entries = []
+            for entry in to_run:
+                slot, matcher, can_match, bag_state = entry
+                state = len(matches) if bag_state is None else bag_state(match_bag)
+                if last_empty_at[slot] == state:
+                    if debug:
+                        check_skip(
+                            matcher,
+                            match_bag,
+                            "the bag it reads is unchanged since its last empty run",
+                        )
+                    entries.append(entry)  # unchanged bag -> same no-op
+                    continue
+                if can_match is not None and not can_match(match_bag):
+                    if debug:
+                        check_skip(matcher, match_bag, "its screen rejects the bag")
+                    last_empty_at[slot] = state
+                    entries.append(entry)
                     continue
                 new_matches = list(matcher.get_matches(match_bag))
-                if not new_matches or matcher.recursive:
-                    matchers.append(matcher)  # keep for next generation
-                for m in new_matches:
-                    match_bag.add(m)
-                last_empty_at[mid] = len(match_bag.matches) if not new_matches else -1
-                total += len(new_matches)
+                if new_matches:
+                    if matcher.recursive:
+                        entries.append(entry)
+                    for m in new_matches:
+                        add(m)
+                    last_empty_at[slot] = -1
+                    total += len(new_matches)
+                else:
+                    last_empty_at[slot] = state
+                    entries.append(entry)  # keep for next generation
             if total == 0:
                 return
         raise RuntimeError("Too many merge passes, possibly infinite rule")

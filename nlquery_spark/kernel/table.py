@@ -759,6 +759,14 @@ class AssignDefaultDateColumnMatcher:
     def __init__(self, date_column: ColumnSchema):
         self.date_column = date_column
 
+    def can_match(self, match_bag: MatchBag) -> bool:
+        return bool(match_bag.of_type(DateMatch) or match_bag.of_type(DateOffsetMatch))
+
+    def bag_state(self, match_bag: MatchBag) -> Tuple[int, int]:
+        # a call that yielded nothing found every date consumed; new
+        # matches of other classes can only consume more
+        return len(match_bag.of_type(DateMatch)), len(match_bag.of_type(DateOffsetMatch))
+
     def get_matches(self, match_bag: MatchBag):
         # a date already bound to a date-column condition is consumed;
         # the bag cannot change during this call (the recognizer adds a

@@ -88,11 +88,9 @@ class TokenSequence:
 
     @property
     def value_set(self):
-        """Lazy set of lowercased token values — the phrase-FSM
-        prescreen: an exact-phrase matcher whose first word is absent
-        from this set cannot match, so its NFA run is skipped entirely
-        (hot path: dictionaries compile to hundreds of phrase FSMs and
-        most phrases never occur in a given chunk)."""
+        """Lazy set of lowercased token values: the comparison and group
+        matchers' screens test their operator phrases' words against
+        it."""
         vs = self._value_set
         if vs is None:
             vs = {t.value_lower for t in self.tokens}

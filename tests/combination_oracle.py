@@ -17,6 +17,10 @@ against two independent walks kept here:
 
 ``TopSet`` (TopSet.cs:22-138) is the reference's fixed-size top-K that
 both keep their winners in.
+
+``unscreened_collect_matches`` is ``Recognizer.collect_matches``
+without any screen: every first-pass matcher runs, and the fixpoint
+skips only a re-run on an unchanged match count.
 """
 
 from __future__ import annotations
@@ -25,7 +29,8 @@ import functools
 from typing import Callable, Iterator, List, Optional, Sequence, Tuple
 
 from nlquery_spark.kernel.extract import _iter_group_leaves, cached_recognizer, spec_key
-from nlquery_spark.kernel.matches import Match
+from nlquery_spark.kernel.matchers import CompositeMatcher, TokenFilterMatcher
+from nlquery_spark.kernel.matches import Match, MatchBag
 from nlquery_spark.kernel.table import (
     ENGLISH_STOP_WORDS,
     ColumnConditionMatch,
@@ -295,3 +300,46 @@ def bounded_top_combinations(
             break
         else:
             return [(combo.score, combo.matches) for combo in top.to_array()]
+
+
+def _unscreened_first_pass(matcher, match_bag: MatchBag) -> Iterator[Match]:
+    if isinstance(matcher, CompositeMatcher):
+        for child in matcher.matchers:
+            yield from _unscreened_first_pass(child, match_bag)
+    elif isinstance(matcher, TokenFilterMatcher):
+        filtered = [t for t in match_bag.statement.tokens if matcher.predicate(t)]
+        view = match_bag.with_statement(TokenSequence(filtered))
+        yield from _unscreened_first_pass(matcher.matcher, view)
+    else:
+        yield from matcher.get_matches(match_bag)
+
+
+def unscreened_collect_matches(rec, statement: TokenSequence) -> MatchBag:
+    """The match bag of ``rec.collect_matches(statement)`` as the loop
+    without trigger table, screens or class-keyed skips builds it: every
+    first-pass matcher runs in list order; every recursive matcher runs
+    each generation unless it yielded nothing on the same match count."""
+    bag = MatchBag(statement, [])
+    for matcher in rec.matchers:
+        if matcher.first_pass_only:
+            for m in _unscreened_first_pass(matcher, bag):
+                bag.add(m)
+    matchers = [m for m in rec.matchers if not m.first_pass_only]
+    last_empty_at = {}
+    for _generation in range(rec.max_passes):
+        total = 0
+        to_run, matchers = matchers, []
+        for matcher in to_run:
+            if last_empty_at.get(id(matcher)) == len(bag.matches):
+                matchers.append(matcher)
+                continue
+            new_matches = list(matcher.get_matches(bag))
+            if not new_matches or matcher.recursive:
+                matchers.append(matcher)
+            for m in new_matches:
+                bag.add(m)
+            last_empty_at[id(matcher)] = -1 if new_matches else len(bag.matches)
+            total += len(new_matches)
+        if total == 0:
+            return bag
+    raise RuntimeError("Too many merge passes, possibly infinite rule")

@@ -303,3 +303,143 @@ def test_matcher_memo_eviction_output_identical(monkeypatch):
     monkeypatch.setattr(ListContainsMatcher, "MEMO_MAX", 3)
     capped_rec = build_recognizer([spec])  # fresh matchers, tiny caps
     assert outputs(capped_rec) == want
+
+
+# ------------------------------------------ first-pass trigger table --
+
+
+def _spec_vocabulary(specs):
+    """A dictionary's own vocabulary by role in a clause: captions;
+    comparison phrases and math operators; values (up to 200 per
+    column, with their tokens), digits, month names and date-offset
+    phrases; and connectives: ``and``/``or``, single letters and
+    punctuation."""
+    from nlquery_spark.kernel.matchers import _MONTH_ABBREVS, _MONTH_NAMES
+    from nlquery_spark.kernel.table import DEFAULT_MATH_OPERATOR_PHRASES, Options
+
+    def with_tokens(phrases):
+        words = {t.value for p in phrases for t in tokenize(p) if t.value.strip()}
+        return sorted(set(phrases) | words)
+
+    captions, values = [], []
+    for spec in specs:
+        captions += [spec.get("caption") or ""] + list(spec.get("alt_captions") or ())
+        for col in spec["columns"]:
+            captions += [col.get("caption") or ""] + list(col.get("alt_captions") or ())
+            values += list(col.get("values") or ())[:200]
+    opts = Options()
+    offsets = opts.yesterday_phrases + opts.today_phrases + opts.this_month_phrases
+    offsets += opts.prev_year_phrases + opts.next_month_phrases
+    return {
+        "caption": with_tokens([c for c in captions if c]),
+        "op": [p for p, _ in DEFAULT_MATH_OPERATOR_PHRASES] + ["=", "<", ">", ">=", "<=", "=="],
+        "value": with_tokens(values)
+        + [str(i) for i in range(32)]
+        + ["2021", "1999", "0.5", "1 May 2021", "12.05.2020"]
+        + _MONTH_NAMES
+        + _MONTH_ABBREVS
+        + offsets,
+        "link": ["and", "or", "||", ":", ",", ".", "-", "/", "&"] + list("abxyz"),
+    }
+
+
+def _trigger_cases():
+    from perfbench import gen  # read-only: the benchmark's input generator
+
+    import __spark_entry__ as em
+    from combination_oracle import NL_OPTIONS, nl_specs
+    from nlquery_spark.sources.pages import orders_schema_spec
+
+    nl = nl_specs(gen)
+    dictionaries = [
+        [orders_schema_spec()],
+        [gen.ORDERS_SPEC, gen.titles_spec(300)],
+        [nl["customer"]],
+        [nl["orders"]],
+        [em.DOCS_SCHEMA_SPEC],
+    ]
+    return [
+        (build_recognizer(specs, opts), _spec_vocabulary(specs))
+        for specs in dictionaries
+        for opts in (None, NL_OPTIONS)
+    ]
+
+
+_TRIGGER_CASES = []
+
+
+def _composites(matcher, statement):
+    """(composite, the statement it sees) for every CompositeMatcher in
+    ``matcher``, the stop-word-filtered statement for a wrapped one."""
+    from nlquery_spark.kernel.matchers import CompositeMatcher
+    from nlquery_spark.kernel.tokens import TokenSequence
+
+    if isinstance(matcher, CompositeMatcher):
+        yield matcher, statement
+        for child in matcher.matchers:
+            yield from _composites(child, statement)
+    elif isinstance(matcher, TokenFilterMatcher):
+        filtered = [t for t in statement.tokens if matcher.predicate(t)]
+        yield from _composites(matcher.matcher, TokenSequence(filtered))
+
+
+def _match_rows(collect, seq):
+    """The match list ``collect(seq)`` gives, or the fixpoint's error:
+    connective-dense chunks can still exhaust its passes (ROADMAP item
+    1), and both loops must then fail alike."""
+    try:
+        bag = collect(seq)
+    except RuntimeError as e:
+        return str(e)
+    return [
+        (type(m).__name__, str(m), m.score, m.start.start_index,
+         m.end.start_index, m.matched_tokens_count)
+        for m in bag.matches
+    ]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.data())
+def test_trigger_table_and_screens_change_no_match(data):
+    """On chunks drawn from each dictionary's own vocabulary (plain and
+    with stop words): every first-pass child the trigger table leaves
+    out yields nothing when run directly, and ``collect_matches`` gives
+    the match list of the loop without screens
+    (``combination_oracle.unscreened_collect_matches``)."""
+    from combination_oracle import unscreened_collect_matches
+    from nlquery_spark.kernel.matches import MatchBag
+    from nlquery_spark.kernel.tokens import TokenSequence
+
+    if not _TRIGGER_CASES:
+        _TRIGGER_CASES.extend(_trigger_cases())
+    rec, vocab = data.draw(st.sampled_from(_TRIGGER_CASES))
+    # clauses of [caption] [op] [value] [link], each part optional and
+    # recased, so comparisons, hints, merges and groups occur often
+    part = {
+        role: st.one_of(
+            st.just(""),
+            st.builds(
+                lambda w, case: case(w),
+                st.sampled_from(words),
+                st.sampled_from([str, str.lower, str.upper, str.capitalize]),
+            ),
+        )
+        for role, words in vocab.items()
+    }
+    clause = st.tuples(part["caption"], part["op"], part["value"], part["link"])
+    clauses = data.draw(st.lists(clause, max_size=4))
+    sep = data.draw(st.sampled_from([" ", " ", ""]))
+    chunk = " ".join(sep.join(p for p in c if p) for c in clauses)
+    seq = TokenSequence(tokenize(chunk))
+
+    for composite, statement in _composites(rec._first_pass, seq):
+        run = composite.children_for(statement.tokens)
+        bag = MatchBag(statement, [])
+        for child in composite.matchers:
+            if child not in run:
+                assert not list(child.get_matches(bag)), (chunk, child)
+
+    want = _match_rows(
+        lambda seq: unscreened_collect_matches(rec, seq), TokenSequence(seq.tokens)
+    )
+    assert _match_rows(rec.collect_matches, seq) == want, chunk

@@ -2,6 +2,8 @@
 /root/reference/src/NReco.NLQuery.Tests/RecognizerTests.cs, plus TopSet and
 NGramGenerator goldens (TopSetTests.cs:17-39, NGramGeneratorTests.cs:18-34)."""
 
+import pytest
+
 from nlquery_spark.kernel import (
     ColumnSchema,
     DateMatcher,
@@ -176,18 +178,25 @@ def test_ngram_generator():
 
 def test_fixpoint_skip_purity_contract(monkeypatch):
     """Executable purity contract (ADVICE r7): with DEBUG_PURITY on,
-    every fixpoint-skipped matcher is re-run and asserted empty — a
-    stateful matcher would trip the assertion instead of silently
-    changing fixpoint results. Runs the full golden input set (group
-    nesting, comparisons, dates, gazetteer) plus synthetic page text
-    through both recognizer surfaces and checks output is identical to
-    the non-debug engine."""
-    import nlquery_spark.kernel.recognizer as rmod
+    every skipped matcher call — a first-pass child no token triggers,
+    a recursive matcher its screen rejects, a re-run skipped on an
+    unchanged bag — is made anyway and must yield nothing, so a wrong
+    skip or a stateful matcher raises instead of silently changing
+    results. Runs the golden inputs (group nesting, comparisons, dates,
+    gazetteer), synthetic page text and perfbench's boilerplate and
+    gazetteer pages (plain and with the NL workload's stop words)
+    through the recognizer surfaces and checks the output is identical
+    to the non-debug engine."""
+    import nlquery_spark.kernel.matchers as mmod
     from nlquery_spark.kernel.extract import (
+        build_prescreen,
         build_recognizer,
         extract_text_triples,
     )
     from nlquery_spark.sources.pages import _page_text, orders_schema_spec
+    from perfbench import gen  # read-only: the benchmark's input generator
+
+    from combination_oracle import NL_OPTIONS
 
     inputs = [
         "show customer order from Italy placed yesterday",
@@ -209,15 +218,99 @@ def test_fixpoint_skip_purity_contract(monkeypatch):
             )
         return outs
 
-    base = run()
-    monkeypatch.setattr(rmod, "DEBUG_PURITY", True)
-    assert run() == base  # assertion inside the skip did not fire
+    titles = gen.titles_spec()["columns"][0]["values"]
+    workloads = [
+        ([orders_schema_spec()], [_page_text(i, 0.0) for i in range(50)]),
+        ([gen.ORDERS_SPEC], list(gen.boilerplate_pages(5301, 150)["text"])),
+        (
+            [gen.ORDERS_SPEC, gen.titles_spec()],
+            list(gen.gazetteer_pages(3, 15, titles)["text"]),
+        ),
+    ]
+    # the extraction surface (chunking + combination search + filters),
+    # each dictionary plain and with stop words (TokenFilterMatcher)
+    surfaces = [
+        (build_recognizer(specs, opts), build_prescreen(specs, opts), texts)
+        for specs, texts in workloads
+        for opts in (None, NL_OPTIONS)
+    ]
 
-    # the extraction surface (chunking + combination search + filters)
-    # under the flag
-    spec = orders_schema_spec()
-    erec = build_recognizer([spec])
-    texts = [_page_text(i, 0.0) for i in range(50)]
-    debug_out = [extract_text_triples(t, erec) for t in texts]
-    monkeypatch.setattr(rmod, "DEBUG_PURITY", False)
-    assert [extract_text_triples(t, erec) for t in texts] == debug_out
+    def extract():
+        return [
+            [extract_text_triples(t, r, prescreen=s) for t in texts]
+            for r, s, texts in surfaces
+        ]
+
+    base = run(), extract()
+    monkeypatch.setattr(mmod, "DEBUG_PURITY", True)
+    assert (run(), extract()) == base  # no skipped call yielded
+
+    # the check has teeth: a screen or a trigger that skips a call
+    # which does yield raises
+    texts = [
+        "customer Krusovice from Italy or France shipped 1 May 2021",
+        "product Bud 6pcs",
+        "value more than 5 and value < 7",
+    ]
+    for cls, name, wrong in [
+        (mmod.MergePhraseMatcher, "can_match", lambda self, bag: False),
+        (mmod.ComparisonMatcher, "can_match", lambda self, bag: False),
+        (mmod.LikePhraseMatcher, "fires_on", lambda self, value, ttype: False),
+        (mmod.DateMatcher, "fires_on", lambda self, value, ttype: False),
+    ]:
+        with monkeypatch.context() as m:
+            m.setattr(cls, name, wrong)
+            wrong_rec = build_recognizer([gen.ORDERS_SPEC])
+            with pytest.raises(RuntimeError, match="skipped"):
+                for t in texts:
+                    extract_text_triples(t, wrong_rec)
+
+
+def test_class_keyed_skip_reruns_when_its_class_grows(monkeypatch):
+    """A ``MergePhraseMatcher`` that yielded nothing is skipped while
+    its class's count is unchanged, and re-run once a later matcher adds
+    matches of its class; with DEBUG_PURITY on, a wrong ``bag_state``
+    that hides the new matches raises."""
+    import nlquery_spark.kernel.matchers as mmod
+    from nlquery_spark.kernel.matches import DateOffsetMatch
+    from nlquery_spark.kernel.matchers import MergePhraseMatcher
+
+    class Promote:
+        """One DateOffsetMatch per KeyMatch (a pure function of the bag)."""
+
+        first_pass_only = False
+        recursive = False
+
+        def get_matches(self, match_bag):
+            for m in match_bag.of_type(KeyMatch):
+                d = DateOffsetMatch()
+                d.start, d.end, d.score = m.start, m.end, 0.5
+                yield d
+
+    def merge(statement, m1, m2):
+        d = DateOffsetMatch()
+        d.start, d.end, d.score = m1.start, m2.end, 0.5
+        return d
+
+    def recognizer():
+        return Recognizer(
+            [
+                MergePhraseMatcher(DateOffsetMatch, merge, lambda m: 0),
+                LikePhraseMatcher(["alpha"], lambda: KeyMatch("a")),
+                LikePhraseMatcher(["beta"], lambda: KeyMatch("b")),
+                Promote(),
+            ]
+        )
+
+    seq = TokenSequence(tokenize("alpha beta"))
+    spans = [
+        (m.start.value, m.end.value)
+        for m in recognizer().collect_matches(seq).matches
+        if isinstance(m, DateOffsetMatch)
+    ]
+    assert spans == [("alpha", "alpha"), ("beta", "beta"), ("alpha", "beta")]
+
+    monkeypatch.setattr(mmod, "DEBUG_PURITY", True)
+    monkeypatch.setattr(MergePhraseMatcher, "bag_state", lambda self, bag: 0)
+    with pytest.raises(RuntimeError, match="unchanged"):
+        recognizer().collect_matches(seq)
