@@ -11,6 +11,7 @@ filter, so pushdown/pruning come free.
 
 from __future__ import annotations
 
+import copy
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -254,6 +255,24 @@ def nl_aggregate(
     return grouped.agg(*aggs)
 
 
+# the last parse's specs, deep-copied, and their spec_key
+_LAST_SPECS: List = [None, None]
+
+
+def _parse_spec_key(schema_specs: Sequence[Dict], options_spec: Optional[Dict]) -> str:
+    """``spec_key`` of a parse's specs, reused from the last parse while
+    the specs are equal to its deep copy. ``spec_key`` dumps the whole
+    spec to JSON, up to thousands of values per column, on every
+    parse; the copy shares the specs' string objects, so comparing to
+    it is fast, and a spec dict edited in place no longer equals it."""
+    specs = [list(schema_specs), options_spec]
+    last, key = _LAST_SPECS
+    if specs != last:
+        key = spec_key(schema_specs, options_spec)
+        _LAST_SPECS[:] = [copy.deepcopy(specs), key]
+    return key
+
+
 def parse_best_matches(
     nl: str,
     schema_specs: Sequence[Dict],
@@ -277,7 +296,7 @@ def parse_best_matches(
     from ..kernel.table import ColumnMatch
 
     rec = cached_recognizer(
-        schema_specs, options_spec, spec_key(schema_specs, options_spec)
+        schema_specs, options_spec, _parse_spec_key(schema_specs, options_spec)
     )
     seq = TokenSequence(_query_tokens(nl, options_spec))
 

@@ -418,3 +418,25 @@ def test_suggest_keywords_df_matches_driver(spark):
             for i, (s, sc) in enumerate(suggest_keywords(p, [spec], top_n=4), 1)
         ]
         assert sorted(got.get(p, [])) == want, p
+
+
+def test_parse_sees_a_spec_edited_in_place():
+    """The parse reuses the last specs' key while they are equal; a
+    spec dict edited in place between two parses gives the recognizer
+    of the edited spec."""
+    import copy
+
+    from nlquery_spark.operators.nlsql import parse_best_matches
+
+    spec = copy.deepcopy(_PERFBENCH_ORDERS_SPEC)
+
+    def values(nl):
+        matches, _seq = parse_best_matches(nl, [spec])
+        return [getattr(m, "matched_value", None) for m in matches]
+
+    assert "Q" not in values("order status Q")
+    assert values("order status Q") == values("order status Q")
+    spec["columns"][0]["values"].append("Q")
+    assert "Q" in values("order status Q")
+    spec["columns"][0]["values"].remove("Q")
+    assert "Q" not in values("order status Q")
