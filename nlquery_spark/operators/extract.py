@@ -41,6 +41,10 @@ from ..kernel.extract import (
 # driver-side counter for per-invocation memo namespaces (auto<N>)
 _MEMO_SALTS = itertools.count()
 
+# driver-side: the SparkContext the payload broadcasts belong to, and
+# its broadcasts by (spec key, with prescreen)
+_PAYLOADS: list = [None, {}]
+
 # the pandas dtype of each output field type Arrow converts back
 _PANDAS_DTYPES = {
     StringType: "object",
@@ -91,6 +95,28 @@ TRIPLES_SCHEMA = StructType(
 )
 
 
+def _payload_broadcast(sc, schema_specs, options_spec, key: str, with_prescreen: bool):
+    """The broadcast of ``(specs, options, key, prescreen)``, one per
+    live SparkContext and (spec key, with prescreen). PySpark keeps each
+    broadcast's pickle in a driver temp file until the context stops,
+    so a broadcast per call left one file per call. Bounded at 4 keys
+    like the chunk memo; an evicted broadcast is only dropped, not
+    destroyed, since a DataFrame built before may still read it."""
+    owner, payloads = _PAYLOADS
+    if owner is not sc:
+        payloads = {}
+        _PAYLOADS[:] = [sc, payloads]
+    bc = payloads.get((key, with_prescreen))
+    if bc is None:
+        if len(payloads) >= 4:
+            payloads.clear()
+        prescreen = build_prescreen(schema_specs, options_spec) if with_prescreen else None
+        bc = payloads[(key, with_prescreen)] = sc.broadcast(
+            (schema_specs, options_spec, key, prescreen)
+        )
+    return bc
+
+
 def recognizer_task(
     frame: DataFrame,
     schema_specs: Sequence[Dict],
@@ -101,8 +127,9 @@ def recognizer_task(
 ) -> DataFrame:
     """The ``mapInPandas`` task of every recognizer operator.
 
-    The dictionary spec is broadcast; each Python worker compiles it
-    once (``cached_recognizer``) and runs ``kernel(text, recognizer,
+    The dictionary spec is broadcast once per SparkContext and spec
+    (``_payload_broadcast``); each Python worker compiles it once
+    (``cached_recognizer``) and runs ``kernel(text, recognizer,
     prescreen=, memo=)`` on the last column of each non-empty row of
     ``frame``. Each tuple it returns is one output row, after the input
     row's first column. The frame's dtypes follow ``out_schema``.
@@ -116,12 +143,14 @@ def recognizer_task(
     """
     schema_specs = list(schema_specs)
     key = spec_key(schema_specs, options_spec)
-    prescreen = None
     if memo_namespace:
         memo_namespace = f"{memo_namespace}:auto{next(_MEMO_SALTS)}:{key}"
-        prescreen = build_prescreen(schema_specs, options_spec)
-    payload_bc = frame.sparkSession.sparkContext.broadcast(
-        (schema_specs, options_spec, key, prescreen)
+    payload_bc = _payload_broadcast(
+        frame.sparkSession.sparkContext,
+        schema_specs,
+        options_spec,
+        key,
+        bool(memo_namespace),
     )
     names = out_schema.fieldNames()
     dtypes = [_PANDAS_DTYPES[type(f.dataType)] for f in out_schema.fields]

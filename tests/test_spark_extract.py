@@ -146,3 +146,65 @@ def test_chunk_memo_changes_nothing_spark(spark, pages):
     assert on and on == _plain_kernel_rows(pages, extract_text_triples, spec)
     m_on = sorted(map(tuple, extract_mentions(pages, [spec]).collect()))
     assert m_on and m_on == _plain_kernel_rows(pages, extract_text_mentions, spec)
+
+
+def test_recognizer_task_keeps_one_broadcast_per_spec(spark, pages):
+    """Repeated extractions with one spec share one payload broadcast:
+    PySpark keeps each broadcast's pickle in the context's temp dir
+    until the context stops, so a broadcast per call left a file per
+    call."""
+    import gc
+    import os
+
+    spec = orders_schema_spec()
+    spec["caption"] = "Orders (broadcast reuse)"  # a spec no other test uses
+    temp_dir = spark.sparkContext._temp_dir
+
+    def files():
+        gc.collect()
+        return set(os.listdir(temp_dir))
+
+    before = files()
+    counts = [extract_triples(pages, [spec]).count() for _ in range(4)]
+    assert len(set(counts)) == 1 and counts[0] > 0
+    assert len(files() - before) == 1
+
+
+_RESTART_SCRIPT = """
+import json, os, sys
+sys.path.insert(0, os.getcwd())
+from nlquery_spark.operators.extract import extract_triples
+from nlquery_spark.plans import get_spark
+from nlquery_spark.sources.pages import orders_schema_spec, synth_pages
+
+counts = []
+for _ in range(2):
+    spark = get_spark("broadcast-restart", master="local[1]", shuffle_partitions=1)
+    pages = synth_pages(spark, 20, num_partitions=1)
+    counts.append(extract_triples(pages, [orders_schema_spec()]).count())
+    spark.stop()
+print(json.dumps(counts))
+"""
+
+
+def test_recognizer_task_extracts_after_a_restart():
+    """The payload broadcast belongs to its SparkContext: after
+    ``spark.stop()`` a new session broadcasts again and still extracts
+    (a stale broadcast of the stopped context would fail the job). Runs
+    in its own process, as stopping this suite's session would end it."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=600,
+        check=True,
+    ).stdout
+    first, second = json.loads(out.strip().splitlines()[-1])
+    assert first > 0 and first == second
