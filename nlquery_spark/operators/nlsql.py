@@ -255,21 +255,26 @@ def nl_aggregate(
     return grouped.agg(*aggs)
 
 
-# the last parse's specs, deep-copied, and their spec_key
-_LAST_SPECS: List = [None, None]
+# the specs of the last four distinct parses, deep-copied, with their
+# spec_key, oldest first
+_SPEC_KEYS: List[Tuple[list, str]] = []
 
 
 def _parse_spec_key(schema_specs: Sequence[Dict], options_spec: Optional[Dict]) -> str:
-    """``spec_key`` of a parse's specs, reused from the last parse while
-    the specs are equal to its deep copy. ``spec_key`` dumps the whole
-    spec to JSON, up to thousands of values per column, on every
-    parse; the copy shares the specs' string objects, so comparing to
-    it is fast, and a spec dict edited in place no longer equals it."""
+    """``spec_key`` of a parse's specs, reused while the specs equal the
+    deep copy of a recent parse's. ``spec_key`` dumps the whole spec to
+    JSON, up to thousands of values per column, on every parse; a copy
+    shares the specs' string objects, so comparing to it is fast, and a
+    spec dict edited in place no longer equals it. Four entries, as a
+    session's queries alternate between a few tables."""
     specs = [list(schema_specs), options_spec]
-    last, key = _LAST_SPECS
-    if specs != last:
-        key = spec_key(schema_specs, options_spec)
-        _LAST_SPECS[:] = [copy.deepcopy(specs), key]
+    for copied, key in _SPEC_KEYS:
+        if copied == specs:
+            return key
+    key = spec_key(schema_specs, options_spec)
+    if len(_SPEC_KEYS) >= 4:
+        del _SPEC_KEYS[0]
+    _SPEC_KEYS.append((copy.deepcopy(specs), key))
     return key
 
 
