@@ -267,8 +267,6 @@ class ExactPhraseMatcher:
         )
 
     def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
-        if not self._words_lower:
-            return iter(())
         if len(self.words) == 1:
             return self._match_single_word(match_bag.statement.tokens)
         return run_state_machine(
