@@ -41,8 +41,8 @@ from ..kernel.extract import (
 # driver-side counter for per-invocation memo namespaces (auto<N>)
 _MEMO_SALTS = itertools.count()
 
-# driver-side: the SparkContext the payload broadcasts belong to, and
-# its broadcasts by (spec key, with prescreen)
+# the SparkContext the payload broadcasts belong to, and its
+# broadcasts by (spec key, with prescreen)
 _PAYLOADS: list = [None, {}]
 
 # the pandas dtype of each output field type Arrow converts back
@@ -98,8 +98,8 @@ TRIPLES_SCHEMA = StructType(
 def _payload_broadcast(sc, schema_specs, options_spec, key: str, with_prescreen: bool):
     """The broadcast of ``(specs, options, key, prescreen)``, one per
     live SparkContext and (spec key, with prescreen). PySpark keeps each
-    broadcast's pickle in a driver temp file until the context stops,
-    so a broadcast per call left one file per call. Bounded at 4 keys
+    broadcast's pickle in the context's temp dir until it stops, so a
+    broadcast per call would leave a file per call. Bounded at 4 keys
     like the chunk memo; an evicted broadcast is only dropped, not
     destroyed, since a DataFrame built before may still read it."""
     owner, payloads = _PAYLOADS

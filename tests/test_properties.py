@@ -385,8 +385,8 @@ def _composites(matcher, statement):
 
 def _match_rows(collect, seq):
     """The match list ``collect(seq)`` gives, or the fixpoint's error:
-    connective-dense chunks can still exhaust its passes (ROADMAP item
-    1), and both loops must then fail alike."""
+    connective-dense chunks can exhaust its passes, and both loops
+    must then fail alike."""
     try:
         bag = collect(seq)
     except RuntimeError as e:

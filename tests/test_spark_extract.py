@@ -151,8 +151,8 @@ def test_chunk_memo_changes_nothing_spark(spark, pages):
 def test_recognizer_task_keeps_one_broadcast_per_spec(spark, pages):
     """Repeated extractions with one spec share one payload broadcast:
     PySpark keeps each broadcast's pickle in the context's temp dir
-    until the context stops, so a broadcast per call left a file per
-    call."""
+    until the context stops, so a broadcast per call would leave a
+    file per call."""
     import gc
     import os
 
