@@ -672,16 +672,6 @@ def test_label_propagation_two_triangles_bridge(spark):
     assert got2 == got
 
 
-def test_extract_links_order_and_quoting(spark):
-    from nlquery_spark.functions.web import extract_links
-
-    html = ('<html><a href="http://a.com/1">x</a>'
-            '<p>no link</p><a href="https://B.com/2?q=1">y</a></html>')
-    df = spark.createDataFrame([(html,)], "html string")
-    got = df.select(extract_links(F.col("html")).alias("l")).first().l
-    assert got == ["http://a.com/1", "https://B.com/2?q=1"]
-
-
 def test_gopher_rules_boundaries(spark):
     """Each rule at its inclusive boundary: 50 words passes the count
     band, mean length exactly 3.0 passes, symbol ratio exactly at the
