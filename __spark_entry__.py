@@ -1174,19 +1174,9 @@ def _doc_quality(spark, sf_dir):
     )
 
 
-# the quality composite over (n_tokens, sr, ar) — ONE definition
-# shared by the doc_quality and corpus_host_balance oracles so the
-# formula cannot drift between them (it mirrors textstats.with_quality)
-_QUALITY_EXPR = (
-    "ROUND((CASE WHEN n_tokens BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)"
-    " + LEAST(sr * 2.0, 0.3) + ar * 0.3, 6)"
-)
-
-
-def _quality_cte() -> str:
-    """t -> m CTE prefix computing (doc_id, n_tokens, sr, ar) for the
-    quality oracles — the SQL twin of textstats.with_quality's base
-    quantities, defined once."""
+def _quality_sql() -> str:
+    """DuckDB twin of textstats.with_quality: the base quantities
+    (n_tokens, stopword ratio sr, alpha ratio ar), then the composite."""
     from nlquery_spark.operators.textstats import EN_STOPWORDS
 
     stoplist = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
@@ -1207,18 +1197,11 @@ WITH t AS (
          ELSE 0.0 END AS ar
   FROM t
 )
-"""
-
-
-def _quality_sql() -> str:
-    return (
-        _quality_cte()
-        + f"""
 SELECT doc_id, n_tokens, ROUND(sr, 6) AS stopword_ratio, ROUND(ar, 6) AS alpha_ratio,
-  {_QUALITY_EXPR} AS quality
+  ROUND((CASE WHEN n_tokens BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)
+    + LEAST(sr * 2.0, 0.3) + ar * 0.3, 6) AS quality
 FROM m
 """
-    )
 
 
 def _doc_lang_id(spark, sf_dir):
@@ -3425,219 +3408,6 @@ SELECT doc_id, digest FROM (
 """
 
 
-def _messy_url_col(d):
-    """Deterministic messy URL for an integer id column ``d`` (see
-    _messy_urls). Shared by the page-URL fixture AND the synthesized
-    hyperlink targets, so source and target URLs degrade identically;
-    the SQL twin is _messy_url_sql."""
-    scheme = (
-        F.when(d % 5 == 0, "HTTPS").when(d % 7 == 0, "HTTP").otherwise("http")
-    )
-    host = F.concat(
-        F.when(d % 2 == 0, F.lit("WWW.Example")).otherwise(F.lit("www.example")),
-        (d % 13).cast("string"),
-        F.when(d % 4 == 0, F.lit(".COM")).otherwise(F.lit(".com")),
-    )
-    port = F.when(d % 5 == 0, ":443").when(d % 3 == 0, ":80").otherwise("")
-    path = F.when(d % 17 == 0, F.lit("")).otherwise(
-        F.concat(
-            F.lit("/articles/"),
-            (d % 97).cast("string"),
-            F.when(d % 4 == 1, F.lit("/")).otherwise(F.lit("")),
-        )
-    )
-    query = (
-        F.when(d % 3 == 0, "?utm_source=feed&b=2&a=1")
-        .when(d % 3 == 1, "?b=2&a=1&fbclid=xyz")
-        .otherwise("")
-    )
-    frag = F.when(d % 6 == 0, F.lit("#sec-2")).otherwise(F.lit(""))
-    return F.concat(scheme, F.lit("://"), host, port, path, query, frag)
-
-
-def _messy_url_sql(e: str) -> str:
-    """DuckDB twin of _messy_url_col over an integer SQL expression."""
-    return f"""(CASE WHEN ({e}) % 5 = 0 THEN 'HTTPS'
-          WHEN ({e}) % 7 = 0 THEN 'HTTP' ELSE 'http' END)
-    || '://'
-    || (CASE WHEN ({e}) % 2 = 0 THEN 'WWW.Example' ELSE 'www.example' END)
-    || CAST(({e}) % 13 AS VARCHAR)
-    || (CASE WHEN ({e}) % 4 = 0 THEN '.COM' ELSE '.com' END)
-    || (CASE WHEN ({e}) % 5 = 0 THEN ':443'
-             WHEN ({e}) % 3 = 0 THEN ':80' ELSE '' END)
-    || (CASE WHEN ({e}) % 17 = 0 THEN ''
-             ELSE '/articles/' || CAST(({e}) % 97 AS VARCHAR)
-                  || (CASE WHEN ({e}) % 4 = 1 THEN '/' ELSE '' END) END)
-    || (CASE WHEN ({e}) % 3 = 0 THEN '?utm_source=feed&b=2&a=1'
-             WHEN ({e}) % 3 = 1 THEN '?b=2&a=1&fbclid=xyz' ELSE '' END)
-    || (CASE WHEN ({e}) % 6 = 0 THEN '#sec-2' ELSE '' END)"""
-
-
-def _messy_urls(spark, sf_dir):
-    """Deterministic messy-URL fixture: every document gets an absolute
-    URL whose scheme/host case, default port, tracking params, param
-    order, fragment, and trailing slash all vary by doc_id residues —
-    the exact degradations RFC 3986 §6 normalization + tracking-strip
-    must collapse. Generated identically in the oracle's CTE."""
-    docs = _load(spark, sf_dir, "documents")["documents"]
-    return docs.select(
-        "doc_id", _messy_url_col(F.col("doc_id")).alias("url")
-    )
-
-
-def _web_url_normalize(spark, sf_dir):
-    """URL canonicalization (functions/web.py::normalize_url) — the
-    crawl-dedup primitive: lowercase scheme/host, elide default ports,
-    drop fragments + tracking params, sort surviving params, strip
-    non-root trailing slashes. Pure JVM column expressions (regexps +
-    one flat-column array HOF — no explode, no Python), zero shuffle;
-    the oracle reproduces every rule under RE2."""
-    from nlquery_spark.functions.web import normalize_url, url_host
-
-    urls = _messy_urls(spark, sf_dir)
-    return urls.select(
-        "doc_id",
-        "url",
-        url_host(F.col("url")).alias("host"),
-        normalize_url(F.col("url")).alias("canonical_url"),
-    )
-
-
-def _web_host_stats(spark, sf_dir):
-    """Host-level corpus rollup over canonicalized URLs: pages per
-    site and DISTINCT canonical pages per site — the fan-in a crawl
-    scheduler and a site-quality scorer both key on. One hash
-    aggregation on the host key after the narrow canonicalize
-    projection."""
-    from nlquery_spark.functions.web import normalize_url, url_host
-
-    urls = _messy_urls(spark, sf_dir)
-    return (
-        urls.select(
-            url_host(F.col("url")).alias("host"),
-            normalize_url(F.col("url")).alias("canon"),
-        )
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("canon").alias("n_pages"),
-        )
-    )
-
-
-def _url_canon_stages(src_cte: str, carry: str, suffix: str = "") -> str:
-    """parts{suffix} -> normed{suffix} -> canon{suffix} CTE stages
-    reproducing the full functions/web.py URL normalization over any
-    source CTE exposing a ``url`` column plus the ``carry`` columns —
-    ONE definition of the canonicalization SQL shared by every oracle
-    that normalizes a URL (messy fixture, crawl diff, anchor text)."""
-    c = f"{carry}, " if carry else ""
-    return rf""", parts{suffix} AS (
-  SELECT {c}url,
-    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) AS scheme,
-    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1)) AS auth,
-    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1) AS raw_path,
-    regexp_extract(url, '^[^#?]*\?([^#]*)', 1) AS query
-  FROM {src_cte}
-), normed{suffix} AS (
-  SELECT {c}url, scheme,
-    CASE WHEN scheme = 'http' THEN regexp_replace(auth, ':80$', '')
-         WHEN scheme = 'https' THEN regexp_replace(auth, ':443$', '')
-         ELSE auth END AS host,
-    CASE WHEN regexp_replace(raw_path, '/+$', '') = '' THEN '/'
-         ELSE regexp_replace(raw_path, '/+$', '') END AS path,
-    -- DuckDB array_to_string on an EMPTY list yields NULL; Spark's
-    -- array_join yields '' — coalesce to the Spark convention
-    COALESCE(array_to_string(list_sort(list_filter(string_split(query, '&'),
-      p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid)(=|$)'))),
-      '&'), '') AS qs
-  FROM parts{suffix}
-), canon{suffix} AS (
-  SELECT {c}url, host,
-    scheme || '://' || host || path
-    || (CASE WHEN qs = '' THEN '' ELSE '?' || qs END) AS canonical_url
-  FROM normed{suffix}
-)"""
-
-
-def _messy_urls_cte(where: str = "") -> str:
-    """WITH-chain (urls -> parts -> normed -> canon) reproducing the
-    messy-URL fixture + the full functions/web.py normalization in
-    DuckDB. ``where`` optionally restricts the generating table so
-    downstream oracles (crawl diff) can share the chain verbatim."""
-    return rf"""
-WITH urls AS (
-  SELECT doc_id, {_messy_url_sql('doc_id')} AS url
-  FROM documents {where}
-){_url_canon_stages('urls', 'doc_id')}
-"""
-
-
-_MESSY_URLS_CTE = _messy_urls_cte()
-
-_URL_NORMALIZE_SQL = (
-    _MESSY_URLS_CTE + "SELECT doc_id, url, host, canonical_url FROM canon"
-)
-
-_HOST_STATS_SQL = _MESSY_URLS_CTE + """
-SELECT host, COUNT(*) AS n_docs,
-       COUNT(DISTINCT canonical_url) AS n_pages
-FROM canon GROUP BY host
-"""
-
-
-def _corpus_host_balance(spark, sf_dir):
-    """Domain balancing — the corpus-diversity step every web-scale
-    training set applies (a handful of hosts dominate any crawl; cap
-    docs per host so no domain swamps the mixture): keep the top 30
-    docs per canonical host by (quality desc, doc_id), ranked on the
-    ROUND-6 quality BOTH engines compute identically (the tfidf
-    ranking convention). The Spark side derives the host through the
-    real operator path (url_host over the messy URL); the oracle
-    derives it independently from the generator residues — agreement
-    is a stronger check than a shared derivation.
-
-    Scale posture: quality is a zero-shuffle projection; the only
-    exchange is the host-keyed top-k window. Hosts are Zipfian — at
-    crawl scale pre-aggregate with a per-partition partial top-k
-    (the topk convention) before the global window."""
-    from nlquery_spark.functions.web import url_host
-    from nlquery_spark.operators.textstats import with_quality
-
-    docs = _parallelize(_load(spark, sf_dir, "documents")["documents"])
-    q = with_quality(docs).select(
-        "doc_id",
-        url_host(_messy_url_col(F.col("doc_id"))).alias("host"),
-        "quality",
-    )
-    w = Window.partitionBy("host").orderBy(
-        F.col("quality").desc(), F.col("doc_id").asc()
-    )
-    return (
-        q.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 30)
-        .select("host", "doc_id", "quality", "rank")
-    )
-
-
-def _host_balance_sql() -> str:
-    return (
-        _quality_cte()
-        + f""", q AS (
-  SELECT doc_id,
-    'www.example' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host,
-    {_QUALITY_EXPR} AS quality
-  FROM m
-)
-SELECT host, doc_id, quality,
-  CAST(row_number() OVER (
-    PARTITION BY host ORDER BY quality DESC, doc_id ASC) AS BIGINT) AS rank
-FROM q
-QUALIFY rank <= 30
-"""
-    )
-
-
 def _doc_gopher_filters(spark, sf_dir):
     """Gopher-rule quality audit (operators/textstats.py::gopher_rules,
     Rae et al. 2021 §A1.1): per-document rule booleans (word-count
@@ -3737,10 +3507,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_clusters": _dedup_clusters,
         "corpus_split_assign": _corpus_split_assign,
         "dedup_incremental": _dedup_incremental,
-        "web_url_normalize": _web_url_normalize,
-        "web_host_stats": _web_host_stats,
         "doc_gopher_filters": _doc_gopher_filters,
-        "corpus_host_balance": _corpus_host_balance,
         # ==== _STABLE_TAIL (tests/test_oracle_parity.py): only these
         # entries may sit past the 50-entry window ====
         "streaming_kg_merge": _streaming_kg_merge,
@@ -3869,10 +3636,7 @@ def oracle_sql() -> dict[str, str]:
         "dedup_clusters": _minhash_sql(tail=_DEDUP_CLUSTERS_TAIL),
         "corpus_split_assign": _SPLIT_ASSIGN_SQL,
         "dedup_incremental": _DEDUP_INCREMENTAL_SQL,
-        "web_url_normalize": _URL_NORMALIZE_SQL,
-        "web_host_stats": _HOST_STATS_SQL,
         "doc_gopher_filters": _GOPHER_SQL,
-        "corpus_host_balance": _host_balance_sql(),
         "part_lpa_communities": _LPA_SQL,
         "kg_extract_triples": _kg_extract_triples_sql(),
         "customer_order_distribution": _ORDER_DIST_SQL,

@@ -623,31 +623,6 @@ def test_incremental_new_docs_winnows_both_ways(spark):
     assert [f.name for f in via_index.schema.fields] == ["doc_id", "digest"]
 
 
-def test_normalize_url_rules(spark):
-    from nlquery_spark.functions.web import normalize_url, url_host
-
-    cases = [
-        # (raw, canonical)
-        ("HTTP://WWW.Ex.COM:80/a/?utm_source=x&b=2&a=1#f",
-         "http://www.ex.com/a?a=1&b=2"),
-        ("https://ex.com:443/", "https://ex.com/"),
-        # :80 is NOT the default port for https — must survive
-        ("https://ex.com:80/p", "https://ex.com:80/p"),
-        ("http://ex.com", "http://ex.com/"),
-        ("http://ex.com/a//", "http://ex.com/a"),
-        ("http://ex.com/?fbclid=1&gclid=2&utm_medium=m", "http://ex.com/"),
-        ("http://ex.com/p?z=1&a=2", "http://ex.com/p?a=2&z=1"),
-    ]
-    df = spark.createDataFrame([(i, u) for i, (u, _) in enumerate(cases)],
-                               "i long, url string")
-    out = {r.i: (r.c, r.h) for r in df.select(
-        "i", normalize_url(F.col("url")).alias("c"),
-        url_host(F.col("url")).alias("h")).collect()}
-    for i, (_, want) in enumerate(cases):
-        assert out[i][0] == want, (cases[i], out[i])
-    assert out[2][1] == "ex.com:80"  # host keeps the non-default port
-
-
 def test_label_propagation_two_triangles_bridge(spark):
     """Two triangles joined by one bridge edge: after 2 sync rounds
     with min-label tie-break every node's label is derivable by hand —
@@ -699,17 +674,3 @@ def test_gopher_rules_boundaries(spark):
     assert got[4].ok_symbol_ratio == 1
     # '#' words count against BOTH symbol ratio and alpha fraction
     assert got[5].ok_symbol_ratio == 0 and got[5].keep == 0
-
-
-def test_normalize_url_fragment_query_not_leaked(spark):
-    """A '?' inside the fragment (SPA-style '#/route?x=1') is NOT a
-    query — fragment content must be fully dropped (review fix: the
-    bare \\?([^#]*) regex matched it)."""
-    from nlquery_spark.functions.web import normalize_url
-
-    df = spark.createDataFrame(
-        [("http://ex.com/a#/route?b=1",), ("http://ex.com/a?b=1#f?c=2",)],
-        "url string",
-    )
-    got = [r.c for r in df.select(normalize_url(F.col("url")).alias("c")).collect()]
-    assert got == ["http://ex.com/a", "http://ex.com/a?b=1"]

@@ -413,8 +413,7 @@ _ROTATED_IN = {
     "streaming_events_by_minute", "inverted_index", "index_bm25_topk",
     "customer_order_distribution", "customer_running_spend",
     "corpus_shard_assign", "dedup_clusters",
-    "corpus_split_assign", "dedup_incremental", "web_url_normalize",
-    "web_host_stats", "doc_gopher_filters", "corpus_host_balance",
+    "corpus_split_assign", "dedup_incremental", "doc_gopher_filters",
 }
 
 
@@ -778,72 +777,6 @@ def test_oracle_parity_on_embeddings_fuzz(spark, emb_fuzz_sf, name):
     assert s_vals == d_vals, f"{name}: values differ"
 
 
-# --------------------------------------------- seeded web fuzz corpus --
-
-
-@pytest.fixture(scope="module")
-def web_fuzz_sf(spark, tmp_path_factory):
-    """Seeded documents corpus with HTML-hostile vocabulary — quotes,
-    angle brackets, ampersands, fragments, query strings, spaces,
-    backslashes, unicode — which flows into the synthesized page HTML
-    (anchors carry doc words) and therefore into the href regex
-    extraction and URL canonicalization on BOTH engines. Promoted from
-    a round-8 deep sweep (3 seeds × 8 queries, 24/24 green)."""
-    import os
-    import random
-
-    rng = random.Random(20260831)
-    hostile = ['"quoted"', "<tag>", "a&b", "x#frag", "q?k=v", "sp ace",
-               "apos'trophe", "back\\slash", "percent%20", "semi;colon",
-               "eq=ual", "href", "src=", "</a>", "château", "日本語"]
-    normal = ["table", "join", "query", "spark", "hash", "scan", "the", "of"]
-    docs = []
-    for i in range(800):
-        n = rng.randint(3, 30)
-        words = [
-            rng.choice(hostile if rng.random() < 0.3 else normal)
-            for _ in range(n)
-        ]
-        text = " ".join(words) + "."
-        docs.append((i, text, "en", f"src{i % 3}", len(text)))
-    d = tmp_path_factory.mktemp("web_fuzz")
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    for t in entry_mod.TABLES:
-        if t != "documents":
-            os.symlink(f"/root/testdata/sf0.001/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-_WEB_FUZZ_QUERIES = [
-    "web_url_normalize", "web_host_stats", "corpus_host_balance",
-]
-
-
-@pytest.mark.parametrize("name", _WEB_FUZZ_QUERIES)
-def test_oracle_parity_on_web_fuzz(spark, web_fuzz_sf, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, web_fuzz_sf)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in entry_mod.TABLES:
-        src = (
-            f"read_parquet('{web_fuzz_sf}/documents.parquet/*.parquet')"
-            if t == "documents"
-            else f"'{web_fuzz_sf}/{t}.parquet'"
-        )
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
-    res = con.execute(entry_mod.oracle_sql()[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(duck_cols), f"{name}: columns differ"
-    assert len(spark_rows) == len(duck_rows), f"{name}: row count differs"
-    s_vals, _ = _rows_to_multiset(list(sdf.columns), spark_rows)
-    d_vals, _ = _rows_to_multiset(duck_cols, duck_rows)
-    assert s_vals == d_vals, f"{name}: values differ"
-
-
 # ------------------------------------------- seeded graph fuzz corpus --
 
 
@@ -937,7 +870,6 @@ def test_query_lists_name_existing_queries():
         "_FUZZ_QUERIES": _FUZZ_QUERIES,
         "_ORDERS_FUZZ_QUERIES": _ORDERS_FUZZ_QUERIES,
         "_EVENTS_FUZZ_QUERIES": _EVENTS_FUZZ_QUERIES,
-        "_WEB_FUZZ_QUERIES": _WEB_FUZZ_QUERIES,
         "_GRAPH_FUZZ_QUERIES": _GRAPH_FUZZ_QUERIES,
         "_EMB_FUZZ_QUERIES": _EMB_FUZZ_QUERIES,
     }

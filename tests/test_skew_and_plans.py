@@ -287,21 +287,6 @@ def test_shard_assign_single_exchange(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_url_normalize_zero_exchange_no_python(spark, sf_dir):
-    """URL canonicalization must ride the scan: zero shuffles, zero
-    Python stages, one codegen span of regexp/array expressions — at
-    10^12 URLs anything else turns a projection into a job."""
-    plan = (
-        em.queries()["web_url_normalize"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "*(1)" in plan  # generator stage is whole-stage-codegen'd
-
-
 def test_split_assign_zero_exchange(spark, sf_dir):
     """Train/val/test assignment is a pure projection of the md5
     uniform — no shuffle anywhere in the plan."""
