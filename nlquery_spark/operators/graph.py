@@ -1,9 +1,8 @@
 """Generic graph analytics over edge DataFrames.
 
-Round-4 additions to the graph-ops family (connected components and
-PageRank live in operators/canonicalize.py): degree-ordered triangle
-counting and co-occurrence lift — the two standard building blocks for
-weighting and clustering the co-mention graph a KG-construction
+The graph stage's operators beyond connected components and PageRank
+(both in operators/canonicalize.py): degree-ordered triangle counting
+and common-neighbor link prediction over the graph a KG-construction
 pipeline produces (reference analog: nlquery has no graph layer at all;
 the closest surface is the match-combination scoring in
 src/NReco.NLQuery/Recognizer.cs, which ranks COMBINATIONS rather than
@@ -110,89 +109,6 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
-def khop_neighbors(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_frontier: bool = True,
-) -> DataFrame:
-    """Minimum-hop distance (<= k) from a seed set over an undirected
-    graph: (node, depth) for every node reachable within k hops,
-    depth = LENGTH OF THE SHORTEST PATH from any seed (seeds at 0).
-
-    The KG-serving primitive behind "entities related to X within n
-    hops" — subgraph extraction around a query entity after
-    canonicalization (reference analog: none; nlquery ranks flat match
-    combinations, Recognizer.cs, and has no graph traversal — this is
-    mission-added Spark-native design).
-
-    Scale design — level-synchronous frontier BFS, the textbook Pregel
-    schedule expressed as k DataFrame joins: each round expands only
-    the CURRENT frontier (nodes first reached last round), distincts
-    the neighbor set, and anti-joins the visited set so a node is
-    labeled with its minimum depth exactly once. With
-    ``broadcast_frontier=True`` (default) each round FORCES a broadcast
-    of the frontier onto the edge relation — a mandatory hint, right
-    for the primary use case (k-hop around a handful of query entities,
-    frontier thousands of nodes, edge relation never reshuffled). On
-    dense graphs / large seed sets where a frontier can outgrow the
-    broadcast limit, pass ``broadcast_frontier=False``: the planner
-    falls back to a keyed shuffle join (and AQE still converts rounds
-    whose frontier turns out small). Each round's NEW frontier is
-    localCheckpointed (iterative lineage otherwise grows and replays
-    every prior round's joins — the standard iterative-DataFrame trap;
-    same discipline as canonicalize's CC loop); the visited accumulator
-    is a LAZY union of those checkpointed frontiers (depth <= k), so it
-    is never re-materialized per round (optimization r9). Rounds are
-    exactly k — bounded depth, no convergence test — so the job graph
-    is static and resumable.
-
-    Input edges may be duplicated / either orientation; they are
-    canonicalized + symmetrized once up front (one distinct), then
-    reused across all k rounds via an eager localCheckpoint.
-    """
-    if k < 0:
-        raise ValueError("khop_neighbors needs k >= 0")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
-    und = (
-        e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        # consumed once per BFS round: materialize the symmetrized edge
-        # set (and the whole pair-generation lineage behind it) once
-        .localCheckpoint(eager=True)
-    )
-    visited = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    visited = visited.withColumn("depth", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    for d in range(1, k + 1):
-        fr = F.broadcast(frontier) if broadcast_frontier else frontier
-        nxt = (
-            und.join(fr, und.a == frontier.node)
-            .select(F.col("b").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
-        )
-        # no checkpoint on the accumulator (optimization r9): visited is
-        # a union of ALREADY-materialized per-round frontiers, so
-        # re-checkpointing it re-wrote the whole growing set every round
-        # — the lazy union evaluates from the cached pieces and its
-        # depth is bounded by k
-        visited = visited.unionAll(nxt)
-        frontier = nxt.select("node")
-    return visited.select("node", F.col("depth").cast("int").alias("depth"))
-
-
 def common_neighbor_scores(
     edges: DataFrame,
     src: str = "src",
@@ -208,15 +124,15 @@ def common_neighbor_scores(
     jaccard = |N(a) & N(b)| / |N(a) | N(b)| — the classic
     common-neighbors/Jaccard scores that rank candidate KG edges for
     completion ("these two entities share most of their neighborhood
-    but no edge yet"). Pure-ratio score (ROUND 6) — same bit-comparable
-    contract as cooccurrence_lift.
+    but no edge yet"). A pure ratio ROUNDed to 6, with no log: a plain
+    IEEE divide gives the same bits in any engine, so the score is
+    bit-comparable against an ANSI-SQL oracle.
 
     Scale design: the wedge self-join is keyed on the shared neighbor
-    and its fan-out is QUADRATIC in that node's degree — the identical
-    pathology (and identical remedy) as cooccurrence_lift's group
-    fan-out: each node's neighbor list is capped at ``max_neighbors``
-    (row_number, neighbor-ordered — deterministic), with capped-block /
-    dropped-row counts recorded into ``metrics`` — so a celebrity hub
+    and its fan-out is QUADRATIC in that node's degree, so each node's
+    neighbor list is capped at ``max_neighbors`` (row_number,
+    neighbor-ordered — deterministic), with capped-block / dropped-row
+    counts recorded into ``metrics`` — so a celebrity hub
     bounds its wedge contribution instead of exploding the join. Degrees
     are computed from the SAME capped relation the wedges read, keeping
     jaccard internally consistent under the cap. Existing edges are
@@ -313,167 +229,3 @@ def common_neighbor_scores(
             jac.alias("jaccard"),
         )
     )
-
-
-def cooccurrence_lift(
-    occurrences: DataFrame,
-    group_col: str,
-    item_col: str,
-    n_groups: int,
-    max_group_items: int = 10_000,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Pairwise co-occurrence lift over (group, item) observations.
-
-    For every item pair a < b:
-        lift = (N * n_both) / (n_a * n_b)
-    with N = ``n_groups`` (total groups in the population), n_a = groups
-    containing a, n_both = groups containing both — the association
-    strength used to weight KG co-mention edges (lift > 1 means the
-    pair co-occurs more often than independence predicts). Computed as
-    a pure ratio — deliberately NOT log-PMI: ln() differs by ulps
-    across engines, a plain IEEE multiply/divide does not, so the score
-    is bit-comparable against any ANSI-SQL oracle after rounding.
-
-    Scale: the pair self-join is keyed on the group and its fan-out is
-    QUADRATIC in the per-group DISTINCT item count — callers filter to a
-    bounded vocabulary (gazetteer terms, entity ids) upstream, which is
-    what makes pairwise co-occurrence tractable at all. That contract is
-    ENFORCED, not just documented (VERDICT r4 item 3): each group's
-    distinct item set is capped at ``max_group_items`` (row_number,
-    item-ordered — deterministic) before pair generation, with
-    blocks_capped / block_rows_dropped recorded into ``metrics`` when a
-    dict is passed — the same no-silent-caps guard every block-keyed
-    edge builder in this repo uses (canonicalize._cap_blocks). A caller
-    who passes unfiltered web-scale tokens gets a bounded plan plus a
-    loud dropped-rows metric instead of a quadratic explosion. The cap
-    is applied to the SAME relation both counts and pairs read, so n_a /
-    n_b / n_both stay internally consistent. Per-item totals are
-    broadcast (vocabulary-sized by the same argument).
-    """
-    from .canonicalize import _cap_blocks
-
-    p = (
-        occurrences.select(
-            F.col(group_col).alias("grp"), F.col(item_col).alias("item")
-        )
-        .filter(F.col("item").isNotNull())
-        .distinct()
-    )
-    if metrics is not None:
-        # the metrics pass is an EAGER aggregation: run it (and the cap
-        # window) over a materialized projection, or it re-scans and
-        # re-distincts the whole corpus a second time before the main
-        # checkpoint below (review round 5)
-        p = p.localCheckpoint(eager=True)
-    p = _cap_blocks(
-        p, max_group_items, metrics, key_col="grp", ord_col="item"
-    )
-    p = (
-        p
-        # four consumers (both self-join sides + both count lineages):
-        # materialize the vocabulary-filtered projection ONCE instead of
-        # four corpus scans — at 100 TB this is the difference between
-        # one pass over the corpus and four (plan-verified: un-checkpointed,
-        # the physical plan had 4 parquet scans of the corpus)
-        .localCheckpoint(eager=True)
-    )
-    c = p.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-    x = p.select("grp", F.col("item").alias("item_a"))
-    y = p.select("grp", F.col("item").alias("item_b"))
-    pair = (
-        x.join(y, "grp")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-    )
-    ca = F.broadcast(c.select(F.col("item").alias("item_a"), F.col("n").alias("n_a")))
-    cb = F.broadcast(c.select(F.col("item").alias("item_b"), F.col("n").alias("n_b")))
-    lift = F.round(
-        (F.lit(float(n_groups)) * F.col("n_both"))
-        / (F.col("n_a").cast("double") * F.col("n_b")),
-        6,
-    )
-    return (
-        pair.join(ca, "item_a")
-        .join(cb, "item_b")
-        .select(
-            "item_a",
-            "item_b",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.col("n_both").cast("long").alias("n_both"),
-            lift.alias("lift"),
-        )
-    )
-
-
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 2,
-    metrics: "dict | None" = None,
-) -> DataFrame:
-    """Community detection by SYNCHRONOUS label propagation (Raghavan
-    et al. 2007), made deterministic: every round, each node adopts the
-    most frequent label among its neighbors, ties broken by the SMALLEST
-    label (the paper breaks ties randomly, which is neither reproducible
-    nor oracle-checkable). Runs a FIXED ``iters`` rounds — sync LPA can
-    oscillate on bipartite-ish structure, so production runs cap rounds
-    anyway, and a fixed count is the contract an external oracle can
-    replay exactly (same posture as pagerank's fixed-iteration mode).
-
-    Returns (node, community) for every edge endpoint.
-
-    Scale: per round, one join of the symmetrized edges against the
-    label table (both hash-partitioned on the join key), a (node,
-    label) count aggregation with map-side partial combine, and a
-    per-node top-1 window — all keyed shuffles, no driver state, with
-    a localCheckpoint per round so the plan stays bounded at any
-    ``iters``. Hub nodes cost O(degree) vote rows, never O(degree^2).
-    """
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("s").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    labels = nodes.withColumn("label", F.col("node"))
-    for _ in range(iters):
-        votes = sym.join(labels, sym.s == labels.node).select(
-            F.col("d").alias("n2"), "label"
-        )
-        cnt = votes.groupBy("n2", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        # top-1 via min(struct(-cnt, label)) instead of a row_number
-        # window (optimization r9, guide §2.4): the struct min is the
-        # SAME total order — highest cnt, then smallest label — but
-        # runs as a hash aggregation with map-side partial combine on
-        # the exchange the count already needs, instead of adding a
-        # full sort-based window shuffle per round.
-        best = (
-            cnt.groupBy("n2")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("_nc"), F.col("label").alias("_lb")
-                    )
-                ).alias("_m")
-            )
-            .select(F.col("n2").alias("node"), F.col("_m._lb").alias("new_label"))
-        )
-        labels = (
-            labels.join(best, "node", "left")
-            .select(
-                "node",
-                F.coalesce("new_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    if metrics is not None:
-        metrics["lpa_iterations"] = iters
-    return labels.select("node", F.col("label").alias("community"))

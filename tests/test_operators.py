@@ -623,30 +623,6 @@ def test_incremental_new_docs_winnows_both_ways(spark):
     assert [f.name for f in via_index.schema.fields] == ["doc_id", "digest"]
 
 
-def test_label_propagation_two_triangles_bridge(spark):
-    """Two triangles joined by one bridge edge: after 2 sync rounds
-    with min-label tie-break every node's label is derivable by hand —
-    pin the exact labeling and the repartitioning-independence."""
-    from nlquery_spark.operators.graph import label_propagation
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)],
-        "src long, dst long",
-    )
-    got = {r.node: r.community
-           for r in label_propagation(edges, iters=2).collect()}
-    # round 1 (votes among neighbor INITIAL labels, ties -> min):
-    #   1<-{2,3}->2 ; 2<-{1,3}->1 ; 3<-{1,2,4}->1 ; 4<-{3,5,6}->3 ;
-    #   5<-{4,6}->4 ; 6<-{4,5}->4
-    # round 2 over those labels:
-    #   1: nbrs {2,3}={1,1}->1 ; 2: {1,3}={2,1}->1 ; 3: {1,2,4}={2,1,3}->1
-    #   4: {3,5,6}={1,4,4}->4 ; 5: {4,6}={3,4}->3 ; 6: {4,5}={3,4}->3
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 3, 6: 3}
-    got2 = {r.node: r.community
-            for r in label_propagation(edges.repartition(7), iters=2).collect()}
-    assert got2 == got
-
-
 def test_gopher_rules_boundaries(spark):
     """Each rule at its inclusive boundary: 50 words passes the count
     band, mean length exactly 3.0 passes, symbol ratio exactly at the

@@ -119,11 +119,10 @@ _NASTY_QUERIES = [
     "corpus_sample",
     # round-4 token-level queries: inverted_index exercises the
     # whitespace/unicode edge cases directly; the others degenerate to
-    # empty-vs-empty on this fixture (benchmark split, gazetteer terms
+    # empty-vs-empty on this fixture (benchmark split, phrase terms
     # absent) — still a valid both-sides-agree check
     "inverted_index",
     "index_phrase_search",
-    "token_cooccurrence_lift",
     "corpus_decontaminate",
 ]
 
@@ -383,7 +382,6 @@ _STABLE_TAIL = {
     "nl_filter_stemmed", "nl_filter_culture", "nl_filter_inferred",
     "paragraph_boilerplate", "streaming_extract",
     "index_phrase_search", "index_phrase_postings",
-    "token_cooccurrence_lift", "part_khop_neighbors",
     "part_link_prediction", "events_sliding_windows",
     # rows-only lossy ops: a rows-only driver row proves less than
     # their pytest recall/invariant gates already do (last driver
@@ -396,15 +394,15 @@ _STABLE_TAIL = {
 _ROWS_ONLY = {"dedup_embedding", "corpus_pack"}
 
 # the r7 tail (last driver row r6) must all be INSIDE the window
-# now — led by the kernel-path queries whose green predated the
-# round-7 kernel edits (VERDICT r7 item 1)
+# now — led by the recognizer, gazetteer and chunking queries whose
+# green predated the round-7 kernel edits (VERDICT r7 item 1)
 _ROTATED_IN = {
-    # kernel-path: exercise kernel/extract.py + recognizer.py code
-    # edited in round 7 (chunk memo, fixpoint skip, DFS precompute)
+    # kg_extract_triples and entity_link_topk run kernel/extract.py +
+    # recognizer.py; gazetteer_mentions is plain SQL and
+    # chunk_boilerplate calls corpus.chunk_documents
     "kg_extract_triples", "gazetteer_mentions", "entity_link_topk",
     "chunk_boilerplate", "kg_pagerank", "kg_similarity_edges",
-    "kg_canonicalize", "kg_degree_stats", "kg_editdist_edges",
-    "part_lpa_communities", "gazetteer_topk_entities",
+    "kg_canonicalize", "kg_degree_stats", "gazetteer_topk_entities",
     # the rest of the r6-green r7 tail
     "orders_with_returns", "dedup_exact", "dedup_ngram_jaccard",
     "corpus_clean", "corpus_sample",
@@ -430,8 +428,9 @@ def test_correctness_window_holds_all_active_queries():
         f"{set(qs[50:]) - _STABLE_TAIL}"
     )
     assert _ROTATED_IN <= set(qs[:50])
-    # kernel-path queries must LEAD the window (first driver rows on
-    # the post-memo engine)
+    # the two recognizer queries, gazetteer_mentions and
+    # chunk_boilerplate must LEAD the window (first driver rows on the
+    # post-memo engine)
     assert qs[:4] == [
         "kg_extract_triples", "gazetteer_mentions", "entity_link_topk",
         "chunk_boilerplate",
@@ -495,7 +494,6 @@ _FUZZ_QUERIES = [
     "index_phrase_search",
     "index_phrase_postings",
     "paragraph_boilerplate",
-    "token_cooccurrence_lift",
     "corpus_decontaminate",
     "chunk_boilerplate",
     "doc_token_stats",
@@ -785,9 +783,8 @@ def graph_fuzz_sf(spark, tmp_path_factory):
     """Seeded random LINEITEM co-order topology stressing the graph
     oracles — hub parts appearing in most orders, dense cliques,
     single-line orders, and self-duplicate lines (the same part twice
-    in one order) — against the recursive-CTE k-hop walk, the 2-round
-    LPA replay, the wedge-join link prediction, and the triangle
-    orientation. Promoted from a round-8 deep sweep (3 seeds × 7
+    in one order) — against the wedge-join link prediction and the
+    triangle orientation. Promoted from a round-8 deep sweep (3 seeds × 7
     queries, 21/21 green)."""
     import datetime
     import os
@@ -830,10 +827,8 @@ def graph_fuzz_sf(spark, tmp_path_factory):
 
 
 _GRAPH_FUZZ_QUERIES = [
-    "part_coorder_triangles", "part_khop_neighbors",
-    "part_link_prediction", "part_lpa_communities",
-    "token_cooccurrence_lift", "promo_revenue_share",
-    "q17_small_quantity_revenue",
+    "part_coorder_triangles", "part_link_prediction",
+    "promo_revenue_share", "q17_small_quantity_revenue",
 ]
 
 

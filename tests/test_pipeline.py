@@ -311,119 +311,6 @@ def test_pipeline_graph_stage(spark, tmp_path):
     assert agg["n"] == nodes
 
 
-def test_edit_distance_edges_known_distances(spark):
-    from nlquery_spark.operators.canonicalize import edit_distance_edges
-
-    forms = spark.createDataFrame(
-        [("spark",), ("spork",), ("sparkk",), ("Spark!",), ("zzzz",)],
-        "form string",
-    )
-    out = {
-        (r.form_a, r.form_b): r.dist
-        for r in edit_distance_edges(forms, max_dist=2).collect()
-    }
-    # norms: spark/spork/sparkk/spark/zzzz — 'Spark!' normalizes to 'spark'
-    assert out[("Spark!", "spark")] == 0
-    assert out[("spark", "spork")] == 1
-    assert out[("spark", "sparkk")] == 1
-    assert out[("Spark!", "spork")] == 1
-    assert out[("sparkk", "spork")] == 2
-    assert all("zzzz" not in k for k in out)
-
-
-def test_edit_distance_edges_blocking_miss_documented(spark):
-    from nlquery_spark.operators.canonicalize import edit_distance_edges
-
-    # 'abc' vs 'xbz': dist 2 but first AND last chars differ -> no
-    # shared block -> missed. This is the documented recall tradeoff.
-    forms = spark.createDataFrame([("abc",), ("xbz",)], "form string")
-    assert edit_distance_edges(forms, max_dist=2).count() == 0
-
-
-def _py_lev(a, b, cap):
-    if abs(len(a) - len(b)) > cap:
-        return cap + 1
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def _editdist_recall(spark, forms, max_block_size=80):
-    """Measured recall of the blocked builder vs driver-side brute-force
-    all-pairs Levenshtein <= 2 on normalized forms."""
-    import re
-
-    from nlquery_spark.operators.canonicalize import edit_distance_edges
-
-    norms = {f: re.sub(r"[^a-z0-9]+", " ", f.lower()).strip() for f in forms}
-    nz = sorted(f for f in forms if norms[f])
-    brute = {
-        (a, b)
-        for i, a in enumerate(nz)
-        for b in nz[i + 1 :]
-        if _py_lev(norms[a], norms[b], 2) <= 2
-    }
-    df = spark.createDataFrame([(f,) for f in set(forms)], "form string")
-    got = {
-        (r.form_a, r.form_b)
-        for r in edit_distance_edges(
-            df, max_dist=2, max_block_size=max_block_size
-        ).collect()
-    }
-    assert got <= brute  # blocking only ever loses pairs, never invents
-    return len(got & brute) / len(brute), brute, got
-
-
-def test_edit_distance_blocking_recall_on_fixture(spark):
-    """VERDICT r4 item 6: the first/last-char blocking tradeoff gets a
-    MEASURED recall number, not just a statement. On the kg_editdist
-    fixture (the sf0.001 form universe, query config 80-cap) the
-    blocking loses nothing: recall pinned at 1.0 — part-name variants
-    never edit both end characters at once."""
-    import __spark_entry__ as em
-
-    forms = [
-        r.form
-        for r in em._kg_form_universe(spark, "/root/testdata/sf0.001").collect()
-    ]
-    recall, brute, _ = _editdist_recall(spark, forms)
-    assert len(brute) >= 100  # the fixture actually exercises pairs
-    assert recall == 1.0
-
-
-def test_edit_distance_blocking_recall_adversarial(spark):
-    """Quantified miss class: seed typo variants of base words —
-    middle-char, first-char, last-char, and BOTH-ends substitutions.
-    Only the both-ends class can be missed (no shared first/last block);
-    measured recall equals exactly 1 - |missed both-ends pairs|/|all
-    pairs| (measured 0.898 on this mix — the both-ends variants pair
-    with every sibling variant, so the class weighs more than its
-    1-in-5 seeding) and is gated >= 0.85, like the embedding-LSH
-    recall gate pins its 0.95."""
-    bases = [f"entity{chr(ord('a') + i)}x{i}node" for i in range(12)]
-    forms, both_ends = [], []
-    for w in bases:
-        forms.append(w)
-        forms.append(w[:4] + "q" + w[5:])  # middle edit: caught
-        forms.append("z" + w[1:])  # first-char edit: caught (last block)
-        forms.append(w[:-1] + "z")  # last-char edit: caught (first block)
-        be = "q" + w[1:-1] + "q"  # both ends: the documented miss
-        forms.append(be)
-        both_ends.append((w, be))
-    recall, brute, got = _editdist_recall(spark, forms)
-    missed = brute - got
-    # every miss involves a both-ends variant, and nothing else is lost
-    be_set = {b for _, b in both_ends}
-    assert missed and all(a in be_set or b in be_set for a, b in missed)
-    expected = 1 - len(missed) / len(brute)
-    assert recall == expected
-    assert recall >= 0.85
-
-
 def test_pipeline_linkpred_stage(spark, tmp_path):
     """The KG-completion stage: every candidate is a NON-edge pair with
     >= 2 shared neighbors and a valid (0, 1] Jaccard score."""

@@ -181,21 +181,6 @@ def test_phrase_search_single_corpus_scan(spark, sf_dir):
     assert "Scan ExistingRDD" in plan
 
 
-def test_cooccurrence_single_corpus_scan(spark, sf_dir):
-    """The localCheckpoint means the four consumers of the filtered
-    (group, item) projection read materialized blocks — the final plan
-    must scan the corpus parquet zero times (checkpoint RDD scans only)
-    beyond the lineage already materialized."""
-    plan = (
-        em.queries()["token_cooccurrence_lift"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Scan parquet" not in plan  # all inputs come from the checkpoint
-    assert "Scan ExistingRDD" in plan
-
-
 def test_content_defined_chunks_shuffle_free(spark, sf_dir):
     """Chunking is per-document: the chunker itself must plan with ZERO
     exchanges (one Arrow mapInPandas pass), and the paragraph_boilerplate
