@@ -48,10 +48,9 @@ def main() -> None:
     pipe = Pipeline(spark, args.workdir, kg_pipeline(args.workdir, [orders_schema_spec()]))
     ctx = pipe.run({"pages": pages}, force=args.force)
     wall = time.time() - t0
-    # order-insensitive CONTENT hash, not just a count: the
-    # cross-parallelism determinism claim (scripts/pipeline_scaling.py)
-    # needs identical triples, and equal cardinality would mask
-    # partitioning-sensitive value differences
+    # order-insensitive CONTENT hash, not just a count: runs at two
+    # parallelisms must give identical triples, and equal cardinality
+    # would mask partitioning-sensitive value differences
     from pyspark.sql import functions as F
 
     canonical = ctx["canonical"]
