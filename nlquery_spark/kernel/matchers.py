@@ -224,11 +224,22 @@ class CompositeMatcher:
 
 class TokenFilterMatcher:
     """Feeds a predicate-filtered token view to a wrapped matcher
-    (TokenFilterMatcher.cs:22-41)."""
+    (TokenFilterMatcher.cs:22-41).
+
+    The fixpoint calls a recursive wrapper once per generation on the
+    same statement, so the filtered sequence is built once per statement
+    (the last one is kept, checked by identity). The wrapped matcher's
+    screen (``can_match``) and bag key (``bag_state``) are evaluated on
+    the filtered view; a wrapped matcher without a screen always runs,
+    and one without a bag key re-runs on any new match, as the
+    recognizer treats an unwrapped one."""
 
     def __init__(self, base_matcher, predicate: Callable[[Token], bool]):
         self.matcher = base_matcher
         self.predicate = predicate
+        self._screen = getattr(base_matcher, "can_match", None)
+        self._key = getattr(base_matcher, "bag_state", None)
+        self._last = (None, None)  # (statement, its filtered sequence)
 
     @property
     def first_pass_only(self):
@@ -238,12 +249,27 @@ class TokenFilterMatcher:
     def recursive(self):
         return self.matcher.recursive
 
-    def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
+    def _view(self, match_bag: MatchBag) -> MatchBag:
         # wrapped matchers only read the bag, so they can share it
-        filtered = [t for t in match_bag.statement.tokens if self.predicate(t)]
-        return self.matcher.get_matches(
-            match_bag.with_statement(TokenSequence(filtered))
-        )
+        statement = match_bag.statement
+        last, filtered = self._last
+        if last is not statement:
+            filtered = TokenSequence(
+                [t for t in statement.tokens if self.predicate(t)]
+            )
+            self._last = (statement, filtered)
+        return match_bag.with_statement(filtered)
+
+    def can_match(self, match_bag: MatchBag) -> bool:
+        return self._screen is None or self._screen(self._view(match_bag))
+
+    def bag_state(self, match_bag: MatchBag):
+        if self._key is None:
+            return len(match_bag.matches)
+        return self._key(self._view(match_bag))
+
+    def get_matches(self, match_bag: MatchBag) -> Iterator[Match]:
+        return self.matcher.get_matches(self._view(match_bag))
 
 
 class ExactPhraseMatcher:
